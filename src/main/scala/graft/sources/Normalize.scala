@@ -1,5 +1,7 @@
 package graft.sources
 
+import java.util.regex.Pattern
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -164,17 +166,25 @@ object Normalize {
     * A Scala UDF — the reference's one true custom scalar (A23); kept
     * OUT of relational hot paths so codegen elsewhere is unaffected. */
   private val MdHeader = "^(#{1,6}) (.*)$".r
+  // compiled once: String.replaceAll/matches/replaceFirst, and split on
+  // a two-char separator, compile their regex on every call (per row)
+  private val MdCode = Pattern.compile("`([^`]+)`")
+  private val MdLink = Pattern.compile("\\[([^\\]]+)\\]\\(([^)\\s]+)\\)")
+  private val MdBold = Pattern.compile("\\*\\*([^*]+)\\*\\*")
+  private val MdEm = Pattern.compile("\\*([^*]+)\\*")
+  private val MdPara = Pattern.compile("\n\n")
+  private val MdOlItem = Pattern.compile("^[0-9]+\\. .*")
+  private val MdOlPrefix = Pattern.compile("^[0-9]+\\. ")
 
   def renderMarkdown(md: String): String =
     if (md == null) null
     else {
       val esc = md.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
-      val code = esc.replaceAll("`([^`]+)`", "<code>$1</code>")
-      val links = code.replaceAll("\\[([^\\]]+)\\]\\(([^)\\s]+)\\)",
-        "<a href=\"$2\">$1</a>")
-      val bold = links.replaceAll("\\*\\*([^*]+)\\*\\*", "<strong>$1</strong>")
-      val em = bold.replaceAll("\\*([^*]+)\\*", "<em>$1</em>")
-      val paras = em.split("\n\n", -1).map { p =>
+      val code = MdCode.matcher(esc).replaceAll("<code>$1</code>")
+      val links = MdLink.matcher(code).replaceAll("<a href=\"$2\">$1</a>")
+      val bold = MdBold.matcher(links).replaceAll("<strong>$1</strong>")
+      val em = MdEm.matcher(bold).replaceAll("<em>$1</em>")
+      val paras = MdPara.split(em, -1).map { p =>
         val lines = p.split("\n", -1)
         p match {
           case MdHeader(hs, rest) if !p.contains("\n") =>
@@ -182,8 +192,8 @@ object Normalize {
           case _ if lines.forall(_.startsWith("- ")) =>
             lines.map(l => s"<li>${l.stripPrefix("- ")}</li>")
               .mkString("<ul>", "", "</ul>")
-          case _ if lines.forall(_.matches("^[0-9]+\\. .*")) =>
-            lines.map(l => s"<li>${l.replaceFirst("^[0-9]+\\. ", "")}</li>")
+          case _ if lines.forall(l => MdOlItem.matcher(l).matches()) =>
+            lines.map(l => s"<li>${MdOlPrefix.matcher(l).replaceFirst("")}</li>")
               .mkString("<ol>", "", "</ol>")
           case _ => s"<p>$p</p>"
         }

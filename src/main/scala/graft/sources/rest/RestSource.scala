@@ -5,19 +5,19 @@ import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.unsafe.types.UTF8String
 import java.util
 import scala.jdk.CollectionConverters._
 
 /** DataSourceV2 connector for the reference's REST ingest (SURVEY §2A
-  * A3–A6): one input partition per chapter — the reference's unit of
-  * parallel work (`api-runner.rkt:152-168` chunks the chapter list
-  * across 3 worker threads; Spark's scheduler replaces the thread
-  * pool, so the connector only declares the partitioning). Each
-  * partition fetches its chapter's page from the adapter's endpoint
-  * and emits (chapter, adapter, payload-line) rows for the normalize
-  * pipeline to consume.
+  * A3–A6, A11): the chapter list is chunked into one input partition
+  * per core, like the reference's `chunk-list` over its worker threads
+  * (`chunk-list.rkt:6-18`, `api-runner.rkt:25`, with k = cores instead
+  * of 3). Each partition fetches its chapters' pages from the adapters'
+  * endpoints one chapter at a time and emits (chapter, adapter,
+  * payload-line) rows for the normalize pipeline to consume.
   *
   * The fetch goes through the [[Transport]] seam: a live deployment
   * registers an HTTP implementation (`meetup.rkt:83-84`,
@@ -200,7 +200,7 @@ object HttpTransport {
 /** Offline transport: replays committed fixture captures, the
   * reference's own test strategy. Delegates to the per-JVM
   * [[FixtureIndex]] so each raw_<adapter>.jsonl is read and parsed
-  * once, not once per chapter partition. */
+  * once, not once per chapter. */
 class FixtureTransport(fixturesDir: String) extends Transport {
   override def fetch(adapter: String, chapter: String): RestResponse =
     RestResponse(FixtureIndex.lines(s"$fixturesDir/raw_$adapter.jsonl", chapter))
@@ -256,10 +256,14 @@ private[rest] class RestScanBuilder(props: Map[String, String])
   override def readSchema(): StructType = RestSource.schema
   override def toBatch: Batch = this
 
-  /** One partition per chapter (api-runner.rkt:152-155 prepares one
-    * work item per chapter; chunking across workers is Spark's
-    * scheduler's job now). The chapter list is read on the driver,
-    * like read-chapter-json (api-runner.rkt:171-178). */
+  /** `k = min(chapters, defaultParallelism)` partitions, the chapters
+    * dealt out round-robin so chunk sizes differ by at most one — the
+    * reference's `chunk-list` (`chunk-list.rkt:6-18`) with k = cores.
+    * k is the cores, not the chapters: every stage that re-reads the
+    * scan runs one task per partition, and with one per chapter most
+    * of those tasks are near-empty, so per-task overhead dominates.
+    * The chapter list is read on the driver, like read-chapter-json
+    * (api-runner.rkt:171-178). */
   override def planInputPartitions(): Array[InputPartition] = {
     val chaptersFile = props.getOrElse("chaptersfile",
       sys.error("graft-rest: option 'chaptersFile' is required"))
@@ -268,24 +272,30 @@ private[rest] class RestScanBuilder(props: Map[String, String])
     // real JSON parse (jackson ships with Spark) — a regex probe would
     // false-match field VALUES containing the text "chapter": "..."
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    lines.filter(_.trim.nonEmpty).flatMap { line =>
+    val chapters = lines.filter(_.trim.nonEmpty).flatMap { line =>
       val node = mapper.readTree(line)
       (Option(node.get("chapter")), Option(node.get("adapter"))) match {
-        case (Some(c), Some(a)) =>
-          Some(RestPartition(c.asText, a.asText,
-            props.getOrElse("transport", "fixture"),
-            props.getOrElse("fixturesdir", ""),
-            props.getOrElse("ratepersecond", "100").toDouble))
+        case (Some(c), Some(a)) => Some(c.asText -> a.asText)
         case _ => None
       }
-    }.toArray
+    }.toVector
+    val k = math.min(chapters.size,
+      SparkSession.active.sparkContext.defaultParallelism)
+    Array.tabulate[InputPartition](k) { i =>
+      RestPartition((i until chapters.size by k).map(chapters).toVector,
+        props.getOrElse("transport", "fixture"),
+        props.getOrElse("fixturesdir", ""),
+        props.getOrElse("ratepersecond", "100").toDouble)
+    }
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
     new RestReaderFactory
 }
 
-private[rest] case class RestPartition(chapter: String, adapter: String,
+/** One chunk of the chapter list: its (chapter, adapter) pairs in
+  * fetch order. */
+private[rest] case class RestPartition(chapters: Vector[(String, String)],
                                        transport: String,
                                        fixturesDir: String,
                                        ratePerSecond: Double)
@@ -350,22 +360,28 @@ private[graft] object Throttle {
 private[rest] class RestReader(p: RestPartition)
   extends PartitionReader[InternalRow] {
 
-  /** The API fetch for this chapter, through the [[Transport]] seam;
-    * throttled before, header-feedback recorded after. */
-  private lazy val lines: Iterator[String] = {
-    Throttle.acquire(p.ratePerSecond) // one fetch per partition
-    val resp = Transport.resolve(p.transport, p.fixturesDir)
-      .fetch(p.adapter, p.chapter)
-    Throttle.noteHeaders(resp)
-    resp.lines.iterator
-  }
-
+  private val transport = Transport.resolve(p.transport, p.fixturesDir)
+  private val todo = p.chapters.iterator
+  private var chapter, adapter: UTF8String = _
+  private var lines: Iterator[String] = Iterator.empty
   private var current: String = _
-  override def next(): Boolean =
+
+  /** Fetches the chunk's chapters lazily, in order, through the
+    * [[Transport]] seam: each fetch throttled before and its header
+    * feedback recorded after, so rate limiting stays per fetch. */
+  override def next(): Boolean = {
+    while (!lines.hasNext && todo.hasNext) {
+      val (c, a) = todo.next()
+      Throttle.acquire(p.ratePerSecond)
+      val resp = transport.fetch(a, c)
+      Throttle.noteHeaders(resp)
+      chapter = UTF8String.fromString(c)
+      adapter = UTF8String.fromString(a)
+      lines = resp.lines.iterator
+    }
     if (lines.hasNext) { current = lines.next(); true } else false
+  }
   override def get(): InternalRow =
-    InternalRow(UTF8String.fromString(p.chapter),
-      UTF8String.fromString(p.adapter),
-      UTF8String.fromString(current))
+    InternalRow(chapter, adapter, UTF8String.fromString(current))
   override def close(): Unit = ()
 }

@@ -3,8 +3,9 @@ package graft
 import graft.sources.{Normalize, NormalizeQueries}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
-/** DataSourceV2 REST connector (A3–A6): partition-per-chapter scan,
+/** DataSourceV2 REST connector (A3–A6): chapters chunked per core,
   * offline fixture transport, token-bucket throttle, and end-to-end
   * compose with the normalize pipeline. */
 class RestSourceSpec extends AnyFunSuite {
@@ -18,13 +19,53 @@ class RestSourceSpec extends AnyFunSuite {
     .load()
     .cache()
 
-  test("one partition per chapter; payload rows carry their chapter") {
-    assert(raw.rdd.getNumPartitions == 6) // 6 chapters incl. unknown adapter
-    val byChapter = raw.groupBy("chapter").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
+  test("chapters chunked into one partition per core; each chapter in one") {
+    // 6 chapters incl. unknown adapter, dealt over min(6, cores) chunks
+    assert(raw.rdd.getNumPartitions ==
+      math.min(6, s.sparkContext.defaultParallelism))
+    val byChapter = raw.withColumn("part", spark_partition_id())
+      .groupBy("chapter").agg(count(lit(1)), countDistinct("part")).collect()
+      .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
+    // a chapter's rows never straddle two chunks
+    assert(byChapter.values.forall(_._2 == 1L))
     // ghost meetup row (no id) still belongs to london's payload
-    assert(byChapter == Map("newyork" -> 2L, "london" -> 3L, "berlin" -> 4L,
-      "rome" -> 2L, "miami" -> 4L)) // atlantis: unknown adapter → no fixture
+    assert(byChapter.map { case (c, (n, _)) => c -> n } ==
+      Map("newyork" -> 2L, "london" -> 3L, "berlin" -> 4L,
+        "rome" -> 2L, "miami" -> 4L)) // atlantis: unknown adapter → no fixture
+  }
+
+  test("every chapter is fetched exactly once across chunk boundaries") {
+    // 11 chapters over fewer chunks: uneven chunks, with empty pages
+    // between non-empty ones, so a chunk's reader must step over them
+    val chapters = (0 until 11).map(i => s"c$i")
+    val dir = java.nio.file.Files.createTempDirectory("rest-chunks")
+    val file = dir.resolve("chapters.jsonl")
+    java.nio.file.Files.write(file, chapters.map(c =>
+      s"""{"chapter": "$c", "adapter": "meetup"}""").mkString("\n")
+      .getBytes("UTF-8"))
+    val fetches = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    graft.sources.rest.Transport.register("counting",
+      new graft.sources.rest.Transport {
+        override def fetch(adapter: String, chapter: String) = {
+          fetches.merge(chapter, 1, (a, b) => a + b)
+          // c0 → 0 rows, c1 → 1 row, c2 → 2 rows, c3 → 0 rows, ...
+          graft.sources.rest.RestResponse(
+            Seq.tabulate(chapter.drop(1).toInt % 3)(j => s"""{"n": $j}"""))
+        }
+      })
+    try {
+      val df = s.read.format("graft.sources.rest.RestSource")
+        .option("chaptersFile", file.toString)
+        .option("transport", "counting")
+        .option("ratePerSecond", "1000")
+        .load()
+      assert(df.rdd.getNumPartitions < chapters.size) // chunks of 2-3
+      assert(df.count() == chapters.map(_.drop(1).toInt % 3).sum)
+      assert(fetches.asScala.toMap == chapters.map(_ -> Integer.valueOf(1)).toMap)
+    } finally {
+      java.nio.file.Files.delete(file)
+      java.nio.file.Files.delete(dir)
+    }
   }
 
   test("composes with the normalize pipeline end to end") {
