@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Benchmark main: times every SparkEntry query on SPARK_GRAFT_SF_DIR.
@@ -19,40 +18,7 @@ import java.nio.file.{Files, Paths}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // the last manual scale knob, handed to AQE (verdict r11 #8):
-      // shuffle WIDTH starts at 8× cores and AQE coalesces each
-      // exchange down to its 64 MB advisory target from runtime map
-      // stats — heavy dedup shuffles keep real parallelism while
-      // small ones collapse to a few tasks. Measured (SCALE.md r12):
-      // heavy-dedup family at sf3 0.65–0.99× per query (~13% total),
-      // full suite at sf0.1 ~8% faster in both paired windows. At
-      // 100 TB this is the difference between a TB-scale shuffle
-      // frozen at |cores| partitions and one sized by the optimizer.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        (8 * cpus.toInt).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // 51 queries × several codegen units overflow the default
-      // 100-entry generated-class cache; without headroom the larger
-      // queries re-run Janino compilation on every pass and the bench
-      // measures the compiler, not the engine
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      // planner extensions via the deployment config path — both
-      // passes of every query run under identical planning rules
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // local-mode liveness hardening (same as Verify): the in-JVM
-      // executor heartbeater System.exit(56)s the whole bench after 60
-      // consecutive missed heartbeats when box contention starves the
-      // RPC for ~600 s (ExecutorExitCode.HEARTBEAT_FAILURE — this is
-      // what killed the r14 driver's sbt test fork). Liveness tracking
-      // is meaningless in-process; timing methodology is unchanged.
-      .config("spark.executor.heartbeat.maxFailures", "1000000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(GraftSession.envCpus)
     spark.sparkContext.setLogLevel("WARN")
 
     // SPARK_GRAFT_BENCH_ONLY: comma-separated query subset (dev bisection)
@@ -134,23 +100,12 @@ object Bench {
     // real regression
     val spread = timed.map { case (n, lo, hi, _) => s""""$n":[$lo,$hi]""" }
       .mkString("{", ",", "}")
-    // full JSON string escape incl. ALL control chars — exception
-    // messages routinely carry tabs/CRs, which would corrupt the line
-    def esc(x: String): String = x.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-    val errJson = errors.map { case (n, e) => s""""$n":"${esc(e)}"""" }
+    val errJson = errors.map { case (n, e) => s""""$n":${Json.str(e)}""" }
       .mkString("{", ",", "}")
     val total = timed.map(_._2).sum
     val line =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
-        s""""spread":$spread,"errors":$errJson,"sf":"$sfDir"}"""
+        s""""spread":$spread,"errors":$errJson,"sf":${Json.str(sfDir)}}"""
     // stamped file per run + the fixed-name copy the driver reads:
     // concurrent runs (worktree bench vs main-tree bench) each keep
     // their own stamped record instead of silently clobbering the one

@@ -13,8 +13,9 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *   spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
   * }}}
   *
-  * Verify/Bench/tests build their sessions with exactly this config,
-  * so the scored path IS the deployment path. `TopK.install` /
+  * [[GraftSession.local]] (Verify, Bench, the dev tool and the tests)
+  * builds every session with exactly this config, so the scored path
+  * IS the deployment path. `TopK.install` /
   * `GraftFunctions.register` remain as per-session equivalents for
   * sessions built without the conf (both are idempotent; a session
   * with the conf AND the calls behaves identically). */

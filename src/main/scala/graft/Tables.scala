@@ -39,8 +39,9 @@ object Tables {
     *    type every query was validated against.
     * NOTE deliberate session-conf side effect: the nanosAsLong legacy
     * flag must be set before the read is planned; it is documented
-    * here and also set at session build time in Verify/Bench so
-    * callers constructing their own sessions agree. */
+    * here and also set at session build time by
+    * [[GraftSession.local]] so callers constructing their own
+    * sessions agree. */
   def events(s: SparkSession, d: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = t(s, d, "events")

@@ -12,31 +12,7 @@ object Verify {
     val Array(sfDir, outDir) = pos.take(2)
     val only = pos.drop(2).toSet
     val oracleOnly = args.contains("--oracle-only")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // AQE-sized shuffle width (see Bench.scala for the measured
-      // rationale) — the gate runs under the same planning rules as
-      // the bench and a deployment
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        (8 * cpus.toInt).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // graft's planner extensions are part of the engine
-      // configuration, wired the way a deployment would wire them —
-      // every query (and the oracle gate) runs under the same rules
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // local-mode liveness hardening: the in-JVM executor heartbeater
-      // System.exit(56)s the whole run after 60 consecutive missed
-      // heartbeats (ExecutorExitCode.HEARTBEAT_FAILURE) — a contended
-      // box starved the RPC for ~600 s in the r14 driver run and killed
-      // a long-running JVM mid-flight. Heartbeats track executor
-      // liveness, which is meaningless in-process; make the suicide
-      // threshold unreachable. No effect on what any query computes.
-      .config("spark.executor.heartbeat.maxFailures", "1000000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(GraftSession.envCpus)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Per-query failures must surface in the ARTIFACT, not just stderr:
@@ -61,36 +37,22 @@ object Verify {
       // checkpoint blocks it left in the block manager
       ops.Staged.sweep()
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    def obj(kv: Iterable[(String, String)]): String = kv
+      .map { case (k, v) => s"${Json.str(k)}: ${Json.str(v)}" }.mkString("{", ",", "}")
+    val json = obj(SparkEntry.oracleSql)
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // Large-SF oracle variants (class-contracted graph trio) for the
     // sf3 gate — the driver ignores this file; check.py --scale-oracle
     // reads it instead of oracle_sql.json.
-    val scaleJson = SparkEntry.oracleSqlScale
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val scaleJson = obj(SparkEntry.oracleSqlScale)
     Files.writeString(Paths.get(s"$outDir/oracle_sql_scale.json"), scaleJson)
     // Sampled-subgraph independence oracles (tools/slice_check.py) —
     // the engine-independent sf3 evidence for the graph trio.
-    val sliceJson = SparkEntry.oracleSqlSlice
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val sliceJson = obj(SparkEntry.oracleSqlSlice)
     Files.writeString(Paths.get(s"$outDir/oracle_sql_slice.json"), sliceJson)
     // Always written (empty object when clean) so "no errors recorded"
     // is distinguishable from "error channel didn't exist".
-    val errJson = errors
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val errJson = obj(errors)
     Files.writeString(Paths.get(s"$outDir/errors.json"), errJson)
     // Deliberately still exit 0: the partial dump is valid for every
     // query that DID run; errors.json is the per-query failure channel.

@@ -141,10 +141,10 @@ object Lakehouse extends QueryModule {
   private val NSalt = 8
 
   /** Hot-key-share crossover below which salting measurably LOSES
-    * (SaltBench, sf1/sf3: wins 1.40-1.71× at ≥30% planted hot-key
-    * share, loses under uniform keys — the ×NSalt dim inflation and
-    * second hash column aren't free). `spark.graft.salt.minHotShare`
-    * overrides. */
+    * (SCALE.md round-10 salted-join table, sf1/sf3: wins 1.40-1.71× at
+    * ≥30% planted hot-key share, loses under uniform keys — the ×NSalt
+    * dim inflation and second hash column aren't free).
+    * `spark.graft.salt.minHotShare` overrides. */
   private def minHotShare(s: SparkSession): Double =
     s.conf.getOption("spark.graft.salt.minHotShare").map(_.toDouble)
       .getOrElse(0.30)
@@ -306,9 +306,9 @@ object Lakehouse extends QueryModule {
     * Exchange. The oracle runs the identical join over the ORIGINAL
     * unpartitioned parquet — physical layout must never change
     * results. Bucket count comes from [[nBuckets]] (session
-    * parallelism unless `spark.graft.buckets` overrides) — BucketBench
-    * measured buckets=8 capping this box's join at 8 tasks where
-    * buckets=cores ran 1.5-2.1× faster. */
+    * parallelism unless `spark.graft.buckets` overrides) — the SCALE.md
+    * round-10 bucketed-layout table measured buckets=8 capping this
+    * box's join at 8 tasks where buckets=cores ran 1.5-2.1× faster. */
   private def joinBucketed(s: SparkSession, d: String): DataFrame = {
     val dir = graft.Scratch.dir("bucketed")
     val n = nBuckets(s)
@@ -319,7 +319,7 @@ object Lakehouse extends QueryModule {
     // one-time work, so repeat invocations in the same process (bench
     // passes, repeated reads) reuse the existing tables instead of
     // re-paying the write — which is precisely the amortization the
-    // lever exists for (BucketBench measures the break-even). The
+    // lever exists for (break-even in SCALE.md's round-10 table). The
     // table name carries the dir tag, a source-content signature and
     // the bucket count, so a different SF, a regenerated source file,
     // or a re-configured bucket count never aliases a stale layout.

@@ -2,12 +2,13 @@ package org.apache.spark.graft
 
 import org.apache.spark.SparkContext
 
-/** `SparkContext.listenerBus` is `private[spark]`; the pressure bench
-  * needs to drain it so per-query spill samples aren't skewed by the
-  * bus's asynchronous delivery (a stage-completed event can otherwise
-  * land after the sample that should have included it). This shim is
-  * the minimal, test-harness-only bridge — the same package-injection
-  * pattern Spark's own external test utilities use. Nothing in the
+/** `SparkContext.listenerBus` is `private[spark]`; the dev tool's
+  * stage log (`graft.Dev.StageLog`) needs to drain it so per-query
+  * stage tallies aren't skewed by the bus's asynchronous delivery (a
+  * stage-completed event can otherwise land after the sample that
+  * should have included it). This shim is the minimal, harness-only
+  * bridge — the same package-injection pattern Spark's own external
+  * test utilities use. Nothing in the
   * scored query paths touches it.
   */
 object ListenerBusAccess {

@@ -17,8 +17,8 @@ class EventsEncodingSpec extends AnyFunSuite {
   import s.implicits._
 
   private lazy val nanosDir = {
-    val d = java.nio.file.Files
-      .createTempDirectory("graft-events-nanos").toString
+    val d = Scratch.deleteOnExit(java.nio.file.Files
+      .createTempDirectory("graft-events-nanos").toString)
     // Write ts as BIGINT nanoseconds — byte-identical physical layout
     // to what the nanos-generation testdata reads as under the
     // nanosAsLong flag (LongType), exercising the DIV-1000 branch.

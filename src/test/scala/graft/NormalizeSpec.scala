@@ -174,7 +174,8 @@ class NormalizeSpec extends AnyFunSuite {
     assert(events("219961100").getAs[String]("url") ==
       "http://www.meetup.com/papers-we-love/events/219961100/")
     // serialized line matches the reference's envelope: {"id": {event}}
-    val out = Files.createTempDirectory("graft-refshape").toString
+    val out = Scratch.deleteOnExit(
+      Files.createTempDirectory("graft-refshape").toString)
     shaped.filter(col("chapter") === "newyork").select("events")
       .coalesce(1).write.mode("overwrite").json(out)
     val line = new java.io.File(out).listFiles()
@@ -184,7 +185,8 @@ class NormalizeSpec extends AnyFunSuite {
   }
 
   test("keyed JSON sink: one directory per chapter (api-runner.rkt:39-52)") {
-    val out = Files.createTempDirectory("graft-sink").toString
+    val out = Scratch.deleteOnExit(
+      Files.createTempDirectory("graft-sink").toString)
     val (ok, _) = Normalize.split(all)
     Normalize.writeKeyedJson(ok, out)
     val dirs = new java.io.File(out).listFiles().filter(_.isDirectory)

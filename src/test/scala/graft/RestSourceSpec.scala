@@ -39,6 +39,7 @@ class RestSourceSpec extends AnyFunSuite {
     // between non-empty ones, so a chunk's reader must step over them
     val chapters = (0 until 11).map(i => s"c$i")
     val dir = java.nio.file.Files.createTempDirectory("rest-chunks")
+    Scratch.deleteOnExit(dir.toString)
     val file = dir.resolve("chapters.jsonl")
     java.nio.file.Files.write(file, chapters.map(c =>
       s"""{"chapter": "$c", "adapter": "meetup"}""").mkString("\n")

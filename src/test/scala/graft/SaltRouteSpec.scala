@@ -3,13 +3,14 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The stats-driven plain/salted join pick (verdict r10 #5): SaltBench
-  * measured the crossover (~30% hot-key share — salting wins 1.40-1.71×
-  * above it, loses below), and q_join_skew_salted now ROUTES on a
-  * sampled key-histogram probe instead of always salting. This suite
-  * pins (a) both branches output-equal on the scored query, (b) the
-  * probe's estimates on planted-skew vs uniform keys, and (c) the
-  * route each estimate selects. */
+/** The stats-driven plain/salted join pick (verdict r10 #5): the
+  * SCALE.md round-10 salted-join table records the crossover (~30%
+  * hot-key share — salting wins 1.40-1.71× above it, loses below),
+  * and q_join_skew_salted now ROUTES on a sampled key-histogram probe
+  * instead of always salting. This suite pins (a) both branches
+  * output-equal on the scored query, (b) the probe's estimates on
+  * planted-skew vs uniform keys, and (c) the route each estimate
+  * selects. */
 class SaltRouteSpec extends AnyFunSuite {
   private lazy val s = SparkTestBase.spark
   private val d = SparkTestBase.sfDir

@@ -15,7 +15,8 @@ class ScaleTechniquesSpec extends AnyFunSuite {
   private val d = SparkTestBase.sfDir
 
   test("bucketed tables join without a shuffle exchange") {
-    val wh = Files.createTempDirectory("graft-warehouse").toString
+    val wh = Scratch.deleteOnExit(
+      Files.createTempDirectory("graft-warehouse").toString)
     // write both sides bucketed on the join key — the 100-TB pattern
     // for repeated fact⋈fact joins: pay the shuffle once at write time
     Tables.orders(s, d).write.mode("overwrite")
@@ -195,7 +196,8 @@ class ScaleTechniquesSpec extends AnyFunSuite {
     // same dir, new content: the cache key carries a content signature,
     // so rewriting the parquet under an unchanged path must re-bucket,
     // not replay the stale layout
-    val tmp = Files.createTempDirectory("graft-stale").toString
+    val tmp = Scratch.deleteOnExit(
+      Files.createTempDirectory("graft-stale").toString)
     def gen(frac: Int): Unit = {
       Tables.lineitem(s, d).filter(col("l_orderkey") % frac === 0)
         .coalesce(1).write.mode("overwrite").parquet(s"$tmp/lineitem.parquet")

@@ -5,47 +5,23 @@ import org.apache.spark.sql.SparkSession
 /** One shared local session for the whole test run (sessions are
   * expensive; suites only read) — recreated if its context dies, so a
   * single context death cannot cascade through every later suite.
-  * Mirrors the driver's session config: UTC, small shuffle partitions,
-  * nanos-as-long for events.parquet. */
+  * Built by the same [[GraftSession.local]] factory as Verify and
+  * Bench, at 4 cores, plus two test-only overrides. */
 object SparkTestBase {
   private def build(): SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      // same AQE shuffle-width rule as Verify/Bench (8× cores) — the
-      // suite exercises the deployment's planning config, not a
-      // test-only one
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // same config-driven extension path as Verify/Bench/deployment
-      .config("spark.sql.extensions", "graft.GraftExtensions")
+    val s = GraftSession.local(4, Map(
       // behavior-identical SortShuffleManager wrapper; inert unless
       // RetryDeterminismSpec arms graft.RetryInjector (test-only —
       // Verify/Bench run the stock manager)
-      .config("spark.shuffle.manager",
-        "org.apache.spark.shuffle.graft.KillingShuffleManager")
+      "spark.shuffle.manager" ->
+        "org.apache.spark.shuffle.graft.KillingShuffleManager",
       // context-level (SparkConf) spill trigger: Spillable consumers
       // (ExternalAppendOnlyMap/ExternalSorter) force a spill past this
       // many in-memory elements regardless of heap headroom. 100k is
       // far above any sf0.001 per-task row count, so ordinary suites
       // never trip it; TopKSpec's spill test drives a synthetic frame
       // past it to exercise FinalTopK's spill path deterministically.
-      .config("spark.shuffle.spill.numElementsForceSpillThreshold", "100000")
-      // In local mode the "executor" heartbeater lives in THIS JVM and
-      // System.exit(56)s the whole test run after 60 consecutive missed
-      // heartbeats (ExecutorExitCode.HEARTBEAT_FAILURE) — exactly what
-      // killed the r14 driver run: a contended box starved the
-      // heartbeat RPC for ~600 s, the shutdown hook stopped the shared
-      // context mid-LocalSortOrderSpec, and 14 queued tests died on a
-      // stopped SparkContext. Heartbeats carry no correctness here
-      // (same-JVM block manager, no real executor liveness to track),
-      // so make the suicide threshold unreachable.
-      .config("spark.executor.heartbeat.maxFailures", "1000000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+      "spark.shuffle.spill.numElementsForceSpillThreshold" -> "100000"))
     s.sparkContext.setLogLevel("ERROR")
     s
   }

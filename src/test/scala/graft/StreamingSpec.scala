@@ -30,8 +30,10 @@ class StreamingSpec extends AnyFunSuite {
     // streaming frame runs against the production-shaped file sink —
     // the 100-TB path, where results append to parquet/delta instead
     // of collecting to the driver
-    val out = java.nio.file.Files.createTempDirectory("graft_sink_").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt_").toString
+    val out = Scratch.deleteOnExit(
+      java.nio.file.Files.createTempDirectory("graft_sink_").toString)
+    val ckpt = Scratch.deleteOnExit(
+      java.nio.file.Files.createTempDirectory("graft_ckpt_").toString)
     val agg = graft.streaming.Streams.sessionFrame(s, d)
     val q = agg.writeStream.format("parquet")
       .option("path", out).option("checkpointLocation", ckpt)
