@@ -84,8 +84,8 @@ object Graft {
     (withId, withId.select(col(surrogate), col(idCol)).distinct())
   }
 
-  /** Register the engine's native SQL functions (`graft_dot`,
-    * `graft_ngrams`, `graft_bloom_*`) on a session that was not
+  /** Register the engine's native SQL functions (the
+    * [[functions.GraftFunctions]] table) on a session that was not
     * built with `spark.sql.extensions=graft.GraftExtensions`. */
   def registerFunctions(s: SparkSession): Unit =
     _root_.graft.functions.GraftFunctions.register(s)

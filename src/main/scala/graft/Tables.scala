@@ -37,13 +37,9 @@ object Tables {
     *    spark.sql.session.timeZone=UTC, so the cast reinterprets the
     *    same micros value and downstream code keeps seeing the LTZ
     *    type every query was validated against.
-    * NOTE deliberate session-conf side effect: the nanosAsLong legacy
-    * flag must be set before the read is planned; it is documented
-    * here and also set at session build time by
-    * [[GraftSession.local]] so callers constructing their own
-    * sessions agree. */
+    * The LongType branch needs the nanosAsLong legacy flag, which
+    * [[GraftSession.local]] sets when it builds the session. */
   def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = t(s, d, "events")
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
@@ -99,20 +95,6 @@ object Tables {
     * Partition count: same contract as [[par]]. */
   def parRange(s: SparkSession, df: DataFrame, keys: Column*): DataFrame =
     df.repartitionByRange(s.sparkContext.defaultParallelism, keys: _*)
-
-  /** Size gate for the parRange + local-sort conversion: below this
-    * many source bytes the range exchange's extra sampling JOB (a
-    * full scheduling round trip) costs more than the exchange it
-    * saves — r14 measured q_win_rank 2× slower at bench SF on a
-    * 300 KB customer table while the same pattern won 1.3–2.3× on
-    * MB-scale inputs. Callers with a cheap projection and a tiny
-    * source should keep the classic orderBy below the gate; the
-    * converted path is the 100 TB shape. Conf-overridable so tests
-    * can force either path. */
-  val ParRangeMinBytes: Long = 1L << 20
-  def parRangeMinBytes(s: SparkSession): Long =
-    s.conf.getOption("spark.graft.sort.parRangeMinBytes")
-      .map(_.toLong).getOrElse(ParRangeMinBytes)
 }
 
 /** A named query + its DuckDB oracle SQL. Modules contribute these and

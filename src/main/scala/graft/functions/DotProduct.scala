@@ -1,7 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, BloomFilterMightContain, Expression}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
@@ -24,8 +25,8 @@ import org.apache.spark.sql.SparkSession
   * (BinaryExpression's default null-intolerance); null ELEMENTS are
   * not expected (embeddings are dense) and read as 0.0.
   *
-  * Registered per-session under the SQL name `graft_dot` via
-  * [[GraftFunctions.register]].
+  * Registered under the SQL name `graft_dot` by the [[GraftFunctions]]
+  * table.
   */
 case class DotProduct(left: Expression, right: Expression)
   extends BinaryExpression {
@@ -76,9 +77,11 @@ case class DotProduct(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Session-local registration of graft's native expressions. Idempotent;
-  * called by query builders that use them. (A library deployment would
-  * do this once via SparkSessionExtensions.injectFunction.) */
+/** graft's native SQL functions: one table of (name, class, builder)
+  * that both registration paths read — `graft.GraftExtensions` injects
+  * it into every session built with `spark.sql.extensions`, and
+  * [[register]] adds it to a session built without (the facade's
+  * `Graft.registerFunctions`). Idempotent. */
 object GraftFunctions {
   /** Wrong argument counts must read as "graft_dot expects 2
     * arguments, got 1", not an IndexOutOfBoundsException out of the
@@ -88,24 +91,33 @@ object GraftFunctions {
     require(exprs.length == n,
       s"$name expects $n argument(s), got ${exprs.length}")
 
-  def register(s: SparkSession): Unit = {
-    def fn(name: String, arity: Int)(b: Seq[Expression] => Expression): Unit =
-      s.sessionState.functionRegistry.createOrReplaceTempFunction(
-        name, { exprs => requireArity(name, exprs, arity); b(exprs) },
-        "built-in")
-    fn("graft_dot", 2)(exprs => DotProduct(exprs(0), exprs(1)))
-    // graft_ngrams checks its own arity inside fromExprs
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_ngrams", NgramHash.fromExprs, "built-in")
-    fn("graft_hash60", 1)(exprs => Hash60(exprs(0)))
-    // arity + literal width checked inside fromExprs
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_ngram_h60", NgramHash60.fromExprs, "built-in")
-    fn("graft_bloom_agg", 3)(exprs =>
-      new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-        exprs(0), exprs(1), exprs(2)))
-    fn("graft_bloom_contains", 2)(exprs =>
-      org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-        exprs(0), exprs(1)))
-  }
+  /** One SQL function: its name, the class `DESCRIBE FUNCTION` reports,
+    * and a builder that checks its own arguments. */
+  final case class Fn(name: String, className: String,
+                      build: Seq[Expression] => Expression)
+
+  private def fn(name: String, cls: Class[_], arity: Int)(
+      b: Seq[Expression] => Expression): Fn =
+    Fn(name, cls.getName,
+      { exprs => requireArity(name, exprs, arity); b(exprs) })
+
+  val table: Seq[Fn] = Seq(
+    fn("graft_dot", classOf[DotProduct], 2)(e => DotProduct(e(0), e(1))),
+    // graft_ngrams and graft_ngram_h60 check their own arity and
+    // literal arguments in fromExprs
+    Fn("graft_ngrams", classOf[NgramHash].getName, NgramHash.fromExprs),
+    fn("graft_hash60", classOf[Hash60], 1)(e => Hash60(e(0))),
+    Fn("graft_ngram_h60", classOf[NgramHash60].getName, NgramHash60.fromExprs),
+    // Spark ships bloom-filter build/probe as INTERNAL expressions
+    // (used by its own runtime join filters, not in the public
+    // registry); expose them as first-class pipeline functions — the
+    // Dolma-style decontamination pre-filter needs exactly this pair.
+    fn("graft_bloom_agg", classOf[BloomFilterAggregate], 3)(e =>
+      new BloomFilterAggregate(e(0), e(1), e(2))),
+    fn("graft_bloom_contains", classOf[BloomFilterMightContain], 2)(e =>
+      BloomFilterMightContain(e(0), e(1))))
+
+  def register(s: SparkSession): Unit =
+    table.foreach(f => s.sessionState.functionRegistry
+      .createOrReplaceTempFunction(f.name, f.build, "built-in"))
 }

@@ -21,8 +21,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * engines now agree through entirely different code paths, which
   * strengthens the oracle rather than weakening it.
   *
-  * Registered per-session under `graft_hash60` via
-  * [[GraftFunctions.register]].
+  * Registered under `graft_hash60` by the [[GraftFunctions]] table.
   */
 case class Hash60(child: Expression) extends UnaryExpression {
 

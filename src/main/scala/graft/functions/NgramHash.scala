@@ -42,8 +42,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * SET (sorted — callers treat it as a set); `false` keeps one hash
   * per position for occurrence counting (q_llm_repetition).
   *
-  * SQL name `graft_ngrams(text, width, distinct)`, registered via
-  * [[GraftFunctions.register]] and `graft.GraftExtensions`.
+  * SQL name `graft_ngrams(text, width, distinct)`, registered by
+  * the [[GraftFunctions]] table.
   */
 case class NgramHash(child: Expression, width: Int, distinct: Boolean)
   extends UnaryExpression {

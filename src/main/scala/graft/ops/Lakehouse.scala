@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{QueryModule, Tables => T}
+import graft.{Gate, QueryModule, Tables => T}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -143,11 +143,8 @@ object Lakehouse extends QueryModule {
   /** Hot-key-share crossover below which salting measurably LOSES
     * (SCALE.md round-10 salted-join table, sf1/sf3: wins 1.40-1.71× at
     * ≥30% planted hot-key share, loses under uniform keys — the ×NSalt
-    * dim inflation and second hash column aren't free).
-    * `spark.graft.salt.minHotShare` overrides. */
-  private def minHotShare(s: SparkSession): Double =
-    s.conf.getOption("spark.graft.salt.minHotShare").map(_.toDouble)
-      .getOrElse(0.30)
+    * dim inflation and second hash column aren't free). */
+  private[graft] val MinHotShare = 0.30
 
   /** Sampled key-histogram probe: share of the fact side's sampled
     * rows carried by its single hottest key. One column-pruned
@@ -175,24 +172,19 @@ object Lakehouse extends QueryModule {
   private val probeCache =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Double]()
 
-  /** Route for [[joinSkewSalted]]: salted iff the probe sees a hot
-    * key at-or-past the measured crossover. `spark.graft.salt.force`
-    * (salted|plain) pins a branch for specs and benchmarks. */
+  /** Route for [[joinSkewSalted]], the `salt` [[Gate]]: salted iff the
+    * probe sees a hot key at-or-past the measured crossover.
+    * [[Gate.Key]] (small = plain, large = salted) pins a branch
+    * for specs and benchmarks without running the sample-scan job. */
   private[graft] def saltRoute(s: SparkSession, li: DataFrame,
                                dir: Option[String] = None): Boolean =
-    s.conf.getOption("spark.graft.salt.force") match {
-      case Some("salted") => true
-      case Some("plain")  => false
-      case _ =>
-        val share = dir match {
-          case Some(d) =>
-            val key = d + "#" + srcSig(s, d, Seq("lineitem.parquet"))
-            probeCache.computeIfAbsent(key,
-              _ => hotKeyShare(li, "l_suppkey")).doubleValue()
-          case None => hotKeyShare(li, "l_suppkey")
-        }
-        share >= minHotShare(s)
-    }
+    Gate.large(s, "salt", dir match {
+      case Some(d) =>
+        val key = d + "#" + srcSig(s, d, Seq("lineitem.parquet"))
+        probeCache.computeIfAbsent(key,
+          _ => hotKeyShare(li, "l_suppkey")).doubleValue()
+      case None => hotKeyShare(li, "l_suppkey")
+    }, MinHotShare)
 
   /** The salting rewrite for skewed join keys as a STATS-DRIVEN pick
     * (the LocalGraphStrategy pattern): a sampled key-histogram probe
@@ -237,18 +229,6 @@ object Lakehouse extends QueryModule {
        |GROUP BY s_nationkey ORDER BY s_nationkey""".stripMargin
 
   // ------------------------------------------------------------ q_join_bucketed
-
-  /** Bucket count: `spark.graft.buckets`, defaulting to the session's
-    * parallelism — bucketing caps the join's parallelism at the bucket
-    * count, so a constant (the old 8) would throttle a 32-core box to
-    * 8 tasks and a 1000-executor cluster to 8. A deployment sizes it
-    * to O(cluster cores) once; every co-bucketed writer must agree on
-    * it (the written table carries the count, so a mismatch surfaces
-    * as distinct tables, not silent re-shuffles). Layout never changes
-    * results — the gate's oracle runs over the unbucketed parquet. */
-  private def nBuckets(s: SparkSession): Int =
-    s.conf.getOption("spark.graft.buckets").map(_.toInt)
-      .getOrElse(s.sparkContext.defaultParallelism)
 
   /** Driver-side content signature (name + length + mtime, recursive
     * over multi-file parquet dirs) of the join's source files. Rides
@@ -305,13 +285,16 @@ object Lakehouse extends QueryModule {
     * ScaleTechniquesSpec asserts the executed join subtree contains no
     * Exchange. The oracle runs the identical join over the ORIGINAL
     * unpartitioned parquet — physical layout must never change
-    * results. Bucket count comes from [[nBuckets]] (session
-    * parallelism unless `spark.graft.buckets` overrides) — the SCALE.md
-    * round-10 bucketed-layout table measured buckets=8 capping this
-    * box's join at 8 tasks where buckets=cores ran 1.5-2.1× faster. */
-  private def joinBucketed(s: SparkSession, d: String): DataFrame = {
+    * results. The scored query buckets into `n` = the session's
+    * parallelism: bucketing caps the join's parallelism at `n`, and
+    * the SCALE.md round-10 bucketed-layout table measured buckets=8
+    * capping this box's join at 8 tasks where buckets=cores ran
+    * 1.5-2.1× faster. Every co-bucketed writer must agree on it (the
+    * table name carries the count, so a mismatch surfaces as distinct
+    * tables, not silent re-shuffles); layout never changes results. */
+  private[graft] def joinBucketed(s: SparkSession, d: String,
+                                  n: Int): DataFrame = {
     val dir = graft.Scratch.dir("bucketed")
-    val n = nBuckets(s)
     val tag = d.replaceAll("[^A-Za-z0-9]", "_") + "_" +
       srcSig(s, d, Seq("lineitem.parquet", "orders.parquet")) + s"_b$n"
     val (liT, ordT) = (s"graft_bkt_li_$tag", s"graft_bkt_ord_$tag")
@@ -522,7 +505,9 @@ object Lakehouse extends QueryModule {
     "q_merge_upsert" -> (mergeUpsert _),
     "q_ts_gapfill" -> (tsGapfill _),
     "q_join_skew_salted" -> (joinSkewSalted _),
-    "q_join_bucketed" -> (joinBucketed _),
+    "q_join_bucketed" ->
+      ((s: SparkSession, d: String) =>
+        joinBucketed(s, d, s.sparkContext.defaultParallelism)),
     "q_lake_scd2" -> (lakeScd2 _),
     "q_dq_audit" -> (dqAudit _),
   )

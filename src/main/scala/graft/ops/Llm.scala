@@ -286,7 +286,6 @@ object Llm extends QueryModule {
     * Ranking uses the 1e-6-discretized cosine with vec_id tie-break
     * so row order can't flip on a last-ulp disagreement. */
   private def simSearch(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val emb = T.embeddings(s, d)
       .select(col("vec_id"),
         transform(col("embedding"), x => x.cast("double")).as("e"))

@@ -306,7 +306,6 @@ object LlmCorpus extends QueryModule {
     * by construction — x·1e6 sits within 1e-7 of an integer, 7 orders
     * from the boundary. */
   private def dsirWeight(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     // graft_ngram_h60: the old split → interpreted transform/concat
     // lambda → per-gram graft_hash60 chain evaluated on the
     // CodegenFallback path at ~14 µs/gram (11 of this query's 16

@@ -25,8 +25,9 @@ object LlmExt extends QueryModule {
     * conv(substring(md5(x),1,15),16,10) chain every oracle runs).
     * The chain form this replaced materialized a 32-char hex string
     * and base-16-parsed 15 digits PER WORD — the dominant term of the
-    * simhash fingerprint stage that feeds six scored queries. Callers
-    * must have GraftFunctions registered (simhashFps does it). */
+    * simhash fingerprint stage that feeds six scored queries. The
+    * session must carry the graft functions: `graft.GraftExtensions`
+    * injects them, `Graft.registerFunctions` adds them otherwise. */
   private def h60(c: Column): Column =
     call_function("graft_hash60", c.cast("string"))
   /** The identical DuckDB rendering. */
@@ -51,7 +52,6 @@ object LlmExt extends QueryModule {
     * from. Lazy-checkpointed: every consumer reuses the one
     * materialization of the 64-sum fingerprint aggregation. */
   private def simhashFps(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     // hash each word ONCE in a projection below the aggregation: the
     // 64 per-bit sums all reference the same md5-derived hash, and
     // inlining it into 64 aggregate-update expressions leaves the
@@ -249,7 +249,6 @@ object LlmExt extends QueryModule {
     * assignment shared with q_llm_sim_ann — the operator is
     * self-contained, not dependent on a pre-labeled column. */
   private def dedupEmbed(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     // Exact-vector collapse BEFORE the in-cell self-join — the dedup
     // family composition (dedupSimhash/dedupFuzzy/dedupNgram), keyed
     // by the vector itself: verbatim duplicate embeddings (heavy in
@@ -359,7 +358,6 @@ object LlmExt extends QueryModule {
     * package-visible so AnnSpec can run [[ivfCandidatesOver]] on the
     * same frame the scored query uses. */
   private[graft] def simAnnFrame(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     T.embeddings(s, d)
       .select(col("vec_id"),
         transform(col("embedding"), x => x.cast("double")).as("e"),
@@ -504,7 +502,6 @@ object LlmExt extends QueryModule {
   /** The retired untrained-grid nprobe=1 variant, kept package-visible
     * ONLY as AnnSpec's recall baseline (not scored). */
   private[graft] def simAnnGrid(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val e = T.embeddings(s, d)
       .select(col("vec_id"),
         transform(col("embedding"), x => x.cast("double")).as("e"))
@@ -650,7 +647,6 @@ object LlmExt extends QueryModule {
     * arithmetic is the portable md5-based 60-bit hash, so the oracle
     * reproduces the exact fingerprint set. Pure map-side at scale. */
   private def fingerprint(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     // docsRange + local sort (see Llm.docsRange), and the positional
     // 3-gram hashes come from the native graft_ngram_h60 (one codegen
     // pass digesting each gram's byte range) instead of the
@@ -1015,7 +1011,6 @@ object LlmExt extends QueryModule {
     * pins 0.35). */
   private[graft] def semdedupOver(e0: DataFrame,
                                   minCos: Double = 0.35): DataFrame = {
-    graft.functions.GraftFunctions.register(e0.sparkSession)
     // one row per DISTINCT embedding: sorted member ids, class key
     val groups = e0
       .groupBy(col("e"))
@@ -1084,7 +1079,6 @@ object LlmExt extends QueryModule {
     * formulations on frames where the expanded one is tractable. */
   private[graft] def semdedupExpandedOver(e0: DataFrame,
                                           minCos: Double = 0.35): DataFrame = {
-    graft.functions.GraftFunctions.register(e0.sparkSession)
     val e = e0
       .withColumn("cell", ivfCell(col("e")))
       .withColumn("nrm", sqrt(expr("graft_dot(e, e)")))

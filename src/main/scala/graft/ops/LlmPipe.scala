@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{QueryModule, Tables => T}
+import graft.{Gate, QueryModule, Tables => T}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -152,7 +152,7 @@ object LlmPipe extends QueryModule {
     val (classes, classEdges) = LlmExt.simhashClassGraph(s, d)
     val st = stagePairs(classEdges.toDF("da", "db"))
     val repLabels =
-      if (st.edges <= localGraphMaxEdges(s)) ccLocalLabels(st)
+      if (localGraph(s, st)) ccLocalLabels(st)
       else dedupCcLoopLabels(st.df)
     // both strategies have materialized by here (driver collect /
     // per-round checkpoints), so the staged blocks can go
@@ -286,11 +286,9 @@ object LlmPipe extends QueryModule {
     * scan) still runs fully distributed. Above it — a truly dirty
     * corpus at 100 TB can push candidate edges into the billions — the
     * star-contraction / power-iteration loops take over unchanged.
-    * Both paths are pinned equal by LocalGraphStrategySpec.
-    *
-    * Override order: `spark.graft.graph.localMaxEdges` session conf
-    * (tests force each path), `GRAFT_GRAPH_LOCAL_MAX` env, default. */
-  private[graft] val LocalGraphMaxEdgesDefault: Long = 2L * 1000 * 1000
+    * Both paths are pinned equal by LocalGraphStrategySpec, which
+    * forces each through [[Gate.Key]]. */
+  private[graft] val LocalGraphMaxEdges: Long = 2L * 1000 * 1000
 
   /** Node-count ceiling for broadcasting the per-round node-sized
     * frames (labels / ranks, ~16 bytes a row → ≤ ~32 MB shipped per
@@ -298,10 +296,10 @@ object LlmPipe extends QueryModule {
     * loops keep their shuffled sort-merge plans. */
   private[graft] val BroadcastGraphNodes: Long = 2L * 1000 * 1000
 
-  private[graft] def localGraphMaxEdges(s: SparkSession): Long =
-    s.conf.getOption("spark.graft.graph.localMaxEdges")
-      .orElse(sys.env.get("GRAFT_GRAPH_LOCAL_MAX"))
-      .map(_.toLong).getOrElse(LocalGraphMaxEdgesDefault)
+  /** The `graph` [[Gate]]: true solves on the driver, which the
+    * probe allows up to [[LocalGraphMaxEdges]] staged edges. */
+  private def localGraph(s: SparkSession, st: StagedPairs): Boolean =
+    !Gate.large(s, "graph", st.edges.toDouble, LocalGraphMaxEdges + 1)
 
   /** Driver-side r6 — bit-identical to Det.r6 / Det.sql6: every step
     * is the same IEEE-754 double op Spark and DuckDB evaluate. */
@@ -346,13 +344,15 @@ object LlmPipe extends QueryModule {
   private[graft] final class R6BoundaryTrip(msg: String)
     extends RuntimeException(msg)
 
+  private val logger = org.slf4j.LoggerFactory.getLogger(getClass)
+
   private def onBoundaryTrip(query: String, t: R6BoundaryTrip): Unit =
-    org.slf4j.LoggerFactory.getLogger(getClass).warn(
+    logger.warn(
       s"graft $query: ${t.getMessage}; abandoning the driver-local " +
         "strategy and re-running distributed")
 
   /** The staged (da, db) pairs as two primitive arrays (driver path
-    * only — callers have already checked edges ≤ localGraphMaxEdges). */
+    * only — callers have already passed [[localGraph]]). */
   private def collectEdges(st: StagedPairs): (Array[Long], Array[Long]) = {
     val rows = st.rdd.map(r => (r.getLong(0), r.getLong(1))).collect()
     val a = new Array[Long](rows.length)
@@ -426,22 +426,23 @@ object LlmPipe extends QueryModule {
     * edge. The count guard matters independently of the edge count —
     * a 100M-doc corpus of exact 2-way duplicates has ZERO class edges
     * and 50M participating classes; that regime must stay
-    * distributed. */
+    * distributed. The guard and its collect limit are driver-memory
+    * safety, not a strategy pick: they hold at [[LocalGraphMaxEdges]]
+    * even when [[Gate.Key]] `= small` forces the gate. */
   private def classGraphLocal(s: SparkSession, classes: DataFrame,
       st: StagedPairs)
       : Option[(Array[Long], Array[Long], Array[Long], Array[Long])] = {
-    if (st.edges > localGraphMaxEdges(s)) return None
+    if (!localGraph(s, st)) return None
     val linked = st.df.select(explode(array(col("da"), col("db")))
       .as("rep")).distinct()
-    val cap = math.min(localGraphMaxEdges(s), Int.MaxValue.toLong - 1)
     val parts = classes.select(col("rep"), col("m"))
       .filter(col("m") > 1)
       .unionByName(classes.select(col("rep"), col("m"))
         .join(linked, Seq("rep"), "left_semi"))
       .dropDuplicates("rep")
-      .limit((cap + 1).min(Int.MaxValue.toLong).toInt)
+      .limit(LocalGraphMaxEdges.toInt + 1)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
-    if (parts.length > cap) return None
+    if (parts.length > LocalGraphMaxEdges) return None
     val sorted = parts.sortBy(_._1)
     val (ea, eb) = collectEdges(st)
     Some((sorted.map(_._1), sorted.map(_._2), ea, eb))
@@ -639,13 +640,10 @@ object LlmPipe extends QueryModule {
       converged = nextSum == prevSum
       prevSum = nextSum
       rounds += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(f"[dedupCc] round $rounds%d took " +
-          f"${(System.nanoTime() - roundT0) / 1e9}%.3f s (sum=$nextSum%d)")
+      logger.debug(f"graft dedupCc: round $rounds%d took " +
+        f"${(System.nanoTime() - roundT0) / 1e9}%.3f s (sum=$nextSum%d)")
     }
     require(converged, s"hash-min did not converge in $MaxRounds rounds")
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      System.err.println(s"[dedupCc] converged in $rounds rounds")
     labels
   }
 

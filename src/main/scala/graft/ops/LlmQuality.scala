@@ -690,7 +690,6 @@ object LlmQuality extends QueryModule {
     * brute-force recompute. */
   private def domainCap(s: SparkSession, d: String): DataFrame = {
     val DomainCap = 20
-    graft.functions.GraftFunctions.register(s)
     val id = col("doc_id")
     val domain = concat(lit("site"), id % 7, lit(".example.com"))
     val h = expr("graft_hash60(cast(doc_id as string))")

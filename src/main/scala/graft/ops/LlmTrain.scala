@@ -216,7 +216,6 @@ object LlmTrain extends QueryModule {
     * list_dot_product, both sequential 64-element loops); argmin
     * tie-breaks on (d2, clabel). */
   private def kmeansStep(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val emb = T.par(s, T.embeddings(s, d))
       .select(col("vec_id"), col("label"),
         col("embedding").cast("array<double>").as("e"))
@@ -348,7 +347,6 @@ object LlmTrain extends QueryModule {
     * one map-side scan + filter, one |langs|-row aggregation; nothing
     * shuffles but the summary. */
   private def sampleImportance(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val u = expr("graft_hash60(cast(doc_id as string))")
       .cast("double") / lit(1.152921504606846976e18)
     val kept = col("u") < col("score")

@@ -530,37 +530,29 @@ object Relational extends QueryModule {
   /** Ranking family. Window ints cast to LONG (DuckDB returns BIGINT).
     * Partition key is the composite (c_mktsegment, c_nationkey) —
     * 5×25 = 125 partitions instead of 5, so no single window task
-    * holds 20% of the table when the data scales 100×. */
+    * holds 20% of the table when the data scales 100×.
+    *
+    * parRange on the window partition keys satisfies the window's
+    * clustering (replacing its hash exchange) and leads the output
+    * order, so the final sort is local — one exchange, and no orderBy
+    * sampling pass re-executes the window. A classic window + orderBy
+    * path for small inputs measured equal to this one at sf0.1 and
+    * sf1 on local[4] (SCALE.md, "One size gate"), so there is no small
+    * path; LocalSortOrderSpec pins the output order. */
   private def winRank(s: SparkSession, d: String): DataFrame = {
     val w = Window.partitionBy(col("c_mktsegment"), col("c_nationkey"))
       .orderBy(col("c_acctbal").desc, col("c_custkey"))
-    val raw = T.customer(s, d)
+    T.parRange(s, T.customer(s, d)
+        .select(col("c_mktsegment"), col("c_nationkey"), col("c_custkey"),
+          col("c_acctbal")), col("c_mktsegment"), col("c_nationkey"))
       .select(col("c_mktsegment"), col("c_nationkey"), col("c_custkey"),
-        col("c_acctbal"))
-    def ranked(in: DataFrame): DataFrame =
-      in.select(col("c_mktsegment"), col("c_nationkey"), col("c_custkey"),
         Det.r2(col("c_acctbal")).as("bal"),
         row_number().over(w).cast("long").as("rn"),
         rank().over(w).cast("long").as("rnk"),
         dense_rank().over(w).cast("long").as("drnk"),
         ntile(4).over(w).cast("long").as("quartile"))
-    if (T.sourceBytes(s, d, "customer") < T.parRangeMinBytes(s))
-      // Small input: the range exchange's sampling job costs more than
-      // the exchange it saves (r14 bench: 0.29 → 0.58 s on a 300 KB
-      // customer table) — keep the classic window-exchange + orderBy.
-      // WinRankStrategy test pins row-identity of the two paths;
-      // LocalSortOrderSpec forces the converted path to pin its order.
-      ranked(raw)
-        .orderBy(col("c_mktsegment"), col("c_nationkey"), col("rn"))
-    else
-      // At-scale shape: parRange on the window partition keys
-      // satisfies the window's clustering (replacing its hash
-      // exchange) and leads the output order, so the final sort is
-      // local — one exchange, and the orderBy's sampling pass no
-      // longer re-executes the window.
-      ranked(T.parRange(s, raw, col("c_mktsegment"), col("c_nationkey")))
-        .sortWithinPartitions(col("c_mktsegment"), col("c_nationkey"),
-          col("rn"))
+      .sortWithinPartitions(col("c_mktsegment"), col("c_nationkey"),
+        col("rn"))
   }
 
   private val winRankSql =

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{QueryModule, Tables => T}
+import graft.{Gate, QueryModule, Tables => T}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -95,7 +95,7 @@ object Reshape extends QueryModule {
       max(when(r === floor((col("n") - 1) * lit(p)), v))
     def hiR(p: Double, r: Column, v: Column) =
       max(when(r === ceil((col("n") - 1) * lit(p)), v))
-    val agg = if (T.sourceBytes(s, d, "lineitem") < rankSplitMinBytes(s)) {
+    val agg = if (!rankSplit(s, d)) {
       // Small-input path: BOTH rank columns over ONE hash exchange —
       // two in-partition sorts under two Window operators — and one
       // combined aggregation, instead of two independent scan + shuffle
@@ -123,9 +123,9 @@ object Reshape extends QueryModule {
       // passes, parallelism decoupled from |groups| — unchanged.
       def lo(p: Double, v: Column) = loR(p, col("r"), v)
       def hi(p: Double, v: Column) = hiR(p, col("r"), v)
-      val re = ranked(s, d, li, "lineitem", "l_returnflag", "l_extendedprice")
+      val re = rankedBy(s, li, "l_returnflag", "l_extendedprice")
         .join(broadcast(cnt), "l_returnflag")
-      val rq = ranked(s, d, li, "lineitem", "l_returnflag", "l_quantity")
+      val rq = rankedBy(s, li, "l_returnflag", "l_quantity")
         .join(broadcast(cnt), "l_returnflag")
       re.groupBy(rf).agg(
           max(col("n")).as("nn"),
@@ -211,13 +211,17 @@ object Reshape extends QueryModule {
     * sf0.1 (11 MB lineitem): simple ~2.2 s vs split ~3.8 s for MAD.
     * Above it, per-group one-task sorts stop scaling (a billion-row
     * group serializes onto one executor) and the range-split's 3×
-    * sf1 wins take over. Conf-overridable so the spec pins both
-    * paths equal on the same input. */
-  private val RankSplitMinBytes: Long = 64L << 20
+    * sf1 wins take over. [[Gate.Key]] forces either path, so
+    * the spec pins both paths equal on the same input. */
+  private[graft] val RankSplitMinBytes: Long = 64L << 20
 
-  private def rankSplitMinBytes(s: SparkSession): Long =
-    s.conf.getOption("spark.graft.rank.splitMinBytes")
-      .map(_.toLong).getOrElse(RankSplitMinBytes)
+  /** The `rank` [[Gate]]: true picks the range-split ranking. The
+    * probe is lineitem's on-disk bytes because every order-statistics
+    * query ranks lineitem or a frame 1:1 with it (aggMad's deviation
+    * frame); a frame derived from another table needs its own probe. */
+  private def rankSplit(s: SparkSession, d: String): Boolean =
+    Gate.large(s, "rank", T.sourceBytes(s, d, "lineitem").toDouble,
+      RankSplitMinBytes)
 
   /** rankedBy for inputs the cost model calls small: ONE shuffle on
     * the group key, per-group external-sort window. Identical rank
@@ -229,21 +233,6 @@ object Reshape extends QueryModule {
       .withColumn("r", row_number()
         .over(Window.partitionBy(col(g)).orderBy(col(v)))
         .cast("long") - 1L)
-
-  /** The strategy pick: simple per-group rank below the source-size
-    * ceiling, range-split distributed ranking above it. `sizeTable`
-    * names the SOURCE table whose on-disk bytes proxy the frame's
-    * size (round-10 advice: previously hardcoded to lineitem, which
-    * would silently missize the strategy for a frame derived from
-    * any other table) — callers ranking a derived frame pass the
-    * table it was derived from (row-count-preserving derivations
-    * keep the proxy valid; aggMad's deviation frame is 1:1 with its
-    * lineitem source). */
-  private def ranked(s: SparkSession, d: String, df: DataFrame,
-                     sizeTable: String, g: String, v: String): DataFrame =
-    if (T.sourceBytes(s, d, sizeTable) < rankSplitMinBytes(s))
-      rankedBySimple(df, g, v)
-    else rankedBy(s, df, g, v)
 
   private def rankedBy(s: SparkSession, df: DataFrame,
                        g: String, v: String): DataFrame = {
@@ -296,7 +285,8 @@ object Reshape extends QueryModule {
     val li = T.lineitem(s, d).select(rf, col("l_extendedprice"))
     // rankedBy is zero-based; the trim predicate below is stated on
     // 1-based ranks, hence the +1.
-    ranked(s, d, li, "lineitem", "l_returnflag", "l_extendedprice")
+    (if (rankSplit(s, d)) rankedBy(s, li, "l_returnflag", "l_extendedprice")
+     else rankedBySimple(li, "l_returnflag", "l_extendedprice"))
       .withColumn("r", col("r") + 1L)
       .join(broadcast(groupCounts(li, rf)), "l_returnflag")
       .filter(col("r") > floor(col("n") * 0.1) &&
@@ -352,7 +342,7 @@ object Reshape extends QueryModule {
   private def aggMad(s: SparkSession, d: String): DataFrame = {
     val rf = col("l_returnflag")
     val li = T.lineitem(s, d).select(rf, col("l_extendedprice"))
-    if (T.sourceBytes(s, d, "lineitem") < rankSplitMinBytes(s)) {
+    if (!rankSplit(s, d)) {
       // Small-input path, ONE fact exchange end to end (r14 verdict
       // item: the r14 attempt pre-partitioned ABOVE a driver collect,
       // which left nothing to share; removing the collect is what
@@ -500,7 +490,6 @@ object Reshape extends QueryModule {
     * pipeline carves held-out slices at 100 TB — embarrassingly
     * parallel, pushdown-friendly, no coordination. */
   private def sampleHash(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     // native graft_hash60 == conv(substring(md5(x),1,15),16,10); the
     // oracle keeps the string formulation (independent implementations)
     val h = expr("graft_hash60(cast(o_orderkey as string))")

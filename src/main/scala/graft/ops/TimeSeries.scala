@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{QueryModule, Tables => T}
+import graft.{Gate, QueryModule, Tables => T}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -108,13 +108,12 @@ object TimeSeries extends QueryModule {
     * Series count is the parallelism floor at 100 TB — five types
     * means five tasks, so a real deployment keys the window by
     * (series, day) to re-widen; the per-frame math is unchanged. */
-  /** Cutover for the overlap-split strategy below, conf-overridable
-    * (mirrors spark.graft.rank.splitMinBytes) so tests can force the
-    * split path on tiny corpora — RetryDeterminismSpec exercises the
-    * checkpointed slicing under injected task retries at sf0.001. */
-  private def anomalySplitMinBytes(s: SparkSession): Long =
-    s.conf.getOption("spark.graft.anomaly.splitMinBytes")
-      .map(_.toLong).getOrElse(8L << 20)
+  /** Cutover for the overlap-split strategy below, read through the
+    * `anomaly` [[Gate]] (see the plan-choice comment in tsAnomaly for
+    * the measurements); [[Gate.Key]] `= large` forces the split path
+    * on tiny corpora — RetryDeterminismSpec exercises the checkpointed
+    * slicing under injected task retries at sf0.001. */
+  private[graft] val AnomalySplitMinBytes: Long = 8L << 20
 
   private def tsAnomaly(s: SparkSession, d: String): DataFrame = {
     // ts alone is NOT a key within a series: at corpus scale multiple
@@ -160,7 +159,8 @@ object TimeSeries extends QueryModule {
     val base = T.events(s, d)
       .select(col("event_id"), col("event_type"), col("ts"), col("value"))
     val score = scoreAnomalies(frameLen, key) _
-    if (T.sourceBytes(s, d, "events") < anomalySplitMinBytes(s)) {
+    if (!Gate.large(s, "anomaly", T.sourceBytes(s, d, "events").toDouble,
+        AnomalySplitMinBytes)) {
       // small corpus: one shuffle on the series key, window streams
       // per series. The explicit-count repartition keeps AQE from
       // coalescing the KB-sized series groups onto one task.

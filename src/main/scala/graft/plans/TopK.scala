@@ -38,9 +38,8 @@ import org.apache.spark.sql.types.IntegerType
   * Window pattern, so USER CODE KEEPS THE DECLARATIVE FORM — the
   * optimizer swaps in the physical operator, which is exactly how
   * Spark wants operator work to land (declare the logical plan, let
-  * the planner pick the strategy). Registered per-session via
-  * [[TopK.install]] (spark.experimental — the public injection point;
-  * a packaged deployment would use SparkSessionExtensions).
+  * the planner pick the strategy). Injected into every session by
+  * `graft.GraftExtensions`.
   */
 case class TopKPerGroup(
     k: Int,
@@ -333,14 +332,5 @@ object TopK {
           case _ => f
         }
     }
-  }
-
-  /** Install the rule + strategy into a session (idempotent). */
-  def install(s: SparkSession): Unit = {
-    if (!s.experimental.extraStrategies.contains(TopKStrategy))
-      s.experimental.extraStrategies = s.experimental.extraStrategies :+ TopKStrategy
-    if (!s.experimental.extraOptimizations.contains(TopKRewrite))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ TopKRewrite
   }
 }

@@ -81,7 +81,6 @@ object Streams extends QueryModule {
     * as "nanos" and shift every event to 1970 — then apply the same
     * type-adaptive ts normalization as the batch path. */
   private def eventsStream(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val fileSchema = s.read.parquet(s"$d/events.parquet").schema
     // the streaming file source wants a directory. When the table IS
     // a directory of part files, point the stream at it; when it's a

@@ -25,6 +25,15 @@ class GraftSessionSpec extends AnyFunSuite {
   test("the extensions are live: graft_hash60 resolves") {
     val v = s.sql("SELECT graft_hash60('graft') AS h").head().getLong(0)
     assert(v >= 0L && v < (1L << 60))
+    // every name of the one function table, in a fresh session that
+    // only the extensions could have given it to (newSession does not
+    // inherit functions other suites registered on the shared session)
+    val fresh = s.newSession()
+    for (f <- functions.GraftFunctions.table) {
+      val info = fresh.sessionState.catalog.lookupFunctionInfo(
+        org.apache.spark.sql.catalyst.FunctionIdentifier(f.name))
+      assert(info.getClassName == f.className, s"${f.name} resolved to $info")
+    }
   }
 
   test("the test-only overrides are layered on top") {

@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
 /** The iterative graph family (q_llm_dedup_cc, q_graph_pagerank,
   * q_graph_pagerank_conv, q_llm_keeper) picks its physical strategy
   * from the exact staged edge count: driver union-find/power-iteration
-  * under `spark.graft.graph.localMaxEdges`, the distributed
+  * at or under the `graph` [[Gate]]'s edge ceiling, the distributed
   * star-contraction / checkpointed loops above it. This spec forces
   * BOTH paths on the same session-isolated data and asserts
   * row-for-row equality — the guarantee that the strategy pick is a
@@ -18,9 +18,9 @@ class LocalGraphStrategySpec extends AnyFunSuite {
   /** Run `q` under a child session pinned to one strategy. newSession
     * shares the context but owns its SQLConf, so forcing a path here
     * can't race other suites on the shared session. */
-  private def runWith(q: String, maxEdges: String): Seq[String] = {
+  private def runWith(q: String, gate: String): Seq[String] = {
     val child: SparkSession = s.newSession()
-    child.conf.set("spark.graft.graph.localMaxEdges", maxEdges)
+    child.conf.set(Gate.Key, gate)
     SparkEntry.queries(q)(child, d)
       .collect().map(_.toString).toSeq
   }
@@ -46,8 +46,8 @@ class LocalGraphStrategySpec extends AnyFunSuite {
   for (q <- Seq("q_llm_dedup_cc", "q_graph_pagerank",
                 "q_graph_pagerank_conv", "q_llm_keeper")) {
     test(s"$q: local and distributed strategies agree row-for-row") {
-      val local = runWith(q, Long.MaxValue.toString)
-      val dist = runWith(q, "0")
+      val local = runWith(q, "small")
+      val dist = runWith(q, "large")
       assert(local.nonEmpty, s"$q produced rows")
       assert(local == dist,
         s"$q strategy divergence: local=${local.take(3)}… " +

@@ -14,7 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   *  - q_ts_anomaly / q_agg_trimmed — checkpointed repartitionByRange
   *    slicings (the r12 bug sites), forced onto their large-corpus
-  *    split paths via their cutover confs;
+  *    split paths via `spark.graft.gate=large`;
   *  - q_sample_hash — hash-gated sampling (a seed- or attempt-varying
   *    sample would shift the kept set);
   *  - q_llm_dedup_fuzzy — MinHash LSH banding (hash-stable by design;
@@ -75,12 +75,12 @@ class RetryDeterminismSpec extends AnyFunSuite {
 
   test("q_ts_anomaly (checkpointed overlap-split) survives task retries") {
     assertRetryDeterministic("q_ts_anomaly",
-      Seq("spark.graft.anomaly.splitMinBytes" -> "1"))
+      Seq(Gate.Key -> "large"))
   }
 
   test("q_agg_trimmed (checkpointed rank slicing) survives task retries") {
     assertRetryDeterministic("q_agg_trimmed",
-      Seq("spark.graft.rank.splitMinBytes" -> "1"))
+      Seq(Gate.Key -> "large"))
   }
 
   test("q_sample_hash survives task retries") {
@@ -93,12 +93,12 @@ class RetryDeterminismSpec extends AnyFunSuite {
 
   test("q_llm_keeper (distributed CC + PageRank) survives task retries") {
     assertRetryDeterministic("q_llm_keeper",
-      Seq("spark.graft.graph.localMaxEdges" -> "0"))
+      Seq(Gate.Key -> "large"))
   }
 
   test("q_graph_pagerank_conv (distributed iteration) survives task retries") {
     assertRetryDeterministic("q_graph_pagerank_conv",
-      Seq("spark.graft.graph.localMaxEdges" -> "0"))
+      Seq(Gate.Key -> "large"))
   }
 
   test("q_join_skew_salted (forced salted branch) survives task retries") {
@@ -106,7 +106,7 @@ class RetryDeterminismSpec extends AnyFunSuite {
     // a rand()-based salt would route a RETRIED task's rows to
     // different reducers than its first attempt and double/lose rows
     assertRetryDeterministic("q_join_skew_salted",
-      Seq("spark.graft.salt.force" -> "salted"))
+      Seq(Gate.Key -> "large"))
   }
 
   test("s_tumble (stateful streaming) survives task retries") {
@@ -139,16 +139,16 @@ class RetryDeterminismSpec extends AnyFunSuite {
 
   test("q_ts_anomaly survives map-stage resubmission (FetchFailed)") {
     assertStageResubmitDeterministic("q_ts_anomaly",
-      Seq("spark.graft.anomaly.splitMinBytes" -> "1"))
+      Seq(Gate.Key -> "large"))
   }
 
   test("q_agg_trimmed survives map-stage resubmission (FetchFailed)") {
     assertStageResubmitDeterministic("q_agg_trimmed",
-      Seq("spark.graft.rank.splitMinBytes" -> "1"))
+      Seq(Gate.Key -> "large"))
   }
 
   test("q_llm_keeper (distributed) survives map-stage resubmission") {
     assertStageResubmitDeterministic("q_llm_keeper",
-      Seq("spark.graft.graph.localMaxEdges" -> "0"))
+      Seq(Gate.Key -> "large"))
   }
 }

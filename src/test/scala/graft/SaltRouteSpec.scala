@@ -16,16 +16,16 @@ class SaltRouteSpec extends AnyFunSuite {
   private val d = SparkTestBase.sfDir
   import s.implicits._
 
-  private def runForced(mode: String): Seq[String] = {
-    s.conf.set("spark.graft.salt.force", mode)
+  private def runForced(gate: String): Seq[String] = {
+    s.conf.set(Gate.Key, gate)
     try SparkEntry.queries("q_join_skew_salted")(s, d)
       .collect().map(_.toString).toSeq
-    finally s.conf.unset("spark.graft.salt.force")
+    finally s.conf.unset(Gate.Key)
   }
 
   test("forced plain and forced salted branches are output-equal") {
-    val plain = runForced("plain")
-    val salted = runForced("salted")
+    val plain = runForced("small")
+    val salted = runForced("large")
     assert(plain.nonEmpty && plain == salted,
       "salting changed join results — the rewrite is not semantics-free")
   }
@@ -58,10 +58,6 @@ class SaltRouteSpec extends AnyFunSuite {
         lit(2L)) === 0L, lit(1L)).otherwise(col("l_suppkey")))
     assert(ops.Lakehouse.saltRoute(s, hot),
       "50% planted hot key routed to the plain branch")
-    // conf override pins the threshold, not just the branch
-    s.conf.set("spark.graft.salt.minHotShare", "0.9")
-    try assert(!ops.Lakehouse.saltRoute(s, hot),
-      "minHotShare=0.9 should reject a 0.5-share hot key")
-    finally s.conf.unset("spark.graft.salt.minHotShare")
+    // the exact 0.30 crossover is pinned by GateSpec
   }
 }

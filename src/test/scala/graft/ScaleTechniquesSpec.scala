@@ -153,11 +153,11 @@ class ScaleTechniquesSpec extends AnyFunSuite {
     // descend through AQE wrappers to the SMJ, then assert its whole
     // subtree is exchange-free: co-bucketed layout means the join's
     // shuffle was paid once at write time, not per query. Run at the
-    // session-sized default AND an explicit override — bucket count is
-    // a layout knob (spark.graft.buckets, sized from parallelism since
+    // session-sized default (defaultParallelism, 4 here) AND at 2 —
+    // bucket count is a layout choice (sized from parallelism since
     // r11; the old constant 8 capped join parallelism at 8), and
     // layout must change neither the plan property nor the rows.
-    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.joins.SortMergeJoinExec
     import org.apache.spark.sql.execution.exchange.Exchange
@@ -169,8 +169,7 @@ class ScaleTechniquesSpec extends AnyFunSuite {
       }
       p +: (through ++ p.children.flatMap(all))
     }
-    def runOnce(): Seq[String] = {
-      val df = SparkEntry.queries("q_join_bucketed")(s, d)
+    def runOnce(df: org.apache.spark.sql.DataFrame, n: Int): Seq[String] = {
       val rows = df.collect().map(_.toString).toSeq
       assert(rows.nonEmpty)
       val nodes = all(df.queryExecution.executedPlan)
@@ -181,15 +180,18 @@ class ScaleTechniquesSpec extends AnyFunSuite {
       assert(!belowJoin.exists(_.isInstanceOf[Exchange]),
         "exchange below the bucketed join — the write-time shuffle was " +
           "not reused:\n" + df.queryExecution.executedPlan)
+      val scans = belowJoin.collect { case f: FileSourceScanExec => f }
+      assert(scans.nonEmpty &&
+        scans.forall(_.outputPartitioning.numPartitions == n),
+        s"bucketed scans do not read $n buckets:\n" +
+          df.queryExecution.executedPlan)
       rows
     }
-    val atDefault = runOnce() // buckets = defaultParallelism
-    s.conf.set("spark.graft.buckets", "4")
-    try {
-      val atFour = runOnce()
-      assert(atDefault == atFour,
-        "bucket count changed query results — layout leaked into values")
-    } finally s.conf.unset("spark.graft.buckets")
+    val atDefault = runOnce(SparkEntry.queries("q_join_bucketed")(s, d),
+      s.sparkContext.defaultParallelism)
+    val atTwo = runOnce(ops.Lakehouse.joinBucketed(s, d, 2), 2)
+    assert(atDefault == atTwo,
+      "bucket count changed query results — layout leaked into values")
   }
 
   test("bucketed-layout cache never serves regenerated source data (advice r10)") {

@@ -13,7 +13,7 @@ class StagedSweepSpec extends AnyFunSuite {
 
   test("rankedBy slicing registers its checkpoint; sweep releases it") {
     val sc = spark.sparkContext
-    spark.conf.set("spark.graft.rank.splitMinBytes", "1")
+    spark.conf.set(Gate.Key, "large")
     try {
       ops.Staged.sweep() // drain anything prior suites staged
       val before = sc.getPersistentRDDs.keySet
@@ -28,12 +28,12 @@ class StagedSweepSpec extends AnyFunSuite {
       val after = sc.getPersistentRDDs.keySet
       assert((after & staged).isEmpty,
         s"sweep left staged RDDs persisted: ${after & staged}")
-    } finally spark.conf.unset("spark.graft.rank.splitMinBytes")
+    } finally spark.conf.unset(Gate.Key)
   }
 
   test("overlap-split slicing registers its checkpoint; sweep releases it") {
     val sc = spark.sparkContext
-    spark.conf.set("spark.graft.anomaly.splitMinBytes", "1")
+    spark.conf.set(Gate.Key, "large")
     try {
       ops.Staged.sweep()
       val before = sc.getPersistentRDDs.keySet
@@ -44,6 +44,6 @@ class StagedSweepSpec extends AnyFunSuite {
         "split path ran but no checkpoint blocks were registered")
       assert(Graft.sweepStaged() >= 1)
       assert((sc.getPersistentRDDs.keySet & staged).isEmpty)
-    } finally spark.conf.unset("spark.graft.anomaly.splitMinBytes")
+    } finally spark.conf.unset(Gate.Key)
   }
 }

@@ -40,8 +40,8 @@ class TopKSpec extends AnyFunSuite {
       "(verdict r11 #7)") {
     // a genuinely fresh session: newSession() rebuilds SessionState
     // (function registry, experimental rules/strategies) from nothing
-    // but the spark.sql.extensions conf — no TopK.install, no
-    // GraftFunctions.register has touched it. The SCORED registry
+    // but the spark.sql.extensions conf — no per-session function
+    // registration has touched it. The SCORED registry
     // query must plan through the injected rule + strategy, and the
     // injected native function must resolve by name, exactly as a
     // cluster rollout with only the --conf line would see it.
