@@ -287,8 +287,13 @@ object LlmPipe extends QueryModule {
     * corpus at 100 TB can push candidate edges into the billions — the
     * star-contraction / power-iteration loops take over unchanged.
     * Both paths are pinned equal by LocalGraphStrategySpec, which
-    * forces each through [[Gate.Key]]. */
+    * forces each through [[Gate.Key]]. The same ceiling caps the
+    * participating-class count in [[classGraphLocal]]. */
   private[graft] val LocalGraphMaxEdges: Long = 2L * 1000 * 1000
+
+  /** The `graph` [[Gate]] threshold: the smallest staged edge count
+    * that goes distributed. */
+  private[graft] val GraphDistributedMinEdges: Long = LocalGraphMaxEdges + 1
 
   /** Node-count ceiling for broadcasting the per-round node-sized
     * frames (labels / ranks, ~16 bytes a row → ≤ ~32 MB shipped per
@@ -296,10 +301,13 @@ object LlmPipe extends QueryModule {
     * loops keep their shuffled sort-merge plans. */
   private[graft] val BroadcastGraphNodes: Long = 2L * 1000 * 1000
 
-  /** The `graph` [[Gate]]: true solves on the driver, which the
-    * probe allows up to [[LocalGraphMaxEdges]] staged edges. */
+  /** The `graph` [[Gate]]: true solves on the driver. The edge cap is
+    * driver-memory safety, not a strategy pick, so it holds even when
+    * [[Gate.Key]] `= small` forces the gate: a graph above
+    * [[LocalGraphMaxEdges]] edges runs distributed whatever the key. */
   private def localGraph(s: SparkSession, st: StagedPairs): Boolean =
-    !Gate.large(s, "graph", st.edges.toDouble, LocalGraphMaxEdges + 1)
+    !Gate.large(s, "graph", st.edges.toDouble, GraphDistributedMinEdges) &&
+      st.edges <= LocalGraphMaxEdges
 
   /** Driver-side r6 — bit-identical to Det.r6 / Det.sql6: every step
     * is the same IEEE-754 double op Spark and DuckDB evaluate. */
@@ -426,9 +434,10 @@ object LlmPipe extends QueryModule {
     * edge. The count guard matters independently of the edge count —
     * a 100M-doc corpus of exact 2-way duplicates has ZERO class edges
     * and 50M participating classes; that regime must stay
-    * distributed. The guard and its collect limit are driver-memory
-    * safety, not a strategy pick: they hold at [[LocalGraphMaxEdges]]
-    * even when [[Gate.Key]] `= small` forces the gate. */
+    * distributed. Like the edge cap in [[localGraph]], the guard and
+    * its collect limit are driver-memory safety: they hold at
+    * [[LocalGraphMaxEdges]] even when [[Gate.Key]] `= small` forces
+    * the gate. */
   private def classGraphLocal(s: SparkSession, classes: DataFrame,
       st: StagedPairs)
       : Option[(Array[Long], Array[Long], Array[Long], Array[Long])] = {

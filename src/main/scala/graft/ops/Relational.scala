@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{QueryModule, Tables => T}
+import graft.{Gate, QueryModule, Tables => T}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -530,30 +530,43 @@ object Relational extends QueryModule {
   /** Ranking family. Window ints cast to LONG (DuckDB returns BIGINT).
     * Partition key is the composite (c_mktsegment, c_nationkey) —
     * 5×25 = 125 partitions instead of 5, so no single window task
-    * holds 20% of the table when the data scales 100×.
-    *
-    * parRange on the window partition keys satisfies the window's
-    * clustering (replacing its hash exchange) and leads the output
-    * order, so the final sort is local — one exchange, and no orderBy
-    * sampling pass re-executes the window. A classic window + orderBy
-    * path for small inputs measured equal to this one at sf0.1 and
-    * sf1 on local[4] (SCALE.md, "One size gate"), so there is no small
-    * path; LocalSortOrderSpec pins the output order. */
+    * holds 20% of the table when the data scales 100×. */
   private def winRank(s: SparkSession, d: String): DataFrame = {
     val w = Window.partitionBy(col("c_mktsegment"), col("c_nationkey"))
       .orderBy(col("c_acctbal").desc, col("c_custkey"))
-    T.parRange(s, T.customer(s, d)
-        .select(col("c_mktsegment"), col("c_nationkey"), col("c_custkey"),
-          col("c_acctbal")), col("c_mktsegment"), col("c_nationkey"))
+    val raw = T.customer(s, d)
       .select(col("c_mktsegment"), col("c_nationkey"), col("c_custkey"),
+        col("c_acctbal"))
+    def ranked(in: DataFrame): DataFrame =
+      in.select(col("c_mktsegment"), col("c_nationkey"), col("c_custkey"),
         Det.r2(col("c_acctbal")).as("bal"),
         row_number().over(w).cast("long").as("rn"),
         rank().over(w).cast("long").as("rnk"),
         dense_rank().over(w).cast("long").as("drnk"),
         ntile(4).over(w).cast("long").as("quartile"))
-      .sortWithinPartitions(col("c_mktsegment"), col("c_nationkey"),
-        col("rn"))
+    if (!Gate.large(s, "parRange", T.sourceBytes(s, d, "customer").toDouble,
+        ParRangeMinBytes))
+      // Small input: the classic window exchange + orderBy.
+      // LocalSortOrderSpec pins row-identity of the two paths.
+      ranked(raw)
+        .orderBy(col("c_mktsegment"), col("c_nationkey"), col("rn"))
+    else
+      // At-scale shape: parRange on the window partition keys
+      // satisfies the window's clustering (replacing its hash
+      // exchange) and leads the output order, so the final sort is
+      // local — one exchange, and the orderBy's sampling pass no
+      // longer re-executes the window.
+      ranked(T.parRange(s, raw, col("c_mktsegment"), col("c_nationkey")))
+        .sortWithinPartitions(col("c_mktsegment"), col("c_nationkey"),
+          col("rn"))
   }
+
+  /** The `parRange` [[Gate]] threshold for [[winRank]]: below it the
+    * range exchange's extra sampling job costs more than the exchange
+    * it saves. SCALE.md ("One size gate"): at sf0.1 (316 KB customer)
+    * the classic path wins on local[32] (0.71 vs 0.98 s) and ties on
+    * local[4]; at sf1 (1.7 MB) the two tie on both. */
+  private[graft] val ParRangeMinBytes: Long = 1L << 20
 
   private val winRankSql =
     """SELECT c_mktsegment, c_nationkey, c_custkey,

@@ -210,10 +210,13 @@ object Reshape extends QueryModule {
     * prefix sums, second exchange) are pure fixed cost — measured at
     * sf0.1 (11 MB lineitem): simple ~2.2 s vs split ~3.8 s for MAD.
     * Above it, per-group one-task sorts stop scaling (a billion-row
-    * group serializes onto one executor) and the range-split's 3×
-    * sf1 wins take over. [[Gate.Key]] forces either path, so
-    * the spec pins both paths equal on the same input. */
-  private[graft] val RankSplitMinBytes: Long = 64L << 20
+    * group serializes onto one executor). SCALE.md ("One size gate")
+    * has the paired A/B: the simple path won q_agg_mad at sf0.1, sf1
+    * and sf3 (315 MB) on local[4] and local[32], so the threshold is
+    * the first power of two above sf3; where the split starts to win
+    * on a many-core cluster is not measured. [[Gate.Key]] forces
+    * either path, so the spec pins both paths equal on the same input. */
+  private[graft] val RankSplitMinBytes: Long = 512L << 20
 
   /** The `rank` [[Gate]]: true picks the range-split ranking. The
     * probe is lineitem's on-disk bytes because every order-statistics

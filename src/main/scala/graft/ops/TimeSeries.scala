@@ -110,9 +110,12 @@ object TimeSeries extends QueryModule {
     * (series, day) to re-widen; the per-frame math is unchanged. */
   /** Cutover for the overlap-split strategy below, read through the
     * `anomaly` [[Gate]] (see the plan-choice comment in tsAnomaly for
-    * the measurements); [[Gate.Key]] `= large` forces the split path
-    * on tiny corpora — RetryDeterminismSpec exercises the checkpointed
-    * slicing under injected task retries at sf0.001. */
+    * the reasoning). SCALE.md ("One size gate") has the paired A/B:
+    * the simple plan wins at sf0.1 (2 MB) on local[4] and local[32];
+    * at sf1 (12 MB) the split wins on local[32] and ties on local[4].
+    * [[Gate.Key]] `= large` forces the split path on tiny corpora —
+    * RetryDeterminismSpec exercises the checkpointed slicing under
+    * injected task retries at sf0.001. */
   private[graft] val AnomalySplitMinBytes: Long = 8L << 20
 
   private def tsAnomaly(s: SparkSession, d: String): DataFrame = {

@@ -17,7 +17,8 @@ class GateSpec extends AnyFunSuite {
   private def noProbe: Double = throw new AssertionError("probe evaluated")
 
   test("byte gates: below the minimum stays small, at and above go large") {
-    for (min <- Seq(ops.Reshape.RankSplitMinBytes,
+    for (min <- Seq(ops.Relational.ParRangeMinBytes,
+                    ops.Reshape.RankSplitMinBytes,
                     ops.TimeSeries.AnomalySplitMinBytes)) {
       assert(!pick(min - 1.0, min), s"$min - 1")
       assert(pick(min.toDouble, min), s"at $min")
@@ -26,9 +27,9 @@ class GateSpec extends AnyFunSuite {
   }
 
   test("graph gate: local up to and at 2,000,000 edges, distributed above") {
-    val max = ops.LlmPipe.LocalGraphMaxEdges
-    assert(max == 2000000L)
-    def local(edges: Long) = !pick(edges.toDouble, max + 1)
+    val min = ops.LlmPipe.GraphDistributedMinEdges
+    assert(min == 2000001L && ops.LlmPipe.LocalGraphMaxEdges == 2000000L)
+    def local(edges: Long) = !pick(edges.toDouble, min)
     assert(local(1999999L))
     assert(local(2000000L))
     assert(!local(2000001L))

@@ -83,7 +83,14 @@ class LocalSortOrderSpec extends AnyFunSuite {
 
   converted.foreach { case (name, keys) =>
     test(s"$name output is globally ordered on ${keys.mkString(", ")}") {
-      val df = SparkEntry.queries(name)(s, sf)
+      val sp = s
+      // force the converted (parRange + local sort) path for queries
+      // that size-gate it (q_win_rank falls back to a global orderBy
+      // below ParRangeMinBytes) — this spec exists to pin exactly the
+      // converted path's ordering premise
+      sp.conf.set(Gate.Key, "large")
+      try {
+      val df = SparkEntry.queries(name)(sp, sf)
       // collect() concatenates partitions in partition order — exactly
       // what Verify's coalesce(1) parquet dump serializes
       val rows = df.select(keys.head, keys.tail: _*).collect()
@@ -100,28 +107,23 @@ class LocalSortOrderSpec extends AnyFunSuite {
       bad.foreach { case (w, i) =>
         fail(s"$name rows out of global order at $i: ${w(0)} then ${w(1)}")
       }
+      } finally sp.conf.unset(Gate.Key)
     }
   }
 
   test("q_win_rank size-gated paths produce identical rows") {
-    // the classic form (window exchange + global orderBy) is the
-    // reference the parRange + local sort form must match: same rows,
-    // same order
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions._
-    val w = Window.partitionBy(col("c_mktsegment"), col("c_nationkey"))
-      .orderBy(col("c_acctbal").desc, col("c_custkey"))
-    val classic = Tables.customer(s, sf)
-      .select(col("c_mktsegment"), col("c_nationkey"), col("c_custkey"),
-        ops.Det.r2(col("c_acctbal")).as("bal"),
-        row_number().over(w).cast("long").as("rn"),
-        rank().over(w).cast("long").as("rnk"),
-        dense_rank().over(w).cast("long").as("drnk"),
-        ntile(4).over(w).cast("long").as("quartile"))
-      .orderBy(col("c_mktsegment"), col("c_nationkey"), col("rn"))
-      .collect().map(_.toString).toSeq
-    val converted = SparkEntry.queries("q_win_rank")(s, sf)
-      .collect().map(_.toString).toSeq
+    // below the gate the query keeps the classic global orderBy; above
+    // it (or forced) it uses parRange + local sort. Same rows, same
+    // order, regardless of which path the source size selects.
+    val sp = s
+    def run(side: String): Seq[String] = {
+      sp.conf.set(Gate.Key, side)
+      try SparkEntry.queries("q_win_rank")(sp, sf)
+        .collect().map(_.toString).toSeq
+      finally sp.conf.unset(Gate.Key)
+    }
+    val converted = run("large")
+    val classic = run("small")
     assert(converted.nonEmpty && converted == classic)
   }
 }

@@ -25,7 +25,7 @@ class TopKSpec extends AnyFunSuite {
 
   test("rewrite fires via spark.sql.extensions config (no install call)") {
     // SparkTestBase sets spark.sql.extensions=graft.GraftExtensions;
-    // nothing in this suite calls TopK.install — the plan shape below
+    // nothing in this suite injects the rules by hand — the plan shape below
     // proves the config-driven injection path works end to end
     val str = topkQuery().queryExecution.executedPlan.toString
     assert(str.contains("PartialTopK"), s"expected PartialTopK in:\n$str")
