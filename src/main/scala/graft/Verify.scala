@@ -26,8 +26,8 @@ object Verify {
       else if (only.nonEmpty) SparkEntry.queries.filter(q => only(q._1))
       else SparkEntry.queries
     toRun.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      try fn(spark, sfDir).coalesce(1).write.options(LocalFs.conf)
+        .mode("overwrite").parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
         System.err.println(s"[verify] $name failed: $msg")

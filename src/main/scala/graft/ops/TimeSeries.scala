@@ -133,8 +133,10 @@ object TimeSeries extends QueryModule {
     // ADAPTIVE cutover: the split costs ~4 extra tiny jobs (range
     // sampling, per-cell counts, carry broadcast, union) — pure
     // overhead when the corpus fits comfortably in a handful of
-    // tasks (measured at sf0.1: 2.9 s simple vs 4.5 s split; at sf1
-    // the ordering flips hard: 23.1 s simple vs 3.9 s split). Pick
+    // tasks (SCALE.md "One size gate", cold medians simple vs split:
+    // sf0.1 2.43 vs 3.23 s on local[4], 2.01 vs 3.43 s on local[32];
+    // sf1 7.15 vs 7.52 s on local[4], a tie, and 9.69 vs 8.58 s on
+    // local[32], where the split wins). Pick
     // the plan from the source size the way a cost-based optimizer
     // would from table stats: below ~8 MB of parquet the per-series
     // window is already sub-second per task, so run the simple plan;

@@ -383,10 +383,18 @@ object Normalize {
       all.filter(col("error").isNotNull).select(col("chapter"), col("error")))
 
   /** A7 keyed JSON sink: one directory (and, via the repartition, one
-    * file) per chapter — `{out}/chapter=<id>/part-*.json`. */
+    * file) per chapter — `{out}/chapter=<id>/part-*.json`.
+    * The repartition names its width, one task per core: a bare
+    * `repartition(col)` is a by-column shuffle that AQE coalesces, and
+    * at ingest size (1.4 MB) that left one task on one core writing
+    * all 30 chapter files. Hash partitioning still puts each chapter
+    * in exactly one task, so in one file. The write goes through
+    * [[graft.LocalFs]], so local output starts no `chmod` process per
+    * directory, part file and `.crc` file; other schemes are unchanged. */
   def writeKeyedJson(ok: DataFrame, outPath: String): Unit =
-    ok.repartition(col("chapter"))
-      .write.mode("overwrite").partitionBy("chapter").json(outPath)
+    ok.repartition(ok.sparkSession.sparkContext.defaultParallelism, col("chapter"))
+      .write.options(graft.LocalFs.conf).mode("overwrite")
+      .partitionBy("chapter").json(outPath)
 
   /** A20 sink-edge map shape: the reference's per-chapter output is a
     * single JSON object keyed by event id (`for/hasheq` at

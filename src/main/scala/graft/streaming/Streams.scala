@@ -111,24 +111,43 @@ object Streams extends QueryModule {
     }
   }
 
-  /** The shuffle-partition count is frozen into a streaming query's
-    * state-store layout at start; 32 state stores for kilobytes of
-    * state is pure per-batch overhead, so streaming queries start
-    * under a smaller setting (batch queries are unaffected — the conf
-    * is restored immediately after start). At real scale this knob is
-    * sized to state volume, not defaulted. */
-  /** Scoped session-conf swap: `key`=`value` for the duration of `f`,
-    * previous value restored after (shared by the stream-partition and
-    * state-store-provider swaps — one copy of the try/finally idiom). */
-  private def withConf[T](s: SparkSession, key: String, value: String)
-                         (f: => T): T = {
-    val prev = s.conf.get(key)
-    s.conf.set(key, value)
-    try f finally s.conf.set(key, prev)
+  /** Scoped session-conf swap: every `kv` pair for the duration of
+    * `f`; afterwards each key gets its previous value back, and a key
+    * that had none is unset (`conf.get` throws for a key that was never
+    * set). One copy of the try/finally idiom, shared by the stream-start
+    * and state-store-provider swaps. */
+  private def withConf[T](s: SparkSession, kv: Map[String, String])(f: => T): T = {
+    val prev = kv.keys.map(k => k -> s.conf.getOption(k)).toMap
+    kv.foreach { case (k, v) => s.conf.set(k, v) }
+    try f finally prev.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
+    }
   }
 
-  private def withStreamPartitions[T](s: SparkSession, parts: Int)(f: => T): T =
-    withConf(s, "spark.sql.shuffle.partitions", parts.toString)(f)
+  /** The session conf a stream starts under. A stream clones its
+    * session's conf at `start()`; [[withStreamRun]] restores the
+    * session's own values when the run ends.
+    *  - `spark.sql.shuffle.partitions` = `parts`: the count is frozen
+    *    into the state-store layout at start, and 32 state stores for
+    *    kilobytes of state is pure per-batch overhead. At real scale it
+    *    is sized to state volume ([[streamParts]]), not defaulted.
+    *  - [[graft.LocalFs.conf]]: writing the checkpoint's offsets,
+    *    commits, metadata and state deltas (and their `.crc` files)
+    *    starts no `chmod` or `readlink` process (61 + 192 per
+    *    `s_session` run before).
+    *  - artifact isolation off: Spark keys its codegen cache by
+    *    classloader, and an isolated clone gets a new session UUID and
+    *    so a new executor classloader, which recompiled the same 24
+    *    generated classes on every `s_session` run. With isolation off
+    *    the clone's jobs run in the executor's default session and hit
+    *    the cache. Precondition: the stream harness runs only classpath
+    *    code and never adds session artifacts (jars, files, classes),
+    *    which is all that isolation keeps apart. */
+  private def streamStart(parts: Int): Map[String, String] =
+    graft.LocalFs.conf ++ Map(
+      "spark.sql.shuffle.partitions" -> parts.toString,
+      "spark.sql.artifact.isolation.enabled" -> "false")
 
   /** State-store partition count sized from the SOURCE volume, the
     * way a deployment sizes it to expected state: one state partition
@@ -145,15 +164,6 @@ object Streams extends QueryModule {
       (bytes / (1L << 20) / 3 * 2).toInt))
   }
 
-  /** Run a streaming frame into a memory sink, driving it with `drive`
-    * (AvailableNow-to-completion for the file-source queries; manual
-    * multi-batch feeding for the late-data case), then clean up and
-    * return the sink contents as a batch frame.
-    * Cleanup contract: unload state-store providers + stop the
-    * maintenance task (each run otherwise leaves loaded providers
-    * behind — measured 2-6× slowdown of whatever executes next) and
-    * materialize + drop the sink temp view so runs don't accumulate
-    * tables in the session catalog. */
   /** Writer-agnostic run harness shared by the memory-sink path
     * ([[runStream]]) and the foreachBatch path (sForeachUpsert):
     * unique query name, an explicit RAM-backed checkpoint, and the
@@ -170,15 +180,16 @@ object Streams extends QueryModule {
     * providers + the maintenance thread (loaded providers slow the
     * NEXT query 2-6×), and drop the sink temp view (no-op for
     * non-memory sinks) so failed runs don't accumulate catalog
-    * entries. */
-  private def withStreamRun[A](s: SparkSession)(
+    * entries. The body, and so the stream's `start()`, runs under
+    * [[streamStart]]`(parts)`. */
+  private def withStreamRun[A](s: SparkSession, parts: Int)(
       body: (String, String) => A): A = {
     val qn = "s_" + java.util.UUID.randomUUID.toString.replace("-", "")
     // Scratch.base/rm, not hand-rolled copies (review r13 — Scratch
     // exists because four drifted copies of exactly this logic were
     // consolidated once already)
     val ckpt = s"${graft.Scratch.base}/graft-ckpt/$qn"
-    try body(qn, ckpt)
+    try withConf(s, streamStart(parts))(body(qn, ckpt))
     finally {
       s.streams.active.filter(_.name == qn)
         .foreach(q => try q.stop() catch { case _: Throwable => () })
@@ -188,17 +199,24 @@ object Streams extends QueryModule {
     }
   }
 
+  /** Run a streaming frame into a memory sink, driving it with `drive`
+    * (AvailableNow-to-completion for the file-source queries; manual
+    * multi-batch feeding for the late-data case), then clean up and
+    * return the sink contents as a batch frame.
+    * Cleanup contract: unload state-store providers + stop the
+    * maintenance task (each run otherwise leaves loaded providers
+    * behind — measured 2-6× slowdown of whatever executes next) and
+    * materialize + drop the sink temp view so runs don't accumulate
+    * tables in the session catalog. */
   private def runStream(s: SparkSession, df: DataFrame, mode: String,
       trigger: Option[Trigger],
       drive: org.apache.spark.sql.streaming.StreamingQuery => Unit,
       parts: Int = 4): DataFrame = {
-    val result = withStreamRun(s) { (qn, ckpt) =>
-      withStreamPartitions(s, parts) {
-        var w = df.writeStream.format("memory").queryName(qn)
-          .outputMode(mode).option("checkpointLocation", ckpt)
-        trigger.foreach(t => w = w.trigger(t))
-        drive(w.start())
-      }
+    val result = withStreamRun(s, parts) { (qn, ckpt) =>
+      var w = df.writeStream.format("memory").queryName(qn)
+        .outputMode(mode).option("checkpointLocation", ckpt)
+      trigger.foreach(t => w = w.trigger(t))
+      drive(w.start())
       // resolve the sink table BEFORE the harness drops its view —
       // the analyzed plan keeps the rows alive without the catalog
       // name
@@ -475,8 +493,8 @@ object Streams extends QueryModule {
       .transformWithState(new ExtremaProcessor,
         TimeMode.None(), OutputMode.Update())
       .toDF("user_id", "n_events", "min_value", "max_value")
-    withConf(s, "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
+    withConf(s, Map("spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")) {
       runToBatch(s, updated, "update", streamParts(s, d))
     }
       .groupBy(col("user_id"))
@@ -653,34 +671,32 @@ object Streams extends QueryModule {
         // (review r13 — every batch otherwise leaves a dead RDD)
         .transform(graft.ops.Staged.checkpoint)
     }
-    withStreamRun(s) { (qn, ckpt) =>
-      withStreamPartitions(s, 4) {
-        val q = mem.toDF().toDF("user_id", "ts", "value")
-          .writeStream.outputMode("update")
-          // named so the harness's exception-path cleanup can find
-          // it — without queryName the teardown filter can never
-          // match and a failure between start() and stop() leaks the
-          // query
-          .queryName(qn)
-          .option("checkpointLocation", ckpt)
-          .foreachBatch((batch: DataFrame, _: Long) => mergeBatch(batch))
-          .start()
-        // batch 1: two inserts
-        mem.addData((1L, t("2024-01-01T10:00:00Z"), 10.0),
-          (2L, t("2024-01-01T10:05:00Z"), 20.0))
-        q.processAllAvailable()
-        // batch 2: newer update (u1), insert (u3), STALE row (u2 at
-        // 09:50 < 10:05 — must not overwrite, only count)
-        mem.addData((1L, t("2024-01-01T10:30:00Z"), 30.0),
-          (3L, t("2024-01-01T10:10:00Z"), 5.0),
-          (2L, t("2024-01-01T09:50:00Z"), 99.0))
-        q.processAllAvailable()
-        // batch 3: newer update (u3), stale (u1 at 09:00)
-        mem.addData((3L, t("2024-01-01T10:40:00Z"), 7.0),
-          (1L, t("2024-01-01T09:00:00Z"), 111.0))
-        q.processAllAvailable()
-        q.stop()
-      }
+    withStreamRun(s, 4) { (qn, ckpt) =>
+      val q = mem.toDF().toDF("user_id", "ts", "value")
+        .writeStream.outputMode("update")
+        // named so the harness's exception-path cleanup can find
+        // it — without queryName the teardown filter can never
+        // match and a failure between start() and stop() leaks the
+        // query
+        .queryName(qn)
+        .option("checkpointLocation", ckpt)
+        .foreachBatch((batch: DataFrame, _: Long) => mergeBatch(batch))
+        .start()
+      // batch 1: two inserts
+      mem.addData((1L, t("2024-01-01T10:00:00Z"), 10.0),
+        (2L, t("2024-01-01T10:05:00Z"), 20.0))
+      q.processAllAvailable()
+      // batch 2: newer update (u1), insert (u3), STALE row (u2 at
+      // 09:50 < 10:05 — must not overwrite, only count)
+      mem.addData((1L, t("2024-01-01T10:30:00Z"), 30.0),
+        (3L, t("2024-01-01T10:10:00Z"), 5.0),
+        (2L, t("2024-01-01T09:50:00Z"), 99.0))
+      q.processAllAvailable()
+      // batch 3: newer update (u3), stale (u1 at 09:00)
+      mem.addData((3L, t("2024-01-01T10:40:00Z"), 7.0),
+        (1L, t("2024-01-01T09:00:00Z"), 111.0))
+      q.processAllAvailable()
+      q.stop()
     }
     target.orderBy(col("user_id"))
   }

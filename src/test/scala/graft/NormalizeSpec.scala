@@ -199,5 +199,11 @@ class NormalizeSpec extends AnyFunSuite {
         .filter(_.getName.endsWith(".json"))
       assert(parts.length == 1, s"$ch should have exactly one part file")
     }
+    // ...written by more than one task: the sink's shuffle keeps one
+    // partition per core instead of AQE coalescing it into a single
+    // writer (the part file name carries the write task's number)
+    val tasks = dirs.flatMap(ch => new java.io.File(s"$out/$ch").list()
+      .collect { case n if n.endsWith(".json") => n.take("part-00000".length) })
+    assert(tasks.size > 1, s"one write task wrote every chapter: $tasks")
   }
 }

@@ -179,4 +179,18 @@ class StreamingSpec extends AnyFunSuite {
     assert(s.table(qn).count() > 0)
     } finally s.conf.set(provKey, prevProv)
   }
+
+  test("a warm s_session run compiles no new class") {
+    // Spark keys its codegen cache by classloader, and each stream runs
+    // on a clone of the session; with artifact isolation on, every
+    // clone got a new executor classloader and recompiled the same
+    // generated classes (24 per s_session run)
+    import org.apache.spark.metrics.source.CodegenMetrics
+    def run(): Unit = SparkEntry.queries("s_session")(s, d).collect()
+    run()
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    run()
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    assert(compiled == 0, s"the warm run compiled $compiled classes")
+  }
 }
