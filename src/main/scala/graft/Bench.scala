@@ -2,20 +2,40 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.SparkSession
+
 /** Benchmark main: times every SparkEntry query on SPARK_GRAFT_SF_DIR.
   *
   * Measurement hygiene (round-1 lessons):
   *  - A full untimed warm-up pass first — JVM/JIT, codegen cache,
   *    file-listing and parquet-footer caches all warm before timing.
-  *  - Materialization is `queryExecution.toRdd.foreach(_ => ())`:
-  *    every operator in the plan executes (a bare .count() lets
-  *    Catalyst prune unreferenced projections — under-measurement).
+  *  - Each query runs through [[materialize]]: every operator in the
+  *    plan executes.
   *  - Failures are SURFACED in an "errors" map, never folded into a
   *    fake timing.
   *  - The JSON line goes to stdout AND /root/repo/bench_out.json so
   *    log prefixes (sbt's [info]) can't break the driver's parse.
   */
 object Bench {
+
+  /** Run one query the way every timed entry point does: release the
+    * previous query's staged checkpoint blocks and drain garbage from
+    * prior queries outside the clock — so one query's timing isn't
+    * taxed with a GC cycle triggered by its predecessors' debris (the
+    * ContextCleaner also piggybacks on GC to release old
+    * broadcasts/shuffles) — then execute every operator via `toRdd`
+    * (a bare `Dataset.count()` lets Catalyst prune unreferenced
+    * projections — under-measurement). Returns (seconds, rows). */
+  def materialize(spark: SparkSession, sfDir: String,
+                  name: String): (Double, Long) = {
+    ops.Staged.sweep()
+    System.gc()
+    val t0 = System.nanoTime()
+    val rows = SparkEntry.queries(name)(spark, sfDir)
+      .queryExecution.toRdd.count()
+    ((System.nanoTime() - t0) / 1e9, rows)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.local(GraftSession.envCpus)
@@ -26,11 +46,15 @@ object Bench {
       .map(_.split(",").toSet)
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.contains(n)))
-    def run(name: String): Either[String, Unit] =
-      try Right(SparkEntry.queries(name)(spark, sfDir)
-        .queryExecution.toRdd.foreach(_ => ()))
+    // a failed query keeps the time it ran for, next to its error
+    def run(name: String): (Double, Either[String, Unit]) = {
+      val t0 = System.nanoTime()
+      try (materialize(spark, sfDir, name)._1, Right(()))
       catch { case e: Throwable =>
-        Left(Option(e.getMessage).getOrElse(e.getClass.getName).take(200)) }
+        ((System.nanoTime() - t0) / 1e9,
+          Left(Option(e.getMessage).getOrElse(e.getClass.getName).take(200)))
+      }
+    }
 
     // Two passes per query, per-query minimum. Pass 1 doubles as the
     // warm-up (JIT, codegen cache, file listings) — min-of-2 discards
@@ -41,19 +65,7 @@ object Bench {
     // taxes whatever executes after them, and interleaving would
     // charge that tax to unrelated batch queries.
     def pass(ns: Seq[String]): Map[String, (Double, Either[String, Unit])] =
-      ns.map { n =>
-        // deterministic release of the previous query's staged
-        // checkpoint blocks (outside the clock), then drain garbage
-        // from prior queries so one query's timing isn't taxed with a
-        // GC cycle triggered by its predecessors' debris (the
-        // ContextCleaner also piggybacks on GC to release old
-        // broadcasts/shuffles)
-        ops.Staged.sweep()
-        System.gc()
-        val t0 = System.nanoTime()
-        val r = run(n)
-        n -> ((System.nanoTime() - t0) / 1e9, r)
-      }.toMap
+      ns.map(n => n -> run(n)).toMap
     val (batch, streaming) = names.partition(_.startsWith("q_"))
     // Fixed untimed warm query before any timed pass: the first timed
     // query of pass 1 otherwise absorbs session-wide cold start

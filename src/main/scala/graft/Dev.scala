@@ -58,20 +58,6 @@ object Dev {
     def close(): Unit = sc.removeSparkListener(this)
   }
 
-  /** Run one query the way Bench does: release the previous query's
-    * staged checkpoint blocks and drain its garbage outside the clock,
-    * then execute every operator via `toRdd` (a bare `Dataset.count()`
-    * lets Catalyst prune unreferenced projections). Returns (seconds, rows). */
-  def materialize(spark: SparkSession, sfDir: String,
-                  name: String): (Double, Long) = {
-    ops.Staged.sweep()
-    System.gc()
-    val t0 = System.nanoTime()
-    val rows = SparkEntry.queries(name)(spark, sfDir)
-      .queryExecution.toRdd.count()
-    ((System.nanoTime() - t0) / 1e9, rows)
-  }
-
   final case class Profiled(seconds: Double, warmup: Seq[Stage],
                             timed: Seq[Stage])
 
@@ -79,9 +65,9 @@ object Dev {
   def profile(spark: SparkSession, sfDir: String, name: String): Profiled = {
     val log = new StageLog(spark.sparkContext)
     try {
-      materialize(spark, sfDir, name)
+      Bench.materialize(spark, sfDir, name)
       val warmup = log.take()
-      val (sec, _) = materialize(spark, sfDir, name)
+      val (sec, _) = Bench.materialize(spark, sfDir, name)
       Profiled(sec, warmup, log.take())
     } finally log.close()
   }
@@ -97,7 +83,7 @@ object Dev {
     val log = new StageLog(spark.sparkContext)
     try names.map { n =>
       log.take()
-      val (sec, rows) = materialize(spark, sfDir, n)
+      val (sec, rows) = Bench.materialize(spark, sfDir, n)
       val r = Pressured(n, sec, rows, log.take().map(_.spillBytes).sum)
       System.err.println(f"[pressure] $n: $sec%.2fs rows=$rows spill=${r.spillBytes}")
       r

@@ -109,17 +109,12 @@ object Graft {
     * checkpointed star-contraction loop with data-sized partitions;
     * at most O(diameter) rounds of two shuffles each. */
   def connectedComponents(edges: DataFrame, src: String, dst: String)
-      : DataFrame = {
-    val st = ops.LlmPipe.stagePairs(
-      edges.select(longId(col(src), "connectedComponents").as("da"),
-        longId(col(dst), "connectedComponents").as("db")))
-    val out = ops.LlmPipe.dedupCcLoop(st.df).withColumnRenamed("doc_id", "id")
-    // the loop ran eagerly (checkpoint-per-round) — nothing re-reads
-    // the staged blocks; without this release every facade call parks
-    // an edge-sized RDD in the block manager (review r12)
-    st.release()
-    out
-  }
+      : DataFrame =
+    ops.LlmPipe.withStaged(
+        edges.select(longId(col(src), "connectedComponents").as("da"),
+          longId(col(dst), "connectedComponents").as("db")))(
+        st => ops.LlmPipe.dedupCcLoop(st.df))
+      .withColumnRenamed("doc_id", "id")
 
   /** One damped PageRank pass (d = 0.85) over an undirected edge
     * list: `(id, rank)`. The node-count scalar rides in as a 1-row
@@ -135,11 +130,10 @@ object Graft {
     * deterministic across partitionings. */
   def pageRankConverged(edges: DataFrame, src: String, dst: String,
                         iters: Int = 12): (DataFrame, Seq[Double]) = {
-    val st = ops.LlmPipe.stagePairs(
-      edges.select(longId(col(src), "pageRankConverged").as("da"),
-        longId(col(dst), "pageRankConverged").as("db")))
-    val (ranks, masses) = ops.LlmPipe.pagerankConvOver(st.df, iters)
-    st.release() // iteration checkpoints truncated the lineage (see cc)
+    val (ranks, masses) = ops.LlmPipe.withStaged(
+        edges.select(longId(col(src), "pageRankConverged").as("da"),
+          longId(col(dst), "pageRankConverged").as("db")))(
+        st => ops.LlmPipe.pagerankConvOver(st.df, iters))
     (ranks.withColumnRenamed("doc_id", "id"), masses)
   }
 

@@ -132,7 +132,11 @@ object LlmExt extends QueryModule {
     (classes.select(col("rep"), col("ids"), col("m")), classEdges)
   }
 
-  private def dedupSimhash(s: SparkSession, d: String): DataFrame = {
+  /** q_llm_dedup_simhash's pair set — the expanded graph the
+    * distributed side of the iterative graph queries (LlmPipe) loops
+    * over, so every operator shares one definition of "near-duplicate
+    * pair". */
+  private[graft] def dedupSimhash(s: SparkSession, d: String): DataFrame = {
     val fps = simhashFps(s, d)
     // Exact-duplicate collapse BEFORE banding — the composition the
     // bucketPairs guard message prescribes. Identical texts share a
@@ -182,12 +186,6 @@ object LlmExt extends QueryModule {
         greatest(col("a"), col("b")).as("db"), col("hamming"))
     identical.unionByName(cross).orderBy(col("da"), col("db"))
   }
-
-  /** The simhash pair set under its scored name — q_llm_dedup_cc
-    * (LlmPipe) clusters these edges, so both operators share one
-    * definition of "near-duplicate pair". */
-  private[graft] def simhashPairs(s: SparkSession, d: String): DataFrame =
-    dedupSimhash(s, d)
 
   /** The fingerprint CTE chain (`tok`/`sums`/`fps`) shared by the
     * simhash oracle and the connected-components oracle in LlmPipe. */

@@ -1,9 +1,10 @@
 package graft.ops
 
 import graft.{Gate, QueryModule, Tables => T}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import scala.reflect.ClassTag
 
 /** Training-data pipeline stages beyond the pairwise dedups: PII
   * detection/redaction (the pre-training scrub every public corpus
@@ -148,17 +149,10 @@ object LlmPipe extends QueryModule {
     * distributed rounds). The local-vs-distributed pick then applies
     * AT CLASS LEVEL: an all-distinct corpus degenerates to the
     * original graph and the loop machinery takes over unchanged. */
-  private def dedupCc(s: SparkSession, d: String): DataFrame = {
-    val (classes, classEdges) = LlmExt.simhashClassGraph(s, d)
-    val st = stagePairs(classEdges.toDF("da", "db"))
-    val repLabels =
-      if (localGraph(s, st)) ccLocalLabels(st)
-      else dedupCcLoopLabels(st.df)
-    // both strategies have materialized by here (driver collect /
-    // per-round checkpoints), so the staged blocks can go
-    st.release()
-    expandCc(classes, repLabels)
-  }
+  private def dedupCc(s: SparkSession, d: String): DataFrame =
+    graphQuery(s, d, "dedup_cc", weighted = false)(
+      (classes, g) => expandCc(classes, ccLocalLabels(s, g)))(
+      (classes, pairs) => expandCc(classes, dedupCcLoopLabels(pairs)))
 
   /** Expand class-level CC labels (id = rep, lbl = component min rep)
     * to the member-level (doc_id, cluster, cluster_size) frame:
@@ -180,9 +174,28 @@ object LlmPipe extends QueryModule {
       .orderBy(col("doc_id"))
   }
 
-  /** Re-root a frame into a CHILD session pinned to loop-scale conf.
-    * The node/label frames an iterative graph query loops over are
-    * |dup docs| rows — a vanishing fraction of the corpus at any
+  /** A staged pair frame: the child-session loop frame plus the exact
+    * edge count the staging action already paid for. The count doubles
+    * as the COST-MODEL SIGNAL for the local-vs-distributed strategy
+    * pick below — the same role catalog row-count statistics play for
+    * a cost-based optimizer, except here it is exact and free (the
+    * persist+count job exists anyway to size the loop partitions). */
+  private[graft] final case class StagedPairs(
+      df: DataFrame, edges: Long,
+      rdd: org.apache.spark.rdd.RDD[Row]) {
+    /** Drop the staged blocks once every consumer has MATERIALIZED
+      * (collected to the driver, or truncated its lineage with a
+      * checkpoint): without this, each graph-query invocation parks a
+      * pair RDD in the block manager until the GC-driven
+      * ContextCleaner happens to notice — an unbounded-latency leak
+      * in a long-lived session. Non-blocking: nothing re-reads the
+      * blocks after [[withStaged]] releases them. */
+    def release(): Unit = { rdd.unpersist(blocking = false); () }
+  }
+
+  /** Re-root a pair frame into a CHILD session pinned to loop-scale
+    * conf. The node/label frames an iterative graph query loops over
+    * are |dup docs| rows — a vanishing fraction of the corpus at any
     * scale — so running each round under the full batch
     * shuffle-partition count pays ~rounds × partitions of empty-task
     * scheduling, and AQE re-plans after every materialized stage,
@@ -197,35 +210,15 @@ object LlmPipe extends QueryModule {
     *
     * The loop partition count is SIZED FROM THE DATA (round 8): the
     * input RDD is persisted and counted — one extra action, and the
-    * callers' `pairs.union(pairs.reversed)` double-read then hits the
-    * cache instead of recomputing the corpus-scan upstream — and the
-    * child session pins `loopPartitions(count)` shuffle partitions:
-    * floor 8 locally, growing one partition per [[LoopRowsPerPart]]
-    * pair rows, so the same code running on a 1000-executor cluster
-    * with 10⁹ candidate edges plans ~250-way loop shuffles instead of
-    * an 8-way constant that was only ever correct for this box. */
-  private[graft] def loopFrame(df: DataFrame): DataFrame = stagePairs(df).df
-
-  /** A staged pair frame: the child-session loop frame plus the exact
-    * edge count the staging action already paid for, plus the parent
-    * session (for building driver-computed results). The count doubles
-    * as the COST-MODEL SIGNAL for the local-vs-distributed strategy
-    * pick below — the same role catalog row-count statistics play for
-    * a cost-based optimizer, except here it is exact and free (the
-    * persist+count job exists anyway to size the loop partitions). */
-  private[graft] final case class StagedPairs(
-      df: DataFrame, edges: Long, parent: SparkSession,
-      rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]) {
-    /** Drop the staged blocks once every consumer has MATERIALIZED
-      * (collected to the driver, or truncated its lineage with a
-      * checkpoint): without this, each graph-query invocation parks a
-      * pair RDD in the block manager until the GC-driven
-      * ContextCleaner happens to notice — an unbounded-latency leak
-      * in a long-lived session. Non-blocking: nothing re-reads the
-      * blocks after the release points below. */
-    def release(): Unit = { rdd.unpersist(blocking = false); () }
-  }
-
+    * loops' undirected `pairs.union(pairs.reversed)` double-read then
+    * hits the cache instead of recomputing the corpus-scan upstream —
+    * and the child session pins `loopPartitions(count)` shuffle
+    * partitions: floor 8 locally, growing one partition per
+    * [[LoopRowsPerPart]] pair rows, so the same code running on a
+    * 1000-executor cluster with 10⁹ candidate edges plans ~250-way
+    * loop shuffles instead of an 8-way constant that was only ever
+    * correct for this box. The caller owns the persisted blocks:
+    * [[withStaged]] releases them. */
   private[graft] def stagePairs(in: DataFrame): StagedPairs = {
     val rdd = in.rdd.persist(
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -235,7 +228,21 @@ object LlmPipe extends QueryModule {
       loopPartitions(n, in.sparkSession.sparkContext.defaultParallelism)
         .toString)
     ls.conf.set("spark.sql.adaptive.enabled", "false")
-    StagedPairs(ls.createDataFrame(rdd, in.schema), n, in.sparkSession, rdd)
+    StagedPairs(ls.createDataFrame(rdd, in.schema), n, rdd)
+  }
+
+  /** Stage `pairs`, run `body` over them, and release the staged
+    * blocks on every exit. The release sits in a `finally` because the
+    * bodies throw on purpose — a convergence or mass `require`, an
+    * [[R6BoundaryTrip]] the strategy dispatch recovers from — and a
+    * release skipped on those paths parks an edge-sized RDD in a
+    * long-lived session until GC. The body must materialize whatever
+    * it returns (a collect, or the loops' per-round checkpoints):
+    * nothing may read the staged blocks after it returns. */
+  private[graft] def withStaged[A](pairs: DataFrame)(
+      body: StagedPairs => A): A = {
+    val st = stagePairs(pairs)
+    try body(st) finally st.release()
   }
 
   /** ~64 MB of (long, long) unsafe rows per loop partition — the
@@ -354,10 +361,54 @@ object LlmPipe extends QueryModule {
 
   private val logger = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  private def onBoundaryTrip(query: String, t: R6BoundaryTrip): Unit =
-    logger.warn(
-      s"graft $query: ${t.getMessage}; abandoning the driver-local " +
-        "strategy and re-running distributed")
+  /** The driver-side class graph a local solve reads: the staged class
+    * edges as two primitive arrays, collected once, and — for a
+    * weighted solve — the participating classes (ascending reps) with
+    * their member counts `m`. */
+  private[graft] final case class LocalGraph(ea: Array[Long],
+      eb: Array[Long], reps: Array[Long], m: Array[Long])
+
+  /** The one strategy dispatch of the iterative graph family
+    * (q_llm_dedup_cc, q_graph_pagerank, q_graph_pagerank_conv,
+    * q_llm_keeper): build the fingerprint class graph, stage its edges,
+    * ask the `graph` gate ([[classGraphLocal]]), then run `local` on
+    * the driver or `distributed` over the loop machinery. A local solve
+    * that throws [[R6BoundaryTrip]] is abandoned for the distributed
+    * body — the driver shortcut is an optimization, never the answer.
+    *
+    * `weighted`: the solve needs class weights (PageRank — a class's
+    * member count is part of every member's degree). The local solve
+    * then also gets the participating classes, and the distributed
+    * body runs over the expanded doc-level pairs, because the loops
+    * have no weighted form. Unweighted (CC — contracting a class to one
+    * node preserves components exactly), both sides run on the class
+    * edges.
+    *
+    * Both closures get the fingerprint classes; `distributed` also
+    * gets the staged loop frame. Every staging goes through
+    * [[withStaged]], so the closures neither stage nor release. */
+  private[graft] def graphQuery[A](s: SparkSession, d: String,
+      query: String, weighted: Boolean)(local: (DataFrame, LocalGraph) => A)(
+      distributed: (DataFrame, DataFrame) => A): A = {
+    val (classes, classEdges) = LlmExt.simhashClassGraph(s, d)
+    withStaged(classEdges.toDF("da", "db")) { st =>
+      def dist(): A =
+        if (!weighted) distributed(classes, st.df)
+        else withStaged(
+            LlmExt.dedupSimhash(s, d).select(col("da"), col("db")))(
+          stx => distributed(classes, stx.df))
+      classGraphLocal(s, classes, st, weighted) match {
+        case Some(g) =>
+          try local(classes, g)
+          catch { case t: R6BoundaryTrip =>
+            logger.warn(s"graft $query: ${t.getMessage}; abandoning the " +
+              "driver-local strategy and re-running distributed")
+            dist()
+          }
+        case None => dist()
+      }
+    }
+  }
 
   /** The staged (da, db) pairs as two primitive arrays (driver path
     * only — callers have already passed [[localGraph]]). */
@@ -418,18 +469,18 @@ object LlmPipe extends QueryModule {
 
   /** Local CC: the exact (id, lbl) label frame of dedupCcLoopLabels,
     * computed in one driver union-find pass. */
-  private def ccLocalLabels(st: StagedPairs): DataFrame = {
-    val (da, db) = collectEdges(st)
-    val (nodes, ix) = indexNodes(da, db)
-    val labels = unionFindLabels(nodes, ix, da, db)
-    val spark = st.parent
+  private def ccLocalLabels(spark: SparkSession, g: LocalGraph)
+      : DataFrame = {
+    val (nodes, ix) = indexNodes(g.ea, g.eb)
+    val labels = unionFindLabels(nodes, ix, g.ea, g.eb)
     import spark.implicits._
     nodes.indices.map(i => (nodes(i), labels(i))).toDF("id", "lbl")
   }
 
-  /** Collected participating classes + class edges for the local
-    * weighted PageRank, or None when the class graph exceeds the
-    * driver ceiling. Participating = classes whose members have ≥ 1
+  /** The class graph collected to the driver, or None when the `graph`
+    * gate ([[localGraph]]) sends it distributed or, for a `weighted`
+    * solve, the participating classes exceed the driver ceiling.
+    * Participating = classes whose members have ≥ 1
     * expanded edge: m ≥ 2 (intra-class clique) or linked by a class
     * edge. The count guard matters independently of the edge count —
     * a 100M-doc corpus of exact 2-way duplicates has ZERO class edges
@@ -439,22 +490,23 @@ object LlmPipe extends QueryModule {
     * [[LocalGraphMaxEdges]] even when [[Gate.Key]] `= small` forces
     * the gate. */
   private def classGraphLocal(s: SparkSession, classes: DataFrame,
-      st: StagedPairs)
-      : Option[(Array[Long], Array[Long], Array[Long], Array[Long])] = {
+      st: StagedPairs, weighted: Boolean): Option[LocalGraph] = {
     if (!localGraph(s, st)) return None
-    val linked = st.df.select(explode(array(col("da"), col("db")))
-      .as("rep")).distinct()
-    val parts = classes.select(col("rep"), col("m"))
-      .filter(col("m") > 1)
-      .unionByName(classes.select(col("rep"), col("m"))
-        .join(linked, Seq("rep"), "left_semi"))
-      .dropDuplicates("rep")
-      .limit(LocalGraphMaxEdges.toInt + 1)
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    val parts = if (!weighted) Array.empty[(Long, Long)] else {
+      val linked = st.df.select(explode(array(col("da"), col("db")))
+        .as("rep")).distinct()
+      classes.select(col("rep"), col("m"))
+        .filter(col("m") > 1)
+        .unionByName(classes.select(col("rep"), col("m"))
+          .join(linked, Seq("rep"), "left_semi"))
+        .dropDuplicates("rep")
+        .limit(LocalGraphMaxEdges.toInt + 1)
+        .collect().map(r => (r.getLong(0), r.getLong(1)))
+    }
     if (parts.length > LocalGraphMaxEdges) return None
     val sorted = parts.sortBy(_._1)
     val (ea, eb) = collectEdges(st)
-    Some((sorted.map(_._1), sorted.map(_._2), ea, eb))
+    Some(LocalGraph(ea, eb, sorted.map(_._1), sorted.map(_._2)))
   }
 
   /** Weighted CLASS-LEVEL PageRank power iteration — the exact
@@ -514,11 +566,10 @@ object LlmPipe extends QueryModule {
     * (doc_id, rank) frame — the class→member fan-out stays a
     * distributed broadcast join + explode; only |classes| rows ever
     * visit the driver. */
-  private def prClassDf(classes: DataFrame,
-      g: (Array[Long], Array[Long], Array[Long], Array[Long]),
+  private def prClassDf(classes: DataFrame, g: LocalGraph,
       iters: Int, discretizeInit: Boolean): DataFrame = {
-    val (reps, m, ea, eb) = g
-    val r = prClassRanks(reps, m, ea, eb, iters, discretizeInit)
+    val reps = g.reps
+    val r = prClassRanks(reps, g.m, g.ea, g.eb, iters, discretizeInit)
     val spark = classes.sparkSession
     import spark.implicits._
     val ranks = reps.indices.map(i => (reps(i), r(i))).toDF("rep", "rank")
@@ -527,10 +578,63 @@ object LlmPipe extends QueryModule {
       .orderBy(col("doc_id"))
   }
 
+  // ----------------------------------------------------- graph loop kit
+
+  /** The undirected edge list of a (da, db) pair frame: both
+    * orientations, as (src, dst). */
+  private def undirected(pairs: DataFrame): DataFrame =
+    pairs.union(pairs.select(col("db"), col("da"))).toDF("src", "dst")
+
+  /** The loop-invariant edge frame of a distributed loop: undirected,
+    * pinned to the loop session's partition count ([[stagePairs]] sized
+    * it from the edge count) so the per-round joins read co-partitioned
+    * checkpoint blocks instead of re-exchanging (a checkpoint preserves
+    * partitioning), and lazily checkpointed — the loop's first
+    * [[materialize]] computes it, persists its blocks and truncates
+    * its lineage in the same job. */
+  private def loopEdges(pairs: DataFrame): DataFrame =
+    undirected(pairs).repartition(col("src"))
+      .transform(Staged.checkpointLazy)
+
+  /** Fused materialization of one loop round: `df` is marked for lazy
+    * local checkpointing, and ONE `rdd.aggregate` action both persists
+    * the round's blocks and returns (row count, Σ column 1) — the
+    * loops' convergence or mass probe. One job per round where an
+    * eager checkpoint and then an aggregate paid two (the iterative
+    * family's latency is driver round-trips, not data). Over zero rows
+    * it returns (0, 0) — an edge-free graph (a clean corpus has no
+    * simhash dup edges at all). `N` keeps the sum's type: a Long label
+    * sum cannot lose low bits to FP and fake a convergence equality. */
+  private def materialize[N: Numeric: ClassTag](df: DataFrame)(
+      value: Row => N): (DataFrame, Long, N) = {
+    val num = implicitly[Numeric[N]]
+    val cp = df.transform(Staged.checkpointLazy)
+    val (n, sum) = cp.rdd.aggregate((0L, num.zero))(
+      (a, r) => (a._1 + 1L, num.plus(a._2, value(r))),
+      (a, b) => (a._1 + b._1, num.plus(a._2, b._2)))
+    (cp, n, sum)
+  }
+
+  /** The node-side broadcast choice of the distributed loops, from the
+    * exact node count their first [[materialize]] returned.
+    * Checkpointed frames carry no catalyst stats (LogicalRDD sizes as
+    * "unknown = huge"), so every per-round join would plan as a
+    * sort-merge join and RE-SORT the edge frame each round — at sf3
+    * (8.8M directed edges) that was ~90 executor-CPU-s PER ROUND. The
+    * label/rank frames are |nodes| rows; when that is broadcastable
+    * (dup graphs are cliquey — edges ≫ nodes — so the distributed
+    * regime usually has bounded node counts even when the edge count
+    * forced it past the local solve), hint them broadcast: edges are
+    * probed in place, never sorted, and the only per-round exchange is
+    * the map-side-combined groupBy. Above [[BroadcastGraphNodes]] the
+    * SMJ plan stands — a 10⁹-node frame must shuffle, not ship. */
+  private def nodeSide(nodes: Long): DataFrame => DataFrame =
+    if (nodes <= BroadcastGraphNodes) broadcast(_) else identity
+
   /** Package-visible so the property test can drive the contraction
     * over arbitrary random graphs against a reference union-find.
-    * Callers pass a loopFrame-rooted pair frame (q_llm_keeper shares
-    * one checkpointed frame between this loop and PageRank). */
+    * Callers pass a [[stagePairs]]-rooted pair frame (q_llm_keeper
+    * shares one checkpointed frame between this loop and PageRank). */
   private[graft] def dedupCcLoop(pairs: DataFrame): DataFrame = {
     val labels = dedupCcLoopLabels(pairs)
     val sizes = labels.groupBy(col("lbl"))
@@ -545,57 +649,16 @@ object LlmPipe extends QueryModule {
     * graph — for callers (class-contracted dedupCc) that do their own
     * size accounting during member expansion. */
   private[graft] def dedupCcLoopLabels(pairs: DataFrame): DataFrame = {
-    val ls = pairs.sparkSession
-    // ONE job materializes both loop invariants: edges is marked for
-    // lazy local checkpointing, labels' materialization below computes
-    // it, persists its blocks, and truncates both lineages together.
-    val edges = pairs
-      .union(pairs.select(col("db"), col("da")))
-      .toDF("src", "dst")
-      // pin to the loop session's partition count (loopFrame sized it
-      // from the edge count) — the per-round joins then read
-      // co-partitioned checkpoint blocks instead of re-exchanging
-      // 32-way (a checkpoint preserves partitioning)
-      .repartition(col("src"))
-      .transform(Staged.checkpointLazy)
+    // ONE job materializes both loop invariants: the first
+    // materialize computes the lazily checkpointed edges as well.
+    val edges = loopEdges(pairs)
     // convergence witness: labels only ever DECREASE, so the label sum
     // strictly decreases until the fixpoint — comparing two scalar
-    // sums replaces a per-round labels⨝labels diff join. The sum is
-    // FUSED into the checkpoint materialization: localCheckpoint(lazy)
-    // marks the plan, and the one rdd.aggregate action both persists
-    // the round's blocks and returns the sum — one job per round where
-    // the eager-checkpoint-then-agg formulation paid two (the
-    // iterative family's latency is driver round-trips, not data).
-    // aggregate(0L) over zero rows is 0 (edge-free graph — a clean
-    // corpus has no simhash dup edges at all); Long math, not Double,
-    // so huge doc-id sums can't lose low bits to FP and fake a
-    // convergence equality.
-    def materialize(df: DataFrame): (DataFrame, Long, Long) = {
-      val cp = df.transform(Staged.checkpointLazy)
-      val (s, c) = cp.rdd.aggregate((0L, 0L))(
-        (a, r) => (a._1 + r.getLong(1), a._2 + 1L),
-        (a, b) => (a._1 + b._1, a._2 + b._2))
-      (cp, s, c)
-    }
-    var (labels, prevSum, nNodes) = materialize(
+    // sums replaces a per-round labels⨝labels diff join
+    var (labels, nNodes, prevSum) = materialize(
       edges.select(col("src").as("id")).distinct()
-        .select(col("id"), col("id").as("lbl")))
-    // Checkpointed frames carry no catalyst stats (LogicalRDD sizes
-    // as "unknown = huge"), so every per-round join would plan as a
-    // sort-merge join and RE-SORT the edge frame each round — at sf3
-    // (8.8M directed edges) that was ~90 executor-CPU-s PER ROUND.
-    // The label/neighborhood frames are |nodes| rows; when that is
-    // broadcastable (dup graphs are cliquey — edges ≫ nodes — so the
-    // distributed-loop regime usually has bounded node counts even
-    // when the edge count forced it past the local solve), hint them
-    // broadcast: edges are probed in place, never sorted, and the
-    // only per-round exchange is the map-side-combined groupBy. Above
-    // the ceiling the SMJ plan stands — a 10⁹-node label frame must
-    // shuffle, not ship. The node count is exact and free (fused into
-    // the first materialize action).
-    val bcastLabels = nNodes <= BroadcastGraphNodes
-    def nodeSide(df: DataFrame): DataFrame =
-      if (bcastLabels) broadcast(df) else df
+        .select(col("id"), col("id").as("lbl")))(_.getLong(1))
+    val side = nodeSide(nNodes)
     var converged = false
     var rounds = 0
     val MaxRounds = 20
@@ -606,7 +669,7 @@ object LlmPipe extends QueryModule {
       // dup graph ⇒ 16 rounds of fixed job overhead). edges and labels
       // are co-partitioned on the join key (8, hash), so the only
       // exchange here is the groupBy(dst).
-      val nbrMin = edges.join(nodeSide(labels),
+      val nbrMin = edges.join(side(labels),
           edges("src") === labels("id"))
         .groupBy(col("dst")).agg(min(col("lbl")).as("lbl"))
         .select(col("dst").as("id"), col("lbl"))
@@ -628,7 +691,7 @@ object LlmPipe extends QueryModule {
       // formulation is gone. The inner join is total: symmetric edges
       // make every node somebody's dst, so nbrMin covers all of labels.
       val combined = labels
-        .join(nodeSide(nbrMin.withColumnRenamed("lbl", "nm")), "id")
+        .join(side(nbrMin.withColumnRenamed("lbl", "nm")), "id")
       val self = combined
         .select(col("id"), least(col("lbl"), col("nm")).as("lbl"))
       val up = combined.select(col("lbl").as("id"), col("nm").as("lbl"))
@@ -636,15 +699,15 @@ object LlmPipe extends QueryModule {
       // self is already partitioned on rid = id, so only the labels
       // side exchanges (by lbl)
       val down = labels
-        .join(nodeSide(
+        .join(side(
             self.select(col("id").as("rid"), col("lbl").as("rlbl"))),
           labels("lbl") === col("rid"))
         .select(labels("id"), col("rlbl").as("lbl"))
       // self covers every id and is dominated-by-construction ≤ the old
       // label, so the old labels frame drops out of the union
-      val (next, nextSum, _) = materialize(
+      val (next, _, nextSum) = materialize(
         self.union(up).union(down)
-          .groupBy(col("id")).agg(min(col("lbl")).as("lbl")))
+          .groupBy(col("id")).agg(min(col("lbl")).as("lbl")))(_.getLong(1))
       labels = next
       converged = nextSum == prevSum
       prevSum = nextSum
@@ -693,9 +756,7 @@ object LlmPipe extends QueryModule {
     * package-visible so q_llm_keeper composes it with the CC labels
     * off ONE shared pair computation. */
   private[graft] def pagerankOver(pairs: DataFrame): DataFrame = {
-    val edges = pairs
-      .union(pairs.select(col("db"), col("da")))
-      .toDF("src", "dst")
+    val edges = undirected(pairs)
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
     val n = deg.agg(count(lit(1)).as("n"))
     edges.join(deg, "src")
@@ -709,35 +770,13 @@ object LlmPipe extends QueryModule {
           .as("rank"))
   }
 
-  private def graphPagerank(s: SparkSession, d: String): DataFrame = {
-    val (classes, classEdges) = LlmExt.simhashClassGraph(s, d)
-    val st = stagePairs(classEdges.toDF("da", "db"))
-    // low-duplication regime (or a boundary trip below): the expanded
-    // pair graph is close to the class graph, so the distributed
-    // expanded machinery is the right tool and unchanged. The
-    // class-edge staging served only as the strategy signal here;
-    // the expanded staging is checkpointed eagerly so ITS blocks
-    // release too (pagerankOver is lazy and would otherwise pin them).
-    def distributed(): DataFrame = {
-      val stx = stagePairs(
-        LlmExt.simhashPairs(s, d).select(col("da"), col("db")))
-      // registered for sweep: pagerankOver/dedupCcLoop consume this
-      // LAZILY, so the checkpoint blocks outlive the facade call
-      val pairs = Staged.checkpoint(stx.df)
-      stx.release()
-      pagerankOver(pairs).orderBy(col("doc_id"))
-    }
-    classGraphLocal(s, classes, st) match {
-      case Some(g) =>
-        st.release() // class graph collected to the driver
-        try prClassDf(classes, g, iters = 1, discretizeInit = false)
-        catch { case t: R6BoundaryTrip =>
-          onBoundaryTrip("pagerank", t); distributed() }
-      case None =>
-        st.release()
-        distributed()
-    }
-  }
+  private def graphPagerank(s: SparkSession, d: String): DataFrame =
+    graphQuery(s, d, "pagerank", weighted = true)(
+      prClassDf(_, _, iters = 1, discretizeInit = false))(
+      // pagerankOver is lazy: an eager checkpoint (registered for
+      // sweep) is what it reads once the staged pairs are released
+      (_, pairs) =>
+        pagerankOver(Staged.checkpoint(pairs)).orderBy(col("doc_id")))
 
   private val graphPagerankSql =
     s"""WITH ${LlmExt.simhashFpsCtes},
@@ -783,40 +822,22 @@ object LlmPipe extends QueryModule {
     * compare iteration counts (fixpoint stability). */
   private[graft] def pagerankConvOver(pairs: DataFrame,
       iters: Int = PrIters): (DataFrame, Seq[Double]) = {
-    val edges = pairs
-      .union(pairs.select(col("db"), col("da")))
-      .toDF("src", "dst")
-      // session shuffle-partition count = loopFrame's data-derived pin
-      .repartition(col("src"))
-      .transform(Staged.checkpointLazy)
+    val edges = loopEdges(pairs)
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
     val n = deg.agg(count(lit(1)).as("n"))
     // contributions scaffold: (src, dst, outdeg, n), partitioned on src
     val contrib = edges.join(deg, "src").crossJoin(broadcast(n))
       .transform(Staged.checkpointLazy)
-    // fused materialization: one action computes the frame, persists
-    // the checkpoint blocks, and returns (row count, Σrank)
-    def materialize(df: DataFrame): (DataFrame, Long, Double) = {
-      val cp = df.transform(Staged.checkpointLazy)
-      val (cnt, mass) = cp.rdd
-        .aggregate((0L, 0.0))(
-          (a, r) => (a._1 + 1, a._2 + r.getDouble(1)),
-          (a, b) => (a._1 + b._1, a._2 + b._2))
-      (cp, cnt, mass)
-    }
+    // Σrank rides the fused materialization: the mass probe
     var (ranks, nNodes, mass0) = materialize(
       deg.crossJoin(broadcast(n))
         .select(col("src").as("id"),
-          Det.r6(lit(1.0) / col("n")).as("rank")))
+          Det.r6(lit(1.0) / col("n")).as("rank")))(_.getDouble(1))
     val masses = Seq.newBuilder[Double]
     masses += mass0
-    // same stats-blind-SMJ fix as dedupCcLoop: the rank frame is
-    // |nodes| rows; when broadcastable, probe the edge-sized contrib
-    // frame in place instead of re-sorting it every iteration
-    def rankSide(df: DataFrame): DataFrame =
-      if (nNodes <= BroadcastGraphNodes) broadcast(df) else df
+    val side = nodeSide(nNodes)
     for (_ <- 1 to iters) {
-      val next = contrib.join(rankSide(ranks),
+      val next = contrib.join(side(ranks),
           contrib("src") === ranks("id"))
         .groupBy(col("dst"))
         .agg(sum(col("rank") / col("outdeg")).as("inmass"),
@@ -824,7 +845,7 @@ object LlmPipe extends QueryModule {
         .select(col("dst").as("id"),
           Det.r6(lit(0.15) / col("nn") + lit(0.85) * col("inmass"))
             .as("rank"))
-      val (cp, cnt, mass) = materialize(next)
+      val (cp, cnt, mass) = materialize(next)(_.getDouble(1))
       ranks = cp
       // loud mass-conservation gate (skip on an edge-free graph, where
       // every frame is empty and the query legitimately returns 0 rows).
@@ -840,30 +861,10 @@ object LlmPipe extends QueryModule {
     (ranks.select(col("id").as("doc_id"), col("rank")), masses.result())
   }
 
-  private def graphPagerankConv(s: SparkSession, d: String): DataFrame = {
-    val (classes, classEdges) = LlmExt.simhashClassGraph(s, d)
-    val st = stagePairs(classEdges.toDF("da", "db"))
-    def distributed(): DataFrame = {
-      val stx = stagePairs(
-        LlmExt.simhashPairs(s, d).select(col("da"), col("db")))
-      // pagerankConvOver materializes every round internally, so
-      // its result is checkpoint-decoupled from the staging by the
-      // time it returns
-      val r = pagerankConvOver(stx.df)._1.orderBy(col("doc_id"))
-      stx.release()
-      r
-    }
-    classGraphLocal(s, classes, st) match {
-      case Some(g) =>
-        st.release() // class graph collected to the driver
-        try prClassDf(classes, g, iters = PrIters, discretizeInit = true)
-        catch { case t: R6BoundaryTrip =>
-          onBoundaryTrip("pagerank_conv", t); distributed() }
-      case None =>
-        st.release() // strategy signal only (see graphPagerank)
-        distributed()
-    }
-  }
+  private def graphPagerankConv(s: SparkSession, d: String): DataFrame =
+    graphQuery(s, d, "pagerank_conv", weighted = true)(
+      prClassDf(_, _, iters = PrIters, discretizeInit = true))(
+      (_, pairs) => pagerankConvOver(pairs)._1.orderBy(col("doc_id")))
 
   private val graphPagerankConvSql = {
     val iter = (prev: String, cur: String) =>
@@ -906,36 +907,17 @@ object LlmPipe extends QueryModule {
     * structure) break by min doc_id; both engines sort the identical
     * r6-discretized doubles, so the pick is deterministic. */
   private def llmKeeper(s: SparkSession, d: String): DataFrame = {
-    // the CLASS graph is computed once and shared by CC and the rank
-    // step, whichever strategy the class-graph size picks
-    val (classes, classEdges) = LlmExt.simhashClassGraph(s, d)
-    val st = stagePairs(classEdges.toDF("da", "db"))
-    // low-duplication regime (or a boundary trip) — distributed path
-    // over the expanded pairs: checkpointed, and shared by the CC
-    // loop and the rank iteration, both at loop scale in the pinned
-    // child session
-    def distributed(): (DataFrame, DataFrame) = {
-      val stx = stagePairs(
-        LlmExt.simhashPairs(s, d).select(col("da"), col("db")))
-      // registered for sweep: pagerankOver/dedupCcLoop consume this
-      // LAZILY, so the checkpoint blocks outlive the facade call
-      val pairs = Staged.checkpoint(stx.df)
-      stx.release() // pairs checkpoint is materialized (eager)
-      (dedupCcLoop(pairs), pagerankOver(pairs))
-    }
-    val (cc, pr) = classGraphLocal(s, classes, st) match {
-      case Some(g) =>
-        try {
-          val both = (expandCc(classes, ccLocalLabels(st)),
-            prClassDf(classes, g, iters = 1, discretizeInit = false))
-          st.release() // class graph collected to the driver
-          both
-        } catch { case t: R6BoundaryTrip =>
-          onBoundaryTrip("keeper", t); st.release(); distributed() }
-      case None =>
-        st.release() // strategy signal only (see graphPagerank)
-        distributed()
-    }
+    // one class graph feeds both CC and the rank step, whichever
+    // strategy the gate picks
+    val (cc, pr) = graphQuery(s, d, "keeper", weighted = true)(
+      (classes, g) => (expandCc(classes, ccLocalLabels(s, g)),
+        prClassDf(classes, g, iters = 1, discretizeInit = false)))(
+      { (_, pairs) =>
+        // one eager checkpoint (registered for sweep) shared by the CC
+        // loop and the lazy rank step, which reads it after release
+        val p = Staged.checkpoint(pairs)
+        (dedupCcLoop(p), pagerankOver(p))
+      })
     val w = Window.partitionBy(col("cluster"))
       .orderBy(col("rank").desc, col("doc_id"))
     cc.join(pr, "doc_id")

@@ -9,7 +9,7 @@ import org.apache.spark.sql.DataFrame
 /** Release point for localCheckpoint block-holders created inside
   * LAZILY-consumed operators (rankedBy's rank slicing, tsAnomaly's
   * overlap split). The eager graph facades release their staged
-  * blocks inline (StagedPairs.release) because the loop has
+  * blocks inline (LlmPipe.withStaged) because the loop has
   * materialized by the time the facade returns; these checkpoints
   * instead back a lazy result, so the operator cannot know when the
   * last consumer has materialized, and the blocks otherwise park in

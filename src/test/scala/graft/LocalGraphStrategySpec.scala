@@ -15,15 +15,38 @@ class LocalGraphStrategySpec extends AnyFunSuite {
   private lazy val s = SparkTestBase.spark
   private val d = SparkTestBase.sfDir
 
-  /** Run `q` under a child session pinned to one strategy. newSession
-    * shares the context but owns its SQLConf, so forcing a path here
-    * can't race other suites on the shared session. */
-  private def runWith(q: String, gate: String): Seq[String] = {
-    val child: SparkSession = s.newSession()
+  /** A child session pinned to one strategy. newSession shares the
+    * context but owns its SQLConf, so forcing a path here can't race
+    * other suites on the shared session. */
+  private def pinned(gate: String): SparkSession = {
+    val child = s.newSession()
     child.conf.set(Gate.Key, gate)
-    SparkEntry.queries(q)(child, d)
-      .collect().map(_.toString).toSeq
+    child
   }
+
+  /** Persisted RDDs created since `before` that are not local
+    * checkpoints: the [[ops.LlmPipe.stagePairs]] stagings
+    * ([[ops.Staged.sweep]] owns the checkpoints). */
+  private def stagedSince(before: collection.Set[Int]): Iterable[Int] =
+    s.sparkContext.getPersistentRDDs.collect {
+      case (id, rdd) if !before(id) && !rdd.toDebugString.linesIterator
+          .next().contains(" at localCheckpoint at ") => id
+    }
+
+  /** Run `q` pinned to one strategy, and check that it released every
+    * staging it made once its result is collected. */
+  private def runWith(q: String, gate: String): Seq[String] = {
+    val before = s.sparkContext.getPersistentRDDs.keySet
+    val rows = SparkEntry.queries(q)(pinned(gate), d)
+      .collect().map(_.toString).toSeq
+    val leaked = stagedSince(before)
+    assert(leaked.isEmpty, s"$q ($gate) left staged RDDs $leaked persisted")
+    rows
+  }
+
+  private def simhashPairRows: Seq[String] =
+    ops.LlmExt.dedupSimhash(s, d).select("da", "db")
+      .collect().map(_.toString).sorted.toSeq
 
   test("r6dMonitored: off-boundary values floor; boundary values trip " +
     "the typed fallback exception, not a bare failure") {
@@ -43,8 +66,34 @@ class LocalGraphStrategySpec extends AnyFunSuite {
     }
   }
 
+  test("graphQuery: a local solve that trips r6 returns the distributed " +
+    "body's rows, and releases both stagings") {
+    val before = s.sparkContext.getPersistentRDDs.keySet
+    var tripped = false
+    val got = ops.LlmPipe.graphQuery(pinned("small"), d, "spec",
+        weighted = true)(
+      { (_, _) => tripped = true; throw new ops.LlmPipe.R6BoundaryTrip("x") })(
+      (_, pairs) => pairs.collect().map(_.toString).sorted.toSeq)
+    assert(tripped, "the local solve ran first")
+    assert(got.nonEmpty && got == simhashPairRows)
+    assert(stagedSince(before).isEmpty)
+  }
+
+  test("graphQuery releases its stagings when the distributed body throws") {
+    val before = s.sparkContext.getPersistentRDDs.keySet
+    intercept[IllegalStateException] {
+      ops.LlmPipe.graphQuery(pinned("large"), d, "spec", weighted = true)(
+          (_, _) => ()) { (_, pairs) =>
+        pairs.count()
+        throw new IllegalStateException("x")
+      }
+    }
+    assert(stagedSince(before).isEmpty)
+  }
+
   for (q <- Seq("q_llm_dedup_cc", "q_graph_pagerank",
                 "q_graph_pagerank_conv", "q_llm_keeper")) {
+    // runWith also checks that each side released its stagings
     test(s"$q: local and distributed strategies agree row-for-row") {
       val local = runWith(q, "small")
       val dist = runWith(q, "large")

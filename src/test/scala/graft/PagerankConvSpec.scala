@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** q_graph_pagerank_conv invariants the hash gate can't see:
@@ -12,12 +13,17 @@ class PagerankConvSpec extends AnyFunSuite {
   private lazy val s = SparkTestBase.spark
   private val d = SparkTestBase.sfDir
 
-  private def pairs = graft.ops.LlmPipe.loopFrame(
-    graft.ops.LlmExt.simhashPairs(s, d).select(col("da"), col("db")))
+  /** `body` over the simhash pairs, staged once and released after. */
+  private def withPairs[A](body: DataFrame => A): A =
+    graft.ops.LlmPipe.withStaged(
+      graft.ops.LlmExt.dedupSimhash(s, d).select(col("da"), col("db")))(
+      st => body(st.df))
 
   test("mass is conserved every iteration within the r6 floor budget") {
-    val (ranks, masses) = graft.ops.LlmPipe.pagerankConvOver(pairs)
-    val n = ranks.count()
+    val (n, masses) = withPairs { pairs =>
+      val (ranks, masses) = graft.ops.LlmPipe.pagerankConvOver(pairs)
+      (ranks.count(), masses)
+    }
     assert(masses.length == 13, "initial + 12 iteration masses recorded")
     masses.zipWithIndex.foreach { case (m, i) =>
       assert(math.abs(m - 1.0) <= n * 5e-7,
@@ -26,10 +32,11 @@ class PagerankConvSpec extends AnyFunSuite {
   }
 
   test("12 iterations sit at the fixpoint of the discretized map") {
-    val at11 = graft.ops.LlmPipe.pagerankConvOver(pairs, 11)._1
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val at12 = graft.ops.LlmPipe.pagerankConvOver(pairs, 12)._1
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val (at11, at12) = withPairs { pairs =>
+      def at(iters: Int) = graft.ops.LlmPipe.pagerankConvOver(pairs, iters)._1
+        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      (at(11), at(12))
+    }
     assert(at11 == at12, "one more iteration must not move any rank")
   }
 

@@ -135,8 +135,9 @@ class ReshapeSpec extends AnyFunSuite {
         nodes.map(v => v -> byRoot(find(v)).min).toMap
       }
       val pairs = edges.toDF("da", "db")
-      val got = graft.ops.LlmPipe.dedupCcLoop(graft.ops.LlmPipe.loopFrame(pairs))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val got = graft.ops.LlmPipe.withStaged(pairs)(st =>
+          graft.ops.LlmPipe.dedupCcLoop(st.df).collect())
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
       got == expected
     }
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(12),

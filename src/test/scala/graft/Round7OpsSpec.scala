@@ -64,7 +64,7 @@ class Round7OpsSpec extends AnyFunSuite {
     assert(rows.map(_.getAs[Long]("n_triangles")).sum % 3 == 0,
       "each triangle touches exactly 3 nodes")
     // brute force over the (small) collected edge set
-    val edges = graft.ops.LlmExt.simhashPairs(s, SparkTestBase.sfDir)
+    val edges = graft.ops.LlmExt.dedupSimhash(s, SparkTestBase.sfDir)
       .select($"da", $"db").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val nodes = edges.flatMap(e => Seq(e._1, e._2)).toSeq.sorted

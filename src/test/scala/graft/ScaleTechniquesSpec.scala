@@ -137,16 +137,18 @@ class ScaleTechniquesSpec extends AnyFunSuite {
       .map(_ * LlmPipe.LoopRowsPerPart)
     assert(probes.map(LlmPipe.loopPartitions(_, c)) ==
       probes.map(LlmPipe.loopPartitions(_, c)).sorted)
-    // and loopFrame actually pins the child session to the derived
+    // and stagePairs actually pins the child session to the derived
     // count (small input => the 8 floor), without touching the caller
     val sp = s; import sp.implicits._
     val callerParts = s.conf.get("spark.sql.shuffle.partitions")
-    val lf = LlmPipe.loopFrame(
+    val st = LlmPipe.stagePairs(
       (1L to 100L).toDF("da").select($"da", ($"da" + 1).as("db")))
+    val lf = st.df
     assert(lf.sparkSession.conf.get("spark.sql.shuffle.partitions") == "8")
     assert(lf.sparkSession ne s)
     assert(s.conf.get("spark.sql.shuffle.partitions") == callerParts)
     assert(lf.count() == 100L)
+    st.release()
   }
 
   test("q_join_bucketed joins with zero exchange at two bucket counts") {

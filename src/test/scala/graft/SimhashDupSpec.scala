@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the collapse-then-band restructure of `LlmExt.simhashPairs`
+/** Pins the collapse-then-band restructure of `LlmExt.dedupSimhash`
   * (round 8): banding runs over DISTINCT fingerprints and member
   * pairs are re-expanded afterwards, so a verbatim-duplicated corpus
   * — the sf1 scale harness, or any crawl snapshot — cannot inflate
@@ -34,7 +34,7 @@ class SimhashDupSpec extends AnyFunSuite {
       .reduce(_ unionByName _)
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
 
-    val orig = ops.LlmExt.simhashPairs(s, SparkTestBase.sfDir)
+    val orig = ops.LlmExt.dedupSimhash(s, SparkTestBase.sfDir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(orig.nonEmpty, "fixture corpus must contain near-dup pairs")
 
@@ -50,7 +50,7 @@ class SimhashDupSpec extends AnyFunSuite {
 
     // guard must NOT trip: d× duplication, distinct-content geometry
     // unchanged — a doc-level banding would multiply every bucket by d
-    val got = ops.LlmExt.simhashPairs(s, dir)
+    val got = ops.LlmExt.dedupSimhash(s, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(got.length == got.toSet.size, "no duplicate pairs emitted")
     assert(got.toSet == expected,
