@@ -53,4 +53,19 @@ object GraftSession {
     overrides.foldLeft(b) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
   }
+
+  /** Scoped session-conf swap: every `kv` pair for the duration of
+    * `f`; afterwards each key gets its previous value back, and a key
+    * that had none is unset (`conf.get` throws for a key that was never
+    * set). One copy of the try/finally idiom, shared by the stream
+    * harness's swaps and the bucketed-table writes. */
+  private[graft] def withConf[T](s: SparkSession, kv: Map[String, String])(
+      f: => T): T = {
+    val prev = kv.keys.map(k => k -> s.conf.getOption(k)).toMap
+    kv.foreach { case (k, v) => s.conf.set(k, v) }
+    try f finally prev.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
+    }
+  }
 }

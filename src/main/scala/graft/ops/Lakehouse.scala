@@ -1,6 +1,7 @@
 package graft.ops
 
-import graft.{Gate, QueryModule, Tables => T}
+import graft.{Gate, LocalFs, QueryModule, Tables => T}
+import graft.GraftSession.withConf
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -306,17 +307,21 @@ object Lakehouse extends QueryModule {
     // table name carries the dir tag, a source-content signature and
     // the bucket count, so a different SF, a regenerated source file,
     // or a re-configured bucket count never aliases a stale layout.
-    if (!s.catalog.tableExists(liT) || !s.catalog.tableExists(ordT)) {
-      T.lineitem(s, d)
-        .select(col("l_orderkey"), col("l_extendedprice"), col("l_quantity"))
-        .write.mode("overwrite")
-        .bucketBy(n, "l_orderkey").sortBy("l_orderkey")
-        .option("path", s"$dir/$liT").saveAsTable(liT)
-      T.orders(s, d).select(col("o_orderkey"), col("o_orderpriority"))
-        .write.mode("overwrite")
-        .bucketBy(n, "o_orderkey").sortBy("o_orderkey")
-        .option("path", s"$dir/$ordT").saveAsTable(ordT)
-    }
+    // LocalFs.conf on the session, not as writer options: a
+    // saveAsTable's options become catalog table properties, while the
+    // session conf reaches the write job's Hadoop conf
+    if (!s.catalog.tableExists(liT) || !s.catalog.tableExists(ordT))
+      withConf(s, LocalFs.conf) {
+        T.lineitem(s, d)
+          .select(col("l_orderkey"), col("l_extendedprice"), col("l_quantity"))
+          .write.mode("overwrite")
+          .bucketBy(n, "l_orderkey").sortBy("l_orderkey")
+          .option("path", s"$dir/$liT").saveAsTable(liT)
+        T.orders(s, d).select(col("o_orderkey"), col("o_orderpriority"))
+          .write.mode("overwrite")
+          .bucketBy(n, "o_orderkey").sortBy("o_orderkey")
+          .option("path", s"$dir/$ordT").saveAsTable(ordT)
+      }
     s.table(liT)
       .join(s.table(ordT).hint("merge"),
         col("l_orderkey") === col("o_orderkey"))
@@ -426,7 +431,8 @@ object Lakehouse extends QueryModule {
       coalesce(sum(when(length(trim(col("text"))) === 0, 1L).otherwise(0L)),
         lit(0L)).as("empty_text")))
     // ALL FOUR lineitem checks ride ONE left join pass (r15): the join
-    // is 1:1 (o_orderkey is the orders primary key), so row_count and
+    // is 1:1 when o_orderkey is the orders primary key — the premise
+    // the dup_orderkey check below audits — so row_count and
     // the quantity domain check aggregate over liOrd exactly as they
     // did over the bare scan — the standalone lineitem scan + its own
     // global-agg stage wave are gone, at the cost of one 8-byte column
@@ -453,8 +459,12 @@ object Lakehouse extends QueryModule {
       .groupBy(col("c_custkey")).agg(count(lit(1)).as("c"))
       .filter(col("c") > 1)
       .agg(count(lit(1)).as("dup_custkey")))
-    ev.union(doc).union(liJoin).union(ordCust).union(dupCust)
-      // |checks|-row result (9 at any SF): single-partition exchange +
+    val dupOrd = metrics("orders", T.orders(s, d)
+      .groupBy(col("o_orderkey")).agg(count(lit(1)).as("c"))
+      .filter(col("c") > 1)
+      .agg(count(lit(1)).as("dup_orderkey")))
+    ev.union(doc).union(liJoin).union(ordCust).union(dupCust).union(dupOrd)
+      // |checks|-row result (10 at any SF): single-partition exchange +
       // local sort, not a range-sampled orderBy — the order-statistics
       // family's bounded-output criterion applies verbatim
       .repartition(1)
@@ -497,6 +507,10 @@ object Lakehouse extends QueryModule {
       |  SELECT 'customer', 'dup_custkey', count(*)::BIGINT
       |  FROM (SELECT c_custkey FROM customer
       |        GROUP BY c_custkey HAVING count(*) > 1)
+      |  UNION ALL
+      |  SELECT 'orders', 'dup_orderkey', count(*)::BIGINT
+      |  FROM (SELECT o_orderkey FROM orders
+      |        GROUP BY o_orderkey HAVING count(*) > 1)
       |) ORDER BY table_name, check_name""".stripMargin
 
   // -------------------------------------------------------------- registry

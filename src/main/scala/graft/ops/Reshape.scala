@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Gate, QueryModule, Tables => T}
+import graft.{QueryModule, Tables => T}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -95,50 +95,29 @@ object Reshape extends QueryModule {
       max(when(r === floor((col("n") - 1) * lit(p)), v))
     def hiR(p: Double, r: Column, v: Column) =
       max(when(r === ceil((col("n") - 1) * lit(p)), v))
-    val agg = if (!rankSplit(s, d)) {
-      // Small-input path: BOTH rank columns over ONE hash exchange —
-      // two in-partition sorts under two Window operators — and one
-      // combined aggregation, instead of two independent scan + shuffle
-      // + window + aggregate + join pipelines (the r14 sampler lesson:
-      // every removed subtree is also removed from any downstream
-      // re-execution). Rank semantics unchanged: zero-based, ties
-      // arbitrary, value-selecting consumers tie-permutation-invariant.
-      val we = Window.partitionBy(rf).orderBy(col("l_extendedprice"))
-      val wq = Window.partitionBy(rf).orderBy(col("l_quantity"))
-      li.withColumn("re", row_number().over(we).cast("long") - 1L)
-        .withColumn("rq", row_number().over(wq).cast("long") - 1L)
-        .join(broadcast(cnt), "l_returnflag")
-        .groupBy(rf).agg(
-          max(col("n")).as("nn"),
-          loR(0.25, col("re"), col("l_extendedprice")).as("e25l"),
-          hiR(0.25, col("re"), col("l_extendedprice")).as("e25h"),
-          loR(0.50, col("re"), col("l_extendedprice")).as("e50l"),
-          hiR(0.50, col("re"), col("l_extendedprice")).as("e50h"),
-          loR(0.75, col("re"), col("l_extendedprice")).as("e75l"),
-          hiR(0.75, col("re"), col("l_extendedprice")).as("e75h"),
-          loR(0.50, col("rq"), col("l_quantity")).as("q50l"),
-          hiR(0.50, col("rq"), col("l_quantity")).as("q50h"))
-    } else {
-      // Split path (large inputs): two independent range-split rank
-      // passes, parallelism decoupled from |groups| — unchanged.
-      def lo(p: Double, v: Column) = loR(p, col("r"), v)
-      def hi(p: Double, v: Column) = hiR(p, col("r"), v)
-      val re = rankedBy(s, li, "l_returnflag", "l_extendedprice")
-        .join(broadcast(cnt), "l_returnflag")
-      val rq = rankedBy(s, li, "l_returnflag", "l_quantity")
-        .join(broadcast(cnt), "l_returnflag")
-      re.groupBy(rf).agg(
-          max(col("n")).as("nn"),
-          lo(0.25, col("l_extendedprice")).as("e25l"),
-          hi(0.25, col("l_extendedprice")).as("e25h"),
-          lo(0.50, col("l_extendedprice")).as("e50l"),
-          hi(0.50, col("l_extendedprice")).as("e50h"),
-          lo(0.75, col("l_extendedprice")).as("e75l"),
-          hi(0.75, col("l_extendedprice")).as("e75h"))
-        .join(rq.groupBy(rf).agg(
-          lo(0.50, col("l_quantity")).as("q50l"),
-          hi(0.50, col("l_quantity")).as("q50h")), "l_returnflag")
-    }
+    // BOTH rank columns over ONE hash exchange — two in-partition
+    // sorts under two Window operators — and one combined aggregation,
+    // instead of two independent scan + shuffle + window + aggregate +
+    // join pipelines (the r14 sampler lesson: every removed subtree is
+    // also removed from any downstream re-execution). Ranks are
+    // zero-based, ties arbitrary; value-selecting consumers are
+    // tie-permutation-invariant.
+    val we = Window.partitionBy(rf).orderBy(col("l_extendedprice"))
+    val wq = Window.partitionBy(rf).orderBy(col("l_quantity"))
+    val agg = li
+      .withColumn("re", row_number().over(we).cast("long") - 1L)
+      .withColumn("rq", row_number().over(wq).cast("long") - 1L)
+      .join(broadcast(cnt), "l_returnflag")
+      .groupBy(rf).agg(
+        max(col("n")).as("nn"),
+        loR(0.25, col("re"), col("l_extendedprice")).as("e25l"),
+        hiR(0.25, col("re"), col("l_extendedprice")).as("e25h"),
+        loR(0.50, col("re"), col("l_extendedprice")).as("e50l"),
+        hiR(0.50, col("re"), col("l_extendedprice")).as("e50h"),
+        loR(0.75, col("re"), col("l_extendedprice")).as("e75l"),
+        hiR(0.75, col("re"), col("l_extendedprice")).as("e75h"),
+        loR(0.50, col("rq"), col("l_quantity")).as("q50l"),
+        hiR(0.50, col("rq"), col("l_quantity")).as("q50h"))
     // v_lo + (k − ⌊k⌋)·(v_hi − v_lo), the quantile_cont interpolation
     def interp(p: Double, l: Column, h: Column) = {
       val k = (col("nn") - 1) * lit(p)
@@ -178,97 +157,6 @@ object Reshape extends QueryModule {
   private def groupCounts(df: DataFrame, key: Column): DataFrame =
     df.groupBy(key).agg(count(lit(1)).as("n"))
 
-  /** Exact zero-based rank of `v` within group `g`, with parallelism
-    * DECOUPLED from |groups| — the order-statistics family previously
-    * sorted each group on ONE task (`row_number` over a 3-value
-    * l_returnflag = 3 tasks doing 2M-row sorts on a 32-core box; at
-    * 100 TB, a billion-row group serializes onto one executor).
-    * Classic two-phase distributed ranking instead:
-    *   1. `repartitionByRange(g, v)` splits every group across many
-    *      ordered partitions (equal (g,v) keys never straddle a
-    *      boundary — RangePartitioner binary-searches a deterministic
-    *      side), and rank arithmetic is EXACT regardless of where the
-    *      sampled boundaries land;
-    *   2. per-(partition, group) row counts — a nParts×|groups|-row
-    *      frame — prefix-summed per group in pid order give each
-    *      cell's global rank offset, broadcast back;
-    *   3. local `row_number` within each (partition, group) cell plus
-    *      the cell offset = the global rank. Ties share arbitrary
-    *      rank ORDER but order statistics select VALUES, which are
-    *      tie-permutation-invariant, so every consumer is exact.
-    * Cost shape: two full shuffles of the fact rows (range + the
-    * window's hash on (pid,g)) instead of one, but every sort is
-    * 1/nParts of a group — the right trade precisely when groups are
-    * few and huge, which is what order statistics over a 3-value
-    * grouping key are. */
-  /** Source-size ceiling under which the order-statistics family uses
-    * the single-shuffle per-group window rank instead of the two-phase
-    * range-split machinery — the same stats-driven physical pick as
-    * q_ts_anomaly's window split and the graph family's local solve.
-    * Below it, each group's sort fits one task comfortably and the
-    * range-split's extra jobs (sampling pass, cell counts, offset
-    * prefix sums, second exchange) are pure fixed cost — measured at
-    * sf0.1 (11 MB lineitem): simple ~2.2 s vs split ~3.8 s for MAD.
-    * Above it, per-group one-task sorts stop scaling (a billion-row
-    * group serializes onto one executor). SCALE.md ("One size gate")
-    * has the paired A/B: the simple path won q_agg_mad at sf0.1, sf1
-    * and sf3 (315 MB) on local[4] and local[32], so the threshold is
-    * the first power of two above sf3; where the split starts to win
-    * on a many-core cluster is not measured. [[Gate.Key]] forces
-    * either path, so the spec pins both paths equal on the same input. */
-  private[graft] val RankSplitMinBytes: Long = 512L << 20
-
-  /** The `rank` [[Gate]]: true picks the range-split ranking. The
-    * probe is lineitem's on-disk bytes because every order-statistics
-    * query ranks lineitem or a frame 1:1 with it (aggMad's deviation
-    * frame); a frame derived from another table needs its own probe. */
-  private def rankSplit(s: SparkSession, d: String): Boolean =
-    Gate.large(s, "rank", T.sourceBytes(s, d, "lineitem").toDouble,
-      RankSplitMinBytes)
-
-  /** rankedBy for inputs the cost model calls small: ONE shuffle on
-    * the group key, per-group external-sort window. Identical rank
-    * semantics (zero-based, ties in arbitrary order — value-selecting
-    * consumers are tie-permutation-invariant). */
-  private def rankedBySimple(df: DataFrame, g: String, v: String)
-      : DataFrame =
-    df.select(col(g), col(v))
-      .withColumn("r", row_number()
-        .over(Window.partitionBy(col(g)).orderBy(col(v)))
-        .cast("long") - 1L)
-
-  private def rankedBy(s: SparkSession, df: DataFrame,
-                       g: String, v: String): DataFrame = {
-    val nParts = s.sparkContext.defaultParallelism
-    // Checkpointed for the same reason as the anomaly overlap-split
-    // (r12): the ranged frame is consumed twice (cell counts →
-    // offsets, and the final rank join), repartitionByRange samples
-    // its bounds with an rdd-id-derived seed, and "rank arithmetic is
-    // exact wherever the boundaries land" is only a theorem when both
-    // consumers see ONE consistent (row, pid) assignment — without
-    // the checkpoint that premise rested on Catalyst planning both
-    // subtrees as a single ReusedExchange, which is not guaranteed
-    // (reuse=false or a divergent re-plan would mis-offset ranks).
-    // Staged.checkpoint registers the blocks for deterministic
-    // release at the owner's query boundary (advice r12: a bare
-    // localCheckpoint parks them until driver GC).
-    val ranged = Staged.checkpoint(df.select(col(g), col(v))
-      .repartitionByRange(nParts, col(g), col(v))
-      .withColumn("pid", spark_partition_id()))
-    val cells = ranged.groupBy(col("pid"), col(g))
-      .agg(count(lit(1)).as("c"))
-    val wOff = Window.partitionBy(col(g)).orderBy(col("pid"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = cells
-      .withColumn("off", coalesce(sum(col("c")).over(wOff), lit(0L)))
-      .select(col("pid"), col(g), col("off"))
-    val wLoc = Window.partitionBy(col("pid"), col(g)).orderBy(col(v))
-    ranged.join(broadcast(offsets), Seq("pid", g))
-      .withColumn("r",
-        row_number().over(wLoc).cast("long") - 1L + col("off"))
-      .select(col(g), col(v), col("r"))
-  }
-
   // ------------------------------------------------------------ q_agg_trimmed
 
   /** 10%-trimmed mean per group — the robust-statistics aggregate
@@ -286,11 +174,10 @@ object Reshape extends QueryModule {
   private def aggTrimmed(s: SparkSession, d: String): DataFrame = {
     val rf = col("l_returnflag")
     val li = T.lineitem(s, d).select(rf, col("l_extendedprice"))
-    // rankedBy is zero-based; the trim predicate below is stated on
-    // 1-based ranks, hence the +1.
-    (if (rankSplit(s, d)) rankedBy(s, li, "l_returnflag", "l_extendedprice")
-     else rankedBySimple(li, "l_returnflag", "l_extendedprice"))
-      .withColumn("r", col("r") + 1L)
+    // 1-based rank, as the trim predicate below states it
+    li.withColumn("r", row_number()
+        .over(Window.partitionBy(rf).orderBy(col("l_extendedprice")))
+        .cast("long"))
       .join(broadcast(groupCounts(li, rf)), "l_returnflag")
       .filter(col("r") > floor(col("n") * 0.1) &&
         col("r") <= col("n") - floor(col("n") * 0.1))
@@ -345,96 +232,55 @@ object Reshape extends QueryModule {
   private def aggMad(s: SparkSession, d: String): DataFrame = {
     val rf = col("l_returnflag")
     val li = T.lineitem(s, d).select(rf, col("l_extendedprice"))
-    if (!rankSplit(s, d)) {
-      // Small-input path, ONE fact exchange end to end (r14 verdict
-      // item: the r14 attempt pre-partitioned ABOVE a driver collect,
-      // which left nothing to share; removing the collect is what
-      // makes the share real). Hash-partition the fact once on the
-      // group key: the first median is a rank window over that layout,
-      // the deviation frame is a broadcast join away (1:1, partition-
-      // preserving), so the second median's window ALSO rides the same
-      // exchange — Catalyst plans the med/cnt broadcast builds over
-      // ReusedExchange. The median value is carried THROUGH the
-      // deviation rows (constant per group, reduced with max) so the
-      // result needs no third reference to the median subtree, and the
-      // 3-row result is sorted after an explicit single-partition
-      // exchange instead of a trailing orderBy whose range sampler
-      // would re-execute the whole window segment.
-      val liP = T.par(s, li, rf)
-      val cnt = groupCounts(liP, rf)
-      def rankedOver(df: DataFrame, v: String): DataFrame =
-        df.withColumn("r", row_number()
-            .over(Window.partitionBy(rf).orderBy(col(v)))
-            .cast("long") - 1L)
-          .join(broadcast(cnt), "l_returnflag")
-      def interp(lo: Column, hi: Column) = {
-        val k = (col("nn") - 1) * lit(0.5)
-        lo + (k - floor(k)) * (hi - lo)
-      }
-      val med = rankedOver(liP, "l_extendedprice")
-        .groupBy(rf).agg(
-          max(col("n")).as("nn"),
-          max(when(col("r") === floor((col("n") - 1) * 0.5),
-            col("l_extendedprice"))).as("lo"),
-          max(when(col("r") === ceil((col("n") - 1) * 0.5),
-            col("l_extendedprice"))).as("hi"))
-        .select(rf, interp(col("lo"), col("hi")).as("med"))
-      val dev = liP.join(broadcast(med), "l_returnflag")
-        .select(rf, col("med"),
-          abs(col("l_extendedprice") - col("med")).as("adev"))
-      rankedOver(dev, "adev")
-        .groupBy(rf).agg(
-          max(col("med")).as("med"),
-          max(col("n")).as("nn"),
-          max(when(col("r") === floor((col("n") - 1) * 0.5), col("adev")))
-            .as("lo"),
-          max(when(col("r") === ceil((col("n") - 1) * 0.5), col("adev")))
-            .as("hi"))
-        .select(rf, Det.r4(col("med")).as("median_price"),
-          Det.r4(interp(col("lo"), col("hi"))).as("mad"))
-        .repartition(1)
-        .sortWithinPartitions(rf)
-    } else {
-      // Split path (large inputs): two range-split rank passes with a
-      // driver-materialized median between them — unchanged. One
-      // counts frame serves both passes: the deviation frame joins
-      // lineitem 1:1 against a per-group singleton, so its group
-      // sizes are lineitem's.
-      def medianOf(df: DataFrame, v: String, out: String,
-                   counts: DataFrame): DataFrame = {
-        val k = (col("nn") - 1) * lit(0.5)
-        rankedBy(s, df, "l_returnflag", v)
-          .join(broadcast(counts), "l_returnflag")
-          .groupBy(rf).agg(
-            max(col("n")).as("nn"),
-            max(when(col("r") === floor((col("n") - 1) * 0.5), col(v)))
-              .as("lo"),
-            max(when(col("r") === ceil((col("n") - 1) * 0.5), col(v)))
-              .as("hi"))
-          .select(rf,
-            (col("lo") + (k - floor(k)) * (col("hi") - col("lo"))).as(out))
-      }
-      val cnt = groupCounts(li, rf)
-      // med is a |groups|-row frame referenced TWICE (the deviation
-      // join's broadcast build and the final result join). Left lazy,
-      // Catalyst inlines the whole first ranking pass at both
-      // reference sites and the fact table is ranked three times, not
-      // two (measured: the duplicate 32-task rank stages in the
-      // profile). Materializing it to a LocalRelation is exactly what
-      // the broadcast build would do anyway — |groups| rows on the
-      // driver — and makes the reuse explicit rather than hoping for
-      // ReuseExchange across differently-wrapped subtrees.
-      val med = { val m = medianOf(li, "l_extendedprice", "med", cnt)
-        s.createDataFrame(java.util.Arrays.asList(m.collect(): _*), m.schema) }
-      val dev = li.join(broadcast(med), "l_returnflag")
-        .select(rf, abs(col("l_extendedprice") - col("med")).as("adev"))
-      med.join(medianOf(dev, "adev", "mad", cnt), "l_returnflag")
-        .select(rf, Det.r4(col("med")).as("median_price"),
-          Det.r4(col("mad")).as("mad"))
-        // same |groups|-row sort replacement as the small path
-        .repartition(1)
-        .sortWithinPartitions(rf)
+    // ONE fact exchange end to end, and no driver collect (r14 verdict
+    // item: pre-partitioning above a driver collect left nothing to
+    // share). Hash-partition the fact once on the group key: the
+    // first median is a rank window over that layout, the deviation
+    // frame is a broadcast join away (1:1, partition-preserving), so
+    // the second median's window ALSO rides the same exchange —
+    // Catalyst plans the med/cnt broadcast builds over ReusedExchange.
+    // The fact's external sorter spills rather than fails when a group
+    // outgrows memory (SCALE.md "One order-statistics path": sf10
+    // under a 2 GB heap). The median value is carried THROUGH the
+    // deviation rows (constant per group, reduced with max) so the
+    // result needs no third reference to the median subtree, and the
+    // 3-row result is sorted after an explicit single-partition
+    // exchange instead of a trailing orderBy whose range sampler
+    // would re-execute the whole window segment.
+    val liP = T.par(s, li, rf)
+    val cnt = groupCounts(liP, rf)
+    def rankedOver(df: DataFrame, v: String): DataFrame =
+      df.withColumn("r", row_number()
+          .over(Window.partitionBy(rf).orderBy(col(v)))
+          .cast("long") - 1L)
+        .join(broadcast(cnt), "l_returnflag")
+    def interp(lo: Column, hi: Column) = {
+      val k = (col("nn") - 1) * lit(0.5)
+      lo + (k - floor(k)) * (hi - lo)
     }
+    val med = rankedOver(liP, "l_extendedprice")
+      .groupBy(rf).agg(
+        max(col("n")).as("nn"),
+        max(when(col("r") === floor((col("n") - 1) * 0.5),
+          col("l_extendedprice"))).as("lo"),
+        max(when(col("r") === ceil((col("n") - 1) * 0.5),
+          col("l_extendedprice"))).as("hi"))
+      .select(rf, interp(col("lo"), col("hi")).as("med"))
+    val dev = liP.join(broadcast(med), "l_returnflag")
+      .select(rf, col("med"),
+        abs(col("l_extendedprice") - col("med")).as("adev"))
+    rankedOver(dev, "adev")
+      .groupBy(rf).agg(
+        max(col("med")).as("med"),
+        max(col("n")).as("nn"),
+        max(when(col("r") === floor((col("n") - 1) * 0.5), col("adev")))
+          .as("lo"),
+        max(when(col("r") === ceil((col("n") - 1) * 0.5), col("adev")))
+          .as("hi"))
+      .select(rf, Det.r4(col("med")).as("median_price"),
+        Det.r4(interp(col("lo"), col("hi"))).as("mad"))
+      .repartition(1)
+      .sortWithinPartitions(rf)
   }
 
   private val aggMadSql =

@@ -7,8 +7,8 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 
 /** Release point for localCheckpoint block-holders created inside
-  * LAZILY-consumed operators (rankedBy's rank slicing, tsAnomaly's
-  * overlap split). The eager graph facades release their staged
+  * LAZILY-consumed operators (tsAnomaly's overlap split, the corpus
+  * operators' [[checkpointLazy]] stages). The eager graph facades release their staged
   * blocks inline (LlmPipe.withStaged) because the loop has
   * materialized by the time the facade returns; these checkpoints
   * instead back a lazy result, so the operator cannot know when the

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.QueryModule
+import graft.GraftSession.withConf
 import graft.ops.Det
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -108,20 +109,6 @@ object Streams extends QueryModule {
       case _ =>
         st.withColumn("ts",
           col("ts").cast(org.apache.spark.sql.types.TimestampType))
-    }
-  }
-
-  /** Scoped session-conf swap: every `kv` pair for the duration of
-    * `f`; afterwards each key gets its previous value back, and a key
-    * that had none is unset (`conf.get` throws for a key that was never
-    * set). One copy of the try/finally idiom, shared by the stream-start
-    * and state-store-provider swaps. */
-  private def withConf[T](s: SparkSession, kv: Map[String, String])(f: => T): T = {
-    val prev = kv.keys.map(k => k -> s.conf.getOption(k)).toMap
-    kv.foreach { case (k, v) => s.conf.set(k, v) }
-    try f finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
     }
   }
 

@@ -18,7 +18,6 @@ class GateSpec extends AnyFunSuite {
 
   test("byte gates: below the minimum stays small, at and above go large") {
     for (min <- Seq(ops.Relational.ParRangeMinBytes,
-                    ops.Reshape.RankSplitMinBytes,
                     ops.TimeSeries.AnomalySplitMinBytes)) {
       assert(!pick(min - 1.0, min), s"$min - 1")
       assert(pick(min.toDouble, min), s"at $min")
@@ -87,9 +86,16 @@ class GateSpec extends AnyFunSuite {
     // a scored query: one construction, one decision on the probed bytes
     val s = SparkTestBase.spark
     val d = SparkTestBase.sfDir
-    val bytes = Tables.sourceBytes(s, d, "lineitem")
-    assert(gateLines(SparkEntry.queries("q_agg_trimmed")(s, d)) ==
-      Seq(s"gate=rank probe=$bytes threshold=${ops.Reshape.RankSplitMinBytes} " +
+    val bytes = Tables.sourceBytes(s, d, "events")
+    assert(gateLines(SparkEntry.queries("q_ts_anomaly")(s, d)) ==
+      Seq(s"gate=anomaly probe=$bytes threshold=${ops.TimeSeries.AnomalySplitMinBytes} " +
         "path=small forced=false"))
+  }
+
+  test("the order-statistics queries rank on one path and decide no gate") {
+    val s = SparkTestBase.spark
+    val d = SparkTestBase.sfDir
+    for (q <- Seq("q_agg_percentile", "q_agg_trimmed", "q_agg_mad"))
+      assert(gateLines(SparkEntry.queries(q)(s, d)).isEmpty, q)
   }
 }

@@ -163,4 +163,17 @@ class LocalFsSpec extends AnyFunSuite {
         s"${ch.getName}: $names")
     }
   }
+
+  test("q_join_bucketed's writes leave no LocalFs key on the session") {
+    val s = SparkTestBase.spark.newSession()
+    // drop the layout an earlier suite may have written, so both
+    // saveAsTable writes run inside this test
+    s.catalog.listTables().collect().map(_.name)
+      .filter(_.startsWith("graft_bkt_")).foreach(t => s.sql(s"DROP TABLE $t"))
+    assert(SparkEntry.queries("q_join_bucketed")(s, SparkTestBase.sfDir)
+      .collect().nonEmpty)
+    assert(s.catalog.listTables().collect().count(_.name.startsWith("graft_bkt_")) == 2)
+    for (k <- LocalFs.conf.keys)
+      assert(s.conf.getOption(k).isEmpty, s"$k left on the session")
+  }
 }

@@ -1,5 +1,9 @@
 package graft
 
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike,
+  ShuffleExchangeLike}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -40,6 +44,30 @@ class ReshapeSpec extends AnyFunSuite {
       val (p25, p50, p75) = (row.getAs[Double]("p25"),
         row.getAs[Double]("p50"), row.getAs[Double]("p75"))
       assert(p25 <= p50 && p50 <= p75, s"unordered percentiles: $row")
+    }
+  }
+
+  test("order statistics rank on one path: no range exchange, fixed exchange count") {
+    // shuffle + broadcast exchanges of the final adaptive plan, reused
+    // ones excluded: MAD's one fact exchange (its second rank window
+    // and both broadcast builds ride reused exchanges) and each
+    // query's repartition(1) + sortWithinPartitions tail
+    val expected = Seq("q_agg_percentile" -> 4, "q_agg_trimmed" -> 4,
+      "q_agg_mad" -> 5)
+    object H extends AdaptiveSparkPlanHelper
+    for ((q, n) <- expected) {
+      val df = SparkEntry.queries(q)(s, SparkTestBase.sfDir)
+      df.collect()
+      val plan = df.queryExecution.executedPlan
+      val shuffles = H.collectWithSubqueries(plan) {
+        case e: ShuffleExchangeLike => e }
+      val broadcasts = H.collectWithSubqueries(plan) {
+        case e: BroadcastExchangeLike => e }
+      assert(!shuffles.exists(_.outputPartitioning.isInstanceOf[RangePartitioning]),
+        s"$q plans a range exchange:\n$plan")
+      assert(shuffles.size + broadcasts.size == n,
+        s"$q: ${shuffles.size} shuffle + ${broadcasts.size} broadcast " +
+          s"exchanges, expected $n:\n$plan")
     }
   }
 

@@ -12,9 +12,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * reduce side — see [[RetryInjector]]) of the representative hazard
   * carriers and asserts the output is identical to the no-failure run:
   *
-  *  - q_ts_anomaly / q_agg_trimmed — checkpointed repartitionByRange
-  *    slicings (the r12 bug sites), forced onto their large-corpus
-  *    split paths via `spark.graft.gate=large`;
+  *  - q_ts_anomaly — the checkpointed repartitionByRange slicing (the
+  *    r12 bug site), forced onto its large-corpus split path via
+  *    `spark.graft.gate=large`;
+  *  - q_agg_trimmed — the per-group window rank (row_number over an
+  *    external sort; a retried sort must re-rank identically);
   *  - q_sample_hash — hash-gated sampling (a seed- or attempt-varying
   *    sample would shift the kept set);
   *  - q_llm_dedup_fuzzy — MinHash LSH banding (hash-stable by design;
@@ -78,9 +80,8 @@ class RetryDeterminismSpec extends AnyFunSuite {
       Seq(Gate.Key -> "large"))
   }
 
-  test("q_agg_trimmed (checkpointed rank slicing) survives task retries") {
-    assertRetryDeterministic("q_agg_trimmed",
-      Seq(Gate.Key -> "large"))
+  test("q_agg_trimmed (per-group window rank) survives task retries") {
+    assertRetryDeterministic("q_agg_trimmed")
   }
 
   test("q_sample_hash survives task retries") {
@@ -143,8 +144,7 @@ class RetryDeterminismSpec extends AnyFunSuite {
   }
 
   test("q_agg_trimmed survives map-stage resubmission (FetchFailed)") {
-    assertStageResubmitDeterministic("q_agg_trimmed",
-      Seq(Gate.Key -> "large"))
+    assertStageResubmitDeterministic("q_agg_trimmed")
   }
 
   test("q_llm_keeper (distributed) survives map-stage resubmission") {

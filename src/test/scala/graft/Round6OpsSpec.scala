@@ -200,10 +200,13 @@ class Round6OpsSpec extends AnyFunSuite {
       ("lineitem", "orphan_orderkey"), ("lineitem", "ship_before_order"),
       ("events", "null_props"), ("events", "value_out_of_range"),
       ("documents", "empty_text"), ("orders", "orphan_custkey"),
-      ("customer", "dup_custkey")))
+      ("customer", "dup_custkey"), ("orders", "dup_orderkey")))
     assert(byKey(("lineitem", "row_count")) ==
       Tables.lineitem(s, SparkTestBase.sfDir).count())
     assert(byKey.values.forall(_ >= 0L))
+    // o_orderkey is unique in the generated data: the lineitem checks'
+    // 1:1 join premise holds
+    assert(byKey(("orders", "dup_orderkey")) == 0L)
     // violation counts can never exceed the audited table's size
     assert(byKey(("lineitem", "ship_before_order")) <=
       byKey(("lineitem", "row_count")))

@@ -3,33 +3,13 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the staged-checkpoint release contract (advice r12): the
-  * lazily-consumed slicing operators leave their localCheckpoint
+  * lazily-consumed overlap-split slicing leaves its localCheckpoint
   * blocks registered with ops.Staged, and a sweep at the query
   * boundary unpersists them deterministically instead of waiting for
   * driver GC to trigger the ContextCleaner. */
 class StagedSweepSpec extends AnyFunSuite {
   private val spark = SparkTestBase.spark
   private val d = SparkTestBase.sfDir
-
-  test("rankedBy slicing registers its checkpoint; sweep releases it") {
-    val sc = spark.sparkContext
-    spark.conf.set(Gate.Key, "large")
-    try {
-      ops.Staged.sweep() // drain anything prior suites staged
-      val before = sc.getPersistentRDDs.keySet
-      // forces the split path → one staged checkpoint per invocation
-      val df = SparkEntry.queries("q_agg_trimmed")(spark, d)
-      assert(df.collect().nonEmpty)
-      val staged = sc.getPersistentRDDs.keySet -- before
-      assert(staged.nonEmpty,
-        "split path ran but no checkpoint blocks were registered")
-      val released = Graft.sweepStaged()
-      assert(released >= 1, s"sweep released $released, expected >= 1")
-      val after = sc.getPersistentRDDs.keySet
-      assert((after & staged).isEmpty,
-        s"sweep left staged RDDs persisted: ${after & staged}")
-    } finally spark.conf.unset(Gate.Key)
-  }
 
   test("overlap-split slicing registers its checkpoint; sweep releases it") {
     val sc = spark.sparkContext
