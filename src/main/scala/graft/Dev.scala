@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.SparkContext
 import org.apache.spark.graft.ListenerBusAccess
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
+  SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 import scala.collection.mutable.ArrayBuffer
 
@@ -10,7 +11,8 @@ import scala.collection.mutable.ArrayBuffer
   * engine that Bench scores, at `SPARK_GRAFT_CPUS` cores (default 4).
   *
   * {{{
-  *   graft.Dev profile  <sfDir> <query>     per-stage wall/CPU table of one timed run
+  *   graft.Dev profile  <sfDir> <query>     job/stage/task counts and per-stage
+  *                                          wall/CPU table of one timed run
   *   graft.Dev explain  <sfDir> [query...]  formatted physical plans
   *   graft.Dev pressure <sfDir> [query...]  completion and spill under the JVM heap
   *   graft.Dev smoke                        the flagship SparkEntry.entry
@@ -22,13 +24,23 @@ object Dev {
   final case class Stage(id: Int, name: String, ms: Long, tasks: Int,
                          cpuMs: Long, spillBytes: Long)
 
-  /** Stage-completed listener on `sc`. Listener events are delivered
+  /** The jobs that ended and the stages that completed between two
+    * [[StageLog.take]]s. */
+  final case class Tally(jobs: Int, stages: Seq[Stage]) {
+    def tasks: Int = stages.map(_.tasks).sum
+  }
+
+  /** Job-end and stage-completed listener on `sc`. Listener events are delivered
     * asynchronously, so [[take]] drains the bus before reading: without
     * that a late event lands in the next tally (a warm-up stage in the
     * timed profile, one query's spill charged to the next). */
   final class StageLog(sc: SparkContext) extends SparkListener {
     private val rows = ArrayBuffer[Stage]()
+    private var jobs = 0
     sc.addSparkListener(this)
+
+    override def onJobEnd(e: SparkListenerJobEnd): Unit =
+      rows.synchronized { jobs += 1 }
 
     override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
       val i = e.stageInfo
@@ -49,17 +61,18 @@ object Dev {
       }
     }
 
-    /** Every stage completed since the last take, bus drained first. */
-    def take(): Seq[Stage] = {
+    /** Every job and stage ended since the last take, bus drained first. */
+    def take(): Tally = {
       ListenerBusAccess.waitUntilEmpty(sc)
-      rows.synchronized { val r = rows.toList; rows.clear(); r }
+      rows.synchronized {
+        val t = Tally(jobs, rows.toList); rows.clear(); jobs = 0; t
+      }
     }
 
     def close(): Unit = sc.removeSparkListener(this)
   }
 
-  final case class Profiled(seconds: Double, warmup: Seq[Stage],
-                            timed: Seq[Stage])
+  final case class Profiled(seconds: Double, warmup: Tally, timed: Tally)
 
   /** A warm-up run of `name`, then a timed run with its stages. */
   def profile(spark: SparkSession, sfDir: String, name: String): Profiled = {
@@ -84,7 +97,7 @@ object Dev {
     try names.map { n =>
       log.take()
       val (sec, rows) = Bench.materialize(spark, sfDir, n)
-      val r = Pressured(n, sec, rows, log.take().map(_.spillBytes).sum)
+      val r = Pressured(n, sec, rows, log.take().stages.map(_.spillBytes).sum)
       System.err.println(f"[pressure] $n: $sec%.2fs rows=$rows spill=${r.spillBytes}")
       r
     } finally log.close()
@@ -118,9 +131,11 @@ object Dev {
       case "profile" =>
         val Seq(sfDir, name) = rest
         val p = profile(spark, sfDir, name)
-        val cpuTotal = p.timed.map(_.cpuMs).sum / 1e3
-        println(f"TOTAL $name: ${p.seconds}%.2f s wall, $cpuTotal%.1f executor-CPU-s")
-        p.timed.sortBy(-_.ms).take(15).foreach { st =>
+        val t = p.timed
+        val cpuTotal = t.stages.map(_.cpuMs).sum / 1e3
+        println(f"TOTAL $name: ${p.seconds}%.2f s wall, $cpuTotal%.1f executor-CPU-s, " +
+          s"${t.jobs} jobs, ${t.stages.size} stages, ${t.tasks} tasks")
+        t.stages.sortBy(-_.ms).take(15).foreach { st =>
           println(f"  stage ${st.id}%-4d ${st.ms}%6d ms  ${st.cpuMs}%6d cpu-ms" +
             f"  ${st.tasks}%3d tasks  ${st.name}")
         }

@@ -33,8 +33,11 @@ class DevSpec extends AnyFunSuite {
     // the lower half of the ids and the timed run the upper half
     val (warmIds, timedIds) = seen.sorted.splitAt(seen.size / 2)
     assert(warmIds.nonEmpty && warmIds.size == timedIds.size)
-    assert(p.warmup.map(_.id).sorted == warmIds)
-    assert(p.timed.map(_.id).sorted == timedIds,
-      s"warm-up ended at stage ${warmIds.last}; timed: ${p.timed.map(_.id)}")
+    assert(p.warmup.stages.map(_.id).sorted == warmIds)
+    assert(p.timed.stages.map(_.id).sorted == timedIds,
+      s"warm-up ended at stage ${warmIds.last}; timed: ${p.timed.stages.map(_.id)}")
+    // and the same jobs: the timed tally counts its own, none of the warm-up's
+    assert(p.timed.jobs > 0 && p.timed.jobs == p.warmup.jobs,
+      s"jobs: warm-up ${p.warmup.jobs}, timed ${p.timed.jobs}")
   }
 }
