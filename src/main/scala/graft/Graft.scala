@@ -145,10 +145,11 @@ object Graft {
     * merges). Any orientation, duplicate edges and self-loops
     * tolerated (canonicalized away). Oriented "forward" wedge
     * algorithm — each triangle counted exactly once. The orientation
-    * order is picked automatically by an exact degree probe: id
-    * order on flat graphs, (degree, id) order once the max degree
-    * passes 4·√m — which caps wedge volume at O(m^1.5) instead of
-    * hub-quadratic, so skewed graphs need no manual relabeling. */
+    * order is picked automatically by the `triangle` [[Gate]] on an
+    * exact degree probe: id order on flat graphs, (degree, id) order
+    * once the max degree passes 4·√m — which caps wedge volume at
+    * O(m^1.5) instead of hub-quadratic, so skewed graphs need no
+    * manual relabeling. */
   def triangleCounts(edges: DataFrame, src: String, dst: String)
       : DataFrame =
     ops.LlmPipe.triangleCountsOver(
@@ -172,13 +173,14 @@ object Graft {
   }
 
   /** Top k rows per group, ordered by `order` (append tie-break
-    * columns to make the cut deterministic). Emitted in exactly the
-    * rank-window + `<= k` filter shape the engine's TopKRewrite rule
-    * recognizes: on a session configured with
-    * `spark.sql.extensions=graft.GraftExtensions`, this plans as a
-    * bounded per-partition heap — shuffle bounded by k·|groups|
-    * regardless of group skew — and falls back to the plain window
-    * plan (correct, unbounded) elsewhere. */
+    * columns to make the cut deterministic). Emitted in the
+    * row_number + `<= k` filter shape that Spark's
+    * `InferWindowGroupLimit` plans with a partial `WindowGroupLimit`
+    * before the exchange: each map task keeps at most k rows per
+    * group, so the shuffle is bounded by k·|groups| per map task
+    * regardless of group skew, for k ≤
+    * `spark.sql.optimizer.windowGroupLimitThreshold` (default 1000);
+    * a larger k plans the plain window (correct, unbounded). */
   def topKPerGroup(df: DataFrame, keys: Seq[Column], order: Seq[Column],
                    k: Int): DataFrame = {
     // collision-proof temp name: first __graft_rankN the frame lacks
@@ -447,11 +449,12 @@ object Graft {
     * rows per `domain` value, chosen by the portable 60-bit md5
     * key-hash rank over `id`, so re-runs, engines and retries keep
     * the SAME uniform-random subset (a seeded RNG agrees on none of
-    * those). Written row_number-then-filter so the TopKRewrite plans
-    * bounded per-group heaps map-side: shuffle volume is at most
+    * those). Written row_number-then-filter so Spark plans a partial
+    * `WindowGroupLimit` map-side: shuffle volume is at most
     * tasks×domains×cap rows no matter how skewed the domains — a
-    * billion-page host costs the same as a ten-page one. NULL ids
-    * raise (a null key has no rank). */
+    * billion-page host costs the same as a ten-page one — for caps ≤
+    * `spark.sql.optimizer.windowGroupLimitThreshold` (default 1000).
+    * NULL ids raise (a null key has no rank). */
   def capPerDomain(docs: DataFrame, id: String, domain: String,
                    cap: Int): DataFrame = {
     require(cap > 0, "graft.capPerDomain: cap must be > 0")

@@ -39,8 +39,8 @@ object GraftSession {
       // queries re-run Janino compilation on every pass and the bench
       // measures the compiler, not the engine
       .config("spark.sql.codegen.cache.maxEntries", "2000")
-      // planner extensions via the deployment config path — every
-      // query (and the oracle gate) runs under identical planning rules
+      // graft's SQL functions via the deployment config path — every
+      // query (and the oracle gate) resolves the same function table
       .config("spark.sql.extensions", "graft.GraftExtensions")
       // local-mode liveness hardening: the in-JVM executor heartbeater
       // System.exit(56)s the whole JVM after 60 consecutive missed

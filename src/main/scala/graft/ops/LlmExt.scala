@@ -343,11 +343,6 @@ object LlmExt extends QueryModule {
     * (faiss default nprobe is 1-16 at far higher cell counts). */
   private[graft] val AnnNProbe = 4
   private[graft] val AnnLloydIters = 2
-  /** Embedding width of the scored embeddings table (TESTDATA
-    * contract, every SF ships 64-component vectors — ivfCell already
-    * pins the first 16). Lets the scored query train its codebook
-    * with the fused fixed-width centroid aggregation. */
-  private[graft] val AnnDim = 64
 
   private def simAnn(s: SparkSession, d: String): DataFrame =
     simAnnTrained(s, d, AnnNProbe)
@@ -373,8 +368,7 @@ object LlmExt extends QueryModule {
     // LocalSortOrderSpec.
     ivfTopKFrom(
         T.parRange(s,
-          ivfCandidatesOver(simAnnFrame(s, d), nprobe, lloydIters,
-            dim = None),
+          ivfCandidatesOver(simAnnFrame(s, d), nprobe, lloydIters),
           col("query_id")),
         k = 5)
       .sortWithinPartitions(col("query_id"), col("rank"))
@@ -396,35 +390,22 @@ object LlmExt extends QueryModule {
     * one row per (query, probed-cell corpus vector) — the exact
     * per-query rerank bill the nprobe knob buys recall with. */
   private[graft] def ivfCandidatesOver(e0: DataFrame, nprobe: Int,
-                                       lloydIters: Int = AnnLloydIters,
-                                       dim: Option[Int] = None)
+                                       lloydIters: Int = AnnLloydIters)
       : DataFrame = {
     val e = e0
       .withColumn("gcell", ivfCell(col("e")))
       .transform(Staged.checkpointLazy) // feeds seed agg, Lloyd steps, final probe
     // per-dim mean per cell, r6-rounded, reassembled into a vector.
-    // A fused fixed-width variant (ONE hash agg of `dim` declarative
-    // avg(element_at(e, i))s per cell, saving one exchange per
-    // training round and the 64× posexplode) was built and REVERTED
-    // this round: the 128-buffer whole-stage-codegen aggregate costs
-    // more to generate/compile than the exchange it saves — measured
-    // same-window isolated 3.75/4.48 s wall (fused) vs 2.84/2.33 s
-    // (this shape), and bench min 3.44 vs 1.94 s. The `dim` parameter
-    // is kept so the A/B stays reproducible; the scored query passes
-    // None.
-    def centroids(frame: DataFrame, cellCol: String): DataFrame = dim match {
-      case Some(n) =>
-        frame.groupBy(col(cellCol).as("ccell"))
-          .agg(array((1 to n).map(i =>
-            Det.r6(avg(element_at(col("e"), i)))): _*).as("cv"))
-      case None =>
-        frame.select(col(cellCol).as("ccell"), posexplode(col("e")))
-          .groupBy(col("ccell"), col("pos"))
-          .agg(Det.r6(avg(col("col"))).as("m"))
-          .groupBy(col("ccell"))
-          .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
-            _.getField("m")).as("cv"))
-    }
+    // posexplode + two aggs, not one fixed-width avg(element_at) agg:
+    // the fused aggregate cost more codegen than the exchange it saved
+    // (e2b033f).
+    def centroids(frame: DataFrame, cellCol: String): DataFrame =
+      frame.select(col(cellCol).as("ccell"), posexplode(col("e")))
+        .groupBy(col("ccell"), col("pos"))
+        .agg(Det.r6(avg(col("col"))).as("m"))
+        .groupBy(col("ccell"))
+        .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
+          _.getField("m")).as("cv"))
     // The ≤32-row codebook packed into ONE array<struct<ccell,cv>> row
     // (cell-sorted for a stable plan): every assignment below becomes a
     // per-row fold over the broadcast array instead of a 32× crossJoin

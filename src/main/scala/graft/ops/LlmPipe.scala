@@ -1119,6 +1119,16 @@ object LlmPipe extends QueryModule {
     * on this box; any constant keeps the asymptotic claim. */
   private val TriSkewFactor = 4.0
 
+  /** The `triangle` gate's probe: how far the max degree exceeds
+    * [[TriSkewFactor]]·√m, for a graph of `edges` distinct edges. */
+  private[graft] def triangleSkew(maxDegree: Long, edges: Double): Double =
+    maxDegree.toDouble - TriSkewFactor * math.sqrt(edges)
+
+  /** The degree order runs iff the max degree STRICTLY exceeds
+    * [[TriSkewFactor]]·√m: the smallest positive [[triangleSkew]]
+    * (a double difference is positive iff its left side is larger). */
+  private[graft] val TriangleMinSkew = Double.MinPositiveValue
+
   /** Oriented edges + unclosed wedges for [[triangleCountsOver]] —
     * split out so the spec can count the CANDIDATE volume each
     * orientation generates (the scale argument, asserted rather than
@@ -1167,20 +1177,18 @@ object LlmPipe extends QueryModule {
     * edge along a total order, wedge-join the out-edges at each
     * minimum corner, probe against the closing oriented edge — each
     * triangle found exactly once, no /6 dedup. The ORDER is picked by
-    * a stats probe (the hotKeyShare discipline, but exact — the
-    * degree frame is already required for the output, so the probe
-    * is one |nodes|→1 aggregate, not a sample): id order when
-    * degrees are flat; (degree, id) order when the max degree
-    * exceeds [[TriSkewFactor]]·√m, which caps per-source out-degree
-    * at O(√m) and total wedge volume at O(m^1.5) — a planted hub
-    * otherwise generates C(deg_hub, 2) candidates from its corner
-    * (GraftApiSpec pins both the output equality of the two orders
-    * and the candidate-volume collapse on a star graph;
-    * `forceDegreeOrder` exists for that spec, not for callers).
-    * Output: one row per node with ≥1 edge, (node, degree,
-    * n_triangles ≥ 0). */
-  private[graft] def triangleCountsOver(edges: DataFrame,
-      forceDegreeOrder: Option[Boolean] = None): DataFrame = {
+    * the `triangle` [[Gate]] on a stats probe (the hotKeyShare
+    * discipline, but exact — the degree frame is already required for
+    * the output, so the probe is one |nodes|→1 aggregate, not a
+    * sample): id order (small) when degrees are flat or the graph is
+    * empty; (degree, id) order (large) when the max degree exceeds
+    * [[TriSkewFactor]]·√m, which caps per-source out-degree at O(√m)
+    * and total wedge volume at O(m^1.5) — a planted hub otherwise
+    * generates C(deg_hub, 2) candidates from its corner (GraftApiSpec
+    * pins both the output equality of the two orders and the
+    * candidate-volume collapse on a star graph). Output: one row per
+    * node with ≥1 edge, (node, degree, n_triangles ≥ 0). */
+  private[graft] def triangleCountsOver(edges: DataFrame): DataFrame = {
     val e = edges.toDF("x", "y")
       .filter(col("x") =!= col("y"))
       .select(least(col("x"), col("y")).as("a"),
@@ -1191,13 +1199,12 @@ object LlmPipe extends QueryModule {
       .select(explode(array(col("a"), col("b"))).as("node"))
       .groupBy(col("node")).agg(count(lit(1)).as("degree"))
       .transform(Staged.checkpoint) // feeds the probe, the orientation, the output
-    val byDegree = forceDegreeOrder.getOrElse {
+    val byDegree = Gate.large(edges.sparkSession, "triangle", {
       // bounded driver materialization: ONE row (Σdeg = 2m, max deg)
       val st = degrees
         .agg(sum(col("degree")).as("s"), max(col("degree")).as("mx")).head()
-      !st.isNullAt(0) &&
-        st.getLong(1).toDouble > TriSkewFactor * math.sqrt(st.getLong(0) / 2.0)
-    }
+      if (st.isNullAt(0)) 0.0 else triangleSkew(st.getLong(1), st.getLong(0) / 2.0)
+    }, TriangleMinSkew)
     val (eo, wedges) = triangleWedges(e, degrees, byDegree)
     val tri = wedges
       .join(eo.select(col("src").as("b"), col("dst").as("c")), Seq("b", "c"))

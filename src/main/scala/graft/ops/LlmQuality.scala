@@ -678,15 +678,15 @@ object LlmQuality extends QueryModule {
     * (site{id%7}.example.com — a pure function of doc_id).
     *
     * Scale shape: written declaratively as row_number-then-filter, so
-    * graft's TopKRewrite (plans/TopK.scala) plans it as PartialTopK →
-    * exchange → FinalTopK — bounded per-group heaps MAP-SIDE, each map
-    * task shipping at most `DomainCap` rows per domain it sees. That is
-    * the difference at 100 TB: the window formulation shuffles a
-    * billion-page host onto ONE task and sorts it; the bounded-heap
-    * plan's shuffle volume is ≤ tasks×domains×cap rows regardless of
-    * domain skew — domain capping is exactly the skewed-key workload
-    * the operator was built for. Spec-asserted that the rewrite fires
-    * (FinalTopK in the physical plan) and that the kept set matches a
+    * Spark's `InferWindowGroupLimit` plans a partial `WindowGroupLimit`
+    * MAP-SIDE, before the exchange: each map task ships at most
+    * `DomainCap` rows per domain it sees, so a billion-page host is
+    * pruned where it is read, and the shuffle volume is ≤
+    * tasks×domains×cap rows regardless of domain skew. That bound holds
+    * for caps ≤ `spark.sql.optimizer.windowGroupLimitThreshold` (Spark's
+    * default 1000); above it Spark plans the plain window, which sorts
+    * each domain whole on one task. Spec-asserted that the partial limit
+    * sits below the exchange and that the kept set matches a
     * brute-force recompute. */
   private def domainCap(s: SparkSession, d: String): DataFrame = {
     val DomainCap = 20

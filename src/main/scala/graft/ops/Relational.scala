@@ -686,16 +686,11 @@ object Relational extends QueryModule {
       |FROM orders ORDER BY o_totalprice DESC, o_orderkey LIMIT 50""".stripMargin
 
   /** Top-k per group, written declaratively as row_number-then-filter.
-    * graft's TopKRewrite rule (plans/TopK.scala) recognizes the shape
-    * and plans it as PartialTopK → exchange → FinalTopK — bounded
-    * per-group heaps map-side, only survivors shuffled, no sort/window
-    * machinery — while this code stays the idiomatic formulation. The
-    * rule arrives via the session's `spark.sql.extensions=
-    * graft.GraftExtensions` config (the deployment path; Verify/Bench/
-    * tests all set it) — the query itself installs nothing, and still
-    * returns correct rows on an unconfigured session via the plain
-    * window plan. The DuckDB oracle hash-match doubles as the
-    * operator's correctness proof. */
+    * Spark's `InferWindowGroupLimit` plans the shape as a partial
+    * `WindowGroupLimit` → exchange → sort → final `WindowGroupLimit` →
+    * window → filter: each map task keeps at most k rows per group, so
+    * only survivors are shuffled, on any session (k ≤
+    * `spark.sql.optimizer.windowGroupLimitThreshold`, default 1000). */
   private def topkPerGroup(s: SparkSession, d: String): DataFrame = {
     val w = Window.partitionBy(col("o_custkey"))
       .orderBy(col("o_totalprice").desc, col("o_orderkey"))

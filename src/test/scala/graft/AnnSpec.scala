@@ -22,21 +22,6 @@ class AnnSpec extends AnyFunSuite {
     }
   }
 
-  test("fused fixed-width centroid training equals the generic posexplode form") {
-    // the scored query trains with one codegen hash agg of AnnDim
-    // declarative avgs; the dim-agnostic facade keeps the posexplode
-    // shape — same candidates, same cos keys, bit-for-bit (both r6)
-    import graft.ops.LlmExt
-    val frame = LlmExt.simAnnFrame(s, d)
-    def rows(dim: Option[Int]) =
-      LlmExt.ivfCandidatesOver(frame, LlmExt.AnnNProbe,
-          LlmExt.AnnLloydIters, dim)
-        .collect().map(_.toString).sorted.toSeq
-    val fused = rows(Some(LlmExt.AnnDim))
-    val generic = rows(None)
-    assert(fused.nonEmpty && fused == generic)
-  }
-
   test("trained codebook lifts recall over the untrained grid (verdict r9 #3)") {
     import graft.ops.LlmExt
     val exact = SparkEntry.queries("q_llm_sim_search")(s, d).collect()

@@ -34,6 +34,21 @@ class GateSpec extends AnyFunSuite {
     assert(!local(2000001L))
   }
 
+  test("triangle gate: id order up to and at 4·√m, degree order above") {
+    import ops.LlmPipe.{triangleSkew, TriangleMinSkew}
+    def byDegree(maxDegree: Long, edges: Double) =
+      pick(triangleSkew(maxDegree, edges), TriangleMinSkew)
+    // m = 16 puts the bound exactly on 16
+    assert(!byDegree(15L, 16.0))
+    assert(!byDegree(16L, 16.0))
+    assert(byDegree(17L, 16.0))
+    // the planted star of GraftApiSpec: 4·√41 ≈ 25.6
+    assert(!byDegree(25L, 41.0))
+    assert(byDegree(26L, 41.0))
+    // an empty graph probes 0: id order
+    assert(!pick(0.0, TriangleMinSkew))
+  }
+
   test("salt gate: plain below a 0.30 hot-key share, salted at and above") {
     val share = ops.Lakehouse.MinHotShare
     assert(share == 0.30)

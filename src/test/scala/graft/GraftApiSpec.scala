@@ -176,11 +176,9 @@ class GraftApiSpec extends AnyFunSuite {
     val topk = Graft.topKPerGroup(df, Seq($"grp"), Seq($"score".desc), 2)
     val got = topk.collect().map(r => (r.getString(0), r.getInt(1))).toSet
     assert(got == Set(("g1", 5), ("g1", 3), ("g2", 9), ("g2", 2)))
-    // on this extensions-configured session the facade's plan shape
-    // must lower to the bounded-heap operator pair, not a full window
-    val p = topk.queryExecution.executedPlan.toString
-    assert(p.contains("PartialTopK") && p.contains("FinalTopK"),
-      s"TopK rewrite did not fire on the facade shape:\n$p")
+    // the facade's plan shape must keep at most k rows per group per
+    // map task before the exchange
+    TopKPlan.assertShuffleBounded(topk, 2)
   }
 
   test("cosineTopK ranks corpus vectors by cosine for each query") {
@@ -511,9 +509,12 @@ class GraftApiSpec extends AnyFunSuite {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.orderBy($"node").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    def forced(side: String) =
+      GraftSession.withConf(s, Map(Gate.Key -> side))(
+        rows(LlmPipe.triangleCountsOver(edges)))
     val auto = rows(LlmPipe.triangleCountsOver(edges))
-    assert(auto == rows(LlmPipe.triangleCountsOver(edges, Some(false))))
-    assert(auto == rows(LlmPipe.triangleCountsOver(edges, Some(true))))
+    assert(auto == forced("small"))
+    assert(auto == forced("large"))
     assert(auto.filter(_._3 > 0).map(_._1) == Seq(0L, 1L, 2L),
       s"triangle corners wrong: $auto")
   }

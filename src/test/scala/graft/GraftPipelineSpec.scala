@@ -166,19 +166,17 @@ class GraftPipelineSpec extends AnyFunSuite {
       s"pipeline leaked persistent RDDs: ${leaked.toSeq.sorted}")
   }
 
-  test("capPerDomain lowers to the bounded-heap TopK pair, not a window") {
+  test("capPerDomain bounds its shuffle to cap rows per domain per map task") {
     // the 100-TB claim: the cap's shuffle volume is bounded per
     // map-task×domain, so a billion-page host costs like a ten-page
-    // one — only true if the TopKRewrite actually fires on the
-    // facade's generic shape (it is plan-asserted on the scored
+    // one — only true if the partial limit is planned on the facade's
+    // generic shape (it is plan-asserted on the scored
     // q_llm_domain_cap; pin the user-facing method too)
     val df = (1L to 100L).map(i => (i, s"site${i % 3}.com"))
       .toDF("docId", "site")
     val capped = Graft.capPerDomain(df, "docId", "site", cap = 5)
     assert(capped.count() == 15)
-    val p = capped.queryExecution.executedPlan.toString
-    assert(p.contains("PartialTopK") && p.contains("FinalTopK"),
-      s"TopK rewrite did not fire on capPerDomain:\n$p")
+    TopKPlan.assertShuffleBounded(capped, 5)
   }
 
   test("scrubPii counts reflect ACTUAL scrubs under overlapping patterns") {

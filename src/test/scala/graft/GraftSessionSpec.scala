@@ -39,6 +39,5 @@ class GraftSessionSpec extends AnyFunSuite {
   test("the test-only overrides are layered on top") {
     assert(conf("spark.shuffle.manager") ==
       "org.apache.spark.shuffle.graft.KillingShuffleManager")
-    assert(conf("spark.shuffle.spill.numElementsForceSpillThreshold") == "100000")
   }
 }

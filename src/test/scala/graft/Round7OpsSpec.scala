@@ -166,13 +166,12 @@ class Round7OpsSpec extends AnyFunSuite {
       "md5 key-hash sampling is reproducible across runs")
   }
 
-  test("llm_domain_cap: bounded-heap rewrite fires, kept set is exact") {
+  test("llm_domain_cap: shuffle bounded map-side, kept set is exact") {
     val df = SparkEntry.queries("q_llm_domain_cap")(s, SparkTestBase.sfDir)
     // the scale claim is executable: the row_number-then-filter shape
-    // must plan as the partial/final bounded-heap operator, not a sort
-    val physical = df.queryExecution.executedPlan.toString
-    assert(physical.contains("FinalTopK") && physical.contains("PartialTopK"),
-      s"TopKRewrite did not fire:\n$physical")
+    // must keep at most cap rows per domain per map task before the
+    // exchange
+    TopKPlan.assertShuffleBounded(df, 20)
     val rows = df.collect()
     // every domain has > cap docs at every SF, so output is domains x cap
     assert(rows.length == 7 * 20, "7 domains capped at 20 docs each")

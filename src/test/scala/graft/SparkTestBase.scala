@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
   * expensive; suites only read) — recreated if its context dies, so a
   * single context death cannot cascade through every later suite.
   * Built by the same [[GraftSession.local]] factory as Verify and
-  * Bench, at 4 cores, plus two test-only overrides. */
+  * Bench, at 4 cores, plus one test-only override. */
 object SparkTestBase {
   private def build(): SparkSession = {
     val s = GraftSession.local(4, Map(
@@ -14,14 +14,7 @@ object SparkTestBase {
       // RetryDeterminismSpec arms graft.RetryInjector (test-only —
       // Verify/Bench run the stock manager)
       "spark.shuffle.manager" ->
-        "org.apache.spark.shuffle.graft.KillingShuffleManager",
-      // context-level (SparkConf) spill trigger: Spillable consumers
-      // (ExternalAppendOnlyMap/ExternalSorter) force a spill past this
-      // many in-memory elements regardless of heap headroom. 100k is
-      // far above any sf0.001 per-task row count, so ordinary suites
-      // never trip it; TopKSpec's spill test drives a synthetic frame
-      // past it to exercise FinalTopK's spill path deterministically.
-      "spark.shuffle.spill.numElementsForceSpillThreshold" -> "100000"))
+        "org.apache.spark.shuffle.graft.KillingShuffleManager"))
     s.sparkContext.setLogLevel("ERROR")
     s
   }
