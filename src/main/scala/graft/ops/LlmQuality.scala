@@ -682,7 +682,9 @@ object LlmQuality extends QueryModule {
     * MAP-SIDE, before the exchange: each map task ships at most
     * `DomainCap` rows per domain it sees, so a billion-page host is
     * pruned where it is read, and the shuffle volume is ≤
-    * tasks×domains×cap rows regardless of domain skew. That bound holds
+    * tasks×domains×cap rows regardless of domain skew. The partial
+    * limit reads its input sorted, so each map task sorts (and, when
+    * large, spills) its own rows first. That bound holds
     * for caps ≤ `spark.sql.optimizer.windowGroupLimitThreshold` (Spark's
     * default 1000); above it Spark plans the plain window, which sorts
     * each domain whole on one task. Spec-asserted that the partial limit

@@ -13,18 +13,15 @@ import org.scalatest.Assertions._
   * the group skew (a billion-page host costs like a ten-page one). */
 object TopKPlan extends AdaptiveSparkPlanHelper {
 
-  /** The k of every partial `WindowGroupLimit` that feeds a shuffle
-    * exchange of `df`'s physical plan (initial or final AQE plan). */
-  def partialLimitsBelowExchange(df: DataFrame): Seq[Int] =
-    collect(df.queryExecution.executedPlan) { case e: ShuffleExchangeExec => e }
+  /** `df`'s physical plan (initial or final AQE plan) feeds a shuffle
+    * exchange from a partial `WindowGroupLimit` of `k`. */
+  def assertShuffleBounded(df: DataFrame, k: Int): Unit = {
+    val plan = df.queryExecution.executedPlan
+    val limits = collect(plan) { case e: ShuffleExchangeExec => e }
       .flatMap(_.child.collect {
         case w: WindowGroupLimitExec if w.mode == Partial => w.limit
       })
-
-  def assertShuffleBounded(df: DataFrame, k: Int): Unit = {
-    val limits = partialLimitsBelowExchange(df)
     assert(limits.contains(k),
-      s"no partial WindowGroupLimit of $k below an exchange (found $limits):\n" +
-        df.queryExecution.executedPlan)
+      s"no partial WindowGroupLimit of $k below an exchange (found $limits):\n$plan")
   }
 }
