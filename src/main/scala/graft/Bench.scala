@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.SparkPlan
 
 /** Benchmark main: times every SparkEntry query on SPARK_GRAFT_SF_DIR.
   *
@@ -25,15 +26,16 @@ object Bench {
     * ContextCleaner also piggybacks on GC to release old
     * broadcasts/shuffles) — then execute every operator via `toRdd`
     * (a bare `Dataset.count()` lets Catalyst prune unreferenced
-    * projections — under-measurement). Returns (seconds, rows). */
+    * projections — under-measurement). Returns (seconds, rows, the
+    * executed plan — the final adaptive plan once `toRdd` has run). */
   def materialize(spark: SparkSession, sfDir: String,
-                  name: String): (Double, Long) = {
+                  name: String): (Double, Long, SparkPlan) = {
     ops.Staged.sweep()
     System.gc()
     val t0 = System.nanoTime()
-    val rows = SparkEntry.queries(name)(spark, sfDir)
-      .queryExecution.toRdd.count()
-    ((System.nanoTime() - t0) / 1e9, rows)
+    val qe = SparkEntry.queries(name)(spark, sfDir).queryExecution
+    val rows = qe.toRdd.count()
+    ((System.nanoTime() - t0) / 1e9, rows, qe.executedPlan)
   }
 
   def main(args: Array[String]): Unit = {

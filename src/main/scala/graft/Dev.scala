@@ -5,14 +5,18 @@ import org.apache.spark.graft.ListenerBusAccess
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
   SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike,
+  ReusedExchangeExec, ShuffleExchangeLike}
 import scala.collection.mutable.ArrayBuffer
 
 /** Dev tool: one main, four subcommands, all on the [[GraftSession]]
   * engine that Bench scores, at `SPARK_GRAFT_CPUS` cores (default 4).
   *
   * {{{
-  *   graft.Dev profile  <sfDir> <query>     job/stage/task counts and per-stage
-  *                                          wall/CPU table of one timed run
+  *   graft.Dev profile  <sfDir> <query>     job/stage/task/exchange counts and
+  *                                          per-stage wall/CPU table of one timed run
   *   graft.Dev explain  <sfDir> [query...]  formatted physical plans
   *   graft.Dev pressure <sfDir> [query...]  completion and spill under the JVM heap
   *   graft.Dev smoke                        the flagship SparkEntry.entry
@@ -20,7 +24,8 @@ import scala.collection.mutable.ArrayBuffer
   */
 object Dev {
 
-  /** One completed stage as the stage-completed listener saw it. */
+  /** One completed stage as the stage-completed listener saw it,
+    * named after the SQL operators its RDDs were built under. */
   final case class Stage(id: Int, name: String, ms: Long, tasks: Int,
                          cpuMs: Long, spillBytes: Long)
 
@@ -55,9 +60,10 @@ object Dev {
         if (m == null) (0L, 0L)
         else (m.executorCpuTime / 1000000,
           m.memoryBytesSpilled + m.diskBytesSpilled)
+      val scopes = ListenerBusAccess.scopeNames(i)
+      val name = if (scopes.nonEmpty) scopes.mkString(" > ") else i.name.takeWhile(_ != '\n')
       rows.synchronized {
-        rows += Stage(i.stageId, i.name.takeWhile(_ != '\n').take(90), ms,
-          i.numTasks, cpuMs, spill)
+        rows += Stage(i.stageId, name.take(90), ms, i.numTasks, cpuMs, spill)
       }
     }
 
@@ -72,16 +78,30 @@ object Dev {
     def close(): Unit = sc.removeSparkListener(this)
   }
 
-  final case class Profiled(seconds: Double, warmup: Tally, timed: Tally)
+  /** Exchange operators of a plan, subqueries included. */
+  final case class Exchanges(shuffle: Int, broadcast: Int, reused: Int)
 
-  /** A warm-up run of `name`, then a timed run with its stages. */
+  object Exchanges extends AdaptiveSparkPlanHelper {
+    /** Counted through adaptive query stages and subqueries. */
+    def of(plan: SparkPlan): Exchanges = {
+      def n(f: PartialFunction[SparkPlan, Unit]) = collectWithSubqueries(plan)(f).size
+      Exchanges(n { case _: ShuffleExchangeLike => }, n { case _: BroadcastExchangeLike => },
+        n { case _: ReusedExchangeExec => })
+    }
+  }
+
+  final case class Profiled(seconds: Double, warmup: Tally, timed: Tally,
+                            exchanges: Exchanges)
+
+  /** A warm-up run of `name`, then a timed run with its stages and
+    * final-plan exchanges. */
   def profile(spark: SparkSession, sfDir: String, name: String): Profiled = {
     val log = new StageLog(spark.sparkContext)
     try {
       Bench.materialize(spark, sfDir, name)
       val warmup = log.take()
-      val (sec, _) = Bench.materialize(spark, sfDir, name)
-      Profiled(sec, warmup, log.take())
+      val (sec, _, plan) = Bench.materialize(spark, sfDir, name)
+      Profiled(sec, warmup, log.take(), Exchanges.of(plan))
     } finally log.close()
   }
 
@@ -96,7 +116,7 @@ object Dev {
     val log = new StageLog(spark.sparkContext)
     try names.map { n =>
       log.take()
-      val (sec, rows) = Bench.materialize(spark, sfDir, n)
+      val (sec, rows, _) = Bench.materialize(spark, sfDir, n)
       val r = Pressured(n, sec, rows, log.take().stages.map(_.spillBytes).sum)
       System.err.println(f"[pressure] $n: $sec%.2fs rows=$rows spill=${r.spillBytes}")
       r
@@ -133,8 +153,10 @@ object Dev {
         val p = profile(spark, sfDir, name)
         val t = p.timed
         val cpuTotal = t.stages.map(_.cpuMs).sum / 1e3
+        val Exchanges(sh, bc, re) = p.exchanges
         println(f"TOTAL $name: ${p.seconds}%.2f s wall, $cpuTotal%.1f executor-CPU-s, " +
-          s"${t.jobs} jobs, ${t.stages.size} stages, ${t.tasks} tasks")
+          s"${t.jobs} jobs, ${t.stages.size} stages, ${t.tasks} tasks, " +
+          s"exchanges $sh shuffle $bc broadcast $re reused")
         t.stages.sortBy(-_.ms).take(15).foreach { st =>
           println(f"  stage ${st.id}%-4d ${st.ms}%6d ms  ${st.cpuMs}%6d cpu-ms" +
             f"  ${st.tasks}%3d tasks  ${st.name}")

@@ -7,7 +7,9 @@ import scala.collection.mutable.ArrayBuffer
 
 /** The dev tool's profile drains the listener bus between its warm-up
   * and timed runs, so no warm-up stage leaks into the timed tally and
-  * no timed stage is missed. */
+  * no timed stage is missed; it names each stage after its SQL
+  * operators and counts the final plan's exchanges the way
+  * `Dev explain`'s executed plan shows them. */
 class DevSpec extends AnyFunSuite {
   private def s = SparkTestBase.spark
 
@@ -39,5 +41,27 @@ class DevSpec extends AnyFunSuite {
     // and the same jobs: the timed tally counts its own, none of the warm-up's
     assert(p.timed.jobs > 0 && p.timed.jobs == p.warmup.jobs,
       s"jobs: warm-up ${p.warmup.jobs}, timed ${p.timed.jobs}")
+  }
+
+  test("profile: stages carry operator names, exchange counts match explain's executed plan") {
+    // a query whose final plan holds all three kinds at sf0.001
+    val q = "q_llm_repetition"
+    val p = Dev.profile(s, SparkTestBase.sfDir, q)
+    val names = p.timed.stages.map(_.name)
+    assert(!names.exists(_.contains("CompletableFuture")), names)
+    assert(names.exists(_.contains("WholeStageCodegen")), names)
+    // the executed plan's text, counted independently of the plan
+    // walk: exchange nodes of the final adaptive plan section only
+    val df = SparkEntry.queries(q)(s, SparkTestBase.sfDir)
+    df.queryExecution.toRdd.foreach(_ => ())
+    val text = df.queryExecution.executedPlan.toString
+    val finalPlan = text.split("== Initial Plan ==").head
+    def nodes(op: String) = finalPlan.linesIterator
+      .count(l => l.replaceFirst("^[ :|+-]*", "").startsWith(op + " "))
+    val fromText = Dev.Exchanges(nodes("Exchange"), nodes("BroadcastExchange"),
+      nodes("ReusedExchange"))
+    assert(p.exchanges == fromText, text)
+    assert(p.exchanges.shuffle > 0 && p.exchanges.broadcast > 0 &&
+      p.exchanges.reused > 0, p.exchanges)
   }
 }
