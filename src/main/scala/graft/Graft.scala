@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** The public, column-parameterized library surface.
@@ -9,13 +8,19 @@ import org.apache.spark.sql.functions._
   * The scored `SparkEntry.queries` prove every operator against the
   * DuckDB oracle on the test star schema; this facade is how a USER
   * calls the same engine code on their own frames — each method is a
-  * thin adapter (rename user columns onto the internal contract,
-  * delegate, rename back), so the facade and the scored queries can
-  * never diverge in semantics. Everything scale-critical about the
-  * internals (stats-driven local-vs-distributed graph strategy,
-  * data-sized loop partitioning, checkpointed iteration, map-side
-  * combined aggregation, degenerate-bucket caps) is inherited, not
-  * reimplemented.
+  * thin adapter (boundary checks, rename user columns onto the
+  * internal contract, call the ONE `ops` body its scored query runs,
+  * rename back), so the facade and the scored queries can never
+  * diverge in semantics. Everything scale-critical about the internals
+  * (stats-driven local-vs-distributed graph strategy, data-sized loop
+  * partitioning, checkpointed iteration, map-side combined
+  * aggregation, degenerate-bucket caps) is inherited, not
+  * reimplemented. Four deliberate exceptions keep separate code:
+  *  - [[resampleGrid]] averages over non-NULL readings, where
+  *    `TimeSeries.hourlyAvg`'s oracle divides by count(*);
+  *  - `LlmExt.ivfTopKFrom` carries `cell` for AnnSpec's cost ladder;
+  *  - `LlmExt.simAnnGrid` is AnnSpec's independent recall baseline;
+  *  - q_graph_triangles is class-contracted, unlike [[triangleCounts]].
   *
   * Column arguments are names (not Columns) where the value must be
   * referenced on both sides of an internal self-join — the rename
@@ -173,24 +178,15 @@ object Graft {
   }
 
   /** Top k rows per group, ordered by `order` (append tie-break
-    * columns to make the cut deterministic). Emitted in the
-    * row_number + `<= k` filter shape that Spark's
-    * `InferWindowGroupLimit` plans with a partial `WindowGroupLimit`
-    * before the exchange: each map task keeps at most k rows per
-    * group, so the shuffle is bounded by k·|groups| per map task
-    * regardless of group skew, for k ≤
-    * `spark.sql.optimizer.windowGroupLimitThreshold` (default 1000);
-    * a larger k plans the plain window (correct, unbounded). */
+    * columns to make the cut deterministic). The shuffle is bounded by
+    * k·|groups| per map task regardless of skew, for k ≤
+    * `spark.sql.optimizer.windowGroupLimitThreshold` (default 1000). */
   def topKPerGroup(df: DataFrame, keys: Seq[Column], order: Seq[Column],
                    k: Int): DataFrame = {
     // collision-proof temp name: first __graft_rankN the frame lacks
     val rank = Iterator.from(0).map(i => s"__graft_rank$i")
       .find(n => !df.columns.contains(n)).get
-    df.withColumn(rank,
-        row_number().over(org.apache.spark.sql.expressions.Window
-          .partitionBy(keys: _*).orderBy(order: _*)))
-      .filter(col(rank) <= k)
-      .drop(rank)
+    ops.Relational.topKOver(df, keys, order, k, rank).drop(rank)
   }
 
   // ------------------------------------------------------------------ dedup
@@ -249,9 +245,8 @@ object Graft {
           col(text).as("__t"))
         .select(col(as),
           explode(ops.LlmQuality.ngramHashes("__t", gramWidth)).as("h"))
-    grams(train, "train_id").join(broadcast(grams(eval, "eval_id")), "h")
-      .groupBy(col("train_id"), col("eval_id"))
-      .agg(count(lit(1)).as("n_shared"))
+    ops.LlmQuality.sharedGramPairs(grams(train, "train_id"),
+      grams(eval, "eval_id"))
   }
 
   /** Distinct 64-bit hashes of the word `width`-grams of a text
@@ -305,39 +300,17 @@ object Graft {
 
   /** Exact brute-force cosine top-k: for each row of `queries`
     * (BOUNDED — it is broadcast; the scale path for an unbounded
-    * query side is IVF cells, see q_llm_sim_ann), the k
-    * highest-cosine rows of `corpus`. Vector columns are arrays of
-    * numerics; dot products run on the native codegen `graft_dot`
-    * expression, norms computed once per row before the join. Output:
+    * query side is [[ivfTopK]]), the k highest-cosine rows of
+    * `corpus`. Vector columns are arrays of numerics. Output:
     * `(query_id, rank, match_id, cos_sim)` with a discretized-cosine
     * + id tie-break so row order can't flip on a last-ulp
-    * disagreement. */
+    * disagreement. Zero-norm vectors (no direction) are dropped. */
   def cosineTopK(queries: DataFrame, corpus: DataFrame, id: String,
                  vec: String, k: Int): DataFrame = {
     registerFunctions(queries.sparkSession)
-    import org.apache.spark.sql.expressions.Window
-    // zero-norm vectors have no direction: cos would be 0/0 = NaN,
-    // and NaN sorts ABOVE every real cosine under desc, so one all-
-    // zeros padding row would become the rank-1 match of every query
-    // (review r12). Excluded on both sides — a zero-norm query simply
-    // returns no rows.
-    val q = queries.select(col(id).as("query_id"),
-        transform(col(vec), x => x.cast("double")).as("qe"))
-      .withColumn("qn", sqrt(expr("graft_dot(qe, qe)")))
-      .filter(col("qn") > 0)
-    val c = corpus.select(col(id).as("match_id"),
-        transform(col(vec), x => x.cast("double")).as("ce"))
-      .withColumn("cn", sqrt(expr("graft_dot(ce, ce)")))
-      .filter(col("cn") > 0)
-    val cos = expr("graft_dot(qe, ce)") / (col("qn") * col("cn"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_key").desc, col("match_id"))
-    broadcast(q).crossJoin(c)
-      .select(col("query_id"), col("match_id"), ops.Det.r6(cos).as("cos_key"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("match_id"),
-        ops.Det.r4(col("cos_key")).as("cos_sim"))
+    ops.Llm.cosineTopKOver(
+      queries.select(col(id).as("query_id"), col(vec).as("qe")),
+      corpus.select(col(id).as("match_id"), col(vec).as("ce")), k)
   }
 
   /** Trained-IVF approximate nearest neighbour — the scale path when
@@ -396,112 +369,52 @@ object Graft {
     "EMAIL" -> "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}",
     "PHONE" -> "\\+?[0-9]{1,3}[-. ][0-9]{3}[-. ][0-9]{3,4}[-. ]?[0-9]{0,4}")
 
-  /** Regex PII redaction over a user text column (q_llm_pii's shape
-    * on user-named columns): each pattern's matches are replaced by
-    * `[NAME]` in order, and a `pii_counts` map column records how
-    * many matches of each pattern were scrubbed. Pure map-side
-    * codegen'd expression chain — at 100 TB this fuses into whatever
-    * pass already reads the text; no shuffle, no UDF. Run BEFORE
-    * dedup: two docs differing only in contact details become
-    * verbatim-equal once scrubbed, and the dedup stages then collapse
-    * them (the composition GraftPipelineSpec pins). */
+  /** Regex PII redaction over a user text column: each pattern's
+    * matches are replaced by `[NAME]` in order, and a `pii_counts` map
+    * column records how many matches of each pattern were scrubbed.
+    * Pure map-side codegen'd expression chain — at 100 TB this fuses
+    * into whatever pass already reads the text; no shuffle, no UDF.
+    * Run BEFORE dedup: two docs differing only in contact details
+    * become verbatim-equal once scrubbed, and the dedup stages then
+    * collapse them (the composition GraftPipelineSpec pins). */
   def scrubPii(docs: DataFrame, text: String,
                patterns: Seq[(String, String)] = DefaultPiiPatterns)
       : DataFrame = {
     require(patterns.nonEmpty, "graft.scrubPii: no patterns given")
-    requireFresh(docs, "scrubPii", "pii_counts")
-    // counts are taken on the PROGRESSIVELY scrubbed text, pattern
-    // order, so each count is the number of replacements that pattern
-    // actually performed — counting every pattern against the original
-    // would over-report on overlaps (an EMAIL whose domain contains a
-    // phone-shaped digit run would count as both; review r13). The
-    // replacement token is literal: regexp_replace treats '$'/'\' as
-    // group references, so a user-supplied name like "COST$1" must not
-    // corrupt the output. Each step's text is materialized as its own
-    // ALIASED column (not nested expressions): count_k and step_k+1
-    // both reference step_k, and Catalyst's CollapseProject keeps
-    // multi-referenced non-cheap aliases as separate projections, so
-    // every row pays each regex pass ONCE — a nested fold would grow
-    // the expression tree quadratically in pattern count (review r13).
-    def literal(name: String): String =
-      s"[$name]".replace("\\", "\\\\").replace("$", "\\$")
-    val helper = "__pii_cur" +: patterns.indices.map(i => s"__pii_n_$i")
-    requireFresh(docs, "scrubPii", helper: _*)
-    val stepped = patterns.zipWithIndex.foldLeft(
-      docs.withColumn("__pii_cur", col(text))) {
-      case (df, ((name, p), i)) =>
-        df.withColumn(s"__pii_n_$i",
-            size(regexp_extract_all(col("__pii_cur"), lit(p), lit(0)))
-              .cast("long"))
-          .withColumn("__pii_cur",
-            regexp_replace(col("__pii_cur"), lit(p), lit(literal(name))))
-    }
-    val counts = patterns.zipWithIndex.flatMap { case ((name, _), i) =>
-      Seq(lit(name), col(s"__pii_n_$i"))
-    }
-    stepped.withColumn("pii_counts", map(counts: _*))
-      .withColumn(text, col("__pii_cur"))
-      .drop(helper: _*)
+    requireFresh(docs, "scrubPii", ops.LlmPipe.scrubColumns(patterns): _*)
+    ops.LlmPipe.scrubOver(docs, text, patterns)
   }
 
-  /** Per-domain document capping (q_llm_domain_cap's shape on
-    * user-named columns) — the crawl-bias control: keep at most `cap`
-    * rows per `domain` value, chosen by the portable 60-bit md5
+  /** Per-domain document capping — the crawl-bias control: keep at
+    * most `cap` rows per `domain` value, chosen by the portable 60-bit md5
     * key-hash rank over `id`, so re-runs, engines and retries keep
     * the SAME uniform-random subset (a seeded RNG agrees on none of
-    * those). Written row_number-then-filter so Spark plans a partial
-    * `WindowGroupLimit` map-side: shuffle volume is at most
-    * tasks×domains×cap rows no matter how skewed the domains — a
-    * billion-page host costs the same as a ten-page one — for caps ≤
-    * `spark.sql.optimizer.windowGroupLimitThreshold` (default 1000).
-    * NULL ids raise (a null key has no rank). */
+    * those). Planned like [[topKPerGroup]]: a billion-page host
+    * costs the shuffle of a ten-page one. NULL ids raise (a null key
+    * has no rank). */
   def capPerDomain(docs: DataFrame, id: String, domain: String,
                    cap: Int): DataFrame = {
     require(cap > 0, "graft.capPerDomain: cap must be > 0")
-    requireFresh(docs, "capPerDomain", "__h", "__rn")
+    requireFresh(docs, "capPerDomain", "__rn")
     registerFunctions(docs.sparkSession)
-    val h = when(col(id).isNotNull,
-      expr(s"graft_hash60(cast(`$id` as string))"))
-      .otherwise(raise_error(lit(
-        s"graft.capPerDomain: NULL $id — a null key has no hash rank; " +
-          "filter or fill it first")))
-    val w = Window.partitionBy(col(domain))
-      .orderBy(col("__h"), col(id))
-    docs.withColumn("__h", h)
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= cap)
-      .drop("__h", "__rn")
+    ops.LlmQuality.hashCapOver(docs, id, domain, cap, "__rn").drop("__rn")
   }
 
-  /** GPT-style sequence packing over a user frame (q_llm_pack's shape
-    * on user-named columns): concatenate documents in `id` order
+  /** GPT-style sequence packing: concatenate documents in `id` order
     * within each `streams` cell and cut the token stream every
     * `chunkTokens` tokens; each row gains a `chunk` column — the
     * zero-based chunk holding the document's first token. Group the
-    * result by (streams, chunk) for the packer manifest. Packing is
-    * inherently sequential, so `streams` IS the scale knob: an empty
-    * seq runs one global prefix-sum window (fine for corpora that fit
-    * a task); production shards into ~partition-sized streams, e.g.
-    * `Seq(col("lang"), pmod(col("id"), lit(64)))` — q_llm_pack's
-    * shard note. */
+    * result by (streams, chunk) for the packer manifest. `streams` IS
+    * the scale knob: an empty seq runs one global prefix-sum window;
+    * production shards into ~partition-sized streams, e.g.
+    * `Seq(col("lang"), pmod(col("id"), lit(64)))`. A NULL token count
+    * raises. */
   def packSequences(docs: DataFrame, id: String, nTokens: Column,
                     chunkTokens: Int,
                     streams: Seq[Column] = Nil): DataFrame = {
     require(chunkTokens > 0, "graft.packSequences: chunkTokens must be > 0")
     requireFresh(docs, "packSequences", "chunk")
-    // a NULL token count would silently vanish from the prefix sum,
-    // shifting every successor's chunk as if the doc were empty —
-    // fail loud instead (the facade's NULL convention); callers who
-    // MEAN zero say coalesce(n, 0) explicitly
-    val nt = when(nTokens.isNotNull, nTokens)
-      .otherwise(raise_error(lit("graft.packSequences: NULL token count " +
-        "— an unknown length cannot be packed; coalesce it explicitly " +
-        "if zero is intended")))
-    val w = Window.partitionBy(streams: _*).orderBy(col(id))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    docs.withColumn("chunk",
-      floor(coalesce(sum(nt).over(w), lit(0L)) /
-        lit(chunkTokens.toLong)).cast("long"))
+    ops.LlmTrain.chunkOver(docs, id, nTokens, chunkTokens, streams)
   }
 
   // ------------------------------------------------------- dedup apply

@@ -279,33 +279,40 @@ object Llm extends QueryModule {
   // ------------------------------------------------------ q_llm_sim_search
 
   /** Cosine top-k: query vectors (vec_id < 5) against the corpus
-    * (vec_id ≥ 5). Dot products via the native codegen `graft_dot`
-    * expression (functions/DotProduct.scala — a fused primitive loop;
-    * the zip_with+aggregate formulation runs interpreted); per-vector
-    * norms are computed ONCE before the join instead of per pair.
-    * Ranking uses the 1e-6-discretized cosine with vec_id tie-break
-    * so row order can't flip on a last-ulp disagreement. */
+    * (vec_id ≥ 5). */
   private def simSearch(s: SparkSession, d: String): DataFrame = {
     val emb = T.embeddings(s, d)
-      .select(col("vec_id"),
-        transform(col("embedding"), x => x.cast("double")).as("e"))
-      .withColumn("nrm", sqrt(expr("graft_dot(e, e)")))
-    val q = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("query_id"), col("e").as("qe"),
-        col("nrm").as("qn"))
-    val c = emb.filter(col("vec_id") >= 5)
-      .select(col("vec_id").as("match_id"), col("e").as("ce"),
-        col("nrm").as("cn"))
+    cosineTopKOver(
+        emb.filter(col("vec_id") < 5)
+          .select(col("vec_id").as("query_id"), col("embedding").as("qe")),
+        emb.filter(col("vec_id") >= 5)
+          .select(col("vec_id").as("match_id"), col("embedding").as("ce")),
+        10)
+      .orderBy(col("query_id"), col("rank"))
+  }
+
+  /** The body of q_llm_sim_search and `Graft.cosineTopK`: broadcast
+    * `(query_id, qe)` rows × `(match_id, ce)` numeric-array rows on the
+    * native `graft_dot` (a fused loop), norms once per row. Zero-norm
+    * vectors are dropped: 0/0 = NaN sorts above every cosine (review
+    * r12). The double cast is an array `cast`, not a `transform`: the
+    * norm filter is pushed into the scan, and a lambda there would
+    * drop it out of whole-stage codegen. */
+  private[graft] def cosineTopKOver(q: DataFrame, c: DataFrame, k: Int)
+      : DataFrame = {
+    val qn = q.withColumn("qe", col("qe").cast("array<double>"))
+      .withColumn("qn", sqrt(expr("graft_dot(qe, qe)")))
+      .filter(col("qn") > 0)
+    val cn = c.withColumn("ce", col("ce").cast("array<double>"))
+      .withColumn("cn", sqrt(expr("graft_dot(ce, ce)")))
+      .filter(col("cn") > 0)
     val cos = expr("graft_dot(qe, ce)") / (col("qn") * col("cn"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_key").desc, col("match_id"))
-    broadcast(q).crossJoin(c)
+    broadcast(qn).crossJoin(cn)
       .select(col("query_id"), col("match_id"), Det.r6(cos).as("cos_key"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= 10)
+      .transform(Relational.topKOver(_, Seq(col("query_id")),
+        Seq(col("cos_key").desc, col("match_id")), k, "rank"))
       .select(col("query_id"), col("rank"), col("match_id"),
         Det.r4(col("cos_key")).as("cos_sim"))
-      .orderBy(col("query_id"), col("rank"))
   }
 
   private val simSearchSql =

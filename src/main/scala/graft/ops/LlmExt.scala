@@ -66,11 +66,12 @@ object LlmExt extends QueryModule {
     // branchy ±1 CASE sums — half the aggregation buffers, and each
     // update is straight-line long arithmetic (this aggregation was
     // the top executor-CPU stage of all six simhash-graph consumers:
-    // 5–9 CPU-s per query at sf0.1). Lanes cannot carry into each
-    // other: each lane accumulates c_k ≤ n, and n (words per doc) is
-    // < 2^31 (a 2 GB string bound), so lane 0 stays < 2^32 and the
-    // packed long sum < 2^63. SimhashFpFormSpec pins bit-identity
-    // against the ±1 formulation.
+    // 5–9 CPU-s per query at sf0.1). No lane carries or overflows:
+    // c_k ≤ n, the length of one doc's `split` array, and a JVM array
+    // holds at most 2^31 − 1 (the strict bound matters: separator-only
+    // text gives n empty tokens sharing every bit), so lane 0 < 2^32,
+    // lane 32 < 2^31 and the packed sum < 2^63. SimhashFpFormSpec pins
+    // bit-identity against the ±1 formulation.
     val lanes = (0 until SimBits / 2).map(k =>
       sum(shiftright(wh, k).bitwiseAND(lit(0x0000000100000001L)))
         .as(s"s$k"))

@@ -27,9 +27,8 @@ object LlmPipe extends QueryModule {
     * email + phone counts, redacted length, and the redacted tail as
     * evidence. Patterns stick to RE2-∩-Java syntax (character
     * classes, +, {n} — no lookarounds) so Spark and DuckDB compile
-    * the same automaton. Map-side scan; at 100 TB this fuses into
-    * whatever pass already reads the text (codegen'd regexes, no
-    * shuffle, no UDF). */
+    * the same automaton. The two patterns cannot overlap, so
+    * [[scrubOver]]'s progressive counts equal the oracle's. */
   private def pii(s: SparkSession, d: String): DataFrame = {
     val email = "[a-z0-9]+@[a-z]+\\.[a-z]+"
     val phone = "\\+1-555-[0-9]{4}"
@@ -44,19 +43,49 @@ object LlmPipe extends QueryModule {
     // once, after the one exchange, instead of also inside a trailing
     // orderBy's range sampler.
     Llm.docsRange(s, d)
+      .select(col("doc_id"), contact.as("red"))
+      .transform(scrubOver(_, "red", Seq("EMAIL" -> email, "PHONE" -> phone)))
       .select(col("doc_id"),
-        size(regexp_extract_all(contact, lit(email), lit(0)))
-          .cast("long").as("n_emails"),
-        size(regexp_extract_all(contact, lit(phone), lit(0)))
-          .cast("long").as("n_phones"),
-        regexp_replace(regexp_replace(contact, lit(email), lit("[EMAIL]")),
-          lit(phone), lit("[PHONE]")).as("red"))
-      .select(col("doc_id"), col("n_emails"), col("n_phones"),
+        col("pii_counts")("EMAIL").as("n_emails"),
+        col("pii_counts")("PHONE").as("n_phones"),
         length(col("red")).cast("long").as("n_chars_redacted"),
         // right() has no Scala-functions binding — SQL fragment over
         // the named column
         expr("right(red, 48)").as("tail"))
       .sortWithinPartitions(col("doc_id"))
+  }
+
+  /** The columns [[scrubOver]] appends or uses internally. */
+  private[graft] def scrubColumns(patterns: Seq[(String, String)]): Seq[String] =
+    "pii_counts" +: "__pii_cur" +: patterns.indices.map(i => s"__pii_n_$i")
+
+  /** The body of q_llm_pii and `Graft.scrubPii`: replace each
+    * (name, pattern)'s matches in `text` by the literal `[name]`, in
+    * order, counting them into a `pii_counts` map on the PROGRESSIVELY
+    * scrubbed text, so an EMAIL whose domain holds a phone-shaped run
+    * is not also a PHONE. Each step is its own ALIASED column, which
+    * CollapseProject keeps as a separate projection: each regex runs
+    * ONCE per row, not quadratically in pattern count (review r13). */
+  private[graft] def scrubOver(docs: DataFrame, text: String,
+                               patterns: Seq[(String, String)]): DataFrame = {
+    // regexp_replace reads '$'/'\' as group references
+    def literal(name: String): String =
+      s"[$name]".replace("\\", "\\\\").replace("$", "\\$")
+    val stepped = patterns.zipWithIndex.foldLeft(
+      docs.withColumn("__pii_cur", col(text))) {
+      case (df, ((name, p), i)) =>
+        df.withColumn(s"__pii_n_$i",
+            size(regexp_extract_all(col("__pii_cur"), lit(p), lit(0)))
+              .cast("long"))
+          .withColumn("__pii_cur",
+            regexp_replace(col("__pii_cur"), lit(p), lit(literal(name))))
+    }
+    val counts = patterns.zipWithIndex.flatMap { case ((name, _), i) =>
+      Seq(lit(name), col(s"__pii_n_$i"))
+    }
+    stepped.withColumn("pii_counts", map(counts: _*))
+      .withColumn(text, col("__pii_cur"))
+      .drop(scrubColumns(patterns).tail: _*)
   }
 
   private val piiSql =

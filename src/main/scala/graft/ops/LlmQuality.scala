@@ -458,36 +458,39 @@ object LlmQuality extends QueryModule {
     * tiny, so the eval-set gram index BROADCASTS and the full training
     * corpus streams once map-side against it — no shuffle touches the
     * training set (the (train,eval,h) join output is |collisions|,
-    * not |corpus|). Here eval and train are carved from ONE corpus by
-    * the mod-7 split (a test artifact — in production the eval suite
-    * is its own small table), so the gram build is checkpointed once
-    * rather than re-run per side; with separate tables each side is
-    * scanned exactly once and no materialization is needed.
-    * Grams are xxhash64 longs as in dedupNgram; the oracle joins the
-    * string grams directly. */
+    * not |corpus|). The one-corpus mod-7 split is a test artifact: in
+    * production the eval suite is its own small table, each side is
+    * scanned once and no checkpoint is needed. Grams are xxhash64
+    * longs as in dedupNgram; the oracle joins the string grams. */
   private def decontaminate(s: SparkSession, d: String): DataFrame = {
-    // checkpoint the exploded gram table: eval and train sides both
-    // read it, and without materialization each side re-runs the
-    // 8-gram hash build over the full corpus scan (2× the query's CPU)
+    val (trainG, evalG) = modSplitGrams(s, d)
+    sharedGramPairs(trainG, evalG).orderBy(col("train_id"), col("eval_id"))
+  }
+
+  /** `(train (train_id, h), eval (eval_id, h))` 8-gram tables of the
+    * mod-7 split, checkpointed once so both sides don't re-run the
+    * gram build (2× the query's CPU); shared with the bloom variant. */
+  private[ops] def modSplitGrams(s: SparkSession, d: String)
+      : (DataFrame, DataFrame) = {
     val grams = Llm.docs(s, d)
       .select(col("doc_id"), col("doc_id").mod(7).as("m"),
         explode(ngramHashes("text", 8)).as("h"))
       .transform(Staged.checkpoint)
-    val evalG = grams.filter(col("m") === 0)
-      .select(col("doc_id").as("eval_id"), col("h"))
-    val trainG = grams.filter(col("m") =!= 0)
-      .select(col("doc_id").as("train_id"), col("h"))
-    trainG.join(broadcast(evalG), "h")
-      .groupBy(col("train_id"), col("eval_id"))
-      .agg(count(lit(1)).as("n_shared"))
-      .orderBy(col("train_id"), col("eval_id"))
+    (grams.filter(col("m") =!= 0).select(col("doc_id").as("train_id"), col("h")),
+      grams.filter(col("m") === 0).select(col("doc_id").as("eval_id"), col("h")))
   }
 
-  /** Shared with q_llm_decontaminate_bloom (LlmTrain): the bloom
-    * variant is exact, so its ground truth is this same SQL. */
-  private[ops] def decontaminateSqlShared: String = decontaminateSql
+  /** Every (train_id, eval_id) pair sharing a gram `h`, counted as
+    * `n_shared`, eval side broadcast; also `Graft.decontaminate`'s. */
+  private[graft] def sharedGramPairs(train: DataFrame, eval: DataFrame)
+      : DataFrame =
+    train.join(broadcast(eval), "h")
+      .groupBy(col("train_id"), col("eval_id"))
+      .agg(count(lit(1)).as("n_shared"))
 
-  private val decontaminateSql =
+  /** Also q_llm_decontaminate_bloom's oracle: the bloom variant is
+    * exact, so its ground truth is this same SQL. */
+  private[ops] val decontaminateSql =
     """WITH g AS (
       |  SELECT doc_id, doc_id % 7 AS m,
       |         unnest(list_distinct(list_transform(range(1, len(w) - 6),
@@ -677,31 +680,31 @@ object LlmQuality extends QueryModule {
     * The domain reuses q_llm_dedup_url's synthesized host universe
     * (site{id%7}.example.com — a pure function of doc_id).
     *
-    * Scale shape: written declaratively as row_number-then-filter, so
-    * Spark's `InferWindowGroupLimit` plans a partial `WindowGroupLimit`
-    * MAP-SIDE, before the exchange: each map task ships at most
-    * `DomainCap` rows per domain it sees, so a billion-page host is
-    * pruned where it is read, and the shuffle volume is ≤
-    * tasks×domains×cap rows regardless of domain skew. The partial
-    * limit reads its input sorted, so each map task sorts (and, when
-    * large, spills) its own rows first. That bound holds
-    * for caps ≤ `spark.sql.optimizer.windowGroupLimitThreshold` (Spark's
-    * default 1000); above it Spark plans the plain window, which sorts
-    * each domain whole on one task. Spec-asserted that the partial limit
-    * sits below the exchange and that the kept set matches a
-    * brute-force recompute. */
+    * Scale shape: [[Relational.topKOver]]'s map-side partial limit, so
+    * a billion-page host is pruned where it is read. Spec-asserted that
+    * the partial limit sits below the exchange and that the kept set
+    * matches a brute-force recompute. */
   private def domainCap(s: SparkSession, d: String): DataFrame = {
     val DomainCap = 20
     val id = col("doc_id")
-    val domain = concat(lit("site"), id % 7, lit(".example.com"))
-    val h = expr("graft_hash60(cast(doc_id as string))")
-    val w = Window.partitionBy(col("domain")).orderBy(col("h"), col("doc_id"))
     Llm.docs(s, d)
-      .select(id, domain.as("domain"), h.as("h"))
-      .withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= DomainCap)
+      .select(id, concat(lit("site"), id % 7, lit(".example.com")).as("domain"))
+      .transform(hashCapOver(_, "doc_id", "domain", DomainCap, "rn"))
       .select(col("domain"), col("rn"), col("doc_id"))
       .orderBy(col("domain"), col("rn"))
+  }
+
+  /** The body of q_llm_domain_cap and `Graft.capPerDomain`: at most
+    * `cap` rows per `domain`, by the 60-bit md5 rank of `id`, appended
+    * as `rank`. NULL ids raise. */
+  private[graft] def hashCapOver(docs: DataFrame, id: String, domain: String,
+                                 cap: Int, rank: String): DataFrame = {
+    val h = when(col(id).isNotNull,
+      call_function("graft_hash60", col(id).cast("string")))
+      .otherwise(raise_error(lit(
+        s"graft.capPerDomain: NULL $id — a null key has no hash rank; " +
+          "filter or fill it first")))
+    Relational.topKOver(docs, Seq(col(domain)), Seq(h, col(id)), cap, rank)
   }
 
   private val domainCapSql =

@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.{QueryModule, Tables => T}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -30,25 +30,36 @@ object LlmTrain extends QueryModule {
     * executor; production would size shards to ~partition volume).
     * Output: per-chunk document count, token count, and doc-id span —
     * the manifest a packer job would hand the tokenizer. */
-  private def pack(s: SparkSession, d: String): DataFrame = {
-    val toks = Llm.docs(s, d)
+  private def pack(s: SparkSession, d: String): DataFrame =
+    Llm.docs(s, d)
       .select(col("doc_id"), col("lang"),
         pmod(col("doc_id"), lit(PackShards)).cast("long").as("shard"),
         size(split(col("text"), " ")).cast("long").as("n_tokens"))
-    // exclusive running prefix = tokens before this doc in its stream
-    val w = Window.partitionBy(col("lang"), col("shard"))
-      .orderBy(col("doc_id"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    toks
-      .withColumn("start", coalesce(sum(col("n_tokens")).over(w), lit(0L)))
-      .withColumn("chunk",
-        floor(col("start") / lit(ChunkTokens)).cast("long"))
+      .transform(chunkOver(_, "doc_id", col("n_tokens"), ChunkTokens,
+        Seq(col("lang"), col("shard"))))
       .groupBy(col("lang"), col("shard"), col("chunk"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_tokens")).as("chunk_tokens"),
         min(col("doc_id")).as("first_doc"),
         max(col("doc_id")).as("last_doc"))
       .orderBy(col("lang"), col("shard"), col("chunk"))
+
+  /** The body of q_llm_pack and `Graft.packSequences`: appends
+    * `chunk`, the exclusive token prefix in `id` order per `streams`
+    * cell over `chunkTokens`. A NULL count would silently shift every
+    * successor's chunk, so it raises. */
+  private[graft] def chunkOver(docs: DataFrame, id: String, nTokens: Column,
+                               chunkTokens: Int, streams: Seq[Column])
+      : DataFrame = {
+    val nt = when(nTokens.isNotNull, nTokens)
+      .otherwise(raise_error(lit("graft.packSequences: NULL token count " +
+        "— an unknown length cannot be packed; coalesce it explicitly " +
+        "if zero is intended")))
+    val w = Window.partitionBy(streams: _*).orderBy(col(id))
+      .rowsBetween(Window.unboundedPreceding, -1)
+    docs.withColumn("chunk",
+      floor(coalesce(sum(nt).over(w), lit(0L)) /
+        lit(chunkTokens.toLong)).cast("long"))
   }
 
   private val packSql =
@@ -122,19 +133,11 @@ object LlmTrain extends QueryModule {
     * training corpus is then filtered map-side (`graft_bloom_contains`
     * = BloomFilterMightContain) so the exact join only ever sees the
     * ~|collisions| surviving rows, not |corpus| grams. No false
-    * negatives (bloom guarantee) + exact residual join ⇒ output is
-    * IDENTICAL to q_llm_decontaminate — the oracle is literally the
-    * same SQL — while the shuffled volume drops from every training
-    * gram to the bloom's ~1% false-positive leak. */
+    * negatives + the same exact pair count ⇒ output IDENTICAL to
+    * q_llm_decontaminate (same oracle SQL), while the shuffled volume
+    * drops to the bloom's ~1% false-positive leak. */
   private def decontaminateBloom(s: SparkSession, d: String): DataFrame = {
-    val grams = Llm.docs(s, d)
-      .select(col("doc_id"), col("doc_id").mod(7).as("m"),
-        explode(LlmQuality.ngramHashes("text", 8)).as("h"))
-      .transform(Staged.checkpoint)
-    val evalG = grams.filter(col("m") === 0)
-      .select(col("doc_id").as("eval_id"), col("h"))
-    val trainG = grams.filter(col("m") =!= 0)
-      .select(col("doc_id").as("train_id"), col("h"))
+    val (trainG, evalG) = LlmQuality.modSplitGrams(s, d)
     // build the bloom once, driver-side (it IS the distributable
     // artifact — ~0.5 MB for 500k estimated grams at ~1% fpp)
     val bf = evalG
@@ -145,9 +148,7 @@ object LlmTrain extends QueryModule {
       if (bf == null) trainG.filter(lit(false)) // empty eval set
       else trainG.filter(
         call_function("graft_bloom_contains", lit(bf), col("h")))
-    pre.join(broadcast(evalG), "h")
-      .groupBy(col("train_id"), col("eval_id"))
-      .agg(count(lit(1)).as("n_shared"))
+    LlmQuality.sharedGramPairs(pre, evalG)
       .orderBy(col("train_id"), col("eval_id"))
   }
 
@@ -401,7 +402,7 @@ object LlmTrain extends QueryModule {
     "q_llm_chunk" -> chunkSql,
     // exactness: the bloom is a pre-filter, not an approximation —
     // ground truth is the same exact-join SQL as q_llm_decontaminate
-    "q_llm_decontaminate_bloom" -> LlmQuality.decontaminateSqlShared,
+    "q_llm_decontaminate_bloom" -> LlmQuality.decontaminateSql,
     "q_llm_kmeans" -> kmeansSql,
     "q_sample_stratified" -> sampleStratifiedSql,
     "q_llm_sample_importance" -> sampleImportanceSql,

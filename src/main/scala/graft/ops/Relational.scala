@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.{Gate, QueryModule, Tables => T}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -685,22 +685,30 @@ object Relational extends QueryModule {
     """SELECT o_orderkey, floor((o_totalprice) * 100 + 0.5) / 100 AS price, o_orderpriority
       |FROM orders ORDER BY o_totalprice DESC, o_orderkey LIMIT 50""".stripMargin
 
-  /** Top-k per group, written declaratively as row_number-then-filter.
-    * Spark's `InferWindowGroupLimit` plans the shape as a partial
-    * `WindowGroupLimit` → exchange → sort → final `WindowGroupLimit` →
-    * window → filter: each map task keeps at most k rows per group, so
-    * only survivors are shuffled, on any session (k ≤
-    * `spark.sql.optimizer.windowGroupLimitThreshold`, default 1000). */
+  /** Top-k per group through [[topKOver]]. */
   private def topkPerGroup(s: SparkSession, d: String): DataFrame = {
-    val w = Window.partitionBy(col("o_custkey"))
-      .orderBy(col("o_totalprice").desc, col("o_orderkey"))
     T.orders(s, d)
-      .withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= 3)
+      .transform(topKOver(_, Seq(col("o_custkey")),
+        Seq(col("o_totalprice").desc, col("o_orderkey")), 3, "rn"))
       .select(col("o_custkey"), col("rn"), col("o_orderkey"),
         Det.r2(col("o_totalprice")).as("price"))
       .orderBy(col("o_custkey"), col("rn"))
   }
+
+  /** The top `k` rows per `keys` group under `order`, the row number
+    * appended as the long column `rank`. `InferWindowGroupLimit` plans
+    * it as sort → partial `WindowGroupLimit` → exchange → sort → final
+    * limit → window: each map task ships ≤ k rows per group whatever
+    * the skew, for k ≤ `spark.sql.optimizer.windowGroupLimitThreshold`
+    * (1000). Shared by q_topk_per_group, q_llm_domain_cap,
+    * q_llm_sim_search and their facade methods. */
+  private[graft] def topKOver(df: DataFrame, keys: Seq[Column],
+                              order: Seq[Column], k: Int, rank: String)
+      : DataFrame =
+    df.withColumn(rank,
+        row_number().over(Window.partitionBy(keys: _*).orderBy(order: _*))
+          .cast("long"))
+      .filter(col(rank) <= k)
 
   private val topkPerGroupSql =
     """SELECT o_custkey, rn, o_orderkey, price FROM (
