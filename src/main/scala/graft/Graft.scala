@@ -180,7 +180,8 @@ object Graft {
   /** Top k rows per group, ordered by `order` (append tie-break
     * columns to make the cut deterministic). The shuffle is bounded by
     * k·|groups| per map task regardless of skew, for k ≤
-    * `spark.sql.optimizer.windowGroupLimitThreshold` (default 1000). */
+    * `spark.sql.optimizer.windowGroupLimitThreshold` (default 1000);
+    * a larger k plans the plain window (correct, unbounded). */
   def topKPerGroup(df: DataFrame, keys: Seq[Column], order: Seq[Column],
                    k: Int): DataFrame = {
     // collision-proof temp name: first __graft_rankN the frame lacks
