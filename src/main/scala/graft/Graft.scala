@@ -282,7 +282,7 @@ object Graft {
     registerFunctions(vectors.sparkSession)
     ops.LlmExt.semdedupOver(
       vectors.select(longId(col(id), "semanticDedup").as("vec_id"),
-        transform(col(vec), x => x.cast("double")).as("e")),
+        ops.Llm.widen(col(vec)).as("e")),
       minCosine)
   }
 
@@ -329,7 +329,7 @@ object Graft {
     registerFunctions(vectors.sparkSession)
     ops.LlmExt.ivfTopKOver(
       vectors.select(longId(col(id), "ivfTopK").as("vec_id"),
-        transform(col(vec), x => x.cast("double")).as("e"),
+        ops.Llm.widen(col(vec)).as("e"),
         isQuery.as("qf")),
       k, nprobe)
   }

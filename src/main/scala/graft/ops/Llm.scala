@@ -3,7 +3,6 @@ package graft.ops
 import graft.{QueryModule, Tables => T}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
 /** LLM-training-data pipeline operators (SURVEY.md §2B north star) over
   * the `documents` / `embeddings` tables: exact + fuzzy deduplication,
@@ -28,6 +27,13 @@ import org.apache.spark.sql.expressions.Window
 object Llm extends QueryModule {
 
   private def words(c: Column): Column = split(c, " ")
+
+  /** A numeric array widened to array<double> by one array `cast`, which
+    * stays inside whole-stage codegen. A `transform(_, x =>
+    * x.cast("double"))` lambda gives the same doubles but is
+    * CodegenFallback: it takes its projection out of codegen, and a
+    * filter pushed through it into the scan evaluates it again there. */
+  private[graft] def widen(c: Column): Column = c.cast("array<double>")
 
   /** documents scan with forced parallelism: the test table is ONE
     * parquet file → one input partition, which would serialize every
@@ -80,30 +86,71 @@ object Llm extends QueryModule {
 
   private[graft] def bucketPairs(df: DataFrame, keys: Seq[Column],
                                  member: Column): DataFrame =
-    df.groupBy(keys: _*)
-      // DISTINCT members: a value appearing twice in a bucket would
-      // otherwise pair with itself, emitting da == db and violating
-      // the documented da < db contract (review r12; the scored paths
-      // pre-collapse to distinct classes, so this is identity there)
-      .agg(array_distinct(sort_array(collect_list(member))).as("members"))
-      .filter(size(col("members")) > 1)
-      // key rendered via concat_ws, NOT to_json: StructsToJson is
-      // CodegenFallback and would drag this whole projection — the
-      // hot pair-expansion transform below included — into
-      // interpreted evaluation (measured 2× on every LSH dedup)
-      .withColumn("members",
-        when(size(col("members")) <= MaxBucket, col("members"))
-          .otherwise(raise_error(concat(
-            lit(s"graft.bucketPairs: bucket exceeds $MaxBucket members " +
-              "(degenerate near-duplicate cluster; run exact dedup first) " +
-              "at key "),
-            concat_ws(",", keys.map(_.cast("string")): _*)))))
-      .select(explode(expr(
-        "flatten(transform(members, (x, i) -> " +
-          "transform(slice(members, i + 2, size(members)), y -> struct(x, y))))"))
-        .as("p"))
+    classesOf(df, keys, member)
+      .filter(col("m") > 1)
+      .select(explode(classPairs(col("ids"), keys)).as("p"))
       .select(col("p.x"), col("p.y"))
       .distinct()
+
+  // ------------------------------------------------------------ class kit
+
+  /** Exact-content class collapse of the near-duplicate family
+    * (q_llm_dedup_fuzzy/_ngram/_simhash/_embed, q_llm_semdedup, the
+    * simhash class graph): one row per class key with `ids` (sorted,
+    * DISTINCT members), `rep` (the min member) and `m` (the member
+    * count, long).
+    *
+    * Why collapse BEFORE blocking and verification: verbatim
+    * duplicates share every feature, so member-level blocking inflates
+    * each bucket linearly with the duplication factor (10 corpus copies
+    * — heavy crawl duplication, or the sf1 scale harness — trip
+    * MaxBucket although the DISTINCT near-dup geometry is unchanged)
+    * and re-verifies one class pair |class_a|·|class_b| times for one
+    * answer. Blocking and verification run over one representative per
+    * class; member pairs re-expand afterwards ([[classPairs]] within a
+    * class, [[expandClassPairs]] across a verified class pair), so the
+    * work tracks distinct-content geometry and the output is unchanged
+    * (DedupCollapseSpec, SimhashDupSpec and SemdedupCollapseSpec pin
+    * the exact expansion). Members are distinct because a value
+    * repeated under one key would otherwise pair with itself, emitting
+    * da == db against the da < db contract (review r12). */
+  private[graft] def classesOf(df: DataFrame, keys: Seq[Column],
+                               member: Column): DataFrame =
+    df.groupBy(keys: _*)
+      .agg(array_distinct(sort_array(collect_list(member))).as("ids"))
+      .select((keys :+ col("ids")) ++ Seq(element_at(col("ids"), 1).as("rep"),
+        size(col("ids")).cast("long").as("m")): _*)
+
+  /** Every unordered pair `struct(x, y)` (x < y) of a sorted, distinct
+    * `ids` array, expanded in-array — no regrouping. An array over
+    * [[MaxBucket]] members fails with the class `keys` in the message
+    * (rendered via concat_ws, NOT to_json: StructsToJson is
+    * CodegenFallback and would drag the whole projection into
+    * interpreted evaluation — measured 2× on every LSH dedup). */
+  private[graft] def classPairs(ids: Column, keys: Seq[Column]): Column = {
+    val guarded = when(size(ids) <= MaxBucket, ids)
+      .otherwise(raise_error(concat(
+        lit(s"graft.bucketPairs: bucket exceeds $MaxBucket members " +
+          "(degenerate near-duplicate cluster; run exact dedup first) " +
+          "at key "),
+        concat_ws(",", keys.map(_.cast("string")): _*))))
+    flatten(transform(guarded, (x, i) =>
+      transform(slice(ids, i + 2, size(ids)), y => struct(x.as("x"), y.as("y")))))
+  }
+
+  /** m×n re-expansion of verified class pairs: one row per member pair of
+    * the `xs` × `ys` id arrays, as (`a`, `b`) with `carry` columns kept.
+    * The classes are disjoint, so least/greatest restores the global
+    * a < b order. */
+  private[graft] def expandClassPairs(df: DataFrame, xs: String, ys: String,
+                                      a: String, b: String,
+                                      carry: String*): DataFrame = {
+    val kept = carry.map(col)
+    df.select(kept ++ Seq(explode(col(xs)).as("__a"), col(ys)): _*)
+      .select(kept ++ Seq(col("__a"), explode(col(ys)).as("__b")): _*)
+      .select(kept ++ Seq(least(col("__a"), col("__b")).as(a),
+        greatest(col("__a"), col("__b")).as(b)): _*)
+  }
 
   /** Distinct word-3-shingle HASHES of a text column, via the native
     * codegen [[graft.functions.NgramHash]] expression (one pass, no
@@ -169,28 +216,16 @@ object Llm extends QueryModule {
   private[graft] def fuzzyPairsOver(docsF: DataFrame,
                                     minJaccard: Double = 0.5): DataFrame = {
     val nBands = 4
-    // Exact-content collapse BEFORE the LSH — the dedupSimhash
-    // composition, keyed here by the full shingle SET (the signature
+    // Class kit collapse keyed by the full shingle SET (the signature
     // alone would under-distinguish: equal signatures with different
-    // sets must still verify separately). Verbatim duplicates share
-    // the set, hence the signature, so doc-level banding inflates
-    // every bucket linearly with the duplication factor and pays the
-    // exact-Jaccard verification |class_a|·|class_b| times for the
-    // same answer — superlinear on sf1's 10-way dup harness (and on
-    // any real crawl snapshot). Band and verify ONE representative
-    // per class; re-expand member pairs afterwards. Verification work
-    // drops with the square of the duplication factor; output is
-    // unchanged (FuzzyDupSpec pins the exact expansion).
-    // sort_array canonicalizes the class key to the shingle SET
-    // (round-10 advice): without it, token-permuted docs with
-    // identical shingle sets land in separate classes — output stays
-    // correct via the LSH cross branch (equal sets ⇒ equal
-    // signatures), but the collapse is weaker than the set-keyed
-    // claim. Matches dedupNgram's canonicalization.
-    val groups = docsF
-      .select(col("doc_id"), sort_array(shingles3("text")).as("g"))
-      .groupBy(col("g"))
-      .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
+    // sets must still verify separately). sort_array canonicalizes the
+    // key to the SET (round-10 advice): without it, token-permuted docs
+    // with identical shingle sets land in separate classes — output
+    // stays correct via the LSH cross branch (equal sets ⇒ equal
+    // signatures), but the collapse is weaker. Matches dedupNgram.
+    val groups = classesOf(
+        docsF.select(col("doc_id"), sort_array(shingles3("text")).as("g")),
+        Seq(col("g")), col("doc_id"))
       // reused by both branches + the rep join — materialize once;
       // registered with Staged so the blocks release at the owner's
       // query boundary instead of waiting on driver GC
@@ -198,11 +233,9 @@ object Llm extends QueryModule {
     // Branch 1 — identical-content pairs: J = 1 exactly. Empty
     // shingle sets (< 3 tokens) are excluded on both engines (the
     // oracle's 0/0 division is NULL; here they never reach a band).
-    val identical = bucketPairs(
-        groups.filter(size(col("g")) > 0)
-          .select(col("g"), explode(col("ids")).as("doc_id")),
-        Seq(col("g")), col("doc_id"))
-      .select(col("x").as("da"), col("y").as("db"),
+    val identical = groups.filter(size(col("g")) > 0 && col("m") > 1)
+      .select(explode(classPairs(col("ids"), Seq(col("rep")))).as("p"))
+      .select(col("p.x").as("da"), col("p.y").as("db"),
         lit(1.0).as("jaccard"))
     // Branch 2 — cross-class pairs: LSH over one rep per class.
     // Explode the (already-hashed) shingle set, then derive all 12
@@ -211,8 +244,7 @@ object Llm extends QueryModule {
     // array_min(transform(g, ...)) formulation gets projection-collapsed
     // by Catalyst into 12 copies of the shingle construction (measured
     // 9.3s → 2.4s at sf0.1). One shuffle of (rid, 12 longs).
-    val reps = groups.select(col("ids").getItem(0).as("rid"),
-      col("g"), col("ids"))
+    val reps = groups.select(col("rep").as("rid"), col("g"), col("ids"))
     val sigs = reps
       .select(col("rid"), explode(col("g")).as("h"))
       .groupBy(col("rid"))
@@ -242,12 +274,7 @@ object Llm extends QueryModule {
         Det.r4(inter / (size(col("ga")) + size(col("gb")) - inter))
           .as("jaccard"))
       .filter(col("jaccard") >= minJaccard)
-      // m×n re-expansion of the verified class pair (disjoint member
-      // sets — least/greatest restores the global da < db invariant)
-      .select(explode(col("xs")).as("a"), col("ys"), col("jaccard"))
-      .select(col("a"), explode(col("ys")).as("b"), col("jaccard"))
-      .select(least(col("a"), col("b")).as("da"),
-        greatest(col("a"), col("b")).as("db"), col("jaccard"))
+      .transform(expandClassPairs(_, "xs", "ys", "da", "db", "jaccard"))
     identical.unionByName(cross).orderBy(col("da"), col("db"))
   }
 
@@ -295,15 +322,14 @@ object Llm extends QueryModule {
     * `(query_id, qe)` rows × `(match_id, ce)` numeric-array rows on the
     * native `graft_dot` (a fused loop), norms once per row. Zero-norm
     * vectors are dropped: 0/0 = NaN sorts above every cosine (review
-    * r12). The double cast is an array `cast`, not a `transform`: the
-    * norm filter is pushed into the scan, and a lambda there would
-    * drop it out of whole-stage codegen. */
+    * r12). The norm filter is pushed into the scan, so the double cast
+    * is [[widen]], not a lambda. */
   private[graft] def cosineTopKOver(q: DataFrame, c: DataFrame, k: Int)
       : DataFrame = {
-    val qn = q.withColumn("qe", col("qe").cast("array<double>"))
+    val qn = q.withColumn("qe", widen(col("qe")))
       .withColumn("qn", sqrt(expr("graft_dot(qe, qe)")))
       .filter(col("qn") > 0)
-    val cn = c.withColumn("ce", col("ce").cast("array<double>"))
+    val cn = c.withColumn("ce", widen(col("ce")))
       .withColumn("cn", sqrt(expr("graft_dot(ce, ce)")))
       .filter(col("cn") > 0)
     val cos = expr("graft_dot(qe, ce)") / (col("qn") * col("cn"))
@@ -338,17 +364,14 @@ object Llm extends QueryModule {
   /** Token analysis: explode → (lang, word) counts → top-10 words per
     * language. Map-side combine keeps the shuffle at vocabulary
     * cardinality, not token cardinality. */
-  private def textStats(s: SparkSession, d: String): DataFrame = {
-    val w = Window.partitionBy(col("lang"))
-      .orderBy(col("n").desc, col("word"))
+  private def textStats(s: SparkSession, d: String): DataFrame =
     docs(s, d)
       .select(col("lang"), explode(words(col("text"))).as("word"))
       .groupBy(col("lang"), col("word"))
       .agg(count(lit(1)).as("n"))
-      .withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= 10)
+      .transform(Relational.topKOver(_, Seq(col("lang")),
+        Seq(col("n").desc, col("word")), 10, "rn"))
       .orderBy(col("lang"), col("rn"))
-  }
 
   private val textStatsSql =
     """WITH tok AS (

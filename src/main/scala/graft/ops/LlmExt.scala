@@ -112,66 +112,51 @@ object LlmExt extends QueryModule {
     * SimhashDupSpec pins. */
   private[graft] def simhashClassGraph(s: SparkSession, d: String)
       : (DataFrame, DataFrame) = {
-    val classes = simhashFps(s, d).groupBy(col("fp"))
-      .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
-      .select(col("fp"), element_at(col("ids"), 1).as("rep"),
-        col("ids"), size(col("ids")).cast("long").as("m"))
+    val classes = Llm.classesOf(simhashFps(s, d), Seq(col("fp")), col("doc_id"))
       .transform(Staged.checkpointLazy)
-    val bands = classes.select(col("fp"), col("rep"),
+    val classEdges = bandedClassPairs(classes, "rep")
+      .select(col("x").as("ra"), col("y").as("rb"))
+    (classes.select(col("rep"), col("ids"), col("m")), classEdges)
+  }
+
+  /** Class pairs at fingerprint hamming 1..3, found by banding each
+    * class's `fp` into 4×16-bit keys: a pair at Hamming distance ≤ 3
+    * differs in ≤ 3 bands, so one band matches (pigeonhole recall, an
+    * fp-level argument the class collapse leaves untouched). The
+    * `payload` column rides through the buckets and comes out as
+    * (`x`, `y`, `hamming`); hamming 0 never crosses classes. */
+  private def bandedClassPairs(classes: DataFrame, payload: String)
+      : DataFrame = {
+    val bands = classes.select(col("fp"), col(payload),
       explode(array((0 until 4).map(b =>
         struct(lit(b).as("b"),
           shiftright(col("fp"), 16 * b).bitwiseAND(lit(65535L)).as("k"))): _*))
         .as("bk"))
-      .select(col("fp"), col("rep"), col("bk.b"), col("bk.k"))
-    val classEdges = Llm.bucketPairs(bands, Seq(col("b"), col("k")),
-        struct(col("fp"), col("rep")))
-      .select(col("x.rep").as("ra"), col("y.rep").as("rb"),
+      .select(col("fp"), col(payload), col("bk.b"), col("bk.k"))
+    Llm.bucketPairs(bands, Seq(col("b"), col("k")),
+        struct(col("fp"), col(payload)))
+      .select(col(s"x.$payload").as("x"), col(s"y.$payload").as("y"),
         bit_count(col("x.fp").bitwiseXOR(col("y.fp"))).cast("long")
           .as("hamming"))
       .filter(col("hamming") <= 3)
-      .select(col("ra"), col("rb"))
-    (classes.select(col("rep"), col("ids"), col("m")), classEdges)
   }
 
   /** q_llm_dedup_simhash's pair set — the expanded graph the
     * distributed side of the iterative graph queries (LlmPipe) loops
     * over, so every operator shares one definition of "near-duplicate
-    * pair". */
+    * pair". Class kit collapse per fingerprint (the composition the
+    * bucketPairs guard message prescribes); the bands carry each
+    * class's member list, so the re-expansion needs no join back. */
   private[graft] def dedupSimhash(s: SparkSession, d: String): DataFrame = {
-    val fps = simhashFps(s, d)
-    // Exact-duplicate collapse BEFORE banding — the composition the
-    // bucketPairs guard message prescribes. Identical texts share a
-    // fingerprint, so doc-level banding lets every exact-dup class
-    // inflate its band buckets linearly with the duplication factor
-    // (10 verbatim corpus copies — heavy crawl duplication, or the
-    // sf1 scale harness — trips MaxBucket even though the DISTINCT
-    // near-dup geometry is unchanged). Band one row per distinct
-    // fingerprint and re-expand member pairs afterwards: candidate
-    // buckets are then bounded by distinct-content geometry alone.
-    // Pigeonhole recall is untouched (it is an fp-level argument).
-    //
-    // Branch 1 — hamming-0 pairs: every member pair of one
-    // fingerprint class (bucketPairs caps a class at MaxBucket:
-    // beyond that the prescribed collapse is q_llm_dedup_exact/apply).
-    val identical = Llm.bucketPairs(fps, Seq(col("fp")), col("doc_id"))
-      .select(col("x").as("da"), col("y").as("db"), lit(0L).as("hamming"))
-    // Branch 2 — cross-class pairs: band the distinct fingerprints,
-    // carrying each class's sorted member list through the bucket
-    // expansion so the final m×n re-expansion needs no join back.
-    val groups = fps.groupBy(col("fp"))
-      .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
-    val bands = groups.select(col("fp"), col("ids"),
-      explode(array((0 until 4).map(b =>
-        struct(lit(b).as("b"),
-          shiftright(col("fp"), 16 * b).bitwiseAND(lit(65535L)).as("k"))): _*))
-        .as("bk"))
-      .select(col("fp"), col("ids"), col("bk.b"), col("bk.k"))
-    val cross = Llm.bucketPairs(bands, Seq(col("b"), col("k")),
-        struct(col("fp"), col("ids")))
-      .select(col("x.ids").as("xs"), col("y.ids").as("ys"),
-        bit_count(col("x.fp").bitwiseXOR(col("y.fp"))).cast("long")
-          .as("hamming"))
-      .filter(col("hamming") <= 3) // ≥ 1 here: fps are distinct
+    val groups = Llm.classesOf(simhashFps(s, d), Seq(col("fp")), col("doc_id"))
+    // Branch 1 — hamming-0 pairs: every member pair of one fingerprint
+    // class (capped at MaxBucket: beyond that the prescribed collapse
+    // is q_llm_dedup_exact/apply)
+    val identical = groups.filter(col("m") > 1)
+      .select(explode(Llm.classPairs(col("ids"), Seq(col("fp")))).as("p"))
+      .select(col("p.x").as("da"), col("p.y").as("db"), lit(0L).as("hamming"))
+    // Branch 2 — cross-class pairs over the distinct fingerprints
+    val cross = bandedClassPairs(groups, "ids")
       // fan the m×n re-expansion out BEFORE the explodes: the class-
       // pair frame is post-aggregation small (AQE coalesces it to ~2
       // partitions by input bytes), but each row explodes to
@@ -181,10 +166,7 @@ object LlmExt extends QueryModule {
       // One tiny round-robin exchange buys output-proportional
       // parallelism — the T.par rationale, post-aggregation.
       .repartition(s.sparkContext.defaultParallelism)
-      .select(explode(col("xs")).as("a"), col("ys"), col("hamming"))
-      .select(col("a"), explode(col("ys")).as("b"), col("hamming"))
-      .select(least(col("a"), col("b")).as("da"),
-        greatest(col("a"), col("b")).as("db"), col("hamming"))
+      .transform(Llm.expandClassPairs(_, "x", "y", "da", "db", "hamming"))
     identical.unionByName(cross).orderBy(col("da"), col("db"))
   }
 
@@ -229,6 +211,57 @@ object LlmExt extends QueryModule {
       .cast("long")
   }
 
+  // ------------------------------------------------------ codebook kit
+  //
+  // Shared by q_llm_sim_ann's IVF training and probing
+  // (ivfCandidatesOver), q_llm_kmeans (LlmTrain.kmeansStep) and
+  // q_llm_semdedup's per-cell centroids. Each piece takes the name of
+  // the key column (a cell or a label) of the frame it works on.
+
+  /** Per-key centroid vectors `(key, cv)`: the vector column `e` is
+    * posexploded, `dim` aggregates each (key, dimension) and the
+    * components are reassembled in dimension order. Every column of
+    * `frame` but `e` is visible to `dim` (q_llm_semdedup weights by
+    * its class size `m`). posexplode + two aggs, not one fixed-width
+    * avg(element_at) agg: the fused aggregate cost more codegen than
+    * the exchange it saved (e2b033f). */
+  private[ops] def centroids(frame: DataFrame, key: String,
+                             dim: Column = Det.r6(avg(col("col"))))
+      : DataFrame =
+    frame.select(frame.columns.filter(_ != "e").map(col) :+
+        posexplode(col("e")): _*)
+      .groupBy(col(key), col("pos"))
+      .agg(dim.as("dv"))
+      .groupBy(col(key))
+      .agg(transform(array_sort(collect_list(struct(col("pos"), col("dv")))),
+        _.getField("dv")).as("cv"))
+
+  /** A ≤|keys|-row codebook packed into ONE array<struct<key, cv>> row
+    * `cbook` (key-sorted for a stable plan): an assignment becomes a
+    * per-row fold over the broadcast array instead of a |keys|×
+    * crossJoin expansion + a re-grouping exchange (the r14 profile
+    * showed the probe ladder spending 4.97 s wall at 0.9 executor-CPU-s
+    * across ~27 exchanges — pure per-job scheduling latency).
+    * coalesce(1) first: a global agg over a single-partition child
+    * satisfies AllTuples as-is, so the pack adds NO exchange (and no
+    * AQE stage) at any nesting level. */
+  private[ops] def packed(codebook: DataFrame, key: String): DataFrame =
+    codebook.coalesce(1)
+      .agg(array_sort(collect_list(struct(col(key), col("cv")))).as("cbook"))
+
+  /** `(d2, key)` per entry of the packed `cbook`, for the row's vector
+    * `e`: squared L2 by the dot-product expansion, the same arithmetic
+    * as the DuckDB oracles' list_dot_product form. array_min over it is
+    * the argmin, with the (d2, key) tie-break of a min(struct) agg;
+    * array_sort orders the nearest entries first. */
+  private[ops] def codeDistances(key: String): Column =
+    transform(col("cbook"), x => struct(
+      (call_function("graft_dot", col("e"), col("e"))
+        - lit(2) * call_function("graft_dot", col("e"), x.getField("cv"))
+        + call_function("graft_dot", x.getField("cv"), x.getField("cv")))
+        .as("d2"),
+      x.getField(key).as(key)))
+
   /** The identical DuckDB rendering over a DOUBLE[] expression `v`. */
   private def ivfCellSql(v: String): String =
     s"""(list_position(list_transform($v[1:16], x -> abs(x)),
@@ -248,48 +281,32 @@ object LlmExt extends QueryModule {
     * assignment shared with q_llm_sim_ann — the operator is
     * self-contained, not dependent on a pre-labeled column. */
   private def dedupEmbed(s: SparkSession, d: String): DataFrame = {
-    // Exact-vector collapse BEFORE the in-cell self-join — the dedup
-    // family composition (dedupSimhash/dedupFuzzy/dedupNgram), keyed
-    // by the vector itself: verbatim duplicate embeddings (heavy in
-    // crawl corpora, 10-way in the sf1 harness) land in the same cell
-    // and pay the |class_a|·|class_b| dot products for one answer.
-    // Join one representative per distinct vector, re-expand member
-    // pairs afterwards — the in-cell join cost tracks DISTINCT-vector
-    // geometry. Intra-class cos is computed from the class vector
-    // (self-cosine ≡ 1 under r4, but computed, not assumed, so the
-    // oracle's arithmetic is mirrored bit-for-bit).
-    val groups = T.embeddings(s, d)
-      .select(col("vec_id"),
-        transform(col("embedding"), x => x.cast("double")).as("e"))
-      .groupBy(col("e"))
-      .agg(sort_array(collect_list(col("vec_id"))).as("ids"))
+    // Class kit collapse keyed by the vector itself: the in-cell join
+    // cost tracks DISTINCT-vector geometry. Intra-class cos is computed
+    // from the class vector (self-cosine ≡ 1 under r4, but computed,
+    // not assumed, so the oracle's arithmetic is mirrored bit-for-bit).
+    val groups = Llm.classesOf(
+        T.embeddings(s, d)
+          .select(col("vec_id"), Llm.widen(col("embedding")).as("e")),
+        Seq(col("e")), col("vec_id"))
       .withColumn("cell", ivfCell(col("e")))
       .withColumn("nrm", sqrt(expr("graft_dot(e, e)")))
       .transform(Staged.checkpointLazy)
     val selfCos = Det.r4(expr("graft_dot(e, e)") / (col("nrm") * col("nrm")))
-    val identical = groups.filter(size(col("ids")) > 1)
-      .select(col("cell"), selfCos.as("cos_sim"), explode(expr(
-        "flatten(transform(ids, (x, i) -> " +
-          "transform(slice(ids, i + 2, size(ids)), y -> struct(x, y))))"))
-        .as("p"))
+    val identical = groups.filter(col("m") > 1)
+      .select(col("cell"), selfCos.as("cos_sim"),
+        explode(Llm.classPairs(col("ids"), Seq(col("rep")))).as("p"))
       .select(col("cell"), col("p.x").as("va"), col("p.y").as("vb"),
         col("cos_sim"))
       .filter(col("cos_sim") >= 0.35)
     val cos = expr("graft_dot(a.e, b.e)") / (col("a.nrm") * col("b.nrm"))
     val cross = groups.as("a").join(groups.as("b"),
-        col("a.cell") === col("b.cell") &&
-        element_at(col("a.ids"), 1) < element_at(col("b.ids"), 1))
+        col("a.cell") === col("b.cell") && col("a.rep") < col("b.rep"))
       .select(col("a.cell").as("cell"), col("a.ids").as("xs"),
         col("b.ids").as("ys"), Det.r4(cos).as("cos_sim"))
       .filter(col("cos_sim") >= 0.35)
-      // m×n re-expansion (disjoint member sets — least/greatest
-      // restores the global va < vb invariant)
-      .select(col("cell"), explode(col("xs")).as("u"), col("ys"),
-        col("cos_sim"))
-      .select(col("cell"), col("u"), explode(col("ys")).as("v"),
-        col("cos_sim"))
-      .select(col("cell"), least(col("u"), col("v")).as("va"),
-        greatest(col("u"), col("v")).as("vb"), col("cos_sim"))
+      .transform(Llm.expandClassPairs(_, "xs", "ys", "va", "vb",
+        "cell", "cos_sim"))
     identical.unionByName(cross).orderBy(col("cell"), col("va"), col("vb"))
   }
 
@@ -354,7 +371,7 @@ object LlmExt extends QueryModule {
   private[graft] def simAnnFrame(s: SparkSession, d: String): DataFrame = {
     T.embeddings(s, d)
       .select(col("vec_id"),
-        transform(col("embedding"), x => x.cast("double")).as("e"),
+        Llm.widen(col("embedding")).as("e"),
         (col("vec_id") < 5).as("qf"))
   }
 
@@ -396,53 +413,19 @@ object LlmExt extends QueryModule {
     val e = e0
       .withColumn("gcell", ivfCell(col("e")))
       .transform(Staged.checkpointLazy) // feeds seed agg, Lloyd steps, final probe
-    // per-dim mean per cell, r6-rounded, reassembled into a vector.
-    // posexplode + two aggs, not one fixed-width avg(element_at) agg:
-    // the fused aggregate cost more codegen than the exchange it saved
-    // (e2b033f).
-    def centroids(frame: DataFrame, cellCol: String): DataFrame =
-      frame.select(col(cellCol).as("ccell"), posexplode(col("e")))
-        .groupBy(col("ccell"), col("pos"))
-        .agg(Det.r6(avg(col("col"))).as("m"))
-        .groupBy(col("ccell"))
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
-          _.getField("m")).as("cv"))
-    // The ≤32-row codebook packed into ONE array<struct<ccell,cv>> row
-    // (cell-sorted for a stable plan): every assignment below becomes a
-    // per-row fold over the broadcast array instead of a 32× crossJoin
-    // expansion + a re-grouping exchange. The r14 profile showed the
-    // probe ladder spending 4.97 s wall at 0.9 executor-CPU-s across
-    // ~27 exchanges — pure per-job scheduling latency; this removes
-    // every assignment exchange (Lloyd rounds, corpus argmin, query
-    // probe ranking) while keeping the d2 arithmetic bit-identical.
-    def packed(cb: DataFrame): DataFrame =
-      // coalesce(1) first: a global agg over a single-partition child
-      // satisfies AllTuples as-is, so the pack adds NO exchange (and
-      // no AQE stage) at any nesting level of the Lloyd ladder
-      cb.coalesce(1)
-        .agg(array_sort(collect_list(struct(col("ccell"), col("cv"))))
-          .as("cbook"))
-    // (d2, ccell) per codebook entry — the same squared-distance
-    // expression as the old crossJoin form, evaluated per input row
-    def d2cells: Column =
-      transform(col("cbook"), x => struct(
-        (call_function("graft_dot", col("e"), col("e"))
-          - lit(2) * call_function("graft_dot", col("e"), x.getField("cv"))
-          + call_function("graft_dot", x.getField("cv"), x.getField("cv")))
-          .as("d2"),
-        x.getField("ccell").as("ccell")))
-    // argmin = array_min over (d2, ccell) structs — identical compare
-    // and tie-break semantics to the old min(struct(d2, ccell)) agg
-    def nearestCell: Column = array_min(d2cells).getField("ccell")
+    // per-dim mean per cell, r6-rounded (the codebook kit)
+    def cellCentroids(frame: DataFrame, cellCol: String): DataFrame =
+      centroids(frame.select(col(cellCol).as("ccell"), col("e")), "ccell")
+    def nearestCell: Column = array_min(codeDistances("ccell")).getField("ccell")
     // Lloyd: assign every vector to its nearest current centroid (a
     // zero-exchange projection), recompute means; `lloydIters` rounds
-    val code = (1 to lloydIters).foldLeft(centroids(e, "gcell")) {
+    val code = (1 to lloydIters).foldLeft(cellCentroids(e, "gcell")) {
       (cb, _) =>
-        val assigned = e.crossJoin(broadcast(packed(cb)))
+        val assigned = e.crossJoin(broadcast(packed(cb, "ccell")))
           .select(col("vec_id"), col("e"), nearestCell.as("acell"))
-        centroids(assigned, "acell")
+        cellCentroids(assigned, "acell")
     }
-    val scored = e.crossJoin(broadcast(packed(code)))
+    val scored = e.crossJoin(broadcast(packed(code, "ccell")))
     // corpus: final assignment to the TRAINED codebook (argmin fold)
     val corpus = scored.filter(!col("qf"))
       .select(col("vec_id").as("match_id"), col("e").as("ce"),
@@ -453,7 +436,7 @@ object LlmExt extends QueryModule {
     // row_number window used, without its per-query exchange)
     val probes = scored.filter(col("qf"))
       .select(col("vec_id").as("query_id"), col("e").as("qe"),
-        explode(slice(array_sort(d2cells), 1, nprobe)).as("pc"),
+        explode(slice(array_sort(codeDistances("ccell")), 1, nprobe)).as("pc"),
         sqrt(expr("graft_dot(e, e)")).as("qn"))
       .select(col("query_id"), col("qe"),
         col("pc").getField("ccell").as("cell"), col("qn"))
@@ -469,15 +452,11 @@ object LlmExt extends QueryModule {
     * operating point — the recall claim is only honest with its
     * candidate bill attached. */
   private[graft] def ivfTopKFrom(candidates: DataFrame, k: Int)
-      : DataFrame = {
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_key").desc, col("match_id"))
-    candidates
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+      : DataFrame =
+    Relational.topKOver(candidates, Seq(col("query_id")),
+        Seq(col("cos_key").desc, col("match_id")), k, "rank")
       .select(col("query_id"), col("rank"), col("match_id"), col("cell"),
         Det.r4(col("cos_key")).as("cos_sim"))
-  }
 
   /** The retired untrained-grid nprobe=1 variant, kept package-visible
     * ONLY as AnnSpec's recall baseline (not scored). */
@@ -981,7 +960,7 @@ object LlmExt extends QueryModule {
   private def semdedup(s: SparkSession, d: String): DataFrame =
     semdedupOver(T.par(s, T.embeddings(s, d))
       .select(col("vec_id"),
-        transform(col("embedding"), x => x.cast("double")).as("e")))
+        Llm.widen(col("embedding")).as("e")))
 
   /** The contracted core over any (vec_id, e: array<double>) frame —
     * package-visible so SemdedupCollapseSpec can drive it (and its
@@ -991,23 +970,15 @@ object LlmExt extends QueryModule {
     * pins 0.35). */
   private[graft] def semdedupOver(e0: DataFrame,
                                   minCos: Double = 0.35): DataFrame = {
-    // one row per DISTINCT embedding: sorted member ids, class key
-    val groups = e0
-      .groupBy(col("e"))
-      .agg(sort_array(collect_list(col("vec_id"))).as("ids"))
-      .select(col("e"), col("ids"),
-        element_at(col("ids"), 1).as("mn"),
-        size(col("ids")).cast("long").as("m"))
+    // one row per DISTINCT embedding (the class kit), rep as `mn`
+    val groups = Llm.classesOf(e0, Seq(col("e")), col("vec_id"))
+      .withColumnRenamed("rep", "mn")
       .withColumn("cell", ivfCell(col("e")))
       .withColumn("nrm", sqrt(expr("graft_dot(e, e)")))
       .transform(Staged.checkpoint)
     // expanded per-member centroid: Σ over members = Σ m·x per class
-    val cent = groups.select(col("cell"), col("m"), posexplode(col("e")))
-      .groupBy(col("cell"), col("pos"))
-      .agg(Det.r6(sum(col("col") * col("m")) / sum(col("m"))).as("c"))
-      .groupBy(col("cell"))
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("c")))),
-        x => x.getField("c")).as("cv"))
+    val cent = centroids(groups.select(col("cell"), col("m"), col("e")), "cell",
+        Det.r6(sum(col("col") * col("m")) / sum(col("m"))))
       .withColumn("cnrm", sqrt(expr("graft_dot(cv, cv)")))
     // one cos_centroid per class — every member shares it
     val scored = groups.join(broadcast(cent), "cell")

@@ -3,7 +3,6 @@ package graft.ops
 import graft.{Gate, QueryModule, Tables => T}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import scala.reflect.ClassTag
 
 /** Training-data pipeline stages beyond the pairwise dedups: PII
@@ -947,11 +946,9 @@ object LlmPipe extends QueryModule {
         val p = Staged.checkpoint(pairs)
         (dedupCcLoop(p), pagerankOver(p))
       })
-    val w = Window.partitionBy(col("cluster"))
-      .orderBy(col("rank").desc, col("doc_id"))
     cc.join(pr, "doc_id")
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
+      .transform(Relational.topKOver(_, Seq(col("cluster")),
+        Seq(col("rank").desc, col("doc_id")), 1, "rn"))
       .select(col("cluster"), col("cluster_size").as("n_members"),
         col("doc_id").as("keeper_doc"), col("rank").as("keeper_rank"))
       .orderBy(col("cluster"))

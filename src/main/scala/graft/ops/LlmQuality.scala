@@ -107,31 +107,22 @@ object LlmQuality extends QueryModule {
     *    rounding up across the boundary. The slack makes the prefix
     *    one gram longer only when ⌈t'·n⌉ < ⌈t·n⌉ (n ≳ 4000). */
   private def dedupNgram(s: SparkSession, d: String): DataFrame = {
-    // Exact-content collapse BEFORE the prefix-filter join — the
-    // dedupFuzzy/dedupSimhash composition, keyed by the SORTED gram
-    // set so set-equal docs unify regardless of gram order. Verbatim
-    // duplicates share the gram set, so doc-level blocking inflates
-    // every prefix bucket linearly with the duplication factor and
-    // re-verifies the same class pair |class_a|·|class_b| times —
-    // superlinear on sf1's 10-way dup harness. Block and verify ONE
-    // representative per class, re-expand member pairs afterwards.
-    // The prefix-filter recall guarantee is untouched: it requires
-    // only a consistent global gram order (class doc-frequency is as
-    // valid as corpus doc-frequency), and class-level J equals every
-    // member pair's J (identical sets). NgramDupSpec pins the exact
-    // expansion.
-    val groups = Llm.docs(s, d)
-      .select(col("doc_id"), sort_array(ngramHashes("text", 4)).as("g"))
-      .groupBy(col("g"))
-      .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
+    // Class kit collapse before the prefix-filter join, keyed by the
+    // SORTED gram set so set-equal docs unify regardless of gram order.
+    // The prefix-filter recall guarantee is untouched: it requires only
+    // a consistent global gram order (class doc-frequency is as valid
+    // as corpus doc-frequency), and class-level J equals every member
+    // pair's J (identical sets).
+    val groups = Llm.classesOf(
+        Llm.docs(s, d)
+          .select(col("doc_id"), sort_array(ngramHashes("text", 4)).as("g")),
+        Seq(col("g")), col("doc_id"))
       .transform(Staged.checkpointLazy)
     // identical-content pairs: J = 1 exactly; gram-less docs
     // (< 4 words) excluded on both engines
-    val identical = Llm.bucketPairs(
-        groups.filter(size(col("g")) > 0)
-          .select(col("g"), explode(col("ids")).as("doc_id")),
-        Seq(col("g")), col("doc_id"))
-      .select(col("x").as("da"), col("y").as("db"),
+    val identical = groups.filter(size(col("g")) > 0 && col("m") > 1)
+      .select(explode(Llm.classPairs(col("ids"), Seq(col("rep")))).as("p"))
+      .select(col("p.x").as("da"), col("p.y").as("db"),
         lit(1.0).as("jaccard"))
     // materialize the rep gram build ONCE: toks feeds three join
     // branches (frequency table, prefix selection, verification), and
@@ -140,7 +131,7 @@ object LlmQuality extends QueryModule {
     // pipeline would persist to DFS; localCheckpoint is its
     // single-JVM equivalent (~16 bytes/gram).
     val toks = groups
-      .select(col("ids").getItem(0).as("doc_id"), explode(col("g")).as("h"))
+      .select(col("rep").as("doc_id"), explode(col("g")).as("h"))
       .transform(Staged.checkpoint)
     val cand = ngramCandidatesFrom(toks)
     val repPairs = cand
@@ -156,16 +147,10 @@ object LlmQuality extends QueryModule {
       .select(col("da"), col("db"),
         Det.r4(col("inter") / col("uni")).as("jaccard"))
       .filter(col("jaccard") >= JaccardT)
-    // m×n re-expansion of each verified class pair (disjoint member
-    // sets — least/greatest restores the global da < db invariant)
-    val members = groups.select(col("ids").getItem(0).as("rid"), col("ids"))
     val cross = repPairs
-      .join(members.select(col("rid").as("da"), col("ids").as("xs")), "da")
-      .join(members.select(col("rid").as("db"), col("ids").as("ys")), "db")
-      .select(explode(col("xs")).as("a"), col("ys"), col("jaccard"))
-      .select(col("a"), explode(col("ys")).as("b"), col("jaccard"))
-      .select(least(col("a"), col("b")).as("da"),
-        greatest(col("a"), col("b")).as("db"), col("jaccard"))
+      .join(groups.select(col("rep").as("da"), col("ids").as("xs")), "da")
+      .join(groups.select(col("rep").as("db"), col("ids").as("ys")), "db")
+      .transform(Llm.expandClassPairs(_, "xs", "ys", "da", "db", "jaccard"))
     identical.unionByName(cross).orderBy(col("da"), col("db"))
   }
 
@@ -544,8 +529,6 @@ object LlmQuality extends QueryModule {
     // tf rows are distinct (doc, term), so count-per-term IS the
     // document frequency
     val dfByTerm = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val wDoc = Window.partitionBy(col("doc_id"))
-      .orderBy(col("score").desc, col("term"))
     tf.join(dfByTerm, "term")
       .crossJoin(broadcast(n))
       .withColumn("score",
@@ -556,8 +539,8 @@ object LlmQuality extends QueryModule {
       // sampler re-executed the join + window subtree — becomes a
       // zero-exchange local sort (one exchange fewer end to end).
       .repartitionByRange(s.sparkContext.defaultParallelism, col("doc_id"))
-      .withColumn("rank", row_number().over(wDoc).cast("long"))
-      .filter(col("rank") <= 3)
+      .transform(Relational.topKOver(_, Seq(col("doc_id")),
+        Seq(col("score").desc, col("term")), 3, "rank"))
       .select(col("doc_id"), col("rank"), col("term"), col("tf"),
         col("df"), Det.r6(col("score")).as("tfidf"))
       .sortWithinPartitions(col("doc_id"), col("rank"))

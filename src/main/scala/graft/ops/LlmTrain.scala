@@ -219,36 +219,17 @@ object LlmTrain extends QueryModule {
   private def kmeansStep(s: SparkSession, d: String): DataFrame = {
     val emb = T.par(s, T.embeddings(s, d))
       .select(col("vec_id"), col("label"),
-        col("embedding").cast("array<double>").as("e"))
-    val cent = emb
-      .select(col("label").as("clabel"), posexplode(col("e")))
-      .groupBy(col("clabel"), col("pos"))
-      .agg(Det.r6(avg(col("col"))).as("m"))
-      .groupBy(col("clabel"))
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
-        _.getField("m")).as("cv"))
-    // argmin as a PER-ROW fold over the packed broadcast codebook —
-    // the q_llm_sim_ann idiom (LlmExt.ivfCandidatesOver): the old
-    // crossJoin expanded every vector |k|× and re-grouped by vec_id
-    // through a |vecs|-row exchange just to take a min. Packing the
-    // ≤|k|-row centroid table into ONE array<struct> row (coalesce(1)
-    // so the pack adds no exchange) turns assignment into
-    // array_min(transform(...)) — same d2 arithmetic, same field-wise
-    // (d2, clabel) struct ordering and tie-break, zero per-vector
-    // exchange: the reassignment matrix aggregates straight to
-    // |labels|·|k| partials. KmeansArgminSpec pins fold-vs-agg
-    // equality; plan 3→2 exchanges.
-    val packed = cent.coalesce(1)
-      .agg(array_sort(collect_list(struct(col("clabel"), col("cv"))))
-        .as("cbook"))
-    val d2cells = transform(col("cbook"), x => struct(
-      (call_function("graft_dot", col("e"), col("e"))
-        - lit(2) * call_function("graft_dot", col("e"), x.getField("cv"))
-        + call_function("graft_dot", x.getField("cv"), x.getField("cv")))
-        .as("d2"),
-      x.getField("clabel").as("clabel")))
-    emb.crossJoin(broadcast(packed))
-      .select(col("label"), array_min(d2cells).as("best"))
+        Llm.widen(col("embedding")).as("e"))
+    val cent = LlmExt.centroids(
+      emb.select(col("label").as("clabel"), col("e")), "clabel")
+    // argmin as a PER-ROW fold over the packed broadcast codebook (the
+    // LlmExt codebook kit, shared with q_llm_sim_ann): the old crossJoin
+    // expanded every vector |k|× and re-grouped by vec_id through a
+    // |vecs|-row exchange just to take a min. The reassignment matrix
+    // aggregates straight to |labels|·|k| partials. KmeansArgminSpec
+    // pins fold-vs-agg equality; plan 3→2 exchanges.
+    emb.crossJoin(broadcast(LlmExt.packed(cent, "clabel")))
+      .select(col("label"), array_min(LlmExt.codeDistances("clabel")).as("best"))
       .groupBy(col("label"), col("best.clabel").as("assigned"))
       .agg(count(lit(1)).as("n_vecs"),
         Det.r6(avg(col("best.d2"))).as("avg_d2"))

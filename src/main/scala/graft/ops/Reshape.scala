@@ -482,18 +482,15 @@ object Reshape extends QueryModule {
     * (user, type) count, then a user-partitioned row_number over the
     * ≤|event types| rows per user; both keys are high-cardinality /
     * bounded-group, the q_win_frame scale shape. */
-  private def aggMode(s: SparkSession, d: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("cnt").desc, col("event_type"))
+  private def aggMode(s: SparkSession, d: String): DataFrame =
     T.events(s, d)
       .groupBy(col("user_id"), col("event_type"))
       .agg(count(lit(1)).as("cnt"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
+      .transform(Relational.topKOver(_, Seq(col("user_id")),
+        Seq(col("cnt").desc, col("event_type")), 1, "rn"))
       .select(col("user_id"), col("event_type").as("mode_type"),
         col("cnt").as("mode_cnt"))
       .orderBy(col("user_id"))
-  }
 
   private val aggModeSql =
     """WITH c AS (

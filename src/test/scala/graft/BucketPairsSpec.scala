@@ -56,16 +56,33 @@ class BucketPairsSpec extends AnyFunSuite {
 
   test("a bucket over MaxBucket members fails loudly, naming the key") {
     import s.implicits._
-    // adversarial input: all-identical docs → one bucket, n² blow-up
+    // adversarial input: all-identical docs → one bucket (or one exact-
+    // content class), n² blow-up
     val df = (1 to Llm.MaxBucket + 1).map(i => ("same", i.toLong))
       .toDF("k", "m")
-    val e = intercept[Exception] {
-      Llm.bucketPairs(df, Seq(col("k")), col("m")).count()
-    }
+    val inputs = Seq(
+      "bucketPairs" -> (() => Llm.bucketPairs(df, Seq(col("k")), col("m"))),
+      "classPairs" -> (() => Llm.classesOf(df, Seq(col("k")), col("m"))
+        .select(explode(Llm.classPairs(col("ids"), Seq(col("k")))))))
     def messages(t: Throwable): Seq[String] =
       if (t == null) Nil
       else Option(t.getMessage).toSeq ++ messages(t.getCause)
-    assert(messages(e).exists(_.contains("bucket exceeds")),
-      s"unexpected failure: $e")
+    for ((name, pairs) <- inputs) {
+      val e = intercept[Exception](pairs().count())
+      assert(messages(e).exists(m => m.contains("bucket exceeds") &&
+          m.contains("at key same")),
+        s"$name: unexpected failure: $e")
+    }
+  }
+
+  test("nearDuplicatePairs on a repeated (id, text) row emits no self-pair") {
+    import s.implicits._
+    val text = "the quick brown fox jumps over the lazy dog again"
+    val df = Seq((1L, text), (1L, text), (2L, text),
+        (3L, "unrelated words only here"))
+      .toDF("id", "text")
+    val got = graft.Graft.nearDuplicatePairs(df, "id", "text")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    assert(got.toSeq == Seq((1L, 2L, 1.0)), got.mkString(", "))
   }
 }

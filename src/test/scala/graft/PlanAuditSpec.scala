@@ -127,6 +127,22 @@ class PlanAuditSpec extends AnyFunSuite {
     TopKPlan.assertShuffleBounded(SparkEntry.queries("q_llm_keeper")(s, sf), 1)
   }
 
+  /** The other top-k windows run through `Relational.topKOver` and
+    * keep its map-side partial limit below the exchange. q_llm_tfidf
+    * and q_llm_sim_ann window over an explicit range exchange on their
+    * group key, so their partial limit runs after it; the IVF top-k is
+    * checked on the facade core `ivfTopKOver`, which has no such
+    * exchange. */
+  test("topKOver queries prune to k rows per group below the exchange") {
+    val q = SparkEntry.queries
+    for ((name, df, k) <- Seq(
+        ("q_llm_text_stats", q("q_llm_text_stats")(s, sf), 10),
+        ("q_agg_mode", q("q_agg_mode")(s, sf), 1),
+        ("ivfTopKOver", ops.LlmExt.ivfTopKOver(ops.LlmExt.simAnnFrame(s, sf),
+          5, ops.LlmExt.AnnNProbe), 5)))
+      withClue(s"$name: ")(TopKPlan.assertShuffleBounded(df, k))
+  }
+
   /** Unordered-window gate (round 10, verdict #1): a
     * `count/sum over (Window.partitionBy(key))` with no ORDER BY
     * cannot partially aggregate — every carrier row of a partition

@@ -6,7 +6,7 @@ and values exactly. Dev tooling only — the engine itself is pure Scala.
 
 Usage: python3 tools/check.py [sfdir] [outdir] [--skip-verify] [query...]
 """
-import json, math, subprocess, sys, os
+import json, math, shutil, subprocess, sys, os, tempfile
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
 OUT = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out"
@@ -119,11 +119,33 @@ def compare_one(name, con, spark_df, label, sql):
     print(f"  {tag}: OK ({len(spark_df)} rows)")
     return True
 
+def duckdb_memory_limit():
+    """Half the machine's RAM (at least 1 GiB), as a DuckDB size string.
+    DuckDB's default of 80% of RAM leaves the machine little headroom;
+    below RAM, with a spill directory, the operators that can spill page
+    to disk instead."""
+    try:
+        with open("/proc/meminfo") as f:
+            kib = next(int(l.split()[1]) for l in f if l.startswith("MemTotal:"))
+    except (OSError, StopIteration):
+        return "4GB"
+    return f"{max(1, kib // 2 // 1024 // 1024)}GB"
+
 def main():
     if "--skip-verify" not in FLAGS:
         run_verify()
     import duckdb
     con = duckdb.connect()
+    spill = tempfile.mkdtemp(prefix="graft-duckdb-spill-", dir="/tmp")
+    con.execute(f"SET temp_directory = '{spill}'")
+    con.execute(f"SET memory_limit = '{duckdb_memory_limit()}'")
+    try:
+        check(con)
+    finally:
+        con.close()
+        shutil.rmtree(spill, ignore_errors=True)
+
+def check(con):
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM parquet_scan('{SF}/{t}.parquet')")
     names = ONLY or sorted(
