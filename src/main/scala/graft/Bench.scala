@@ -26,14 +26,17 @@ object Bench {
     * ContextCleaner also piggybacks on GC to release old
     * broadcasts/shuffles) — then execute every operator via `toRdd`
     * (a bare `Dataset.count()` lets Catalyst prune unreferenced
-    * projections — under-measurement). Returns (seconds, rows, the
+    * projections — under-measurement). `built` runs on the clock
+    * between the query's construction (its eager checkpoints and
+    * driver collects) and `toRdd`. Returns (seconds, rows, the
     * executed plan — the final adaptive plan once `toRdd` has run). */
-  def materialize(spark: SparkSession, sfDir: String,
-                  name: String): (Double, Long, SparkPlan) = {
+  def materialize(spark: SparkSession, sfDir: String, name: String,
+                  built: () => Unit = () => ()): (Double, Long, SparkPlan) = {
     ops.Staged.sweep()
     System.gc()
     val t0 = System.nanoTime()
     val qe = SparkEntry.queries(name)(spark, sfDir).queryExecution
+    built()
     val rows = qe.toRdd.count()
     ((System.nanoTime() - t0) / 1e9, rows, qe.executedPlan)
   }

@@ -3,20 +3,21 @@ package graft
 import org.apache.spark.SparkContext
 import org.apache.spark.graft.ListenerBusAccess
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
-  SparkListenerStageCompleted}
+  SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike,
   ReusedExchangeExec, ShuffleExchangeLike}
-import scala.collection.mutable.ArrayBuffer
+import scala.collection.mutable
 
 /** Dev tool: one main, four subcommands, all on the [[GraftSession]]
   * engine that Bench scores, at `SPARK_GRAFT_CPUS` cores (default 4).
   *
   * {{{
-  *   graft.Dev profile  <sfDir> <query>     job/stage/task/exchange counts and
-  *                                          per-stage wall/CPU table of one timed run
+  *   graft.Dev profile  <sfDir> <query>     job/stage/task/exchange counts (construction
+  *                                          jobs apart) and per-stage wall/CPU table of
+  *                                          one timed run
   *   graft.Dev explain  <sfDir> [query...]  formatted physical plans
   *   graft.Dev pressure <sfDir> [query...]  completion and spill under the JVM heap
   *   graft.Dev smoke                        the flagship SparkEntry.entry
@@ -30,22 +31,37 @@ object Dev {
                          cpuMs: Long, spillBytes: Long)
 
   /** The jobs that ended and the stages that completed between two
-    * [[StageLog.take]]s. */
-  final case class Tally(jobs: Int, stages: Seq[Stage]) {
+    * [[StageLog.take]]s; `constructJobs` of the jobs were submitted
+    * while the query was being built. */
+  final case class Tally(jobs: Int, constructJobs: Int, stages: Seq[Stage]) {
     def tasks: Int = stages.map(_.tasks).sum
   }
 
-  /** Job-end and stage-completed listener on `sc`. Listener events are delivered
+  /** Local property that marks the jobs a query submits while it is
+    * being built, before `toRdd`. */
+  private val Constructing = "graft.dev.constructing"
+
+  /** Job and stage-completed listener on `sc`. Listener events are delivered
     * asynchronously, so [[take]] drains the bus before reading: without
     * that a late event lands in the next tally (a warm-up stage in the
-    * timed profile, one query's spill charged to the next). */
+    * timed profile, one query's spill charged to the next). A job
+    * counts as a construction job by the [[Constructing]] property it
+    * was submitted under. */
   final class StageLog(sc: SparkContext) extends SparkListener {
-    private val rows = ArrayBuffer[Stage]()
-    private var jobs = 0
+    private val rows = mutable.ArrayBuffer[Stage]()
+    private val constructing = mutable.Set[Int]()
+    private var jobs, constructJobs = 0
     sc.addSparkListener(this)
 
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      if (Option(e.properties).exists(_.getProperty(Constructing) != null))
+        rows.synchronized { constructing += e.jobId }
+
     override def onJobEnd(e: SparkListenerJobEnd): Unit =
-      rows.synchronized { jobs += 1 }
+      rows.synchronized {
+        jobs += 1
+        if (constructing.remove(e.jobId)) constructJobs += 1
+      }
 
     override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
       val i = e.stageInfo
@@ -71,7 +87,8 @@ object Dev {
     def take(): Tally = {
       ListenerBusAccess.waitUntilEmpty(sc)
       rows.synchronized {
-        val t = Tally(jobs, rows.toList); rows.clear(); jobs = 0; t
+        val t = Tally(jobs, constructJobs, rows.toList)
+        rows.clear(); jobs = 0; constructJobs = 0; t
       }
     }
 
@@ -94,13 +111,20 @@ object Dev {
                             exchanges: Exchanges)
 
   /** A warm-up run of `name`, then a timed run with its stages and
-    * final-plan exchanges. */
+    * final-plan exchanges; each tally counts its construction jobs. */
   def profile(spark: SparkSession, sfDir: String, name: String): Profiled = {
-    val log = new StageLog(spark.sparkContext)
+    val sc = spark.sparkContext
+    val log = new StageLog(sc)
+    def run() = {
+      sc.setLocalProperty(Constructing, "true")
+      try Bench.materialize(spark, sfDir, name,
+        () => sc.setLocalProperty(Constructing, null))
+      finally sc.setLocalProperty(Constructing, null)
+    }
     try {
-      Bench.materialize(spark, sfDir, name)
+      run()
       val warmup = log.take()
-      val (sec, _, plan) = Bench.materialize(spark, sfDir, name)
+      val (sec, _, plan) = run()
       Profiled(sec, warmup, log.take(), Exchanges.of(plan))
     } finally log.close()
   }
@@ -155,7 +179,8 @@ object Dev {
         val cpuTotal = t.stages.map(_.cpuMs).sum / 1e3
         val Exchanges(sh, bc, re) = p.exchanges
         println(f"TOTAL $name: ${p.seconds}%.2f s wall, $cpuTotal%.1f executor-CPU-s, " +
-          s"${t.jobs} jobs, ${t.stages.size} stages, ${t.tasks} tasks, " +
+          s"${t.jobs} jobs (${t.constructJobs} construct, ${t.jobs - t.constructJobs} run), " +
+          s"${t.stages.size} stages, ${t.tasks} tasks, " +
           s"exchanges $sh shuffle $bc broadcast $re reused")
         t.stages.sortBy(-_.ms).take(15).foreach { st =>
           println(f"  stage ${st.id}%-4d ${st.ms}%6d ms  ${st.cpuMs}%6d cpu-ms" +

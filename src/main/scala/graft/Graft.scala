@@ -276,7 +276,9 @@ object Graft {
     * re-expansion by class algebra, so verbatim-duplicated embeddings
     * (the norm in crawl corpora) add output rows, not quadratic pair
     * work; the in-cell join is co-partitioned on cell, never n²
-    * across cells. */
+    * across cells. Runs jobs when called: it stages the distinct
+    * vectors and trains the cell centroids (one pass, merged on the
+    * driver) before it returns the lazy drop set. */
   def semanticDedup(vectors: DataFrame, id: String, vec: String,
                     minCosine: Double = 0.35): DataFrame = {
     registerFunctions(vectors.sparkSession)
@@ -317,13 +319,15 @@ object Graft {
   /** Trained-IVF approximate nearest neighbour — the scale path when
     * the query side is too large to broadcast for [[cosineTopK]]:
     * one frame holding queries AND corpus (`isQuery` marks the query
-    * rows), a ≤32-cell codebook grid-seeded and refined by one Lloyd
-    * iteration over the frame, each query probing its `nprobe`
-    * nearest cells with exact cosine rerank inside. Every pass is one
-    * corpus scan against the broadcast codebook; the probe join
-    * touches ~nprobe/cells of the corpus. Recall rises with `nprobe`
-    * (AnnSpec's measured ladder); q_llm_sim_ann is this same code on
-    * the test embeddings. */
+    * rows), a ≤32-cell codebook grid-seeded and refined by two Lloyd
+    * rounds over the frame, each query probing its `nprobe`
+    * nearest cells with exact cosine rerank inside. Training runs
+    * when this is called: one job per round, each one corpus pass
+    * whose per-task sums merge on the driver into the next round's
+    * codebook; the returned frame reads the trained codebook as a
+    * constant, and its probe join touches ~nprobe/cells of the
+    * corpus. Recall rises with `nprobe` (AnnSpec's measured ladder);
+    * q_llm_sim_ann is this same code on the test embeddings. */
   def ivfTopK(vectors: DataFrame, id: String, vec: String,
               isQuery: Column, k: Int, nprobe: Int = 2): DataFrame = {
     registerFunctions(vectors.sparkSession)

@@ -25,6 +25,11 @@ object Det {
   def r4(c: Column): Column = rN(c, 4)
   def r6(c: Column): Column = rN(c, 6)
 
+  /** Driver-side r6, bit-identical to [[r6]] and [[sql6]]: the same
+    * IEEE-754 double ops, through a long as Spark's `floor` returns
+    * one (the two differ only on NaN, infinities and |x| ≥ 9.2e12). */
+  def r6d(x: Double): Double = math.floor(x * 1e6 + 0.5).toLong / 1e6
+
   /** The oracle-side (DuckDB) rendering of rN. */
   def sql(expr: String, n: Int): String = {
     val p = pow10(n).toLong

@@ -1,9 +1,15 @@
 package graft.ops
 
+import scala.jdk.CollectionConverters._
+
 import graft.{QueryModule, Tables => T}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, TypeUtils}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{ArrayType, DoubleType, StructField, StructType}
 
 /** Extended LLM-training-data operators (driver brief: dedup family
   * beyond MinHash, ANN scale path, text analysis, multimodal decode):
@@ -215,41 +221,114 @@ object LlmExt extends QueryModule {
   //
   // Shared by q_llm_sim_ann's IVF training and probing
   // (ivfCandidatesOver), q_llm_kmeans (LlmTrain.kmeansStep) and
-  // q_llm_semdedup's per-cell centroids. Each piece takes the name of
-  // the key column (a cell or a label) of the frame it works on.
+  // q_llm_semdedup's per-cell centroids: [[trainCodebook]] computes a
+  // codebook on the driver and [[codeDistances]] folds a row's vector
+  // over it.
 
-  /** Per-key centroid vectors `(key, cv)`: the vector column `e` is
-    * posexploded, `dim` aggregates each (key, dimension) and the
-    * components are reassembled in dimension order. Every column of
-    * `frame` but `e` is visible to `dim` (q_llm_semdedup weights by
-    * its class size `m`). posexplode + two aggs, not one fixed-width
-    * avg(element_at) agg: the fused aggregate cost more codegen than
-    * the exchange it saved (e2b033f). */
-  private[ops] def centroids(frame: DataFrame, key: String,
-                             dim: Column = Det.r6(avg(col("col"))))
-      : DataFrame =
-    frame.select(frame.columns.filter(_ != "e").map(col) :+
-        posexplode(col("e")): _*)
-      .groupBy(col(key), col("pos"))
-      .agg(dim.as("dv"))
-      .groupBy(col(key))
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("dv")))),
-        _.getField("dv")).as("cv"))
+  /** One codebook round: the r6-rounded mean of the vector column `e`
+    * for every value of the `key` column of `frame`, returned as a
+    * literal `array<struct<key, cv>>` sorted by key (a null key
+    * first), the `cbook` that [[codeDistances]] reads. It runs when
+    * it is called, as ONE `mapPartitions` job: each task returns its
+    * per-key, per-dimension sums and the driver merges them in
+    * partition-index order, so every run and every task retry
+    * produces the same doubles (`RDD.aggregate` and `treeAggregate`
+    * merge in task-completion order), then divides and rounds with
+    * [[Det.r6d]]. This is how MLlib's KMeans and faiss-style IVF train
+    * (Johnson et al. 2017): each round costs one job and no exchange,
+    * and the next round's assignment reads the previous codebook as a
+    * constant. Driver memory per round: partitions × keys × dim ×
+    * 17 B (a double sum, a long weight and a flag per slot).
+    *
+    * The arithmetic is that of `avg(x)` per (key, dimension) after a
+    * posexplode, or with `weight` that of `sum(x * w) / sum(w)`:
+    *  - a null or empty vector adds nothing, so a key with no
+    *    component has no entry;
+    *  - a null component is skipped in its dimension; a dimension with
+    *    no value is NULL;
+    *  - vectors of different lengths are averaged per position, and
+    *    `cv` is as long as the key's longest vector;
+    *  - weighted, `sum(w)` counts every row whose vector reaches the
+    *    dimension, null component or not, and a null weight adds
+    *    nothing.
+    * TrainCodebookSpec pins both forms against those aggregates. */
+  private[graft] def trainCodebook(frame: DataFrame, key: String,
+                                   weight: Option[Column] = None): Column = {
+    val keyType = frame.schema(key).dataType
+    val weighted = weight.isDefined
+    val parts = frame
+      .select(col(key), col("e"), weight.getOrElse(lit(1L)).cast("long"))
+      .queryExecution.toRdd
+      .mapPartitions { rows =>
+        val acc = new java.util.HashMap[Any, CodeSums]()
+        rows.foreach { r =>
+          val n = if (r.isNullAt(1)) 0 else r.getArray(1).numElements()
+          if (n > 0) {
+            val k = if (r.isNullAt(0)) null
+              else InternalRow.copyValue(r.get(0, keyType))
+            val sums = acc.computeIfAbsent(k, _ => new CodeSums)
+            sums.reach(n)
+            if (!r.isNullAt(2)) sums.add(r.getArray(1), r.getLong(2), weighted)
+          }
+        }
+        Iterator(acc.asScala.toArray)
+      }
+      .collect()
+    val merged = new java.util.HashMap[Any, CodeSums]()
+    for (part <- parts; (k, sums) <- part)
+      merged.computeIfAbsent(k, _ => new CodeSums).merge(sums)
+    val entries = merged.asScala.toArray
+      .sortBy { case (k, _) => Option(k) }(
+        Ordering.Option(TypeUtils.getInterpretedOrdering(keyType)))
+      .map { case (k, sums) => InternalRow(k, sums.means) }
+    val cbookType = ArrayType(StructType(Seq(
+      StructField(key, keyType), StructField("cv", ArrayType(DoubleType),
+        nullable = false))), containsNull = false)
+    lit(Literal(new GenericArrayData(entries), cbookType))
+  }
 
-  /** A ≤|keys|-row codebook packed into ONE array<struct<key, cv>> row
-    * `cbook` (key-sorted for a stable plan): an assignment becomes a
-    * per-row fold over the broadcast array instead of a |keys|×
-    * crossJoin expansion + a re-grouping exchange (the r14 profile
-    * showed the probe ladder spending 4.97 s wall at 0.9 executor-CPU-s
-    * across ~27 exchanges — pure per-job scheduling latency).
-    * coalesce(1) first: a global agg over a single-partition child
-    * satisfies AllTuples as-is, so the pack adds NO exchange (and no
-    * AQE stage) at any nesting level. */
-  private[ops] def packed(codebook: DataFrame, key: String): DataFrame =
-    codebook.coalesce(1)
-      .agg(array_sort(collect_list(struct(col(key), col("cv")))).as("cbook"))
+  /** One key's running sums in [[trainCodebook]], per dimension: the
+    * (weighted) sum of the non-null components, the weight of the rows
+    * counted in the mean's denominator, and whether any component was
+    * non-null. */
+  private final class CodeSums extends Serializable {
+    private var sum = Array.emptyDoubleArray
+    private var den = Array.emptyLongArray
+    private var has = Array.emptyBooleanArray
 
-  /** `(d2, key)` per entry of the packed `cbook`, for the row's vector
+    def reach(n: Int): Unit = if (n > sum.length) {
+      sum = java.util.Arrays.copyOf(sum, n)
+      den = java.util.Arrays.copyOf(den, n)
+      has = java.util.Arrays.copyOf(has, n)
+    }
+
+    def add(v: ArrayData, w: Long, weighted: Boolean): Unit = {
+      var i = 0
+      while (i < v.numElements()) {
+        if (!v.isNullAt(i)) {
+          sum(i) += (if (weighted) v.getDouble(i) * w else v.getDouble(i))
+          den(i) += w
+          has(i) = true
+        } else if (weighted) den(i) += w
+        i += 1
+      }
+    }
+
+    def merge(o: CodeSums): Unit = {
+      reach(o.sum.length)
+      var i = 0
+      while (i < o.sum.length) {
+        sum(i) += o.sum(i); den(i) += o.den(i); has(i) |= o.has(i)
+        i += 1
+      }
+    }
+
+    def means: ArrayData = new GenericArrayData(Array.tabulate[Any](sum.length) { i =>
+      if (has(i) && den(i) != 0) Det.r6d(sum(i) / den(i)) else null
+    })
+  }
+
+  /** `(d2, key)` per entry of the `cbook` column, for the row's vector
     * `e`: squared L2 by the dot-product expansion, the same arithmetic
     * as the DuckDB oracles' list_dot_product form. array_min over it is
     * the argmin, with the (d2, key) tie-break of a min(struct) agg;
@@ -343,10 +422,10 @@ object LlmExt extends QueryModule {
     * SAME training + probe pipeline in SQL — the hash-match checks
     * implementation equivalence; recall (and its uplift over the
     * untrained grid at nprobe 1 and 2) is measured in AnnSpec.
-    * Scale: every pass is one corpus scan against a ≤32-row broadcast
-    * codebook (training over the full corpus here; production trains
-    * on a sample — same shape), and the probe join touches
-    * nprobe/|cells| of the corpus. */
+    * Scale: each training round is one corpus pass whose per-task
+    * sums merge on the driver ([[trainCodebook]]; training over the
+    * full corpus here, production trains on a sample — same shape),
+    * and the probe join touches nprobe/|cells| of the corpus. */
   /** Scored ANN configuration — the KNEE of AnnSpec's measured
     * recall ladder (recall@5 vs exact top-k at test SF):
     * {{{
@@ -354,8 +433,8 @@ object LlmExt extends QueryModule {
     *   lloyd=2: nprobe 1 → 0.24   2 → 0.52   4 → 0.72
     * }}}
     * nprobe=4 reranks 4/32 of the corpus per query (still 8× under
-    * brute force); the second Lloyd round costs one more
-    * corpus×broadcast-codebook scan at TRAIN time only. r10 shipped
+    * brute force); the second Lloyd round costs one more corpus
+    * pass (one job) at TRAIN time only. r10 shipped
     * (2, 1) = 0.44; (4, 2) = 0.72 clears the ≥0.6 bar the verdict
     * set at a rerank cost production IVF deployments run routinely
     * (faiss default nprobe is 1-16 at far higher cell counts). */
@@ -396,8 +475,9 @@ object LlmExt extends QueryModule {
     * corpus. Package-visible as the [[graft.Graft.ivfTopK]] facade
     * core (the scored q_llm_sim_ann is the vec_id<5 split of the
     * embeddings table through the SAME code). The codebook trains on
-    * ALL vectors of the frame (grid seed + one Lloyd iteration);
-    * production trains on a sample — identical shape. */
+    * ALL vectors of the frame (grid seed + `lloydIters` rounds), when
+    * this is called; production trains on a sample — identical
+    * shape. */
   private[graft] def ivfTopKOver(e0: DataFrame,
                                  k: Int, nprobe: Int,
                                  lloydIters: Int = AnnLloydIters)
@@ -412,20 +492,18 @@ object LlmExt extends QueryModule {
       : DataFrame = {
     val e = e0
       .withColumn("gcell", ivfCell(col("e")))
-      .transform(Staged.checkpointLazy) // feeds seed agg, Lloyd steps, final probe
-    // per-dim mean per cell, r6-rounded (the codebook kit)
-    def cellCentroids(frame: DataFrame, cellCol: String): DataFrame =
-      centroids(frame.select(col(cellCol).as("ccell"), col("e")), "ccell")
+      .transform(Staged.checkpointLazy) // feeds the seed, Lloyd rounds, final probe
     def nearestCell: Column = array_min(codeDistances("ccell")).getField("ccell")
     // Lloyd: assign every vector to its nearest current centroid (a
-    // zero-exchange projection), recompute means; `lloydIters` rounds
-    val code = (1 to lloydIters).foldLeft(cellCentroids(e, "gcell")) {
+    // fold over the literal codebook), recompute the means: one
+    // training job for the grid seed and one per round, all run here
+    val code = (1 to lloydIters).foldLeft(
+        trainCodebook(e.select(col("gcell").as("ccell"), col("e")), "ccell")) {
       (cb, _) =>
-        val assigned = e.crossJoin(broadcast(packed(cb, "ccell")))
-          .select(col("vec_id"), col("e"), nearestCell.as("acell"))
-        cellCentroids(assigned, "acell")
+        trainCodebook(e.select(col("e"), cb.as("cbook"))
+          .select(nearestCell.as("ccell"), col("e")), "ccell")
     }
-    val scored = e.crossJoin(broadcast(packed(code, "ccell")))
+    val scored = e.withColumn("cbook", code)
     // corpus: final assignment to the TRAINED codebook (argmin fold)
     val corpus = scored.filter(!col("qf"))
       .select(col("vec_id").as("match_id"), col("e").as("ce"),
@@ -927,8 +1005,9 @@ object LlmExt extends QueryModule {
     * beats random pruning at equal token budgets). Composes the
     * family's pieces: the [[ivfCell]] grid stands in for the trained
     * k-means clustering, the near-dup pair definition IS
-    * q_llm_dedup_embed's, and the centroid build is q_llm_centroid's
-    * posexplode + hash agg scoped per cell.
+    * q_llm_dedup_embed's, and the per-cell centroids come from the
+    * codebook kit's [[trainCodebook]] (one pass, merged on the driver
+    * when the operator is built).
     *
     * Scale shape — CLASS-CONTRACTED like the rest of the dedup family
     * (dedupEmbed/dedupSimhash/dedupFuzzy): verbatim-duplicate
@@ -947,7 +1026,7 @@ object LlmExt extends QueryModule {
     *  - a cross-class TIE drops the pairwise max, so an A member is
     *    dropped iff some B member is smaller — iff id > min(B).
     * The centroid build stays arithmetically the EXPANDED per-member
-    * average (member counts weight the per-dim sums map-side —
+    * average (member counts weight the per-dim sums in each task —
     * linear, never the quadratic part). Determinism: centroid
     * components are r6-discretized BEFORE the cosine (summation-order
     * noise ~1e-15 vs the 1e-6 grid; the m·x vs x-added-m-times
@@ -977,8 +1056,8 @@ object LlmExt extends QueryModule {
       .withColumn("nrm", sqrt(expr("graft_dot(e, e)")))
       .transform(Staged.checkpoint)
     // expanded per-member centroid: Σ over members = Σ m·x per class
-    val cent = centroids(groups.select(col("cell"), col("m"), col("e")), "cell",
-        Det.r6(sum(col("col") * col("m")) / sum(col("m"))))
+    val cent = groups.sparkSession.range(1)
+      .select(inline(trainCodebook(groups, "cell", Some(col("m")))))
       .withColumn("cnrm", sqrt(expr("graft_dot(cv, cv)")))
     // one cos_centroid per class — every member shares it
     val scored = groups.join(broadcast(cent), "cell")

@@ -344,10 +344,6 @@ object LlmPipe extends QueryModule {
     !Gate.large(s, "graph", st.edges.toDouble, GraphDistributedMinEdges) &&
       st.edges <= LocalGraphMaxEdges
 
-  /** Driver-side r6 — bit-identical to Det.r6 / Det.sql6: every step
-    * is the same IEEE-754 double op Spark and DuckDB evaluate. */
-  private def r6d(x: Double): Double = math.floor(x * 1e6 + 0.5) / 1e6
-
   /** Monitored r6 (VERDICT r11 #5) for values whose summation ORDER
     * differs between strategies (the driver loop groups m identical
     * contributions as one multiply; the distributed path and the
@@ -570,7 +566,7 @@ object LlmPipe extends QueryModule {
     }
     val od = Array.tabulate(k)(j => (m(j) - 1) + nbm(j))
     val n = m.sum.toDouble
-    var r = Array.fill(k)(if (discretizeInit) r6d(1.0 / n) else 1.0 / n)
+    var r = Array.fill(k)(if (discretizeInit) Det.r6d(1.0 / n) else 1.0 / n)
     for (_ <- 1 to iters) {
       val inm = new Array[Double](k)
       var j = 0

@@ -202,14 +202,14 @@ object LlmTrain extends QueryModule {
   /** One Lloyd iteration over the embedding corpus — the iterative-ML
     * primitive behind IVF codebook training (q_llm_sim_ann's cells)
     * and embedding-space clustering: current centroids (per-label
-    * means, the q_llm_centroid aggregation) BROADCAST to every task,
-    * each vector assigned to its nearest centroid by squared L2
-    * (argmin over the 10-row centroid table), then the reassignment
-    * matrix (label → assigned, counts + mean distance) summarizes the
-    * step. Scale shape: |k|·dims broadcast + ONE corpus scan + one
-    * |k|²-bounded aggregation — the corpus never shuffles; a full
-    * k-means run is this step iterated, each materializing only new
-    * centroids.
+    * means, trained on the driver by `LlmExt.trainCodebook`) shipped
+    * to every task as a constant, each vector assigned to its nearest
+    * centroid by squared L2 (argmin over the 10-row centroid table),
+    * then the reassignment matrix (label → assigned, counts + mean
+    * distance) summarizes the step. Scale shape: one training pass +
+    * ONE corpus scan + one |k|²-bounded aggregation — the corpus
+    * never shuffles for the centroids; a full k-means run is this
+    * step iterated, each materializing only new centroids.
     *
     * Cross-engine determinism: centroid components are r6-discretized
     * on BOTH sides before any distance math, so the d² inputs are
@@ -217,18 +217,18 @@ object LlmTrain extends QueryModule {
     * list_dot_product, both sequential 64-element loops); argmin
     * tie-breaks on (d2, clabel). */
   private def kmeansStep(s: SparkSession, d: String): DataFrame = {
-    val emb = T.par(s, T.embeddings(s, d))
-      .select(col("vec_id"), col("label"),
-        Llm.widen(col("embedding")).as("e"))
-    val cent = LlmExt.centroids(
-      emb.select(col("label").as("clabel"), col("e")), "clabel")
-    // argmin as a PER-ROW fold over the packed broadcast codebook (the
-    // LlmExt codebook kit, shared with q_llm_sim_ann): the old crossJoin
-    // expanded every vector |k|× and re-grouped by vec_id through a
-    // |vecs|-row exchange just to take a min. The reassignment matrix
-    // aggregates straight to |labels|·|k| partials. KmeansArgminSpec
-    // pins fold-vs-agg equality; plan 3→2 exchanges.
-    emb.crossJoin(broadcast(LlmExt.packed(cent, "clabel")))
+    val raw = T.embeddings(s, d)
+    // trained on the scan itself: the codebook job needs no shuffle
+    val cent = LlmExt.trainCodebook(
+      raw.select(col("label").as("clabel"), Llm.widen(col("embedding")).as("e")),
+      "clabel")
+    val emb = T.par(s, raw).select(col("label"), Llm.widen(col("embedding")).as("e"))
+    // argmin as a PER-ROW fold over the literal codebook (the LlmExt
+    // codebook kit, shared with q_llm_sim_ann), so no |vecs|-row
+    // exchange re-groups the corpus to take a min; the reassignment
+    // matrix aggregates straight to |labels|·|k| partials.
+    // KmeansArgminSpec pins fold-vs-agg equality.
+    emb.withColumn("cbook", cent)
       .select(col("label"), array_min(LlmExt.codeDistances("clabel")).as("best"))
       .groupBy(col("label"), col("best.clabel").as("assigned"))
       .agg(count(lit(1)).as("n_vecs"),

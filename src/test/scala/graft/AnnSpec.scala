@@ -64,8 +64,10 @@ class AnnSpec extends AnyFunSuite {
         else cand.sum.toDouble / cand.length
       val candMax = if (cand.isEmpty) 0L else cand.max
       val r = recallOf(LlmExt.simAnnTrained(s, d, np, it).collect())
-      info(f"lloyd=$it nprobe=$np: recall@5 $r%.2f, rerank rows/query " +
-        f"avg $perQuery%.0f max $candMax%d " +
+      // exact figures (recall as a double, the rows' sum): a codebook
+      // change that moves one candidate shows here
+      info(s"lloyd=$it nprobe=$np: recall@5 $r, rerank rows ${cand.sum} " +
+        f"over ${cand.length} queries, avg $perQuery%.1f max $candMax%d " +
         f"(${100.0 * perQuery / corpusSize}%.0f%% of brute-force $corpusSize%d)")
       ((np, it), (r, perQuery, candMax))
     }

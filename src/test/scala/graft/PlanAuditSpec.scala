@@ -24,8 +24,6 @@ class PlanAuditSpec extends AnyFunSuite {
     * a bounded ≤50-row query set broadcast against one corpus scan —
     * the nested-loop there multiplies a constant, not a corpus, and
     * the declared scale path is q_llm_sim_ann's IVF cells.
-    * q_llm_kmeans likewise: 10 centroid rows broadcast against one
-    * corpus scan — the nested loop multiplies k, not the corpus.
     * q_llm_tfidf: the corpus-size scalar N rides in as a broadcast
     * 1-ROW aggregate frame (the alternative — a partition-less
     * window — serializes the whole frame onto one task); the nested
@@ -48,16 +46,12 @@ class PlanAuditSpec extends AnyFunSuite {
     * q_llm_dsir_weight: the two LM totals (raw + target gram counts)
     * ride one broadcast 1-row frame onto the ≤1024-row bucket table;
     * the nested loop multiplies by exactly one row.
-    * q_llm_sim_ann (round 10): the Lloyd-training and assignment
-    * passes each cross the corpus with the ≤32-row broadcast
-    * codebook — the kmeans multiplies-k-not-the-corpus shape; the
-    * probe join itself is an equi-join on cell.
     * Everything else must justify itself here before joining. */
   private val allowlisted =
-    Set("q_llm_sim_search", "q_llm_kmeans", "q_llm_tfidf",
+    Set("q_llm_sim_search", "q_llm_tfidf",
       "q_graph_pagerank", "q_agg_sketch_merge", "q_llm_keeper",
       "q_llm_perplexity", "q_llm_boilerplate", "q_llm_colloc",
-      "q_llm_dsir_weight", "q_llm_sim_ann")
+      "q_llm_dsir_weight")
 
   for (name <- SparkEntry.queries.keys.toSeq.sorted
        if name.startsWith("q_") && !allowlisted(name)) {
@@ -141,6 +135,20 @@ class PlanAuditSpec extends AnyFunSuite {
         ("ivfTopKOver", ops.LlmExt.ivfTopKOver(ops.LlmExt.simAnnFrame(s, sf),
           5, ops.LlmExt.AnnNProbe), 5)))
       withClue(s"$name: ")(TopKPlan.assertShuffleBounded(df, k))
+  }
+
+  /** q_llm_sim_ann and q_llm_kmeans train their codebooks at
+    * construction (`LlmExt.trainCodebook`) and read them as literals,
+    * so no codebook is crossed with the corpus or broadcast: the
+    * executed IVF plan keeps only the probe broadcast and the range
+    * exchange of its top-k, and k-means broadcasts nothing. */
+  test("codebook queries execute without a codebook join or broadcast") {
+    def executed(q: String) = Bench.materialize(s, sf, q)._3
+    val ann = executed("q_llm_sim_ann")
+    assert(!ann.toString.contains("BroadcastNestedLoopJoin"), ann)
+    assert(Dev.Exchanges.of(ann) == Dev.Exchanges(1, 1, 0), ann)
+    val kmeans = executed("q_llm_kmeans")
+    assert(Dev.Exchanges.of(kmeans).broadcast == 0, kmeans)
   }
 
   /** Unordered-window gate (round 10, verdict #1): a

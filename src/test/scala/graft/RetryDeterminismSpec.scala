@@ -21,6 +21,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *    sample would shift the kept set);
   *  - q_llm_dedup_fuzzy — MinHash LSH banding (hash-stable by design;
   *    retried band tasks must regenerate identical buckets);
+  *  - q_llm_sim_ann — the IVF codebook trained on the driver from
+  *    per-task partial sums (a retried task must return the same
+  *    partials, merged in the same partition order);
   *  - q_llm_keeper / q_graph_pagerank_conv — iterative loops
   *    (star-contraction CC + PageRank power iteration), forced onto
   *    the DISTRIBUTED strategy so every loop round's shuffles retry;
@@ -108,6 +111,23 @@ class RetryDeterminismSpec extends AnyFunSuite {
     // different reducers than its first attempt and double/lose rows
     assertRetryDeterministic("q_join_skew_salted",
       Seq(Gate.Key -> "large"))
+  }
+
+  test("q_llm_sim_ann (driver-trained codebook) survives task retries") {
+    assertRetryDeterministic("q_llm_sim_ann")
+    // the scored frame's scan feeds the trainer's collect jobs without
+    // a shuffle, so the kills above land after training; over a
+    // hash-repartitioned frame every trainer task reads a shuffle and
+    // its first attempt is killed while the query is built
+    def frame = ops.LlmExt.simAnnFrame(spark, d)
+      .repartition(4, org.apache.spark.sql.functions.col("vec_id"))
+    def ann = ops.LlmExt.ivfTopKOver(frame, 5, ops.LlmExt.AnnNProbe)
+    val base = ann.collect().map(_.toString).sorted.toSeq
+    val (built, kills) = RetryInjector.run(spark)(ann)
+    info(s"ivfTopKOver: $kills first attempts killed in the trainer's jobs")
+    assert(kills > 0, "no trainer task was ever retried — injection inert")
+    assert(built.collect().map(_.toString).sorted.toSeq == base,
+      "ivfTopKOver output differs under trainer task retries")
   }
 
   test("s_tumble (stateful streaming) survives task retries") {
