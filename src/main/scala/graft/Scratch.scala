@@ -48,4 +48,10 @@ object Scratch {
     * deterministically. */
   def dir(kind: String): String =
     deleteOnExit(s"$base/graft-$kind-${ProcessHandle.current.pid}")
+
+  /** [[dir]]`(kind)`'s subdirectory for data dir `d` (every character
+    * outside `[A-Za-z0-9.]` of its path becomes `_`), so runs over two
+    * data dirs in one process keep apart. */
+  def dirFor(kind: String, d: String): String =
+    dir(kind) + "/" + d.replaceAll("[^A-Za-z0-9.]", "_")
 }

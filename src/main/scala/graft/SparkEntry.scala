@@ -34,12 +34,7 @@ object SparkEntry {
     * the relational surface. Driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame = {
     import graft.sources.{Normalize, NormalizeQueries}
-    val fx = NormalizeQueries.fixturesDir
-    val all = Normalize.dispatch(
-      Normalize.readMeetup(spark, s"$fx/raw_meetup.jsonl"),
-      Normalize.readFacebook(spark, s"$fx/raw_facebook.jsonl"),
-      Normalize.readEventbrite(spark, s"$fx/raw_eventbrite.jsonl"),
-      Normalize.readChapters(spark, s"$fx/chapters.jsonl"))
+    val all = Normalize.readFixtures(spark, NormalizeQueries.fixturesDir)
     val d = "/root/testdata/sf0.001"
     val ev = Tables.events(spark, d)
       .withColumn("k", get_json_object(col("props"), "$.k").cast("long"))

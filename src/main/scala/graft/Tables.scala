@@ -39,8 +39,12 @@ object Tables {
     *    type every query was validated against.
     * The LongType branch needs the nanosAsLong legacy flag, which
     * [[GraftSession.local]] sets when it builds the session. */
-  def events(s: SparkSession, d: String): DataFrame = {
-    val raw = t(s, d, "events")
+  def events(s: SparkSession, d: String): DataFrame = eventsTs(t(s, d, "events"))
+
+  /** The ts normalization of [[events]] over any events frame read
+    * with the file's own schema, batch or streaming
+    * (`Streams.eventsStream` reads the same file as a stream). */
+  def eventsTs(raw: DataFrame): DataFrame =
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         raw.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))
@@ -49,7 +53,6 @@ object Tables {
         raw.withColumn("ts",
           col("ts").cast(org.apache.spark.sql.types.TimestampType))
     }
-  }
   def documents(s: SparkSession, d: String): DataFrame = t(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = t(s, d, "embeddings")
 

@@ -2,9 +2,10 @@ package graft.sources
 
 import java.util.regex.Pattern
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{ArrayType, StructField, StructType}
 
 /** The cuttlefish core: per-adapter normalization of heterogeneous raw
   * API JSON into one canonical event schema, with an error side
@@ -25,9 +26,10 @@ import org.apache.spark.sql.types.StructType
   *    named-timezone local time → DST-aware UTC epoch + offset; the
   *    event key is the stringified UTC millis (eventbrite.rkt:68), a
   *    reference quirk kept as observable behavior.
-  *  - adapter dispatch (`private/api-runner.rkt:118-148`): per-source
-  *    frames unioned by name; unknown adapters become error rows with
-  *    the reference's message shape (api-runner.rkt:144-146).
+  *  - adapter dispatch (`private/api-runner.rkt:19-22,118-148`): the
+  *    adapter table [[WORKERS]] drives [[dispatch]]'s union; unknown
+  *    adapters become error rows with the reference's message shape
+  *    (api-runner.rkt:144-146).
   *  - tagged-union error routing (`private/api-runner.rkt:55-61`,
   *    README.md:30-42): ('ERROR msg) | (id jsexpr) becomes a nullable
   *    `error` column + filter split. IMPROVEMENT over the reference:
@@ -45,7 +47,8 @@ import org.apache.spark.sql.types.StructType
 object Normalize {
 
   /** Canonical event schema (FIXTURES.md §5; reference
-    * `private/data/data_formats.md:15-44`). */
+    * `private/data/data_formats.md:15-44`) — its one definition; every
+    * canonical row goes through [[canonicalRows]], which walks it. */
   val canonicalDdl: String =
     """event_id STRING, chapter STRING, url STRING, time BIGINT,
       |utcOffset BIGINT, title STRING, description STRING,
@@ -55,8 +58,7 @@ object Normalize {
       |photos ARRAY<STRUCT<url: STRING, width: INT, height: INT>>,
       |error STRING""".stripMargin
   val canonicalSchema: StructType = StructType.fromDDL(canonicalDdl)
-
-  private val photosDdl = "ARRAY<STRUCT<url: STRING, width: INT, height: INT>>"
+  private val photosType = canonicalSchema("photos").dataType.asInstanceOf[ArrayType]
 
   // ------------------------------------------------------ raw-source schemas
   // Explicit StructTypes per source (SURVEY §1.3: never schema
@@ -102,14 +104,31 @@ object Normalize {
        |thumbnails STRUCT<default: $thumbDdl, medium: $thumbDdl,
        |                  high: $thumbDdl>""".stripMargin)
 
-  def readMeetup(s: SparkSession, path: String): DataFrame =
-    s.read.schema(meetupRawSchema).json(path)
-  def readFacebook(s: SparkSession, path: String): DataFrame =
-    s.read.schema(facebookRawSchema).json(path)
-  def readEventbrite(s: SparkSession, path: String): DataFrame =
-    s.read.schema(eventbriteRawSchema).json(path)
+  /** One entry of [[WORKERS]]: the `adapter` name chapters route by,
+    * the schema its raw JSON is read with, and its normalizer. */
+  final case class Adapter(name: String, rawSchema: StructType,
+                           normalize: DataFrame => DataFrame)
+
+  /** The adapter table, the reference's `WORKERS` (api-runner.rkt:19-22):
+    * [[dispatch]], [[unknownAdapterErrors]] and [[readFixtures]] derive
+    * from it, so adding an adapter is one entry here. */
+  val WORKERS: Seq[Adapter] = Seq(
+    Adapter("meetup", meetupRawSchema, normalizeMeetup),
+    Adapter("facebook", facebookRawSchema, normalizeFacebook),
+    Adapter("eventbrite", eventbriteRawSchema, normalizeEventbrite))
+
   def readChapters(s: SparkSession, path: String): DataFrame =
     s.read.schema(chaptersSchema).json(path)
+
+  /** One adapter's capture in a fixture directory,
+    * `<dir>/raw_<name>.jsonl`, read with its raw schema. */
+  def readRaw(s: SparkSession, dir: String, a: Adapter): DataFrame =
+    s.read.schema(a.rawSchema).json(s"$dir/raw_${a.name}.jsonl")
+
+  /** A fixture directory through [[dispatch]]: every adapter's
+    * `raw_<name>.jsonl` plus `chapters.jsonl`. */
+  def readFixtures(s: SparkSession, dir: String): DataFrame =
+    dispatch(WORKERS.map(readRaw(s, dir, _)), readChapters(s, s"$dir/chapters.jsonl"))
 
   /** videos.json is ONE object keyed by video id (data_formats.md:46),
     * not JSONL — read whole-file, parse as a map, explode to typed
@@ -210,49 +229,67 @@ object Normalize {
     * whole error string and let the invalid row sail through the ok
     * channel with a null key. Render null fields as "<null>" instead
     * (the oracle SQL mirrors this with coalesce). */
-  private def nn(c: org.apache.spark.sql.Column) =
+  private def nn(c: Column) =
     coalesce(c.cast("string"), lit("<null>"))
 
-  /** Null out every payload column on error rows (keep chapter+error) —
-    * the row-level rendering of the reference's tagged union. */
-  private def maskErrors(df: DataFrame): DataFrame = {
-    val keep = Set("chapter", "error")
-    df.select(df.columns.toIndexedSeq.map { c =>
-      if (keep(c)) col(c)
+  /** Every canonical row goes through here. One select over `raw`
+    * walks [[canonicalSchema]]: the top level, and the venue struct,
+    * whose fields are supplied as `venue.<field>`.
+    *  - A supplied field is cast only where its type differs from the
+    *    canonical one (nullability aside), and renamed only where its
+    *    name does: a same-name alias would stay in the plan. Both are
+    *    read from an analysis of `raw.select`; no job runs.
+    *  - A field not supplied is a typed null; so is a struct none of
+    *    whose fields is supplied.
+    * A second select nulls the payload on error rows (chapter and
+    * error stay): the reference's tagged union, per row. */
+  private def canonicalRows(raw: DataFrame, supplied: (String, Column)*): DataFrame = {
+    val given = supplied.toMap
+    val probed = supplied.map(_._1).zip(raw.select(supplied.map(_._2): _*).schema).toMap
+    def conform(key: String, f: StructField): Option[Column] = given.get(key).map { c =>
+      val p = probed(key)
+      if (!DataTypeUtils.equalsIgnoreNullability(p.dataType, f.dataType))
+        c.cast(f.dataType).as(f.name)
+      else if (p.name != f.name) c.as(f.name)
+      else c
+    }
+    val rows = raw.select(fieldsOf(canonicalSchema, f => f.dataType match {
+      case st: StructType if st.fieldNames.exists(n => given.contains(s"${f.name}.$n")) =>
+        Some(struct(fieldsOf(st, sf => conform(s"${f.name}.${sf.name}", sf)): _*).as(f.name))
+      case _ => conform(f.name, f)
+    }): _*)
+    rows.select(canonicalSchema.fieldNames.toIndexedSeq.map { c =>
+      if (c == "chapter" || c == "error") col(c)
       else when(col("error").isNull, col(c)).as(c)
     }: _*)
   }
 
+  /** `t`'s fields in order, each `field(f)` or else a typed null. */
+  private def fieldsOf(t: StructType, field: StructField => Option[Column]): Seq[Column] =
+    t.fields.toIndexedSeq.map(f => field(f).getOrElse(lit(null).cast(f.dataType).as(f.name)))
+
+  /** meetup's and facebook's first check: an event without an id. */
+  private def missingId: Column = when(col("id").isNull,
+    concat(lit("ERROR: missing id for event '"), nn(col("name")),
+      lit("' in chapter "), nn(col("chapter"))))
+
   /** meetup.rkt:39-59 — flat renames + venue extraction with defaults +
     * photos transform (photo_link→url, width/height null; empty list
     * default per get-in '() at meetup.rkt:55). */
-  def normalizeMeetup(raw: DataFrame): DataFrame =
-    maskErrors(raw.select(
-      col("id").as("event_id"),
-      col("chapter"),
-      col("link").as("url"),
-      col("time"),
-      col("utc_offset").as("utcOffset"),
-      col("name").as("title"),
-      col("description"),
-      struct(
-        col("venue.name").as("name"),
-        col("venue.address_1").as("address1"),
-        col("venue.address_2").as("address2"),
-        col("venue.country").as("country"),
-        col("venue.city").as("city"),
-        col("venue.zip").as("postalCode"),
-        col("venue.lon").as("lon"),
-        col("venue.lat").as("lat")).as("venue"),
-      coalesce(
-        transform(col("photo_album.photo_sample"), p =>
-          struct(p.getField("photo_link").as("url"),
-            lit(null).cast("int").as("width"),
-            lit(null).cast("int").as("height"))),
-        expr(s"CAST(array() AS $photosDdl)")).as("photos"),
-      when(col("id").isNull,
-        concat(lit("ERROR: missing id for event '"), nn(col("name")),
-          lit("' in chapter "), nn(col("chapter")))).as("error")))
+  def normalizeMeetup(raw: DataFrame): DataFrame = canonicalRows(raw,
+    "event_id" -> col("id"), "chapter" -> col("chapter"), "url" -> col("link"),
+    "time" -> col("time"), "utcOffset" -> col("utc_offset"),
+    "title" -> col("name"), "description" -> col("description"),
+    "venue.name" -> col("venue.name"), "venue.address1" -> col("venue.address_1"),
+    "venue.address2" -> col("venue.address_2"), "venue.country" -> col("venue.country"),
+    "venue.city" -> col("venue.city"), "venue.postalCode" -> col("venue.zip"),
+    "venue.lon" -> col("venue.lon"), "venue.lat" -> col("venue.lat"),
+    "photos" -> coalesce(
+      transform(col("photo_album.photo_sample"), p =>
+        struct(fieldsOf(photosType.elementType.asInstanceOf[StructType], f =>
+          Option.when(f.name == "url")(p.getField("photo_link").as("url"))): _*)),
+      array().cast(photosType)),
+    "error" -> missingId)
 
   /** facebook.rkt:35-55 — URL synthesis (A24), ISO8601+offset epoch
     * (A21, sign-corrected), markdown description (A23), photos null. */
@@ -274,60 +311,44 @@ object Normalize {
     val utcOffset = when(offH =!= "",
       sign * (offH.cast("long") * 3600L +
         when(offM =!= "", offM.cast("long")).otherwise(lit(0L)) * 60L) * 1000L)
-    maskErrors(raw.select(
-      col("id").as("event_id"),
-      col("chapter"),
-      concat(lit("https://facebook.com/"), col("id")).as("url"),
-      (unix_timestamp(ts) * 1000).as("time"),
-      utcOffset.as("utcOffset"),
-      col("name").as("title"),
-      mdToHtml(col("description")).as("description"),
-      struct(
-        col("place.name").as("name"),
-        col("place.location.street").as("address1"),
-        lit(null).cast("string").as("address2"),
-        col("place.location.country").as("country"),
-        col("place.location.city").as("city"),
-        col("place.location.zip").as("postalCode"),
-        col("place.location.longitude").as("lon"),
-        col("place.location.latitude").as("lat")).as("venue"),
-      lit(null).cast(photosDdl).as("photos"),
-      when(col("id").isNull,
-        concat(lit("ERROR: missing id for event '"), nn(col("name")),
-          lit("' in chapter "), nn(col("chapter"))))
-        .when(ts.isNull,
+    canonicalRows(raw,
+      "event_id" -> col("id"), "chapter" -> col("chapter"),
+      "url" -> concat(lit("https://facebook.com/"), col("id")),
+      "time" -> unix_timestamp(ts) * 1000, "utcOffset" -> utcOffset,
+      "title" -> col("name"), "description" -> mdToHtml(col("description")),
+      "venue.name" -> col("place.name"), "venue.address1" -> col("place.location.street"),
+      "venue.country" -> col("place.location.country"),
+      "venue.city" -> col("place.location.city"),
+      "venue.postalCode" -> col("place.location.zip"),
+      "venue.lon" -> col("place.location.longitude"),
+      "venue.lat" -> col("place.location.latitude"),
+      "error" -> missingId.when(ts.isNull,
           concat(lit("ERROR: unparseable start_time '"), nn(col("start_time")),
             lit("' for event "), col("id"), lit(" in chapter "),
-            nn(col("chapter")))).as("error")))
+            nn(col("chapter")))))
   }
 
   /** eventbrite.rkt:51-85 — named-TZ local → DST-aware UTC epoch +
-    * offset (A22); event key = stringified UTC millis
-    * (eventbrite.rkt:68); lon/lat arrive as strings → DOUBLE. */
+    * offset (A22); event key = the UTC millis, stringified by
+    * [[canonicalRows]] (eventbrite.rkt:68); lon/lat arrive as strings
+    * and are cast to DOUBLE there too. */
   def normalizeEventbrite(raw: DataFrame): DataFrame = {
     val local = try_to_timestamp(col("start.local"), lit("yyyy-MM-dd'T'HH:mm:ss"))
     val utcTs = to_utc_timestamp(local, col("start.timezone"))
     val timeMs = (unix_timestamp(utcTs) * 1000)
     val offsetMs = (unix_timestamp(local) - unix_timestamp(utcTs)) * 1000
-    maskErrors(raw.select(
-      timeMs.cast("string").as("event_id"),
-      col("chapter"),
-      col("url"),
-      timeMs.as("time"),
-      offsetMs.as("utcOffset"),
-      col("name.text").as("title"),
-      col("description.html").as("description"),
-      struct(
-        col("venue.name").as("name"),
-        col("venue.address.address_1").as("address1"),
-        col("venue.address.address_2").as("address2"),
-        col("venue.address.country").as("country"),
-        col("venue.address.city").as("city"),
-        col("venue.address.postal_code").as("postalCode"),
-        col("venue.longitude").cast("double").as("lon"),
-        col("venue.latitude").cast("double").as("lat")).as("venue"),
-      lit(null).cast(photosDdl).as("photos"),
-      when(local.isNull,
+    canonicalRows(raw,
+      "event_id" -> timeMs, "chapter" -> col("chapter"), "url" -> col("url"),
+      "time" -> timeMs, "utcOffset" -> offsetMs,
+      "title" -> col("name.text"), "description" -> col("description.html"),
+      "venue.name" -> col("venue.name"),
+      "venue.address1" -> col("venue.address.address_1"),
+      "venue.address2" -> col("venue.address.address_2"),
+      "venue.country" -> col("venue.address.country"),
+      "venue.city" -> col("venue.address.city"),
+      "venue.postalCode" -> col("venue.address.postal_code"),
+      "venue.lon" -> col("venue.longitude"), "venue.lat" -> col("venue.latitude"),
+      "error" -> when(local.isNull,
         concat(lit("ERROR: unparseable start.local for event "), nn(col("id")),
           lit(" in chapter "), nn(col("chapter"))))
         // parseable local time but no timezone → the UTC conversion
@@ -335,46 +356,37 @@ object Normalize {
         // sail through the ok channel
         .when(utcTs.isNull,
           concat(lit("ERROR: missing start.timezone for event "), nn(col("id")),
-            lit(" in chapter "), nn(col("chapter"))))
-        .as("error")))
+            lit(" in chapter "), nn(col("chapter")))))
   }
 
-  /** api-runner.rkt:144-146 — unregistered adapters become error rows.
-    * A NULL/missing adapter is as unregistered as a misspelled one:
-    * without the explicit isNull branch the three-valued `NOT IN`
-    * silently DROPS the chapter from both channels (review r12),
-    * violating the tagged-union contract that every input row lands
-    * in ok or error. */
+  /** api-runner.rkt:144-146 — a chapter whose adapter is not in
+    * [[WORKERS]] becomes an error row. A NULL/missing adapter is as
+    * unregistered as a misspelled one: without the explicit isNull
+    * branch the three-valued `NOT IN` silently DROPS the chapter from
+    * both channels (review r12), violating the tagged-union contract
+    * that every input row lands in ok or error. */
   def unknownAdapterErrors(chapters: DataFrame): DataFrame =
-    chapters
-      .filter(col("adapter").isNull ||
-        !col("adapter").isin("meetup", "facebook", "eventbrite"))
-      .select(
-        lit(null).cast("string").as("event_id"),
-        col("chapter"),
-        lit(null).cast("string").as("url"),
-        lit(null).cast("bigint").as("time"),
-        lit(null).cast("bigint").as("utcOffset"),
-        lit(null).cast("string").as("title"),
-        lit(null).cast("string").as("description"),
-        lit(null).cast(
-          "STRUCT<name: STRING, address1: STRING, address2: STRING," +
-            "country: STRING, city: STRING, postalCode: STRING," +
-            "lon: DOUBLE, lat: DOUBLE>").as("venue"),
-        lit(null).cast(photosDdl).as("photos"),
-        concat(lit("ERROR: No adapter "), nn(col("adapter")),
-          lit(" found for chapter "), nn(col("chapter"))).as("error"))
+    canonicalRows(chapters.filter(col("adapter").isNull ||
+        !col("adapter").isin(WORKERS.map(_.name): _*)),
+      "chapter" -> col("chapter"),
+      "error" -> concat(lit("ERROR: No adapter "), nn(col("adapter")),
+        lit(" found for chapter "), nn(col("chapter"))))
 
-  /** A13 dispatch: per-adapter normalize → unionByName. In the
-    * reference this is the WORKERS registry + cond; here each source
-    * is its own scan+select branch so Catalyst prunes each schema
-    * independently — no per-row dynamic dispatch. */
-  def dispatch(meetup: DataFrame, facebook: DataFrame,
-               eventbrite: DataFrame, chapters: DataFrame): DataFrame =
-    normalizeMeetup(meetup)
-      .unionByName(normalizeFacebook(facebook))
-      .unionByName(normalizeEventbrite(eventbrite))
-      .unionByName(unknownAdapterErrors(chapters))
+  /** A13 dispatch: each [[WORKERS]] normalizer over its raw frame
+    * (`raws` in table order) plus [[unknownAdapterErrors]], unioned by
+    * name. Each source is its own scan+select branch, so Catalyst
+    * prunes each schema independently — no per-row dynamic dispatch. */
+  def dispatch(raws: Seq[DataFrame], chapters: DataFrame): DataFrame = {
+    require(raws.size == WORKERS.size,
+      s"one raw frame per adapter (${WORKERS.map(_.name).mkString(", ")}), got ${raws.size}")
+    (WORKERS.zip(raws).map { case (a, raw) => a.normalize(raw) } :+
+      unknownAdapterErrors(chapters)).reduce(_ unionByName _)
+  }
+
+  /** [[dispatch]] with the raw frames positional, in table order. */
+  def dispatch(meetup: DataFrame, facebook: DataFrame, eventbrite: DataFrame,
+               chapters: DataFrame): DataFrame =
+    dispatch(Seq(meetup, facebook, eventbrite), chapters)
 
   /** A8 split: (ok, err) — the two sinks of write-response
     * (api-runner.rkt:55-61). */
@@ -412,8 +424,8 @@ object Normalize {
       // TRACKED divergence from the reference's last-write envelope:
       // SURVEY §2A "Tracked behavioral divergences" #1 records the
       // contract and the retire condition (an ingest-order surrogate).
-      .agg(max(struct(col("url"), col("time"), col("utcOffset"),
-        col("title"), col("description"), col("venue"), col("photos")))
+      .agg(max(struct(canonicalSchema.fieldNames.toIndexedSeq
+        .filterNot(Set("event_id", "chapter", "error")).map(col): _*))
         .as("event"))
       .groupBy(col("chapter"))
       .agg(map_from_entries(collect_list(struct(

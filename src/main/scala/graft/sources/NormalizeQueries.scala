@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.QueryModule
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The cuttlefish pipeline as a scored query: raw JSON scans (explicit
@@ -15,13 +15,8 @@ object NormalizeQueries extends QueryModule {
   val fixturesDir: String =
     sys.env.getOrElse("SPARK_GRAFT_FIXTURES", "/root/repo/fixtures")
 
-  private def scanJson(s: SparkSession, d: String): DataFrame = {
-    val all = Normalize.dispatch(
-      Normalize.readMeetup(s, s"$fixturesDir/raw_meetup.jsonl"),
-      Normalize.readFacebook(s, s"$fixturesDir/raw_facebook.jsonl"),
-      Normalize.readEventbrite(s, s"$fixturesDir/raw_eventbrite.jsonl"),
-      Normalize.readChapters(s, s"$fixturesDir/chapters.jsonl"))
-    all.select(
+  private def scanJson(s: SparkSession, d: String): DataFrame =
+    Normalize.readFixtures(s, fixturesDir).select(
       col("event_id"), col("chapter"), col("url"), col("time"),
       col("utcOffset"), col("title"), col("description"),
       col("venue.name").as("venue_name"),
@@ -41,7 +36,6 @@ object NormalizeQueries extends QueryModule {
       // the tie-breakers to the primary column too)
       .orderBy(asc_nulls_first("chapter"), asc_nulls_first("event_id"),
         asc_nulls_first("error"))
-  }
 
   private val mdSql: String = {
     // DuckDB rendering of Normalize.renderMarkdown: escape, [t](u)
@@ -242,21 +236,28 @@ object NormalizeQueries extends QueryModule {
     // graft.Scratch: per-process RAM-backed subdir + exit-time cleanup
     // (per-PROCESS so verify + bench, or two worktree runs, sharing
     // /dev/shm can't overwrite each other mid-read)
-    val dir = graft.Scratch.dir("orc") + "/" +
-      d.replaceAll("[^A-Za-z0-9.]", "_")
+    val dir = graft.Scratch.dirFor("orc", d)
     graft.Tables.events(s, d).write.options(graft.LocalFs.conf)
       .mode("overwrite").orc(dir)
-    s.read.orc(dir)
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        countDistinct(col("user_id")).as("n_users"),
-        min(unix_micros(col("ts"))).as("first_us"),
-        max(unix_micros(col("ts"))).as("last_us"),
-        graft.ops.Det.r2(sum(col("value"))).as("total"))
-      .orderBy(col("event_type"))
+    roundTripAgg(s.read.orc(dir), unix_micros(col("ts")), col("value"))
   }
 
-  private val scanOrcSql =
+  /** The aggregate both format round-trips end in: per event type,
+    * rows, distinct users, first and last event time in epoch micros
+    * (`us`) and the rounded total of `value`, each as the format reads
+    * it back. [[roundTripSql]] runs the same aggregate over the
+    * original parquet. */
+  private def roundTripAgg(df: DataFrame, us: Column, value: Column): DataFrame =
+    df.groupBy(col("event_type"))
+      .agg(count(lit(1)).as("n"),
+        countDistinct(col("user_id")).as("n_users"),
+        min(us).as("first_us"),
+        max(us).as("last_us"),
+        graft.ops.Det.r2(sum(value)).as("total"))
+      .orderBy(col("event_type"))
+
+  /** The oracle of q_scan_orc and q_scan_text. */
+  private val roundTripSql =
     s"""SELECT event_type, count(*) AS n,
        |       count(DISTINCT user_id) AS n_users,
        |       min(epoch_us(make_timestamp(epoch_us(ts)))) AS first_us,
@@ -282,8 +283,7 @@ object NormalizeQueries extends QueryModule {
     * the standard splittable-lines ingest, one map-side parse ahead of
     * the first shuffle. */
   private def scanText(s: SparkSession, d: String): DataFrame = {
-    val dir = graft.Scratch.dir("text") + "/" +
-      d.replaceAll("[^A-Za-z0-9.]", "_")
+    val dir = graft.Scratch.dirFor("text", d)
     // concat (unlike concat_ws) propagates nulls: a null in any events
     // column nulls the whole line, and the raise_error guard turns that
     // into a loud write-time failure instead of concat_ws silently
@@ -300,27 +300,12 @@ object NormalizeQueries extends QueryModule {
         .otherwise(line).as("value"))
       .write.options(graft.LocalFs.conf).mode("overwrite").text(dir)
     val f = split(col("value"), "\\|")
-    s.read.text(dir)
+    roundTripAgg(s.read.text(dir)
       .select(f.getItem(2).as("event_type"),
         f.getItem(1).cast("long").as("user_id"),
         f.getItem(3).cast("long").as("us"),
-        f.getItem(4).cast("double").as("v"))
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        countDistinct(col("user_id")).as("n_users"),
-        min(col("us")).as("first_us"),
-        max(col("us")).as("last_us"),
-        graft.ops.Det.r2(sum(col("v"))).as("total"))
-      .orderBy(col("event_type"))
+        f.getItem(4).cast("double").as("v")), col("us"), col("v"))
   }
-
-  private val scanTextSql =
-    s"""SELECT event_type, count(*) AS n,
-       |       count(DISTINCT user_id) AS n_users,
-       |       min(epoch_us(make_timestamp(epoch_us(ts)))) AS first_us,
-       |       max(epoch_us(make_timestamp(epoch_us(ts)))) AS last_us,
-       |       ${graft.ops.Det.sql2("sum(value)")} AS total
-       |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin
 
   // ----------------------------------------------------------- q_scan_video
 
@@ -392,8 +377,7 @@ object NormalizeQueries extends QueryModule {
     * identical shape, with a metastore (or file index) serving the
     * listing instead of the driver walking directories. */
   private def scanPartitioned(s: SparkSession, d: String): DataFrame = {
-    val dir = graft.Scratch.dir("hivepart") + "/" +
-      d.replaceAll("[^A-Za-z0-9.]", "_")
+    val dir = graft.Scratch.dirFor("hivepart", d)
     val dated = graft.Tables.events(s, d)
       .withColumn("event_date", to_date(col("ts")))
     // Cluster by the partition column before the partitioned write —
@@ -445,8 +429,8 @@ object NormalizeQueries extends QueryModule {
   val oracles: Map[String, String] = Map(
     "q_scan_json" -> scanJsonSql,
     "q_scan_csv" -> scanCsvSql,
-    "q_scan_orc" -> scanOrcSql,
-    "q_scan_text" -> scanTextSql,
+    "q_scan_orc" -> roundTripSql,
+    "q_scan_text" -> roundTripSql,
     "q_scan_video" -> scanVideoSql,
     "q_scan_partitioned" -> scanPartitionedSql,
   )

@@ -79,8 +79,8 @@ object Streams extends QueryModule {
     * testdata generations (see Tables.events). Take the schema from a
     * one-off batch footer read of the same file — forcing a BIGINT
     * schema onto a timestamp[us] column would silently read raw micros
-    * as "nanos" and shift every event to 1970 — then apply the same
-    * type-adaptive ts normalization as the batch path. */
+    * as "nanos" and shift every event to 1970 — then apply the batch
+    * path's ts normalization, [[graft.Tables.eventsTs]]. */
   private def eventsStream(s: SparkSession, d: String): DataFrame = {
     val fileSchema = s.read.parquet(s"$d/events.parquet").schema
     // the streaming file source wants a directory. When the table IS
@@ -98,18 +98,10 @@ object Streams extends QueryModule {
       try fs.getFileStatus(p).isDirectory
       catch { case _: java.io.FileNotFoundException => false }
     }
-    val st = if (isDir)
+    graft.Tables.eventsTs(if (isDir)
         s.readStream.schema(fileSchema).parquet(s"$d/events.parquet")
       else s.readStream.schema(fileSchema)
-        .option("pathGlobFilter", "events.parquet").parquet(d)
-    fileSchema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        st.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))
-      case org.apache.spark.sql.types.TimestampType => st
-      case _ =>
-        st.withColumn("ts",
-          col("ts").cast(org.apache.spark.sql.types.TimestampType))
-    }
+        .option("pathGlobFilter", "events.parquet").parquet(d))
   }
 
   /** The session conf a stream starts under. A stream clones its

@@ -46,15 +46,11 @@ class DevSpec extends AnyFunSuite {
   test("profile: the jobs a query runs while it is built count apart") {
     // both read the embeddings once (a parquet read infers its schema
     // in a job); q_llm_sim_ann also trains its codebook at
-    // construction: one job for the grid seed and one per Lloyd round.
-    // At least, not exactly: once a FetchFailed has unregistered the
-    // shared session's block manager (RetryDeterminismSpec), the
-    // master no longer sees cached blocks, and the lazy checkpoint the
-    // rounds read runs one more job to cache its partitions again.
+    // construction: one job for the grid seed and one per Lloyd round
     def timed(q: String) = Dev.profile(s, SparkTestBase.sfDir, q).timed
     val exact = timed("q_llm_sim_search")
     val ann = timed("q_llm_sim_ann")
-    assert(ann.constructJobs - exact.constructJobs >= ops.LlmExt.AnnLloydIters + 1,
+    assert(ann.constructJobs - exact.constructJobs == ops.LlmExt.AnnLloydIters + 1,
       s"construct jobs: q_llm_sim_ann ${ann.constructJobs}, " +
         s"q_llm_sim_search ${exact.constructJobs}")
     assert(ann.jobs > ann.constructJobs && exact.jobs > exact.constructJobs)

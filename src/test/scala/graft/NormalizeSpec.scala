@@ -14,14 +14,31 @@ class NormalizeSpec extends AnyFunSuite {
   private lazy val s = SparkTestBase.spark
   private val fx = NormalizeQueries.fixturesDir
 
-  private lazy val all = Normalize.dispatch(
-    Normalize.readMeetup(s, s"$fx/raw_meetup.jsonl"),
-    Normalize.readFacebook(s, s"$fx/raw_facebook.jsonl"),
-    Normalize.readEventbrite(s, s"$fx/raw_eventbrite.jsonl"),
-    Normalize.readChapters(s, s"$fx/chapters.jsonl")).cache()
+  private lazy val all = Normalize.readFixtures(s, fx).cache()
 
   test("canonical schema is exact (shape assertion, eventbrite.rkt:136-146)") {
     assert(all.schema == Normalize.canonicalSchema)
+  }
+
+  // the union above would widen one adapter's drifted type; alone, no
+  // adapter can hide one
+  Normalize.WORKERS.foreach { a =>
+    test(s"${a.name} normalize alone yields the canonical schema") {
+      val out = a.normalize(Normalize.readRaw(s, fx, a))
+      assert(out.schema == Normalize.canonicalSchema, out.schema.treeString)
+    }
+  }
+
+  test("unknown adapters: exactly the unregistered and the NULL adapter rows") {
+    import s.implicits._
+    val chapters = (Normalize.WORKERS.map(_.name) ++ Seq("gopher", null))
+      .zipWithIndex.map { case (a, i) => (s"c$i", a) }.toDF("chapter", "adapter")
+    val errs = Normalize.unknownAdapterErrors(chapters)
+      .select("chapter", "error").collect().map(r => (r.getString(0), r.getString(1)))
+    val n = Normalize.WORKERS.size
+    assert(errs.sorted.toSeq == Seq(
+      (s"c$n", s"ERROR: No adapter gopher found for chapter c$n"),
+      (s"c${n + 1}", s"ERROR: No adapter <null> found for chapter c${n + 1}")))
   }
 
   test("cardinality: every fixture row lands exactly once") {

@@ -1,5 +1,6 @@
 package graft
 
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Task-retry determinism (VERDICT r12 #1). At 100 TB, task retries
@@ -33,8 +34,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * a previous job's shuffle files — every stage re-executes under
   * injection (a re-collected Dataset would reuse materialized map
   * outputs and dodge the kills). */
-class RetryDeterminismSpec extends AnyFunSuite {
-  private val spark = SparkTestBase.spark
+class RetryDeterminismSpec extends AnyFunSuite with BeforeAndAfterAll {
+  private def spark = SparkTestBase.spark
   private val d = SparkTestBase.sfDir
 
   /** Set confs for the duration of `body`, restoring prior values. */
@@ -65,6 +66,7 @@ class RetryDeterminismSpec extends AnyFunSuite {
     }
 
   test("mechanism: kills land, reschedule, and the job completes") {
+    val spark = this.spark
     import spark.implicits._
     def df = spark.range(0, 10000).toDF("x")
       .groupBy(($"x" % 7).as("k"))
@@ -171,4 +173,17 @@ class RetryDeterminismSpec extends AnyFunSuite {
     assertStageResubmitDeterministic("q_llm_keeper",
       Seq(Gate.Key -> "large"))
   }
+
+  /** A FetchFailed removes the driver's block manager from the block
+    * manager master, and a local-mode block manager does not register
+    * again: cached blocks become invisible to the master, so every
+    * later lazy checkpoint would run one more job to cache its
+    * partitions again. Stop the context; the next suite's
+    * `SparkTestBase.spark` builds a fresh session. Staged checkpoints
+    * are released first, while their context still runs. */
+  override def afterAll(): Unit =
+    try {
+      ops.Staged.sweep()
+      spark.stop()
+    } finally super.afterAll()
 }

@@ -259,8 +259,7 @@ class ScaleTechniquesSpec extends AnyFunSuite {
         if (f.isDirectory) Option(f.listFiles).map(_.map(walk).sum).getOrElse(0)
         else if (f.getName.endsWith(".parquet")) 1 else 0
       // the scratch dir the query wrote: re-derive its path
-      walk(new java.io.File(Scratch.dir("hivepart") + "/" +
-        d.replaceAll("[^A-Za-z0-9.]", "_")))
+      walk(new java.io.File(Scratch.dirFor("hivepart", d)))
     }
     assert(filesRead < totalFiles,
       s"pruning read all $totalFiles files ($filesRead)")

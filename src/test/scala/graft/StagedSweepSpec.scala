@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * boundary unpersists them deterministically instead of waiting for
   * driver GC to trigger the ContextCleaner. */
 class StagedSweepSpec extends AnyFunSuite {
-  private val spark = SparkTestBase.spark
+  private def spark = SparkTestBase.spark
   private val d = SparkTestBase.sfDir
 
   test("overlap-split slicing registers its checkpoint; sweep releases it") {
