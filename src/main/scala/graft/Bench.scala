@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.SparkPlan
 
 /** Benchmark main: times every SparkEntry query on SPARK_GRAFT_SF_DIR.
@@ -10,8 +10,8 @@ import org.apache.spark.sql.execution.SparkPlan
   * Measurement hygiene (round-1 lessons):
   *  - A full untimed warm-up pass first — JVM/JIT, codegen cache,
   *    file-listing and parquet-footer caches all warm before timing.
-  *  - Each query runs through [[materialize]]: every operator in the
-  *    plan executes.
+  *  - Each query runs through [[materialize]] into [[execute]]: every
+  *    operator in the plan executes.
   *  - Failures are SURFACED in an "errors" map, never folded into a
   *    fake timing.
   *  - The JSON line goes to stdout AND /root/repo/bench_out.json so
@@ -19,26 +19,34 @@ import org.apache.spark.sql.execution.SparkPlan
   */
 object Bench {
 
-  /** Run one query the way every timed entry point does: release the
+  /** The one step every entry point runs a query through: release the
     * previous query's staged checkpoint blocks and drain garbage from
     * prior queries outside the clock — so one query's timing isn't
     * taxed with a GC cycle triggered by its predecessors' debris (the
     * ContextCleaner also piggybacks on GC to release old
-    * broadcasts/shuffles) — then execute every operator via `toRdd`
-    * (a bare `Dataset.count()` lets Catalyst prune unreferenced
-    * projections — under-measurement). `built` runs on the clock
-    * between the query's construction (its eager checkpoints and
-    * driver collects) and `toRdd`. Returns (seconds, rows, the
-    * executed plan — the final adaptive plan once `toRdd` has run). */
-  def materialize(spark: SparkSession, sfDir: String, name: String,
-                  built: () => Unit = () => ()): (Double, Long, SparkPlan) = {
+    * broadcasts/shuffles) — then build the query, call `built` (on the
+    * clock, between the query's construction — its eager checkpoints
+    * and driver collects — and the sink) and hand the frame to `sink`.
+    * Returns the seconds from build to the sink's end and the sink's
+    * result. */
+  def materialize[A](spark: SparkSession, sfDir: String, name: String,
+                     built: () => Unit = () => ())(sink: DataFrame => A): (Double, A) = {
     ops.Staged.sweep()
     System.gc()
     val t0 = System.nanoTime()
-    val qe = SparkEntry.queries(name)(spark, sfDir).queryExecution
+    val df = SparkEntry.queries(name)(spark, sfDir)
     built()
-    val rows = qe.toRdd.count()
-    ((System.nanoTime() - t0) / 1e9, rows, qe.executedPlan)
+    val out = sink(df)
+    ((System.nanoTime() - t0) / 1e9, out)
+  }
+
+  /** The timed sink: execute every operator via `toRdd` (a bare
+    * `Dataset.count()` lets Catalyst prune unreferenced projections —
+    * under-measurement). Returns the rows and the executed plan — the
+    * final adaptive plan once `toRdd` has run. */
+  def execute(df: DataFrame): (Long, SparkPlan) = {
+    val qe = df.queryExecution
+    (qe.toRdd.count(), qe.executedPlan)
   }
 
   def main(args: Array[String]): Unit = {
@@ -54,7 +62,7 @@ object Bench {
     // a failed query keeps the time it ran for, next to its error
     def run(name: String): (Double, Either[String, Unit]) = {
       val t0 = System.nanoTime()
-      try (materialize(spark, sfDir, name)._1, Right(()))
+      try (materialize(spark, sfDir, name)(execute)._1, Right(()))
       catch { case e: Throwable =>
         ((System.nanoTime() - t0) / 1e9,
           Left(Option(e.getMessage).getOrElse(e.getClass.getName).take(200)))

@@ -16,9 +16,9 @@ import scala.collection.mutable
   *
   * {{{
   *   graft.Dev profile  <sfDir> <query>     job/stage/task/exchange counts (construction
-  *                                          jobs apart) and per-stage wall/CPU table of
-  *                                          one timed run
-  *   graft.Dev explain  <sfDir> [query...]  formatted physical plans
+  *                                          jobs apart), per-stage wall/CPU table and
+  *                                          final adaptive plan of one timed run
+  *   graft.Dev explain  <sfDir> [query...]  formatted initial physical plans
   *   graft.Dev pressure <sfDir> [query...]  completion and spill under the JVM heap
   *   graft.Dev smoke                        the flagship SparkEntry.entry
   * }}}
@@ -107,25 +107,28 @@ object Dev {
     }
   }
 
+  /** A timed run: its tallies and its final adaptive plan. */
   final case class Profiled(seconds: Double, warmup: Tally, timed: Tally,
-                            exchanges: Exchanges)
+                            plan: SparkPlan) {
+    def exchanges: Exchanges = Exchanges.of(plan)
+  }
 
   /** A warm-up run of `name`, then a timed run with its stages and
-    * final-plan exchanges; each tally counts its construction jobs. */
+    * final plan; each tally counts its construction jobs. */
   def profile(spark: SparkSession, sfDir: String, name: String): Profiled = {
     val sc = spark.sparkContext
     val log = new StageLog(sc)
     def run() = {
       sc.setLocalProperty(Constructing, "true")
       try Bench.materialize(spark, sfDir, name,
-        () => sc.setLocalProperty(Constructing, null))
+        () => sc.setLocalProperty(Constructing, null))(Bench.execute)
       finally sc.setLocalProperty(Constructing, null)
     }
     try {
       run()
       val warmup = log.take()
-      val (sec, _, plan) = run()
-      Profiled(sec, warmup, log.take(), Exchanges.of(plan))
+      val (sec, (_, plan)) = run()
+      Profiled(sec, warmup, log.take(), plan)
     } finally log.close()
   }
 
@@ -140,7 +143,7 @@ object Dev {
     val log = new StageLog(spark.sparkContext)
     try names.map { n =>
       log.take()
-      val (sec, rows, _) = Bench.materialize(spark, sfDir, n)
+      val (sec, (rows, _)) = Bench.materialize(spark, sfDir, n)(Bench.execute)
       val r = Pressured(n, sec, rows, log.take().stages.map(_.spillBytes).sum)
       System.err.println(f"[pressure] $n: $sec%.2fs rows=$rows spill=${r.spillBytes}")
       r
@@ -186,6 +189,10 @@ object Dev {
           println(f"  stage ${st.id}%-4d ${st.ms}%6d ms  ${st.cpuMs}%6d cpu-ms" +
             f"  ${st.tasks}%3d tasks  ${st.name}")
         }
+        // AQE-only rewrites (ReusedExchange, join demotions,
+        // AQEShuffleRead) show only in the final plan, not in explain's
+        println(s"---------- $name executed (final adaptive) ----------")
+        println(p.plan)
       case "explain" =>
         val sfDir = rest.head
         val names =
@@ -193,16 +200,7 @@ object Dev {
           else SparkEntry.queries.keys.toSeq.sorted
         names.foreach { n =>
           println(s"\n========== $n ==========")
-          val df = SparkEntry.queries(n)(spark, sfDir)
-          df.explain("formatted")
-          // GRAFT_EXPLAIN_EXEC=1: also run the query and print the FINAL
-          // adaptive plan — AQE-only rewrites (ReusedExchange, join
-          // demotions, AQEShuffleRead) are invisible in the initial plan
-          if (sys.env.get("GRAFT_EXPLAIN_EXEC").contains("1")) {
-            df.queryExecution.toRdd.foreach(_ => ())
-            println(s"---------- $n executed (final adaptive) ----------")
-            println(df.queryExecution.executedPlan.toString)
-          }
+          SparkEntry.queries(n)(spark, sfDir).explain("formatted")
         }
       case "pressure" =>
         val sfDir = rest.head

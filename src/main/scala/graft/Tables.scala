@@ -99,41 +99,3 @@ object Tables {
   def parRange(s: SparkSession, df: DataFrame, keys: Column*): DataFrame =
     df.repartitionByRange(s.sparkContext.defaultParallelism, keys: _*)
 }
-
-/** A named query + its DuckDB oracle SQL. Modules contribute these and
-  * `SparkEntry` unions them — the driver hash-compares each query's
-  * parquet dump against the oracle run by DuckDB on the same tables.
-  */
-trait QueryModule {
-  def queries: Map[String, (SparkSession, String) => DataFrame]
-  /** DuckDB-dialect SQL over bare table names (driver registers views).
-    * Omit a key for non-SQL-expressible ops → weaker rows-only check. */
-  def oracles: Map[String, String]
-  /** Large-SF replacements for oracles whose primary formulation is
-    * intractable for DuckDB at 30× (e.g. recursive CTEs over the
-    * EXPANDED near-dup graph — sf3 measured 25–90+ min each). A scale
-    * oracle must be mathematically equivalent to the primary oracle —
-    * same result, different derivation (the graph trio's use the
-    * class-contraction identities the engine's own strategy specs
-    * prove). ScaleOracleSpec pins the structural contract; VALUE
-    * equivalence is a checked-in gate mode — `tools/check.py
-    * --dual-oracle` runs primary AND variant against the same engine
-    * dump at a small SF, and `tools/slice_check.py` adds
-    * engine-independent large-SF evidence via [[sliceOracles]]. The
-    * sf3 gate (tools/check.py --scale-oracle) substitutes these; the
-    * driver's sf0.01 gate keeps the primary formulation. */
-  def scaleOracles: Map[String, String] = Map.empty
-  /** Sampled vertex-induced-subgraph oracles — INDEPENDENT large-SF
-    * evidence for queries whose [[scaleOracles]] variant restates the
-    * engine's own contraction identities (the sf3 trust gap flagged
-    * in VERDICT r11 #1). Each entry is the PRIMARY (fully expanded)
-    * formulation restricted to a harness-provided `slice_docs(sid)`
-    * table, with the one global coupling (the participant count n)
-    * injected via a `global_n(n)` table. Two reserved keys carry the
-    * harness-side guards: `__closure` (count of expanded edges
-    * crossing the slice boundary — must be 0, proving the slice is a
-    * union of TRUE components regardless of how it was picked) and
-    * `__n_nodes` (the global participant count). Consumed by
-    * tools/slice_check.py; structural contract in ScaleOracleSpec. */
-  def sliceOracles: Map[String, String] = Map.empty
-}

@@ -1,8 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * written by the sink it hands [[Bench.materialize]], plus
+  * oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     // positional: sfDir outDir [queryName...] — extra names restrict
@@ -21,21 +21,16 @@ object Verify {
     // dumps (rather than the registry) under-reports the breakage.
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     val toRun =
-      if (oracleOnly) Map.empty[String, (SparkSession, String) =>
-        org.apache.spark.sql.DataFrame]
-      else if (only.nonEmpty) SparkEntry.queries.filter(q => only(q._1))
-      else SparkEntry.queries
-    toRun.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.options(LocalFs.conf)
-        .mode("overwrite").parquet(s"$outDir/$name")
+      if (oracleOnly) Nil
+      else SparkEntry.queries.keys.filter(n => only.isEmpty || only(n))
+    toRun.foreach { name =>
+      try Bench.materialize(spark, sfDir, name)(_.coalesce(1).write
+        .options(LocalFs.conf).mode("overwrite").parquet(s"$outDir/$name"))
       catch { case e: Throwable =>
         val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
         System.err.println(s"[verify] $name failed: $msg")
         errors(name) = msg.linesIterator.take(3).mkString(" ").take(500)
       }
-      // the query has fully materialized: release any staged
-      // checkpoint blocks it left in the block manager
-      ops.Staged.sweep()
     }
     def obj(kv: Iterable[(String, String)]): String = kv
       .map { case (k, v) => s"${Json.str(k)}: ${Json.str(v)}" }.mkString("{", ",", "}")

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{QueryModule, Tables => T}
+import graft.{Query, QueryModule, Tables => T}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -549,33 +549,18 @@ object Functions extends QueryModule {
 
   // -------------------------------------------------------------- registry
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_fn_string" -> (fnString _),
-    "q_fn_date" -> (fnDate _),
-    "q_fn_math" -> (fnMath _),
-    "q_fn_array" -> (fnArray _),
-    "q_fn_map" -> (fnMap _),
-    "q_fn_json" -> (fnJson _),
-    "q_fn_cond" -> (fnCond _),
-    "q_fn_struct" -> (fnStruct _),
-    "q_fn_bitwise" -> (fnBitwise _),
-    "q_fn_binary" -> (fnBinary _),
-    "q_fn_regex" -> (fnRegex _),
-    "q_fn_url" -> (fnUrl _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q_fn_string" -> fnStringSql,
-    "q_fn_date" -> fnDateSql,
-    "q_fn_math" -> fnMathSql,
-    "q_fn_array" -> fnArraySql,
-    "q_fn_map" -> fnMapSql,
-    "q_fn_json" -> fnJsonSql,
-    "q_fn_cond" -> fnCondSql,
-    "q_fn_struct" -> fnStructSql,
-    "q_fn_bitwise" -> fnBitwiseSql,
-    "q_fn_binary" -> fnBinarySql,
-    "q_fn_regex" -> fnRegexSql,
-    "q_fn_url" -> fnUrlSql,
+  val table: Seq[Query] = Seq(
+    Query("q_fn_string", fnString, Some(fnStringSql)),
+    Query("q_fn_date", fnDate, Some(fnDateSql)),
+    Query("q_fn_math", fnMath, Some(fnMathSql)),
+    Query("q_fn_array", fnArray, Some(fnArraySql)),
+    Query("q_fn_map", fnMap, Some(fnMapSql)),
+    Query("q_fn_json", fnJson, Some(fnJsonSql)),
+    Query("q_fn_cond", fnCond, Some(fnCondSql)),
+    Query("q_fn_struct", fnStruct, Some(fnStructSql)),
+    Query("q_fn_bitwise", fnBitwise, Some(fnBitwiseSql)),
+    Query("q_fn_binary", fnBinary, Some(fnBinarySql)),
+    Query("q_fn_regex", fnRegex, Some(fnRegexSql)),
+    Query("q_fn_url", fnUrl, Some(fnUrlSql)),
   )
 }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Gate, LocalFs, QueryModule, Tables => T}
+import graft.{Gate, LocalFs, Query, QueryModule, Tables => T}
 import graft.GraftSession.withConf
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -515,25 +515,15 @@ object Lakehouse extends QueryModule {
 
   // -------------------------------------------------------------- registry
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_merge_upsert" -> (mergeUpsert _),
-    "q_ts_gapfill" -> (tsGapfill _),
-    "q_join_skew_salted" -> (joinSkewSalted _),
-    "q_join_bucketed" ->
-      ((s: SparkSession, d: String) =>
-        joinBucketed(s, d, s.sparkContext.defaultParallelism)),
-    "q_lake_scd2" -> (lakeScd2 _),
-    "q_dq_audit" -> (dqAudit _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q_merge_upsert" -> mergeUpsertSql,
-    "q_ts_gapfill" -> tsGapfillSql,
+  val table: Seq[Query] = Seq(
+    Query("q_merge_upsert", mergeUpsert, Some(mergeUpsertSql)),
+    Query("q_ts_gapfill", tsGapfill, Some(tsGapfillSql)),
     // deliberately the UNSALTED join: salting must not change results
-    "q_join_skew_salted" -> joinSkewSaltedSql,
+    Query("q_join_skew_salted", joinSkewSalted, Some(joinSkewSaltedSql)),
     // deliberately the PLAIN-parquet join: layout must not change results
-    "q_join_bucketed" -> joinBucketedSql,
-    "q_lake_scd2" -> lakeScd2Sql,
-    "q_dq_audit" -> dqAuditSql,
+    Query("q_join_bucketed",
+      (s, d) => joinBucketed(s, d, s.sparkContext.defaultParallelism), Some(joinBucketedSql)),
+    Query("q_lake_scd2", lakeScd2, Some(lakeScd2Sql)),
+    Query("q_dq_audit", dqAudit, Some(dqAuditSql)),
   )
 }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{QueryModule, Tables => T}
+import graft.{Query, QueryModule, Tables => T}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -436,19 +436,11 @@ object Llm extends QueryModule {
 
   // -------------------------------------------------------------- registry
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_llm_dedup_exact" -> (dedupExact _),
-    "q_llm_dedup_fuzzy" -> (dedupFuzzy _),
-    "q_llm_sim_search" -> (simSearch _),
-    "q_llm_text_stats" -> (textStats _),
-    "q_llm_multimodal" -> (multimodal _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q_llm_dedup_exact" -> dedupExactSql,
-    "q_llm_dedup_fuzzy" -> dedupFuzzySql,
-    "q_llm_sim_search" -> simSearchSql,
-    "q_llm_text_stats" -> textStatsSql,
-    "q_llm_multimodal" -> multimodalSql,
+  val table: Seq[Query] = Seq(
+    Query("q_llm_dedup_exact", dedupExact, Some(dedupExactSql)),
+    Query("q_llm_dedup_fuzzy", dedupFuzzy, Some(dedupFuzzySql)),
+    Query("q_llm_sim_search", simSearch, Some(simSearchSql)),
+    Query("q_llm_text_stats", textStats, Some(textStatsSql)),
+    Query("q_llm_multimodal", multimodal, Some(multimodalSql)),
   )
 }

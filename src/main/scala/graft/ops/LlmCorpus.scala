@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{QueryModule, Tables => T}
+import graft.{Query, QueryModule, Tables => T}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -392,17 +392,10 @@ object LlmCorpus extends QueryModule {
 
   // -------------------------------------------------------------- registry
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_llm_boilerplate" -> (boilerplate _),
-    "q_llm_colloc" -> (colloc _),
-    "q_llm_bpe_step" -> (bpeStep _),
-    "q_llm_dsir_weight" -> (dsirWeight _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q_llm_boilerplate" -> boilerplateSql,
-    "q_llm_colloc" -> collocSql,
-    "q_llm_bpe_step" -> bpeStepSql,
-    "q_llm_dsir_weight" -> dsirWeightSql,
+  val table: Seq[Query] = Seq(
+    Query("q_llm_boilerplate", boilerplate, Some(boilerplateSql)),
+    Query("q_llm_colloc", colloc, Some(collocSql)),
+    Query("q_llm_bpe_step", bpeStep, Some(bpeStepSql)),
+    Query("q_llm_dsir_weight", dsirWeight, Some(dsirWeightSql)),
   )
 }

@@ -2,7 +2,7 @@ package graft.ops
 
 import scala.jdk.CollectionConverters._
 
-import graft.{QueryModule, Tables => T}
+import graft.{Query, QueryModule, Tables => T}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Literal
@@ -1181,29 +1181,16 @@ object LlmExt extends QueryModule {
 
   // -------------------------------------------------------------- registry
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_llm_dedup_simhash" -> (dedupSimhash _),
-    "q_llm_dedup_embed" -> (dedupEmbed _),
-    "q_llm_sim_ann" -> (simAnn _),
-    "q_llm_semdedup" -> (semdedup _),
-    "q_llm_thumb" -> (thumb _),
-    "q_llm_frames" -> (frames _),
-    "q_llm_lang_id" -> (langId _),
-    "q_llm_fingerprint" -> (fingerprint _),
-    "q_llm_tokenize" -> (tokenize _),
-    "q_llm_decode" -> (decode _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q_llm_dedup_simhash" -> dedupSimhashSql,
-    "q_llm_dedup_embed" -> dedupEmbedSql,
-    "q_llm_sim_ann" -> simAnnSql,
-    "q_llm_semdedup" -> semdedupSql,
-    "q_llm_thumb" -> thumbSql,
-    "q_llm_frames" -> framesSql,
-    "q_llm_lang_id" -> langIdSql,
-    "q_llm_fingerprint" -> fingerprintSql,
-    "q_llm_tokenize" -> tokenizeSql,
-    "q_llm_decode" -> decodeSql,
+  val table: Seq[Query] = Seq(
+    Query("q_llm_dedup_simhash", dedupSimhash, Some(dedupSimhashSql)),
+    Query("q_llm_dedup_embed", dedupEmbed, Some(dedupEmbedSql)),
+    Query("q_llm_sim_ann", simAnn, Some(simAnnSql)),
+    Query("q_llm_semdedup", semdedup, Some(semdedupSql)),
+    Query("q_llm_thumb", thumb, Some(thumbSql)),
+    Query("q_llm_frames", frames, Some(framesSql)),
+    Query("q_llm_lang_id", langId, Some(langIdSql)),
+    Query("q_llm_fingerprint", fingerprint, Some(fingerprintSql)),
+    Query("q_llm_tokenize", tokenize, Some(tokenizeSql)),
+    Query("q_llm_decode", decode, Some(decodeSql)),
   )
 }

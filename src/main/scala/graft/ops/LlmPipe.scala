@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Gate, QueryModule, Tables => T}
+import graft.{Gate, Query, QueryModule, Tables => T}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.reflect.ClassTag
@@ -1557,26 +1557,15 @@ object LlmPipe extends QueryModule {
 
   // -------------------------------------------------------------- registry
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_llm_pii" -> (pii _),
-    "q_llm_centroid" -> (centroid _),
-    "q_llm_dedup_cc" -> (dedupCc _),
-    "q_llm_dedup_substr" -> (dedupSubstr _),
-    "q_graph_pagerank" -> (graphPagerank _),
-    "q_graph_pagerank_conv" -> (graphPagerankConv _),
-    "q_graph_triangles" -> (graphTriangles _),
-    "q_llm_keeper" -> (llmKeeper _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q_llm_pii" -> piiSql,
-    "q_llm_centroid" -> centroidSql,
-    "q_llm_dedup_cc" -> dedupCcSql,
-    "q_llm_dedup_substr" -> dedupSubstrSql,
-    "q_graph_pagerank" -> graphPagerankSql,
-    "q_graph_pagerank_conv" -> graphPagerankConvSql,
-    "q_graph_triangles" -> graphTrianglesSql,
-    "q_llm_keeper" -> llmKeeperSql,
+  val table: Seq[Query] = Seq(
+    Query("q_llm_pii", pii, Some(piiSql)),
+    Query("q_llm_centroid", centroid, Some(centroidSql)),
+    Query("q_llm_dedup_cc", dedupCc, Some(dedupCcSql)),
+    Query("q_llm_dedup_substr", dedupSubstr, Some(dedupSubstrSql)),
+    Query("q_graph_pagerank", graphPagerank, Some(graphPagerankSql)),
+    Query("q_graph_pagerank_conv", graphPagerankConv, Some(graphPagerankConvSql)),
+    Query("q_graph_triangles", graphTriangles, Some(graphTrianglesSql)),
+    Query("q_llm_keeper", llmKeeper, Some(llmKeeperSql)),
   )
 
   override val scaleOracles: Map[String, String] = Map(

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{QueryModule, Tables => T}
+import graft.{Query, QueryModule, Tables => T}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -791,29 +791,16 @@ object LlmQuality extends QueryModule {
 
   // -------------------------------------------------------------- registry
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_llm_dedup_ngram" -> (dedupNgram _),
-    "q_llm_quality" -> (quality _),
-    "q_llm_entropy" -> (entropy _),
-    "q_llm_repetition" -> (repetition _),
-    "q_llm_dedup_apply" -> (dedupApply _),
-    "q_llm_decontaminate" -> (decontaminate _),
-    "q_llm_tfidf" -> (tfidf _),
-    "q_llm_dedup_url" -> (dedupUrl _),
-    "q_llm_domain_cap" -> (domainCap _),
-    "q_llm_perplexity" -> (llmPerplexity _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q_llm_dedup_ngram" -> dedupNgramSql,
-    "q_llm_quality" -> qualitySql,
-    "q_llm_entropy" -> entropySql,
-    "q_llm_repetition" -> repetitionSql,
-    "q_llm_dedup_apply" -> dedupApplySql,
-    "q_llm_decontaminate" -> decontaminateSql,
-    "q_llm_tfidf" -> tfidfSql,
-    "q_llm_dedup_url" -> dedupUrlSql,
-    "q_llm_domain_cap" -> domainCapSql,
-    "q_llm_perplexity" -> llmPerplexitySql,
+  val table: Seq[Query] = Seq(
+    Query("q_llm_dedup_ngram", dedupNgram, Some(dedupNgramSql)),
+    Query("q_llm_quality", quality, Some(qualitySql)),
+    Query("q_llm_entropy", entropy, Some(entropySql)),
+    Query("q_llm_repetition", repetition, Some(repetitionSql)),
+    Query("q_llm_dedup_apply", dedupApply, Some(dedupApplySql)),
+    Query("q_llm_decontaminate", decontaminate, Some(decontaminateSql)),
+    Query("q_llm_tfidf", tfidf, Some(tfidfSql)),
+    Query("q_llm_dedup_url", dedupUrl, Some(dedupUrlSql)),
+    Query("q_llm_domain_cap", domainCap, Some(domainCapSql)),
+    Query("q_llm_perplexity", llmPerplexity, Some(llmPerplexitySql)),
   )
 }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{QueryModule, Tables => T}
+import graft.{Query, QueryModule, Tables => T}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -367,25 +367,15 @@ object LlmTrain extends QueryModule {
 
   // -------------------------------------------------------------- registry
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_llm_pack" -> (pack _),
-    "q_llm_mixture" -> (mixture _),
-    "q_llm_chunk" -> (chunk _),
-    "q_llm_decontaminate_bloom" -> (decontaminateBloom _),
-    "q_llm_kmeans" -> (kmeansStep _),
-    "q_sample_stratified" -> (sampleStratified _),
-    "q_llm_sample_importance" -> (sampleImportance _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q_llm_pack" -> packSql,
-    "q_llm_mixture" -> mixtureSql,
-    "q_llm_chunk" -> chunkSql,
+  val table: Seq[Query] = Seq(
+    Query("q_llm_pack", pack, Some(packSql)),
+    Query("q_llm_mixture", mixture, Some(mixtureSql)),
+    Query("q_llm_chunk", chunk, Some(chunkSql)),
     // exactness: the bloom is a pre-filter, not an approximation —
     // ground truth is the same exact-join SQL as q_llm_decontaminate
-    "q_llm_decontaminate_bloom" -> LlmQuality.decontaminateSql,
-    "q_llm_kmeans" -> kmeansSql,
-    "q_sample_stratified" -> sampleStratifiedSql,
-    "q_llm_sample_importance" -> sampleImportanceSql,
+    Query("q_llm_decontaminate_bloom", decontaminateBloom, Some(LlmQuality.decontaminateSql)),
+    Query("q_llm_kmeans", kmeansStep, Some(kmeansSql)),
+    Query("q_sample_stratified", sampleStratified, Some(sampleStratifiedSql)),
+    Query("q_llm_sample_importance", sampleImportance, Some(sampleImportanceSql)),
   )
 }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Gate, QueryModule, Tables => T}
+import graft.{Gate, Query, QueryModule, Tables => T}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -758,68 +758,37 @@ object Relational extends QueryModule {
 
   // -------------------------------------------------------------- registry
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_scan_parquet" -> (scanParquet _),
-    "q_proj_rename" -> (projRename _),
-    "q_filter_pred" -> (filterPred _),
-    "q_join_inner" -> (joinInner _),
-    "q_join_broadcast" -> (joinBroadcast _),
-    "q_join_left" -> (joinLeft _),
-    "q_join_full" -> (joinFull _),
-    "q_join_semi" -> (joinSemi _),
-    "q_join_anti" -> (joinAnti _),
-    "q_join_theta" -> (joinTheta _),
-    "q_join_range" -> (joinRange _),
-    "q_join_asof" -> (joinAsof _),
-    "q_agg_hash" -> (aggHash _),
-    "q_agg_distinct" -> (aggDistinct _),
-    "q_agg_approx" -> (aggApprox _),
-    "q_agg_sketch_merge" -> (aggSketchMerge _),
-    "q_agg_rollup" -> (aggRollup _),
-    "q_agg_cube" -> (aggCube _),
-    "q_agg_gsets" -> (aggGsets _),
-    "q_agg_collect" -> (aggCollect _),
-    "q_agg_custom" -> (aggCustom _),
-    "q_win_rank" -> (winRank _),
-    "q_win_analytic" -> (winAnalytic _),
-    "q_win_frame" -> (winFrame _),
-    "q_sort_limit" -> (sortLimit _),
-    "q_topk_per_group" -> (topkPerGroup _),
-    "q_set_union" -> (setUnion _),
-    "q_set_intersect" -> (setIntersect _),
-    "q_set_except" -> (setExcept _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q_scan_parquet" -> scanParquetSql,
-    "q_proj_rename" -> projRenameSql,
-    "q_filter_pred" -> filterPredSql,
-    "q_join_inner" -> joinInnerSql,
-    "q_join_broadcast" -> joinBroadcastSql,
-    "q_join_left" -> joinLeftSql,
-    "q_join_full" -> joinFullSql,
-    "q_join_semi" -> joinSemiSql,
-    "q_join_anti" -> joinAntiSql,
-    "q_join_theta" -> joinThetaSql,
-    "q_join_range" -> joinRangeSql,
-    "q_join_asof" -> joinAsofSql,
-    "q_agg_hash" -> aggHashSql,
-    "q_agg_distinct" -> aggDistinctSql,
-    // q_agg_approx: intentionally no oracle (approximate)
-    // q_agg_sketch_merge: no oracle (DataSketches registers are
-    // engine-specific); estimate-vs-exact bounds in OperatorSpec
-    "q_agg_rollup" -> aggRollupSql,
-    "q_agg_cube" -> aggCubeSql,
-    "q_agg_gsets" -> aggGsetsSql,
-    "q_agg_collect" -> aggCollectSql,
-    "q_agg_custom" -> aggCustomSql,
-    "q_win_rank" -> winRankSql,
-    "q_win_analytic" -> winAnalyticSql,
-    "q_win_frame" -> winFrameSql,
-    "q_sort_limit" -> sortLimitSql,
-    "q_topk_per_group" -> topkPerGroupSql,
-    "q_set_union" -> setUnionSql,
-    "q_set_intersect" -> setIntersectSql,
-    "q_set_except" -> setExceptSql,
+  val table: Seq[Query] = Seq(
+    Query("q_scan_parquet", scanParquet, Some(scanParquetSql)),
+    Query("q_proj_rename", projRename, Some(projRenameSql)),
+    Query("q_filter_pred", filterPred, Some(filterPredSql)),
+    Query("q_join_inner", joinInner, Some(joinInnerSql)),
+    Query("q_join_broadcast", joinBroadcast, Some(joinBroadcastSql)),
+    Query("q_join_left", joinLeft, Some(joinLeftSql)),
+    Query("q_join_full", joinFull, Some(joinFullSql)),
+    Query("q_join_semi", joinSemi, Some(joinSemiSql)),
+    Query("q_join_anti", joinAnti, Some(joinAntiSql)),
+    Query("q_join_theta", joinTheta, Some(joinThetaSql)),
+    Query("q_join_range", joinRange, Some(joinRangeSql)),
+    Query("q_join_asof", joinAsof, Some(joinAsofSql)),
+    Query("q_agg_hash", aggHash, Some(aggHashSql)),
+    Query("q_agg_distinct", aggDistinct, Some(aggDistinctSql)),
+    Query("q_agg_approx", aggApprox, None), // approximate
+    // DataSketches registers are engine-specific; estimate-vs-exact
+    // bounds in OperatorSpec
+    Query("q_agg_sketch_merge", aggSketchMerge, None),
+    Query("q_agg_rollup", aggRollup, Some(aggRollupSql)),
+    Query("q_agg_cube", aggCube, Some(aggCubeSql)),
+    Query("q_agg_gsets", aggGsets, Some(aggGsetsSql)),
+    Query("q_agg_collect", aggCollect, Some(aggCollectSql)),
+    Query("q_agg_custom", aggCustom, Some(aggCustomSql)),
+    Query("q_win_rank", winRank, Some(winRankSql)),
+    Query("q_win_analytic", winAnalytic, Some(winAnalyticSql)),
+    Query("q_win_frame", winFrame, Some(winFrameSql)),
+    Query("q_sort_limit", sortLimit, Some(sortLimitSql)),
+    Query("q_topk_per_group", topkPerGroup, Some(topkPerGroupSql)),
+    Query("q_set_union", setUnion, Some(setUnionSql)),
+    Query("q_set_intersect", setIntersect, Some(setIntersectSql)),
+    Query("q_set_except", setExcept, Some(setExceptSql)),
   )
 }

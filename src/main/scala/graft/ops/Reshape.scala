@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{QueryModule, Tables => T}
+import graft.{Query, QueryModule, Tables => T}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -718,38 +718,22 @@ object Reshape extends QueryModule {
 
   // -------------------------------------------------------------- registry
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_pivot" -> (pivot _),
-    "q_unpivot" -> (unpivot _),
-    "q_agg_percentile" -> (percentile _),
-    "q_agg_stats" -> (aggStats _),
-    "q_sample_hash" -> (sampleHash _),
-    "q_win_sessionize" -> (sessionize _),
-    "q_win_dist" -> (winDist _),
-    "q_agg_mode" -> (aggMode _),
-    "q_win_retention" -> (winRetention _),
-    "q_agg_histogram" -> (aggHistogram _),
-    "q_agg_trimmed" -> (aggTrimmed _),
-    "q_agg_mad" -> (aggMad _),
-    "q_win_funnel" -> (winFunnel _),
-    "q_agg_approx_pct" -> (aggApproxPct _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q_pivot" -> pivotSql,
-    "q_unpivot" -> unpivotSql,
-    "q_agg_percentile" -> percentileSql,
-    "q_agg_stats" -> aggStatsSql,
-    "q_sample_hash" -> sampleHashSql,
-    "q_win_sessionize" -> sessionizeSql,
-    "q_win_dist" -> winDistSql,
-    "q_agg_mode" -> aggModeSql,
-    "q_win_retention" -> winRetentionSql,
-    "q_agg_histogram" -> aggHistogramSql,
-    "q_agg_trimmed" -> aggTrimmedSql,
-    "q_agg_mad" -> aggMadSql,
-    "q_win_funnel" -> winFunnelSql,
-    // q_agg_approx_pct: no oracle by design — sketch internals are
-    // engine-specific; bounds vs q_agg_percentile asserted in spec
+  val table: Seq[Query] = Seq(
+    Query("q_pivot", pivot, Some(pivotSql)),
+    Query("q_unpivot", unpivot, Some(unpivotSql)),
+    Query("q_agg_percentile", percentile, Some(percentileSql)),
+    Query("q_agg_stats", aggStats, Some(aggStatsSql)),
+    Query("q_sample_hash", sampleHash, Some(sampleHashSql)),
+    Query("q_win_sessionize", sessionize, Some(sessionizeSql)),
+    Query("q_win_dist", winDist, Some(winDistSql)),
+    Query("q_agg_mode", aggMode, Some(aggModeSql)),
+    Query("q_win_retention", winRetention, Some(winRetentionSql)),
+    Query("q_agg_histogram", aggHistogram, Some(aggHistogramSql)),
+    Query("q_agg_trimmed", aggTrimmed, Some(aggTrimmedSql)),
+    Query("q_agg_mad", aggMad, Some(aggMadSql)),
+    Query("q_win_funnel", winFunnel, Some(winFunnelSql)),
+    // no oracle by design: sketch internals are engine-specific;
+    // bounds vs q_agg_percentile asserted in spec
+    Query("q_agg_approx_pct", aggApproxPct, None),
   )
 }

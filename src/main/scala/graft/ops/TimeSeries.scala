@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Gate, QueryModule, Tables => T}
+import graft.{Gate, Query, QueryModule, Tables => T}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -588,17 +588,10 @@ object TimeSeries extends QueryModule {
 
   // -------------------------------------------------------------- registry
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_ts_downsample" -> (tsDownsample _),
-    "q_ts_anomaly" -> (tsAnomaly _),
-    "q_ts_wma" -> (tsWma _),
-    "q_ts_interp" -> (tsInterp _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q_ts_downsample" -> tsDownsampleSql,
-    "q_ts_anomaly" -> tsAnomalySql,
-    "q_ts_wma" -> tsWmaSql,
-    "q_ts_interp" -> tsInterpSql,
+  val table: Seq[Query] = Seq(
+    Query("q_ts_downsample", tsDownsample, Some(tsDownsampleSql)),
+    Query("q_ts_anomaly", tsAnomaly, Some(tsAnomalySql)),
+    Query("q_ts_wma", tsWma, Some(tsWmaSql)),
+    Query("q_ts_interp", tsInterp, Some(tsInterpSql)),
   )
 }

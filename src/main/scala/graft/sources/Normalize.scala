@@ -2,6 +2,8 @@ package graft.sources
 
 import java.util.regex.Pattern
 
+import scala.collection.concurrent.TrieMap
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
@@ -232,20 +234,28 @@ object Normalize {
   private def nn(c: Column) =
     coalesce(c.cast("string"), lit("<null>"))
 
+  /** The supplied columns' fields, by normalizer and raw schema: they
+    * depend on nothing else, so each normalizer analyzes its probe
+    * select once per raw schema, not on every call. */
+  private val suppliedFields = TrieMap[(String, StructType), Map[String, StructField]]()
+
   /** Every canonical row goes through here. One select over `raw`
     * walks [[canonicalSchema]]: the top level, and the venue struct,
     * whose fields are supplied as `venue.<field>`.
     *  - A supplied field is cast only where its type differs from the
     *    canonical one (nullability aside), and renamed only where its
     *    name does: a same-name alias would stay in the plan. Both are
-    *    read from an analysis of `raw.select`; no job runs.
+    *    read from an analysis of `raw.select`, once per `normalizer`
+    *    and raw schema ([[suppliedFields]]); no job runs.
     *  - A field not supplied is a typed null; so is a struct none of
     *    whose fields is supplied.
     * A second select nulls the payload on error rows (chapter and
     * error stay): the reference's tagged union, per row. */
-  private def canonicalRows(raw: DataFrame, supplied: (String, Column)*): DataFrame = {
+  private def canonicalRows(normalizer: String, raw: DataFrame,
+                            supplied: (String, Column)*): DataFrame = {
     val given = supplied.toMap
-    val probed = supplied.map(_._1).zip(raw.select(supplied.map(_._2): _*).schema).toMap
+    val probed = suppliedFields.getOrElseUpdate((normalizer, raw.schema),
+      supplied.map(_._1).zip(raw.select(supplied.map(_._2): _*).schema).toMap)
     def conform(key: String, f: StructField): Option[Column] = given.get(key).map { c =>
       val p = probed(key)
       if (!DataTypeUtils.equalsIgnoreNullability(p.dataType, f.dataType))
@@ -276,7 +286,7 @@ object Normalize {
   /** meetup.rkt:39-59 — flat renames + venue extraction with defaults +
     * photos transform (photo_link→url, width/height null; empty list
     * default per get-in '() at meetup.rkt:55). */
-  def normalizeMeetup(raw: DataFrame): DataFrame = canonicalRows(raw,
+  def normalizeMeetup(raw: DataFrame): DataFrame = canonicalRows("meetup", raw,
     "event_id" -> col("id"), "chapter" -> col("chapter"), "url" -> col("link"),
     "time" -> col("time"), "utcOffset" -> col("utc_offset"),
     "title" -> col("name"), "description" -> col("description"),
@@ -311,7 +321,7 @@ object Normalize {
     val utcOffset = when(offH =!= "",
       sign * (offH.cast("long") * 3600L +
         when(offM =!= "", offM.cast("long")).otherwise(lit(0L)) * 60L) * 1000L)
-    canonicalRows(raw,
+    canonicalRows("facebook", raw,
       "event_id" -> col("id"), "chapter" -> col("chapter"),
       "url" -> concat(lit("https://facebook.com/"), col("id")),
       "time" -> unix_timestamp(ts) * 1000, "utcOffset" -> utcOffset,
@@ -337,7 +347,7 @@ object Normalize {
     val utcTs = to_utc_timestamp(local, col("start.timezone"))
     val timeMs = (unix_timestamp(utcTs) * 1000)
     val offsetMs = (unix_timestamp(local) - unix_timestamp(utcTs)) * 1000
-    canonicalRows(raw,
+    canonicalRows("eventbrite", raw,
       "event_id" -> timeMs, "chapter" -> col("chapter"), "url" -> col("url"),
       "time" -> timeMs, "utcOffset" -> offsetMs,
       "title" -> col("name.text"), "description" -> col("description.html"),
@@ -366,7 +376,7 @@ object Normalize {
     * both channels (review r12), violating the tagged-union contract
     * that every input row lands in ok or error. */
   def unknownAdapterErrors(chapters: DataFrame): DataFrame =
-    canonicalRows(chapters.filter(col("adapter").isNull ||
+    canonicalRows("unknown", chapters.filter(col("adapter").isNull ||
         !col("adapter").isin(WORKERS.map(_.name): _*)),
       "chapter" -> col("chapter"),
       "error" -> concat(lit("ERROR: No adapter "), nn(col("adapter")),

@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.QueryModule
+import graft.{Query, QueryModule}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -417,21 +417,12 @@ object NormalizeQueries extends QueryModule {
        |        BETWEEN '2024-01-08' AND '2024-01-14'
        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_scan_json" -> (scanJson _),
-    "q_scan_csv" -> (scanCsv _),
-    "q_scan_orc" -> (scanOrc _),
-    "q_scan_text" -> (scanText _),
-    "q_scan_video" -> (scanVideo _),
-    "q_scan_partitioned" -> (scanPartitioned _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q_scan_json" -> scanJsonSql,
-    "q_scan_csv" -> scanCsvSql,
-    "q_scan_orc" -> roundTripSql,
-    "q_scan_text" -> roundTripSql,
-    "q_scan_video" -> scanVideoSql,
-    "q_scan_partitioned" -> scanPartitionedSql,
+  val table: Seq[Query] = Seq(
+    Query("q_scan_json", scanJson, Some(scanJsonSql)),
+    Query("q_scan_csv", scanCsv, Some(scanCsvSql)),
+    Query("q_scan_orc", scanOrc, Some(roundTripSql)),
+    Query("q_scan_text", scanText, Some(roundTripSql)),
+    Query("q_scan_video", scanVideo, Some(scanVideoSql)),
+    Query("q_scan_partitioned", scanPartitioned, Some(scanPartitionedSql)),
   )
 }

@@ -1,11 +1,11 @@
 package graft.streaming
 
-import graft.QueryModule
+import graft.{Query, QueryModule}
 import graft.GraftSession.withConf
 import graft.ops.Det
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import java.time.Instant
 import java.sql.Timestamp
@@ -178,24 +178,29 @@ object Streams extends QueryModule {
     }
   }
 
-  /** Run a streaming frame into a memory sink, driving it with `drive`
-    * (AvailableNow-to-completion for the file-source queries; manual
-    * multi-batch feeding for the late-data case), then clean up and
-    * return the sink contents as a batch frame.
+  /** Run a streaming frame into a memory sink, then clean up and
+    * return the sink contents as a batch frame. By default the stream
+    * runs to completion (AvailableNow) with its state partitions sized
+    * from the source volume ([[streamParts]]), so keyed state fans out
+    * with the input. `feed` instead drives a hand-planted stream batch
+    * by batch (the late-data case), at the kilobyte-state floor of 4
+    * partitions. A unique sink name per run keeps warm-up and timed
+    * bench passes apart.
     * Cleanup contract: unload state-store providers + stop the
     * maintenance task (each run otherwise leaves loaded providers
     * behind — measured 2-6× slowdown of whatever executes next) and
     * materialize + drop the sink temp view so runs don't accumulate
     * tables in the session catalog. */
-  private def runStream(s: SparkSession, df: DataFrame, mode: String,
-      trigger: Option[Trigger],
-      drive: org.apache.spark.sql.streaming.StreamingQuery => Unit,
-      parts: Int = 4): DataFrame = {
+  private def runStream(s: SparkSession, d: String, df: DataFrame, mode: String,
+      feed: Option[StreamingQuery => Unit] = None): DataFrame = {
+    val parts = if (feed.isEmpty) streamParts(s, d) else 4
     val result = withStreamRun(s, parts) { (qn, ckpt) =>
-      var w = df.writeStream.format("memory").queryName(qn)
+      val w = df.writeStream.format("memory").queryName(qn)
         .outputMode(mode).option("checkpointLocation", ckpt)
-      trigger.foreach(t => w = w.trigger(t))
-      drive(w.start())
+      feed match {
+        case None => w.trigger(Trigger.AvailableNow()).start().awaitTermination()
+        case Some(f) => f(w.start())
+      }
       // resolve the sink table BEFORE the harness drops its view —
       // the analyzed plan keeps the rows alive without the catalog
       // name
@@ -218,16 +223,6 @@ object Streams extends QueryModule {
     result
   }
 
-  /** Run a streaming frame to completion (AvailableNow). Unique sink
-    * name per run so warm-up + timed bench passes don't collide.
-    * File-source callers pass [[streamParts]] so keyed state fans out
-    * with the input; the hand-planted MemoryStream queries keep the
-    * kilobyte-state floor of 4. */
-  private def runToBatch(s: SparkSession, df: DataFrame, mode: String,
-      parts: Int = 4): DataFrame =
-    runStream(s, df, mode, Some(Trigger.AvailableNow()), _.awaitTermination(),
-      parts)
-
   private val wfmt = "yyyy-MM-dd HH:mm:ss"
   // DuckDB-side µs truncation of the ns event time (matches Spark's
   // DIV-floor conversion; post-epoch data so truncation == floor).
@@ -241,7 +236,7 @@ object Streams extends QueryModule {
       .withWatermark("ts", "10 minutes")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"), Det.r2(sum(col("value"))).as("total"))
-    runToBatch(s, agg, "update", streamParts(s, d))
+    runStream(s, d, agg, "update")
       .select(date_format(col("window.start"), wfmt).as("wstart"),
         col("event_type"), col("n"), col("total"))
       // update mode re-emits a group per batch; keep the final (max-n)
@@ -268,7 +263,7 @@ object Streams extends QueryModule {
       .withWatermark("ts", "10 minutes")
       .groupBy(window(col("ts"), "1 hour", "15 minutes"))
       .agg(count(lit(1)).as("n"), Det.r2(sum(col("value"))).as("total"))
-    runToBatch(s, agg, "update", streamParts(s, d))
+    runStream(s, d, agg, "update")
       .select(date_format(col("window.start"), wfmt).as("wstart"),
         col("n"), col("total"))
       // final-snapshot collapse per window — see sTumble
@@ -305,7 +300,7 @@ object Streams extends QueryModule {
       .agg(count(lit(1)).as("n"), Det.r2(sum(col("value"))).as("total"))
 
   private def sSession(s: SparkSession, d: String): DataFrame = {
-    runToBatch(s, sessionFrame(s, d), "append", streamParts(s, d))
+    runStream(s, d, sessionFrame(s, d), "append")
       .select(col("user_id"),
         date_format(col("session_window.start"), wfmt).as("session_start"),
         date_format(col("session_window.end"), wfmt).as("session_end"),
@@ -360,7 +355,7 @@ object Streams extends QueryModule {
     val deduped = eventsStream(s, d)
       .withWatermark("ts", "10 minutes")
       .dropDuplicatesWithinWatermark("user_id", "event_type")
-    runToBatch(s, deduped, "append", streamParts(s, d))
+    runStream(s, d, deduped, "append")
       .groupBy(col("event_type"))
       .agg(countDistinct(col("user_id")).as("n_distinct_users"))
       .orderBy(col("event_type"))
@@ -389,7 +384,7 @@ object Streams extends QueryModule {
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
         Det.r2(avg(col("user_events"))).as("avg_user_events"))
-    runToBatch(s, joined, "update", streamParts(s, d))
+    runStream(s, d, joined, "update")
       // update mode re-emits a group per batch; keep the final (max-n)
       // snapshot per type so a multi-batch source can't leave partials
       // (same convention as s_late / s_custom_state)
@@ -439,7 +434,7 @@ object Streams extends QueryModule {
           Iterator((uid, next.n, next.maxV, next.types.size.toLong))
       }
       .toDF("user_id", "n_events", "max_value", "n_types")
-    runToBatch(s, updated, "update", streamParts(s, d))
+    runStream(s, d, updated, "update")
       .groupBy(col("user_id"))
       .agg(max(col("n_events")).as("n_events"),
         Det.r2(max(col("max_value"))).as("max_value"),
@@ -474,7 +469,7 @@ object Streams extends QueryModule {
       .toDF("user_id", "n_events", "min_value", "max_value")
     withConf(s, Map("spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")) {
-      runToBatch(s, updated, "update", streamParts(s, d))
+      runStream(s, d, updated, "update")
     }
       .groupBy(col("user_id"))
       .agg(max(col("n_events")).as("n_events"),
@@ -526,7 +521,7 @@ object Streams extends QueryModule {
 
   private def sJoinStream(s: SparkSession, d: String): DataFrame = {
     val joined = joinStreamShape(eventsStream(s, d))
-    runToBatch(s, joined, "append", streamParts(s, d))
+    runStream(s, d, joined, "append")
       .select(col("user_id"),
         unix_micros(col("purchase_ts")).as("purchase_us"),
         unix_micros(col("click_ts")).as("click_us"),
@@ -570,7 +565,7 @@ object Streams extends QueryModule {
       .withWatermark("ts", "10 minutes")
       .groupBy(window(col("ts"), "15 minutes"), col("k"))
       .agg(count(lit(1)).as("n"))
-    val sink = runStream(s, agg, "update", None, { q =>
+    val sink = runStream(s, d, agg, "update", Some { q =>
       // batch 1: max ts 10:40 → watermark after commit = 10:30
       mem.addData(
         (t("2024-01-01T10:00:00Z"), "A"), (t("2024-01-01T10:05:00Z"), "A"),
@@ -698,29 +693,16 @@ object Streams extends QueryModule {
 
   // -------------------------------------------------------------- registry
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "s_tumble" -> (sTumble _),
-    "s_slide" -> (sSlide _),
-    "s_session" -> (sSession _),
-    "s_stateful_dedup" -> (sDedup _),
-    "s_join_static" -> (sJoinStatic _),
-    "s_custom_state" -> (sCustomState _),
-    "s_transform_state" -> (sTransformState _),
-    "s_join_stream" -> (sJoinStream _),
-    "s_late" -> (sLate _),
-    "s_foreach_upsert" -> (sForeachUpsert _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "s_tumble" -> sTumbleSql,
-    "s_slide" -> sSlideSql,
-    "s_session" -> sSessionSql,
-    "s_stateful_dedup" -> sDedupSql,
-    "s_join_static" -> sJoinStaticSql,
-    "s_custom_state" -> sCustomStateSql,
-    "s_transform_state" -> sTransformStateSql,
-    "s_join_stream" -> sJoinStreamSql,
-    "s_late" -> sLateSql,
-    "s_foreach_upsert" -> sForeachUpsertSql,
+  val table: Seq[Query] = Seq(
+    Query("s_tumble", sTumble, Some(sTumbleSql)),
+    Query("s_slide", sSlide, Some(sSlideSql)),
+    Query("s_session", sSession, Some(sSessionSql)),
+    Query("s_stateful_dedup", sDedup, Some(sDedupSql)),
+    Query("s_join_static", sJoinStatic, Some(sJoinStaticSql)),
+    Query("s_custom_state", sCustomState, Some(sCustomStateSql)),
+    Query("s_transform_state", sTransformState, Some(sTransformStateSql)),
+    Query("s_join_stream", sJoinStream, Some(sJoinStreamSql)),
+    Query("s_late", sLate, Some(sLateSql)),
+    Query("s_foreach_upsert", sForeachUpsert, Some(sForeachUpsertSql)),
   )
 }

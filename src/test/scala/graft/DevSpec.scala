@@ -8,8 +8,8 @@ import scala.collection.mutable.ArrayBuffer
 /** The dev tool's profile drains the listener bus between its warm-up
   * and timed runs, so no warm-up stage leaks into the timed tally and
   * no timed stage is missed; it names each stage after its SQL
-  * operators and counts the final plan's exchanges the way
-  * `Dev explain`'s executed plan shows them. */
+  * operators and counts the final plan's exchanges the way the
+  * executed plan it prints shows them. */
 class DevSpec extends AnyFunSuite {
   private def s = SparkTestBase.spark
 
@@ -63,11 +63,10 @@ class DevSpec extends AnyFunSuite {
     val names = p.timed.stages.map(_.name)
     assert(!names.exists(_.contains("CompletableFuture")), names)
     assert(names.exists(_.contains("WholeStageCodegen")), names)
-    // the executed plan's text, counted independently of the plan
-    // walk: exchange nodes of the final adaptive plan section only
-    val df = SparkEntry.queries(q)(s, SparkTestBase.sfDir)
-    df.queryExecution.toRdd.foreach(_ => ())
-    val text = df.queryExecution.executedPlan.toString
+    // the executed plan's text, as profile prints it, counted
+    // independently of the plan walk: exchange nodes of the final
+    // adaptive plan section only
+    val text = p.plan.toString
     val finalPlan = text.split("== Initial Plan ==").head
     def nodes(op: String) = finalPlan.linesIterator
       .count(l => l.replaceFirst("^[ :|+-]*", "").startsWith(op + " "))

@@ -143,7 +143,7 @@ class PlanAuditSpec extends AnyFunSuite {
     * executed IVF plan keeps only the probe broadcast and the range
     * exchange of its top-k, and k-means broadcasts nothing. */
   test("codebook queries execute without a codebook join or broadcast") {
-    def executed(q: String) = Bench.materialize(s, sf, q)._3
+    def executed(q: String) = Bench.materialize(s, sf, q)(Bench.execute)._2._2
     val ann = executed("q_llm_sim_ann")
     assert(!ann.toString.contains("BroadcastNestedLoopJoin"), ann)
     assert(Dev.Exchanges.of(ann) == Dev.Exchanges(1, 1, 0), ann)
