@@ -3,7 +3,6 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.SparkPlan
 
 /** Benchmark main: times every SparkEntry query on SPARK_GRAFT_SF_DIR.
   *
@@ -24,29 +23,75 @@ object Bench {
     * prior queries outside the clock — so one query's timing isn't
     * taxed with a GC cycle triggered by its predecessors' debris (the
     * ContextCleaner also piggybacks on GC to release old
-    * broadcasts/shuffles) — then build the query, call `built` (on the
-    * clock, between the query's construction — its eager checkpoints
-    * and driver collects — and the sink) and hand the frame to `sink`.
-    * Returns the seconds from build to the sink's end and the sink's
-    * result. */
-  def materialize[A](spark: SparkSession, sfDir: String, name: String,
-                     built: () => Unit = () => ())(sink: DataFrame => A): (Double, A) = {
+    * broadcasts/shuffles) — then build the query under
+    * [[QueryRecord.ConstructProperty]] and hand the frame to `sink`.
+    * The sink returns the rows it counted when it ran the frame's own
+    * plan, `None` when it ran a derived one (a write). The clock stops
+    * before the context's [[QueryRecord.Collector]] drains the bus;
+    * the record goes to the [[GraftQueryLogger]] sink and back to the
+    * caller. */
+  def materialize(spark: SparkSession, sfDir: String, name: String)(
+      sink: DataFrame => Option[Long]): QueryRecord = {
     ops.Staged.sweep()
     System.gc()
-    val t0 = System.nanoTime()
-    val df = SparkEntry.queries(name)(spark, sfDir)
-    built()
-    val out = sink(df)
-    ((System.nanoTime() - t0) / 1e9, out)
+    val sc = spark.sparkContext
+    val r = QueryRecord.collector(sc).count {
+      val t0 = System.nanoTime()
+      val ((df, rows), gates) = Gate.recorded {
+        sc.setLocalProperty(QueryRecord.ConstructProperty, "true")
+        val df =
+          try SparkEntry.queries(name)(spark, sfDir)
+          finally sc.setLocalProperty(QueryRecord.ConstructProperty, null)
+        (df, sink(df))
+      }
+      val seconds = (System.nanoTime() - t0) / 1e9
+      val qe = df.queryExecution
+      QueryRecord(name, seconds, QueryRecord.phases(qe), gates = gates,
+        rows = rows, plan = rows.map(_ => qe.executedPlan))
+    }
+    GraftQueryLogger.write(r)
+    r
   }
 
   /** The timed sink: execute every operator via `toRdd` (a bare
     * `Dataset.count()` lets Catalyst prune unreferenced projections —
-    * under-measurement). Returns the rows and the executed plan — the
-    * final adaptive plan once `toRdd` has run. */
-  def execute(df: DataFrame): (Long, SparkPlan) = {
-    val qe = df.queryExecution
-    (qe.toRdd.count(), qe.executedPlan)
+    * under-measurement) and count the rows. */
+  def execute(df: DataFrame): Option[Long] = Some(df.queryExecution.toRdd.count())
+
+  /** One pass of one query: its record, or the seconds it ran for
+    * before it failed and the error. */
+  type Run = Either[(Double, String), QueryRecord]
+
+  private def seconds(r: Run): Double = r.fold(_._1, _.seconds)
+
+  /** The bench's JSON line from each query's passes, in the given
+    * order: its minimum seconds (`queries`, summed into `value`), its
+    * [min, max] `spread`, its first error, and the counts of the pass
+    * whose seconds `queries` reports (`null` when that pass failed). */
+  def line(sfDir: String, runs: Seq[(String, Seq[Run])]): String = {
+    val timed = runs.map { case (n, rs) =>
+      (n, rs.minBy(seconds), rs.map(seconds).max,
+        rs.collectFirst { case Left((_, e)) => e })
+    }
+    def obj(kv: Seq[(String, Any)]) =
+      kv.map { case (n, v) => s""""$n":$v""" }.mkString("{", ",", "}")
+    val qs = obj(timed.map { case (n, best, _, _) => n -> seconds(best) })
+    // per-query [min, max] across passes: a wide spread on a query is
+    // the mechanical signature of box contention (the round-6 official
+    // record carried a 29x-inflated query that a spread column would
+    // have flagged automatically), a tight spread under a high min is a
+    // real regression
+    val spread = obj(timed.map { case (n, best, hi, _) => n -> s"[${seconds(best)},$hi]" })
+    val errJson = obj(timed.collect { case (n, _, _, Some(e)) => n -> Json.str(e) })
+    def counts(f: QueryRecord => Any) =
+      obj(timed.map { case (n, best, _, _) => n -> best.fold(_ => null, f) })
+    val total = timed.map(t => seconds(t._2)).sum
+    s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
+      s""""spread":$spread,"errors":$errJson,"sf":${Json.str(sfDir)},""" +
+      s""""jobs":${counts(_.jobs)},"construct_jobs":${counts(_.constructJobs)},""" +
+      s""""stages":${counts(_.stages.size)},"cpu_s":${counts(_.cpuSeconds)},""" +
+      s""""shuffle_bytes":${counts(_.shuffleWriteBytes)},""" +
+      s""""spill_bytes":${counts(_.spillBytes)}}"""
   }
 
   def main(args: Array[String]): Unit = {
@@ -59,13 +104,15 @@ object Bench {
       .map(_.split(",").toSet)
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.contains(n)))
-    // a failed query keeps the time it ran for, next to its error
-    def run(name: String): (Double, Either[String, Unit]) = {
+    // a failed query keeps the time it ran for, next to its error; a
+    // kept plan would pin its shuffle files and broadcasts against the
+    // ContextCleaner for the rest of the bench, so records drop it
+    def run(name: String): Run = {
       val t0 = System.nanoTime()
-      try (materialize(spark, sfDir, name)(execute)._1, Right(()))
+      try Right(materialize(spark, sfDir, name)(execute).copy(plan = None))
       catch { case e: Throwable =>
-        ((System.nanoTime() - t0) / 1e9,
-          Left(Option(e.getMessage).getOrElse(e.getClass.getName).take(200)))
+        Left(((System.nanoTime() - t0) / 1e9,
+          Option(e.getMessage).getOrElse(e.getClass.getName).take(200)))
       }
     }
 
@@ -77,7 +124,7 @@ object Bench {
     // residue (state-store providers, sink tables) that measurably
     // taxes whatever executes after them, and interleaving would
     // charge that tax to unrelated batch queries.
-    def pass(ns: Seq[String]): Map[String, (Double, Either[String, Unit])] =
+    def pass(ns: Seq[String]): Map[String, Run] =
       ns.map(n => n -> run(n)).toMap
     val (batch, streaming) = names.partition(_.startsWith("q_"))
     // Fixed untimed warm query before any timed pass: the first timed
@@ -95,10 +142,10 @@ object Bench {
     // collapses most of that. Batch retries run before any streaming
     // query for the same state-store-residue reason as the main passes.
     def unstable(ns: Seq[String],
-                 ps: Seq[Map[String, (Double, Either[String, Unit])]],
+                 ps: Seq[Map[String, Run]],
                  ratio: Double = 1.5) =
       ns.filter { n =>
-        val ts = ps.filter(_.contains(n)).map(_(n)._1)
+        val ts = ps.flatMap(_.get(n)).map(seconds)
         ts.nonEmpty && ts.max / ts.min > ratio
       }
     val b1 = pass(batch); val b2 = pass(batch)
@@ -110,27 +157,7 @@ object Bench {
     val s3 = pass(unstable(streaming, Seq(s1, s2)))
     val s4 = pass(unstable(streaming, Seq(s1, s2, s3), 2.5))
     val passes = Seq(b1, b2, b3, b4, s1, s2, s3, s4)
-    val timed = names.map { n =>
-      val rs = passes.filter(_.contains(n)).map(_(n))
-      (n, rs.map(_._1).min, rs.map(_._1).max,
-        rs.map(_._2).find(_.isLeft).getOrElse(Right(())))
-    }
-    val errors = timed.collect { case (n, _, _, Left(e)) => n -> e }
-    val qs = timed.map { case (n, sec, _, _) => s""""$n":$sec""" }
-      .mkString("{", ",", "}")
-    // per-query [min, max] across passes: a wide spread on a query is
-    // the mechanical signature of box contention (the round-6 official
-    // record carried a 29x-inflated query that a spread column would
-    // have flagged automatically), a tight spread under a high min is a
-    // real regression
-    val spread = timed.map { case (n, lo, hi, _) => s""""$n":[$lo,$hi]""" }
-      .mkString("{", ",", "}")
-    val errJson = errors.map { case (n, e) => s""""$n":${Json.str(e)}""" }
-      .mkString("{", ",", "}")
-    val total = timed.map(_._2).sum
-    val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
-        s""""spread":$spread,"errors":$errJson,"sf":${Json.str(sfDir)}}"""
+    val line = Bench.line(sfDir, names.map(n => n -> passes.flatMap(_.get(n))))
     // stamped file per run + the fixed-name copy the driver reads:
     // concurrent runs (worktree bench vs main-tree bench) each keep
     // their own stamped record instead of silently clobbering the one

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import scala.collection.mutable.ArrayBuffer
 
 /** The one size gate: every physical pick between a small-input path
   * and a large-input path goes through [[large]], so every pick reads
@@ -18,7 +19,9 @@ import org.apache.spark.sql.SparkSession
   *  - Trace: each decision writes one line on the `graft.queries`
   *    logger (the [[GraftQueryLogger]] sink):
   *    `gate=<name> probe=<v> threshold=<t> path=small|large forced=<bool>`,
-  *    with `probe=-` when a forced value skipped the probe.
+  *    with `probe=-` when a forced value skipped the probe. The
+  *    decisions made while [[Bench.materialize]] runs a query also go
+  *    into its [[QueryRecord]].
   */
 object Gate {
   val Key = "spark.graft.gate"
@@ -26,8 +29,30 @@ object Gate {
   final class BadValue(v: String) extends IllegalArgumentException(
     s"$Key must be 'small' or 'large', got '$v'")
 
+  /** One decision; `probe` is `None` when a forced value skipped it. */
+  final case class Decision(name: String, probe: Option[Double],
+                            threshold: Double, large: Boolean) {
+    def forced: Boolean = probe.isEmpty
+    def path: String = if (large) "large" else "small"
+    def probed: String = probe.map(num).getOrElse("-")
+    def line: String =
+      s"gate=$name probe=$probed " +
+        s"threshold=${num(threshold)} path=$path forced=$forced"
+  }
+
   private val log =
     org.apache.logging.log4j.LogManager.getLogger("graft.queries")
+
+  // the decisions of the run [[recorded]] is wrapping on this thread
+  private val made = new ThreadLocal[ArrayBuffer[Decision]]
+
+  /** `body`'s result and every decision made on this thread while it ran. */
+  private[graft] def recorded[A](body: => A): (A, Seq[Decision]) = {
+    val outer = made.get
+    val mine = ArrayBuffer[Decision]()
+    made.set(mine)
+    try (body, mine.toList) finally made.set(outer)
+  }
 
   /** True iff gate `name` takes its large path in session `s`. */
   def large(s: SparkSession, name: String, probe: => Double,
@@ -43,9 +68,9 @@ object Gate {
       case Some("large") => (None, true)
       case Some(v)       => throw new BadValue(v)
     }
-    log.info(s"gate=$name probe=${probed.map(num).getOrElse("-")} " +
-      s"threshold=${num(threshold)} path=${if (big) "large" else "small"} " +
-      s"forced=${probed.isEmpty}")
+    val d = Decision(name, probed, threshold, big)
+    Option(made.get).foreach(_ += d)
+    log.info(d.line)
     big
   }
 

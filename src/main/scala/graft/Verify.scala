@@ -24,8 +24,11 @@ object Verify {
       if (oracleOnly) Nil
       else SparkEntry.queries.keys.filter(n => only.isEmpty || only(n))
     toRun.foreach { name =>
-      try Bench.materialize(spark, sfDir, name)(_.coalesce(1).write
-        .options(LocalFs.conf).mode("overwrite").parquet(s"$outDir/$name"))
+      try Bench.materialize(spark, sfDir, name) { df =>
+        df.coalesce(1).write.options(LocalFs.conf).mode("overwrite")
+          .parquet(s"$outDir/$name")
+        None
+      }
       catch { case e: Throwable =>
         val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
         System.err.println(s"[verify] $name failed: $msg")

@@ -58,6 +58,12 @@ class RestSource extends TableProvider {
 object RestSource {
   val schema: StructType = StructType.fromDDL(
     "chapter STRING, adapter STRING, payload STRING")
+
+  /** A `ratePerSecond` that is not a positive number: at 0 the token
+    * bucket would sleep `Long.MaxValue` ms, and a negative rate or NaN
+    * never earns a token, so the scan would hang instead of failing. */
+  final class BadRate(v: String) extends IllegalArgumentException(
+    s"graft-rest: option 'ratePerSecond' must be a positive number, got '$v'")
 }
 
 /** One adapter-page fetch result. `rateRemaining`/`rateResetMillis`
@@ -267,6 +273,9 @@ private[rest] class RestScanBuilder(props: Map[String, String])
   override def planInputPartitions(): Array[InputPartition] = {
     val chaptersFile = props.getOrElse("chaptersfile",
       sys.error("graft-rest: option 'chaptersFile' is required"))
+    val rateText = props.getOrElse("ratepersecond", "100")
+    val rate = rateText.toDoubleOption.filter(_ > 0)
+      .getOrElse(throw new RestSource.BadRate(rateText))
     val lines = java.nio.file.Files.readAllLines(
       java.nio.file.Paths.get(chaptersFile)).asScala
     // real JSON parse (jackson ships with Spark) — a regex probe would
@@ -285,7 +294,7 @@ private[rest] class RestScanBuilder(props: Map[String, String])
       RestPartition((i until chapters.size by k).map(chapters).toVector,
         props.getOrElse("transport", "fixture"),
         props.getOrElse("fixturesdir", ""),
-        props.getOrElse("ratepersecond", "100").toDouble)
+        rate)
     }
   }
 

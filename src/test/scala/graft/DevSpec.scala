@@ -5,16 +5,16 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.scalatest.funsuite.AnyFunSuite
 import scala.collection.mutable.ArrayBuffer
 
-/** The dev tool's profile drains the listener bus between its warm-up
-  * and timed runs, so no warm-up stage leaks into the timed tally and
-  * no timed stage is missed; it names each stage after its SQL
-  * operators and counts the final plan's exchanges the way the
-  * executed plan it prints shows them. */
+/** The dev tool's profile reads two query records, and the collector
+  * behind them drains the listener bus around each run, so no warm-up
+  * stage leaks into the timed record and no timed stage is missed; it
+  * names each stage after its SQL operators and counts the final
+  * plan's exchanges the way the executed plan it prints shows them. */
 class DevSpec extends AnyFunSuite {
   private def s = SparkTestBase.spark
 
   test("profile: every timed stage comes after the warm-up's last stage") {
-    // a slow listener ahead of the stage log on the same bus queue
+    // a slow listener on the same bus queue as the collector
     // delays its deliveries, the way a contended box does; it also
     // records every stage the two runs complete
     val seen = ArrayBuffer[Int]()
@@ -25,7 +25,7 @@ class DevSpec extends AnyFunSuite {
       }
     }
     s.sparkContext.addSparkListener(slow)
-    val p =
+    val (warmup, timed) =
       try Dev.profile(s, SparkTestBase.sfDir, "q_agg_hash")
       finally {
         ListenerBusAccess.waitUntilEmpty(s.sparkContext)
@@ -35,19 +35,19 @@ class DevSpec extends AnyFunSuite {
     // the lower half of the ids and the timed run the upper half
     val (warmIds, timedIds) = seen.sorted.splitAt(seen.size / 2)
     assert(warmIds.nonEmpty && warmIds.size == timedIds.size)
-    assert(p.warmup.stages.map(_.id).sorted == warmIds)
-    assert(p.timed.stages.map(_.id).sorted == timedIds,
-      s"warm-up ended at stage ${warmIds.last}; timed: ${p.timed.stages.map(_.id)}")
-    // and the same jobs: the timed tally counts its own, none of the warm-up's
-    assert(p.timed.jobs > 0 && p.timed.jobs == p.warmup.jobs,
-      s"jobs: warm-up ${p.warmup.jobs}, timed ${p.timed.jobs}")
+    assert(warmup.stages.map(_.id).sorted == warmIds)
+    assert(timed.stages.map(_.id).sorted == timedIds,
+      s"warm-up ended at stage ${warmIds.last}; timed: ${timed.stages.map(_.id)}")
+    // and the same jobs: the timed record counts its own, none of the warm-up's
+    assert(timed.jobs > 0 && timed.jobs == warmup.jobs,
+      s"jobs: warm-up ${warmup.jobs}, timed ${timed.jobs}")
   }
 
   test("profile: the jobs a query runs while it is built count apart") {
     // both read the embeddings once (a parquet read infers its schema
     // in a job); q_llm_sim_ann also trains its codebook at
     // construction: one job for the grid seed and one per Lloyd round
-    def timed(q: String) = Dev.profile(s, SparkTestBase.sfDir, q).timed
+    def timed(q: String) = Dev.profile(s, SparkTestBase.sfDir, q)._2
     val exact = timed("q_llm_sim_search")
     val ann = timed("q_llm_sim_ann")
     assert(ann.constructJobs - exact.constructJobs == ops.LlmExt.AnnLloydIters + 1,
@@ -59,21 +59,21 @@ class DevSpec extends AnyFunSuite {
   test("profile: stages carry operator names, exchange counts match explain's executed plan") {
     // a query whose final plan holds all three kinds at sf0.001
     val q = "q_llm_repetition"
-    val p = Dev.profile(s, SparkTestBase.sfDir, q)
-    val names = p.timed.stages.map(_.name)
+    val (_, p) = Dev.profile(s, SparkTestBase.sfDir, q)
+    val names = p.stages.map(_.name)
     assert(!names.exists(_.contains("CompletableFuture")), names)
     assert(names.exists(_.contains("WholeStageCodegen")), names)
     // the executed plan's text, as profile prints it, counted
     // independently of the plan walk: exchange nodes of the final
     // adaptive plan section only
-    val text = p.plan.toString
+    val text = p.plan.get.toString
     val finalPlan = text.split("== Initial Plan ==").head
     def nodes(op: String) = finalPlan.linesIterator
       .count(l => l.replaceFirst("^[ :|+-]*", "").startsWith(op + " "))
-    val fromText = Dev.Exchanges(nodes("Exchange"), nodes("BroadcastExchange"),
+    val fromText = Exchanges(nodes("Exchange"), nodes("BroadcastExchange"),
       nodes("ReusedExchange"))
-    assert(p.exchanges == fromText, text)
-    assert(p.exchanges.shuffle > 0 && p.exchanges.broadcast > 0 &&
-      p.exchanges.reused > 0, p.exchanges)
+    val ex = p.exchanges.get
+    assert(ex == fromText, text)
+    assert(ex.shuffle > 0 && ex.broadcast > 0 && ex.reused > 0, ex)
   }
 }

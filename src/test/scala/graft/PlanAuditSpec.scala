@@ -143,12 +143,12 @@ class PlanAuditSpec extends AnyFunSuite {
     * executed IVF plan keeps only the probe broadcast and the range
     * exchange of its top-k, and k-means broadcasts nothing. */
   test("codebook queries execute without a codebook join or broadcast") {
-    def executed(q: String) = Bench.materialize(s, sf, q)(Bench.execute)._2._2
+    def executed(q: String) = Bench.materialize(s, sf, q)(Bench.execute).plan.get
     val ann = executed("q_llm_sim_ann")
     assert(!ann.toString.contains("BroadcastNestedLoopJoin"), ann)
-    assert(Dev.Exchanges.of(ann) == Dev.Exchanges(1, 1, 0), ann)
+    assert(Exchanges.of(ann) == Exchanges(1, 1, 0), ann)
     val kmeans = executed("q_llm_kmeans")
-    assert(Dev.Exchanges.of(kmeans).broadcast == 0, kmeans)
+    assert(Exchanges.of(kmeans).broadcast == 0, kmeans)
   }
 
   /** Unordered-window gate (round 10, verdict #1): a

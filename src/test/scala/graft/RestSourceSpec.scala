@@ -2,13 +2,15 @@ package graft
 
 import graft.sources.{Normalize, NormalizeQueries}
 import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.{Seconds, Span}
 import scala.jdk.CollectionConverters._
 
 /** DataSourceV2 REST connector (A3–A6): chapters chunked per core,
   * offline fixture transport, token-bucket throttle, and end-to-end
   * compose with the normalize pipeline. */
-class RestSourceSpec extends AnyFunSuite {
+class RestSourceSpec extends AnyFunSuite with TimeLimits {
   private lazy val s = SparkTestBase.spark
   private val fx = NormalizeQueries.fixturesDir
 
@@ -295,4 +297,22 @@ class RestSourceSpec extends AnyFunSuite {
     val sec = (System.nanoTime() - t0) / 1e9
     assert(sec >= 0.4, f"expected throttled scan, took $sec%.2fs")
   }
+
+  // each of these hung the scan forever (a Long.MaxValue ms sleep at 0,
+  // no token ever earned below 0 or at NaN); the bound fails the test
+  // instead of the suite
+  for (rate <- Seq("0", "-1", "NaN"))
+    test(s"ratePerSecond $rate is a named error at planning, not a hang") {
+      implicit val signaler: Signaler = ThreadSignaler
+      val e = failAfter(Span(60, Seconds)) {
+        intercept[graft.sources.rest.RestSource.BadRate](
+          s.read.format("graft.sources.rest.RestSource")
+            .option("chaptersFile", s"$fx/chapters.jsonl")
+            .option("fixturesDir", fx)
+            .option("ratePerSecond", rate)
+            .load().count())
+      }
+      assert(e.getMessage.contains("'ratePerSecond'") &&
+        e.getMessage.contains(s"'$rate'"), e.getMessage)
+    }
 }
