@@ -13,8 +13,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    operator in the plan executes.
   *  - Failures are SURFACED in an "errors" map, never folded into a
   *    fake timing.
-  *  - The JSON line goes to stdout AND /root/repo/bench_out.json so
-  *    log prefixes (sbt's [info]) can't break the driver's parse.
+  *  - The JSON line goes to stdout AND to `bench_out.json` in the
+  *    run's working directory (the checkout root under `sbt runMain`),
+  *    so log prefixes (sbt's [info]) can't break the parse and a
+  *    second checkout's run never writes into the first's tree.
   */
 object Bench {
 
@@ -167,14 +169,14 @@ object Bench {
       s"${ProcessHandle.current.pid}"
     // stamped history lives under tools/bench_history/ so the repo
     // root carries only the fixed-name record the driver reads
-    val hist = Paths.get("/root/repo/tools/bench_history")
+    val hist = Paths.get("tools", "bench_history")
     Files.createDirectories(hist)
     Files.writeString(hist.resolve(s"bench_out.$stamp.json"), line)
     // fixed-name copy in the history dir: survives even when a log-tail
     // capture truncates the stdout line (BENCH_r13's tail was cut
     // mid-JSON, which nulled the driver's entire r13→r14 comparison)
     Files.writeString(hist.resolve("latest.json"), line)
-    Files.writeString(Paths.get("/root/repo/bench_out.json"), line)
+    Files.writeString(Paths.get("bench_out.json"), line)
     println(line)
     spark.stop()
   }

@@ -1059,13 +1059,16 @@ object LlmExt extends QueryModule {
     val cent = groups.sparkSession.range(1)
       .select(inline(trainCodebook(groups, "cell", Some(col("m")))))
       .withColumn("cnrm", sqrt(expr("graft_dot(cv, cv)")))
-    // one cos_centroid per class — every member shares it
+    // one cos_centroid per class — every member shares it. Lazy: both
+    // consumers sit in the one plan below, so its first stage writes
+    // the blocks the other reads (groups stays eager: trainCodebook
+    // rereads it every Lloyd round)
     val scored = groups.join(broadcast(cent), "cell")
       .select(col("ids"), col("mn"), col("m"), col("e"), col("nrm"),
         col("cell"),
         Det.r6(expr("graft_dot(e, cv)") / (col("nrm") * col("cnrm")))
           .as("cc"))
-      .transform(Staged.checkpoint)
+      .transform(Staged.checkpointLazy)
     // class-level pair decisions (distinct-vector geometry only)
     val cos = expr("graft_dot(a.e, b.e)") / (col("a.nrm") * col("b.nrm"))
     val facts = scored.as("a").join(scored.as("b"),

@@ -203,11 +203,10 @@ object LlmPipe extends QueryModule {
   }
 
   /** A staged pair frame: the child-session loop frame plus the exact
-    * edge count the staging action already paid for. The count doubles
-    * as the COST-MODEL SIGNAL for the local-vs-distributed strategy
-    * pick below — the same role catalog row-count statistics play for
-    * a cost-based optimizer, except here it is exact and free (the
-    * persist+count job exists anyway to size the loop partitions). */
+    * edge count its persist+count job measured, which sized the loop
+    * partitions ([[loopPartitions]]). Only the distributed loops stage:
+    * the local-vs-distributed pick reads its own bounded collect
+    * ([[classGraphLocal]]), never a staging count. */
   private[graft] final case class StagedPairs(
       df: DataFrame, edges: Long,
       rdd: org.apache.spark.rdd.RDD[Row]) {
@@ -261,8 +260,7 @@ object LlmPipe extends QueryModule {
 
   /** Stage `pairs`, run `body` over them, and release the staged
     * blocks on every exit. The release sits in a `finally` because the
-    * bodies throw on purpose — a convergence or mass `require`, an
-    * [[R6BoundaryTrip]] the strategy dispatch recovers from — and a
+    * bodies throw on purpose — a convergence or mass `require` — and a
     * release skipped on those paths parks an edge-sized RDD in a
     * long-lived session until GC. The body must materialize whatever
     * it returns (a collect, or the loops' per-round checkpoints):
@@ -303,10 +301,13 @@ object LlmPipe extends QueryModule {
   /** Edge-count ceiling under which the iterative graph family (CC /
     * PageRank / keeper) solves ON THE DRIVER instead of running
     * distributed loop rounds — the physical-strategy pick a cost-based
-    * optimizer would make from table statistics, made here from the
-    * EXACT edge count the staging job already paid for (stagePairs
-    * persists and counts the pair frame to size loop partitions; the
-    * strategy signal is free).
+    * optimizer would make from table statistics, made here from ONE
+    * bounded collect of at most `LocalGraphMaxEdges + 1` class edges
+    * ([[classGraphLocal]]). That one driver round trip is the gate's
+    * probe, the cap check and, below the cap, the local solve's edge
+    * list: the probe is the exact edge count up to the cap and reads
+    * `LocalGraphMaxEdges + 1` above it, which is all the threshold
+    * needs to tell the two sides apart.
     *
     * Why this is the right 100 TB design and not a local-mode cheat:
     * the near-dup candidate graph is |dup pairs| rows — a vanishing
@@ -326,8 +327,9 @@ object LlmPipe extends QueryModule {
     * participating-class count in [[classGraphLocal]]. */
   private[graft] val LocalGraphMaxEdges: Long = 2L * 1000 * 1000
 
-  /** The `graph` [[Gate]] threshold: the smallest staged edge count
-    * that goes distributed. */
+  /** The `graph` [[Gate]] threshold: the smallest class-edge count
+    * that goes distributed. It is also the bounded collect's row limit,
+    * so a probe that reaches it means "more edges than the cap". */
   private[graft] val GraphDistributedMinEdges: Long = LocalGraphMaxEdges + 1
 
   /** Node-count ceiling for broadcasting the per-round node-sized
@@ -335,14 +337,6 @@ object LlmPipe extends QueryModule {
     * round) inside the distributed iterative loops. Above it the
     * loops keep their shuffled sort-merge plans. */
   private[graft] val BroadcastGraphNodes: Long = 2L * 1000 * 1000
-
-  /** The `graph` [[Gate]]: true solves on the driver. The edge cap is
-    * driver-memory safety, not a strategy pick, so it holds even when
-    * [[Gate.Key]] `= small` forces the gate: a graph above
-    * [[LocalGraphMaxEdges]] edges runs distributed whatever the key. */
-  private def localGraph(s: SparkSession, st: StagedPairs): Boolean =
-    !Gate.large(s, "graph", st.edges.toDouble, GraphDistributedMinEdges) &&
-      st.edges <= LocalGraphMaxEdges
 
   /** Monitored r6 (VERDICT r11 #5) for values whose summation ORDER
     * differs between strategies (the driver loop groups m identical
@@ -385,20 +379,20 @@ object LlmPipe extends QueryModule {
 
   private val logger = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  /** The driver-side class graph a local solve reads: the staged class
-    * edges as two primitive arrays, collected once, and — for a
-    * weighted solve — the participating classes (ascending reps) with
-    * their member counts `m`. */
+  /** The driver-side class graph a local solve reads: the class edges
+    * as two primitive arrays and — for a weighted solve — the
+    * participating classes (ascending reps) with their member counts
+    * `m`. */
   private[graft] final case class LocalGraph(ea: Array[Long],
       eb: Array[Long], reps: Array[Long], m: Array[Long])
 
   /** The one strategy dispatch of the iterative graph family
     * (q_llm_dedup_cc, q_graph_pagerank, q_graph_pagerank_conv,
-    * q_llm_keeper): build the fingerprint class graph, stage its edges,
-    * ask the `graph` gate ([[classGraphLocal]]), then run `local` on
-    * the driver or `distributed` over the loop machinery. A local solve
-    * that throws [[R6BoundaryTrip]] is abandoned for the distributed
-    * body — the driver shortcut is an optimization, never the answer.
+    * q_llm_keeper): build the fingerprint class graph, ask the `graph`
+    * gate ([[classGraphLocal]]), then run `local` on the driver or
+    * `distributed` over the loop machinery. A local solve that throws
+    * [[R6BoundaryTrip]] is abandoned for the distributed body — the
+    * driver shortcut is an optimization, never the answer.
     *
     * `weighted`: the solve needs class weights (PageRank — a class's
     * member count is part of every member's degree). The local solve
@@ -409,40 +403,27 @@ object LlmPipe extends QueryModule {
     * edges.
     *
     * Both closures get the fingerprint classes; `distributed` also
-    * gets the staged loop frame. Every staging goes through
-    * [[withStaged]], so the closures neither stage nor release. */
+    * gets the staged loop frame. Only the distributed body (direct or
+    * as the fallback) stages its pairs, through [[withStaged]], so the
+    * closures neither stage nor release and a local solve runs with
+    * nothing persisted. */
   private[graft] def graphQuery[A](s: SparkSession, d: String,
       query: String, weighted: Boolean)(local: (DataFrame, LocalGraph) => A)(
       distributed: (DataFrame, DataFrame) => A): A = {
     val (classes, classEdges) = LlmExt.simhashClassGraph(s, d)
-    withStaged(classEdges.toDF("da", "db")) { st =>
-      def dist(): A =
-        if (!weighted) distributed(classes, st.df)
-        else withStaged(
-            LlmExt.dedupSimhash(s, d).select(col("da"), col("db")))(
-          stx => distributed(classes, stx.df))
-      classGraphLocal(s, classes, st, weighted) match {
-        case Some(g) =>
-          try local(classes, g)
-          catch { case t: R6BoundaryTrip =>
-            logger.warn(s"graft $query: ${t.getMessage}; abandoning the " +
-              "driver-local strategy and re-running distributed")
-            dist()
-          }
-        case None => dist()
-      }
+    def dist(): A = withStaged(
+        if (weighted) LlmExt.dedupSimhash(s, d).select(col("da"), col("db"))
+        else classEdges.toDF("da", "db"))(st => distributed(classes, st.df))
+    classGraphLocal(s, classes, classEdges, weighted) match {
+      case Some(g) =>
+        try local(classes, g)
+        catch { case t: R6BoundaryTrip =>
+          logger.warn(s"graft $query: ${t.getMessage}; abandoning the " +
+            "driver-local strategy and re-running distributed")
+          dist()
+        }
+      case None => dist()
     }
-  }
-
-  /** The staged (da, db) pairs as two primitive arrays (driver path
-    * only — callers have already passed [[localGraph]]). */
-  private def collectEdges(st: StagedPairs): (Array[Long], Array[Long]) = {
-    val rows = st.rdd.map(r => (r.getLong(0), r.getLong(1))).collect()
-    val a = new Array[Long](rows.length)
-    val b = new Array[Long](rows.length)
-    var i = 0
-    while (i < rows.length) { a(i) = rows(i)._1; b(i) = rows(i)._2; i += 1 }
-    (a, b)
   }
 
   /** Node table for a symmetric edge list: distinct endpoint ids
@@ -502,35 +483,41 @@ object LlmPipe extends QueryModule {
   }
 
   /** The class graph collected to the driver, or None when the `graph`
-    * gate ([[localGraph]]) sends it distributed or, for a `weighted`
-    * solve, the participating classes exceed the driver ceiling.
-    * Participating = classes whose members have ≥ 1
-    * expanded edge: m ≥ 2 (intra-class clique) or linked by a class
-    * edge. The count guard matters independently of the edge count —
-    * a 100M-doc corpus of exact 2-way duplicates has ZERO class edges
-    * and 50M participating classes; that regime must stay
-    * distributed. Like the edge cap in [[localGraph]], the guard and
-    * its collect limit are driver-memory safety: they hold at
-    * [[LocalGraphMaxEdges]] even when [[Gate.Key]] `= small` forces
-    * the gate. */
+    * gate sends it distributed or, for a `weighted` solve, the
+    * participating classes exceed the driver ceiling.
+    *
+    * One bounded collect of `classEdges` (at most
+    * [[GraphDistributedMinEdges]] rows) is the gate's probe, the edge
+    * cap and the edge list. It sits in a `lazy val`, so a forced
+    * `large` never collects; the cap is driver-memory safety, not a
+    * strategy pick, so it holds even when [[Gate.Key]] `= small` forces
+    * the gate.
+    *
+    * Participating = classes whose members have ≥ 1 expanded edge:
+    * m ≥ 2 (intra-class clique) or an endpoint of a class edge. A
+    * second bounded collect reads the m ≥ 2 classes; an edge endpoint
+    * outside that set is a class of one member. The count guard matters
+    * independently of the edge count — a 100M-doc corpus of exact 2-way
+    * duplicates has ZERO class edges and 50M participating classes;
+    * that regime must stay distributed — and holds at
+    * [[LocalGraphMaxEdges]] under a forced `small` too. */
   private def classGraphLocal(s: SparkSession, classes: DataFrame,
-      st: StagedPairs, weighted: Boolean): Option[LocalGraph] = {
-    if (!localGraph(s, st)) return None
-    val parts = if (!weighted) Array.empty[(Long, Long)] else {
-      val linked = st.df.select(explode(array(col("da"), col("db")))
-        .as("rep")).distinct()
-      classes.select(col("rep"), col("m"))
-        .filter(col("m") > 1)
-        .unionByName(classes.select(col("rep"), col("m"))
-          .join(linked, Seq("rep"), "left_semi"))
-        .dropDuplicates("rep")
-        .limit(LocalGraphMaxEdges.toInt + 1)
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
-    }
-    if (parts.length > LocalGraphMaxEdges) return None
-    val sorted = parts.sortBy(_._1)
-    val (ea, eb) = collectEdges(st)
-    Some(LocalGraph(ea, eb, sorted.map(_._1), sorted.map(_._2)))
+      classEdges: DataFrame, weighted: Boolean): Option[LocalGraph] = {
+    val cap = LocalGraphMaxEdges.toInt
+    lazy val edges = classEdges.limit(cap + 1).collect()
+    if (Gate.large(s, "graph", edges.length.toDouble,
+          GraphDistributedMinEdges.toDouble) || edges.length > cap) return None
+    val ea = edges.map(_.getLong(0))
+    val eb = edges.map(_.getLong(1))
+    if (!weighted) return Some(LocalGraph(ea, eb, Array.empty, Array.empty))
+    val m = scala.collection.mutable.LongMap.empty[Long]
+    classes.filter(col("m") > 1).select(col("rep"), col("m"))
+      .limit(cap + 1).collect()
+      .foreach(r => m(r.getLong(0)) = r.getLong(1))
+    (ea.iterator ++ eb.iterator).foreach(m.getOrElseUpdate(_, 1L))
+    if (m.size > cap) return None
+    val reps = m.keys.toArray.sorted
+    Some(LocalGraph(ea, eb, reps, reps.map(m)))
   }
 
   /** Weighted CLASS-LEVEL PageRank power iteration — the exact
@@ -1352,8 +1339,10 @@ object LlmPipe extends QueryModule {
        |ORDER BY doc_id""".stripMargin
 
   private val graphPagerankConvScaleSql = {
+    // MATERIALIZED: each step reads its predecessor twice (ps, pn), so
+    // an inlined chain plans 2^PrIters copies of pr0
     val iter = (prev: String, cur: String) =>
-      s"""$cur AS (
+      s"""$cur AS MATERIALIZED (
          |  SELECT o.rep,
          |         ${Det.sql6(
            "0.15 / any_value(nn.n) + 0.85 * (" +

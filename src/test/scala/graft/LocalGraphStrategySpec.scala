@@ -2,15 +2,18 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions._
 
 /** The iterative graph family (q_llm_dedup_cc, q_graph_pagerank,
   * q_graph_pagerank_conv, q_llm_keeper) picks its physical strategy
-  * from the exact staged edge count: driver union-find/power-iteration
-  * at or under the `graph` [[Gate]]'s edge ceiling, the distributed
-  * star-contraction / checkpointed loops above it. This spec forces
-  * BOTH paths on the same session-isolated data and asserts
+  * from one bounded collect of the class edges: driver
+  * union-find/power-iteration at or under the `graph` [[Gate]]'s edge
+  * ceiling, the distributed star-contraction / checkpointed loops
+  * above it. Only the distributed side stages its pairs. This spec
+  * forces BOTH paths on the same session-isolated data and asserts
   * row-for-row equality — the guarantee that the strategy pick is a
-  * pure physical decision with zero semantic surface. */
+  * pure physical decision with zero semantic surface — and pins what
+  * the collect feeds the local solve and the gate. */
 class LocalGraphStrategySpec extends AnyFunSuite {
   private lazy val s = SparkTestBase.spark
   private val d = SparkTestBase.sfDir
@@ -66,17 +69,54 @@ class LocalGraphStrategySpec extends AnyFunSuite {
     }
   }
 
-  test("graphQuery: a local solve that trips r6 returns the distributed " +
-    "body's rows, and releases both stagings") {
+  test("graphQuery: an r6 trip stages and releases only the fallback pairs") {
     val before = s.sparkContext.getPersistentRDDs.keySet
     var tripped = false
     val got = ops.LlmPipe.graphQuery(pinned("small"), d, "spec",
         weighted = true)(
       { (_, _) => tripped = true; throw new ops.LlmPipe.R6BoundaryTrip("x") })(
-      (_, pairs) => pairs.collect().map(_.toString).sorted.toSeq)
+      { (_, pairs) =>
+        assert(stagedSince(before).size == 1, "one staging: the doc pairs")
+        pairs.collect().map(_.toString).sorted.toSeq
+      })
     assert(tripped, "the local solve ran first")
     assert(got.nonEmpty && got == simhashPairRows)
     assert(stagedSince(before).isEmpty)
+  }
+
+  test("graphQuery: the local solve runs with no staging persisted") {
+    for (weighted <- Seq(false, true)) {
+      val before = s.sparkContext.getPersistentRDDs.keySet
+      val edges = ops.LlmPipe.graphQuery(pinned("small"), d, "spec",
+          weighted)(
+        { (_, g) =>
+          assert(stagedSince(before).isEmpty,
+            s"weighted=$weighted: a staging is persisted during the solve")
+          g.ea.length
+        })((_, _) => fail("the local path was forced"))
+      assert(edges > 0)
+    }
+  }
+
+  test("the weighted local graph's classes match the frame-side " +
+    "participating-class query") {
+    val g = ops.LlmPipe.graphQuery(pinned("small"), d, "spec",
+      weighted = true)((_, g) => g)((_, _) => fail("the local path was forced"))
+    // the participating set as a frame: classes with m > 1, plus the
+    // classes an edge links, one row per rep
+    val (classes, classEdges) = ops.LlmExt.simhashClassGraph(s, d)
+    val linked = classEdges
+      .select(explode(array(col("ra"), col("rb"))).as("rep")).distinct()
+    val want = classes.select(col("rep"), col("m")).filter(col("m") > 1)
+      .unionByName(classes.select(col("rep"), col("m"))
+        .join(linked, Seq("rep"), "left_semi"))
+      .dropDuplicates("rep")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
+    // both kinds of member count occur, so the driver-side union is
+    // exercised on each side
+    assert(want.exists(_._2 == 1L) && want.exists(_._2 > 1L), want)
+    assert(g.reps.toSeq == want.map(_._1))
+    assert(g.m.toSeq == want.map(_._2))
   }
 
   test("graphQuery releases its stagings when the distributed body throws") {
@@ -91,8 +131,17 @@ class LocalGraphStrategySpec extends AnyFunSuite {
     assert(stagedSince(before).isEmpty)
   }
 
+  private lazy val classEdgeCount =
+    ops.LlmExt.simhashClassGraph(s, d)._2.count()
+
   for (q <- Seq("q_llm_dedup_cc", "q_graph_pagerank",
                 "q_graph_pagerank_conv", "q_llm_keeper")) {
+    test(s"$q: its record holds the graph gate's probed small decision") {
+      val gates = Bench.materialize(s, d, q)(Bench.execute).gates
+      assert(gates.map(g => (g.name, g.path, g.probe)) ==
+        Seq(("graph", "small", Some(classEdgeCount.toDouble))), gates)
+    }
+
     // runWith also checks that each side released its stagings
     test(s"$q: local and distributed strategies agree row-for-row") {
       val local = runWith(q, "small")

@@ -8,8 +8,13 @@ Usage: python3 tools/check.py [sfdir] [outdir] [--skip-verify] [query...]
 """
 import json, math, shutil, subprocess, sys, os, tempfile
 
+# the checkout this script lives in: its classes run, whatever the cwd
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
 OUT = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out"
+# absolute, because Verify runs in ROOT and DuckDB in the caller's cwd
+SF, OUT = os.path.abspath(SF), os.path.abspath(OUT)
 FLAGS = set(a for a in sys.argv[3:] if a.startswith("--"))
 ONLY = [a for a in sys.argv[3:] if not a.startswith("--")]
 
@@ -31,7 +36,7 @@ def run_verify():
             "-Xmx8g", "graft.Verify", SF, OUT] + ONLY)
     env = dict(os.environ,
                SPARK_GRAFT_CPUS=os.environ.get("SPARK_GRAFT_CPUS", "8"))
-    r = subprocess.run(cmd, cwd="/root/repo", env=env,
+    r = subprocess.run(cmd, cwd=ROOT, env=env,
                        capture_output=True, text=True)
     for line in r.stderr.splitlines():
         if "[verify]" in line or "Exception" in line:

@@ -17,8 +17,8 @@ read ratio_ex_swing for window-to-window stability only (at small SF
 it is dominated by Spark's fixed per-query job setup, not
 throughput), and the per-family paired map for where time goes.
 
-If a Spark bench record is given (or the default
-/root/repo/bench_out.json exists), a "paired" block reports
+If a Spark bench record is given (or bench_out.json exists in the
+working directory, where graft.Bench writes it), a "paired" block reports
 same-window Spark/DuckDB ratios over the SHARED query set for both
 totals — only same-window pairs are comparable (±40% box swing).
 """
@@ -27,7 +27,7 @@ import json, os, sys, time
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
 ORACLES = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out/oracle_sql.json"
 THREADS = int(sys.argv[3]) if len(sys.argv) > 3 else 32
-BENCH = sys.argv[4] if len(sys.argv) > 4 else "/root/repo/bench_out.json"
+BENCH = sys.argv[4] if len(sys.argv) > 4 else "bench_out.json"
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
